@@ -8,11 +8,12 @@ Reference: ``/root/reference/pyglass/glass/simd/distance.hpp``:
 - ``L2SqrSQ4`` (:399-436) — the 4-bit kernel: both sides are packed
   nibbles, distance is the integer Σ(xnib−ynib)² over unpacked dims.
 
-Round 1 shipped the encoders (Q2/Q3, ``functions/quantization.py``) but
-nothing consumed them; these two operators close that gap with the same
-two-phase plan as ``bruteforce_sq8``: a quantized candidate cut over
-codes (top ``refine_k`` by (cdist, id)) followed by an exact float64
-re-rank (K12) of the candidates only.
+These two operators consume the encoders of ``functions/quantization.py``
+(Q2/Q3) through the one quantized operator,
+``bruteforce_sq8.quant_rerank``: a code-distance cut (top ``refine_k``
+by (cdist, id)) on the shared brute-force kernels, then the exact
+float64 re-rank (K12) of the candidates only. Only the encoders differ
+from SQ8.
 
 Determinism note (SURVEY §7.6): the reference's asymmetric distance is
 a float sum, whose fold order a GEMM cannot reproduce bit-for-bit. We
@@ -28,13 +29,10 @@ The SQ4 cut is integer natively.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
-
+from pyspark.sql import DataFrame
 
 from ..plans import workload
-from . import knn
-from .bruteforce_sq8 import BF_REFINE_K
+from .bruteforce_sq8 import BF_REFINE_K, quant_rerank
 
 ASYM_QRES = 256  # query fixed-point sub-steps per code step
 
@@ -65,129 +63,6 @@ def _nibble_codes(vecs: np.ndarray, mn: float, mx: float) -> np.ndarray:
     return np.floor(frac * 15.0 + 0.5).astype(np.int64)
 
 
-def _int_cut_rerank(
-    base: DataFrame,
-    queries: DataFrame,
-    encode_q,
-    encode_b,
-    k: int,
-    refine_k: int,
-    batch_rows: int | None = None,
-    corpus_rows: int | None = None,
-    force_scan: bool = False,
-) -> DataFrame:
-    """Shared two-phase plan: integer code distance cut → exact re-rank.
-
-    Cost-based like ``knn_sq8_rerank``: a corpus at or under
-    ``knn.CORPUS_BC_MAX_ROWS`` flips to the fused corpus-broadcast plan
-    (``bruteforce_sq8.fused_quant_bc_search`` with these encoders);
-    ``force_scan`` pins the scan plan below.
-
-    ONE codes scan per query batch; the kernel maintains a RUNNING
-    per-partition (cdist, id) top-refine_k per query (same fix as
-    ``bruteforce_sq8``: a per-chunk emit degenerates to all pairs when
-    query batches shrink chunks below refine_k). The global window then
-    cuts to refine_k, and the exact re-rank is a K12 candidate-pool
-    join over nq×refine_k rows. ``encode_q``/``encode_b`` map a float
-    matrix to int64 code matrices on a shared grid. Tie slack as in
-    bruteforce_sq8 (64 rows at the chunk boundary).
-    """
-    import pyarrow as pa
-
-    from ..functions import quantization as Q
-    from .knn import list_column_matrix
-
-    spark = base.sparkSession
-
-    def payload(qrows):
-        qmeta = np.array(
-            [(r["query_id"], r["query_type"], r["v"], r["l"], r["r"]) for r in qrows],
-            dtype=np.float64,
-        )
-        qvecs = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-        return qmeta, encode_q(qvecs)
-
-    schema = pa.schema(
-        [
-            pa.field("query_id", pa.int64()),
-            pa.field("id", pa.int64()),
-            pa.field("cdist", pa.int64()),
-        ]
-    )
-
-    def make_kernel(bc):
-        return lambda batches: kernel(bc, batches)
-
-    PAD = 64
-    big = np.int64(1) << 62
-
-    def kernel(bc, batches):
-        knn.prefault_worker_arena()
-        qm, qc = bc.value
-        qid = qm[:, 0].astype(np.int64)
-        qpred = (qm[:, 1].astype(np.int64), qm[:, 2], qm[:, 3], qm[:, 4])
-        nq = len(qid)
-        if nq == 0:
-            return
-        keep = refine_k + PAD
-        best_cd = np.full((nq, keep), big, dtype=np.int64)
-        best_id = np.full((nq, keep), -1, dtype=np.int64)
-        saw = False
-        for tbl in batches:
-            ids_all = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-            if not len(ids_all):
-                continue
-            saw = True
-            cats_all = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.float64)
-            ts_all = tbl.column("ts").to_numpy(zero_copy_only=False)
-            bcodes_all = encode_b(list_column_matrix(tbl, "vec"))
-
-            def dist_pair(qsel, sub, rows):
-                return Q.code_l2_sqr_np(qc[qsel], sub)
-
-            # predicate-sliced scan (S3/F2-F4, same as bruteforce_sq8)
-            knn.sliced_predicate_topk(
-                best_cd, best_id, qpred, ids_all, cats_all, ts_all, bcodes_all, dist_pair, keep
-            )
-        if not saw:
-            return
-        # vectorized row-wise (cdist, id) cut — see bruteforce_sq8
-        c2, i2, fin = knn.resolve_topk_rows(best_cd, best_id, refine_k, big)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.broadcast_to(qid[:, None], c2.shape)[fin]),
-                pa.array(i2[fin]),
-                pa.array(c2[fin]),
-            ],
-            schema=schema,
-        )
-
-    if corpus_rows is None:
-        corpus_rows = base.count()
-    if corpus_rows <= knn.CORPUS_BC_MAX_ROWS and not force_scan:
-        from .bruteforce_sq8 import fused_quant_bc_search
-
-        return fused_quant_bc_search(base, queries, encode_q, encode_b, k, refine_k)
-    cands = knn.chunked_broadcast_scan(
-        base.select("id", "category", "ts", "vec"),
-        queries.select("query_id", "query_type", "v", "l", "r", "qvec"),
-        payload,
-        make_kernel,
-        "query_id long, id long, cdist long",
-        batch_rows or knn.QUERY_BATCH_ROWS,
-        scan_rows=corpus_rows,
-    )
-    if cands is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
-    wc = Window.partitionBy("query_id").orderBy(F.col("cdist").asc(), F.col("id").asc())
-    pool = (
-        cands.withColumn("crnk", F.row_number().over(wc))
-        .filter(F.col("crnk") <= refine_k)
-        .select("query_id", "id")
-    )
-    return knn.exact_rerank(base, queries, pool, k, corpus_rows=corpus_rows)
-
-
 def knn_asym_rerank(
     base: DataFrame,
     queries: DataFrame,
@@ -197,21 +72,27 @@ def knn_asym_rerank(
     refine_k: int = BF_REFINE_K,
     batch_rows: int | None = None,
     force_scan: bool = False,
+    corpus_rows: int | None = None,
+    dim: int | None = None,
 ) -> DataFrame:
     """(query_id, id, rnk) — asymmetric-SQ8 brute force with exact
     re-rank (D4, distance.hpp:268-301): per-dim (min,max) grid, stored
-    codes decoded on the fly against the (fixed-point) float query."""
+    codes decoded on the fly against the (fixed-point) float query.
+    Plans and side rule: ``bruteforce_sq8.quant_rerank``."""
     mn = np.asarray(mins, dtype=np.float64)
     dif = np.asarray(maxs, dtype=np.float64) - mn
-    return _int_cut_rerank(
+    return quant_rerank(
         base,
         queries,
         lambda qv: _asym_fixed_codes(qv, mn, dif),
         lambda bv: _asym_base_codes(bv, mn, dif),
+        ("asym", tuple(mn.tolist()), tuple(dif.tolist())),
         k,
         refine_k,
-        batch_rows,
+        batch_rows=batch_rows,
+        corpus_rows=corpus_rows,
         force_scan=force_scan,
+        dim=dim,
     )
 
 
@@ -224,20 +105,26 @@ def knn_sq4_rerank(
     refine_k: int = BF_REFINE_K,
     batch_rows: int | None = None,
     force_scan: bool = False,
+    corpus_rows: int | None = None,
+    dim: int | None = None,
 ) -> DataFrame:
     """(query_id, id, rnk) — SQ4 brute force with exact re-rank (D5,
     distance.hpp:399-436): global (min,max) grid, symmetric integer
     nibble distance. 4-bit codes are coarse, so the 140-deep cut does
-    the heavy lifting and the float re-rank restores exact order."""
-    return _int_cut_rerank(
+    the heavy lifting and the float re-rank restores exact order.
+    Plans and side rule: ``bruteforce_sq8.quant_rerank``."""
+    return quant_rerank(
         base,
         queries,
         lambda qv: _nibble_codes(qv, mn, mx),
         lambda bv: _nibble_codes(bv, mn, mx),
+        ("sq4", float(mn), float(mx)),
         k,
         refine_k,
-        batch_rows,
+        batch_rows=batch_rows,
+        corpus_rows=corpus_rows,
         force_scan=force_scan,
+        dim=dim,
     )
 
 

@@ -1,5 +1,6 @@
-"""Two-phase quantized brute force: SQ8 candidate generation + exact
-float re-rank.
+"""Two-phase quantized brute force: code-distance candidate generation
++ exact float re-rank, for every quantizer grid (SQ8 here; asym and SQ4
+in ``bruteforce_quant``) through one operator, :func:`quant_rerank`.
 
 Reference: the brute-force route of ``BatchSearch``
 (``/root/reference/hybrid_graph.cpp:168-230``): scan int8 codes with
@@ -10,171 +11,101 @@ re-rank K12). Mirrors Spark's partial/final aggregation split: cheap
 wide phase over compressed data, exact narrow phase over ≤140 rows per
 query.
 
-Scale notes: with a prepped codes replica (``layout.write_replicas``
-with alpha → ``codes_base=layout.read_codes_base(...)``) the candidate
-phase scans ONLY the persisted codes column — 4× less I/O than float
-vectors (at 100 TB the difference between scanning 100 TB and 25 TB)
-and zero per-scan encode compute, matching the reference's
+Physical plans: the two brute-force kernels of ``operators/knn.py`` —
+the corpus-broadcast kernel (both phases fused, small corpus) and the
+query-broadcast scan kernel, whose packed candidates feed the pooled
+re-rank ``knn.exact_rerank_pooled``. With a prepped codes replica
+(``layout.write_replicas`` with alpha →
+``codes_base=layout.read_codes_base(...)``) the scan reads ONLY the
+persisted codes column — 4× less I/O than float vectors and zero
+per-scan encode compute, matching the reference's
 ``codes_both``/``codes_time`` replicas (``hybrid_graph.cpp:505-524``).
-Without one it falls back to encoding the float scan in-kernel (same
-rows, more bytes). The re-rank join touches nq×refine_k rows —
-independent of corpus size. Integer code distances are
-order-independent, so phase 1 is bit-reproducible by the SQL oracle;
-phase 2 reuses the fold-stable float64 kernel.
+Without one it encodes the float scan in-kernel (same rows, more
+bytes). Integer code distances are order-independent, so phase 1 is
+bit-reproducible by the SQL oracle; phase 2 reuses the float64 exact
+kernel.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import quantization as Q
 from ..functions.distance import l2_sqr_expr
 from ..plans import workload
+from . import knn
 
 BF_REFINE_K = 140  # hybrid_graph.h:80
 
 
-def fused_quant_bc_search(
+def quant_rerank(
     base: DataFrame,
     queries: DataFrame,
     encode_q,
     encode_b,
-    k: int,
-    refine_k: int,
-    cache_key=None,
+    grid_key,
+    k: int = workload.K,
+    refine_k: int = BF_REFINE_K,
+    batch_rows: int | None = None,
+    codes_base: DataFrame | None = None,
+    corpus_rows: int | None = None,
+    force_scan: bool = False,
+    dim: int | None = None,
 ) -> DataFrame:
-    """Small-corpus plan shared by every quantized brute force (SQ8
-    symmetric, asymmetric fixed-point, SQ4): both phases fused in ONE
-    kernel over query partitions — zero shuffles, no candidate window,
-    output is final.
+    """The one quantized brute force (SQ8, asym, SQ4): a code-distance
+    cut to the top ``refine_k`` by (cdist, id), then the exact float64
+    re-rank (K12) of those candidates → (query_id, id, rnk).
 
-    The whole corpus (float vecs + integer codes from ``encode_b``,
-    encoded once on the driver) broadcasts to every *query* partition;
-    each task runs the quantized blocked GEMM cut to refine_k, then the
-    exact float64 re-rank of its own candidates in place. The same
-    cost-based side selection as ``knn.knn_exact_arrow`` — below
-    CORPUS_BC_MAX_ROWS the corpus is the small join side, and at
-    contest query counts (100k+) partitioning the queries is what buys
-    parallelism; the query-broadcast scan would bottleneck on
-    ~corpus_rows/4096 tasks and push nq×refine_k×P rows through the
-    merge window. ``encode_q``/``encode_b`` map float matrices onto a
-    shared integer grid (as in ``bruteforce_quant._int_cut_rerank``).
+    ``encode_q``/``encode_b`` map float matrices onto one shared integer
+    grid (query side, corpus side); ``grid_key`` is a hashable identity
+    of that grid, keying the cached corpus broadcast. ``codes_base``
+    (id, category, ts, codes): persisted ``encode_b`` codes of the same
+    rows — the scan plan then reads the codes column only.
 
-    ``cache_key``: hashable identifier of the ``encode_b`` grid (e.g.
-    ``("sq8", alpha)``) — when given, the collected corpus payload is
-    cached/broadcast once per (application, corpus, grid) via
-    ``knn.cached_corpus_broadcast`` so per-micro-batch streaming callers
-    stop leaking one corpus-sized broadcast per batch; None collects
-    fresh (one-shot callers with non-hashable encoder state)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from . import knn
-    from .knn import list_column_matrix
-
+    Side rule (the whole family): ``corpus_rows <= knn.bc_rows_bound(dim)``
+    takes the corpus-broadcast kernel (``knn.corpus_broadcast_topk`` —
+    both phases in one kernel over query partitions, zero shuffles).
+    Above it, or with ``force_scan``, the query-broadcast scan kernel
+    (``knn.query_broadcast_topk``) cuts each partition to refine_k and
+    ``knn.exact_rerank_pooled`` pools the partitions' candidates to
+    refine_k per query and re-ranks them — nq×refine_k rows,
+    independent of corpus size and partition count."""
     spark = base.sparkSession
+    if corpus_rows is None:
+        corpus_rows = (codes_base if codes_base is not None else base).count()
+    if corpus_rows <= knn.bc_rows_bound(dim) and not force_scan:
+        # codes re-derive from the broadcast floats (bit-identical to
+        # the persisted ones), so codes_base is a scan-plan artifact
+        return knn.corpus_broadcast_topk(
+            base, queries, k, encode_q, encode_b, refine_k, grid_key
+        )
+    if codes_base is not None:
+        # persisted-codes scan: no float column in this plan branch at
+        # all (B10 — codes_both/codes_time parity)
+        scan = codes_base.select("id", "category", "ts", "codes")
 
-    def payload(pdf):
-        ids = pdf["id"].to_numpy().astype(np.int64)
-        order = np.argsort(ids)  # position order == id order ⇒ pos ties ≡ id ties
-        ids_s = ids[order]
-        V = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["vec"]])[order]
-        cats_s = pdf["category"].to_numpy().astype(np.float64)[order]
-        ts_s = pdf["ts"].to_numpy().astype(np.float64)[order]
-        codes_s = encode_b(V)
-        if np.abs(codes_s).max(initial=0) <= 127:
-            # pre-cast so code_l2_sqr_np's sgemm cast is a no-op per task
-            # (values ≤127 are exact in f32); wider grids keep their ints
-            codes_s = codes_s.astype(np.float32)
-        return ids_s, cats_s, ts_s, V, codes_s
+        def read_rows(tbl):
+            return knn.list_column_matrix(tbl, "codes", dtype=np.int16)
 
-    cols = ("id", "category", "ts", "vec")
-    if cache_key is not None:
-        bc = knn.cached_corpus_broadcast(base, cols, ("fused_quant", cache_key), payload)
     else:
-        pdf = base.select(*cols).toPandas()
-        bc = spark.sparkContext.broadcast(payload(pdf)) if len(pdf) else None
-    if bc is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
+        scan = base.select(*knn.CORPUS_COLS)
 
-    PAD = 64
-    big = np.int64(1) << 62
-    out_schema = pa.schema(
-        [
-            pa.field("query_id", pa.int64()),
-            pa.field("id", pa.int64()),
-            pa.field("rnk", pa.int64()),
-        ]
+        def read_rows(tbl):
+            return encode_b(knn.list_column_matrix(tbl, "vec"))
+
+    packed = knn.query_broadcast_topk(
+        scan, queries, read_rows, knn.CODE_L2, refine_k, encode_q,
+        batch_rows or knn.QUERY_BATCH_ROWS, scan_rows=corpus_rows,
     )
-
-    def kernel(batches):
-        from .knn import prefault_worker_arena
-
-        prefault_worker_arena()
-        ids_s, cats, ts, V_, codes = bc.value
-        bbV = np.einsum("ij,ij->i", V_, V_)
-        pos64 = np.arange(len(ids_s), dtype=np.int64)
-        for tbl in batches:
-            qid = tbl.column("query_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            nq = len(qid)
-            if nq == 0:
-                continue
-            qtype = tbl.column("query_type").to_numpy(zero_copy_only=False).astype(np.int64)
-            vv = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.float64)
-            ll = tbl.column("l").to_numpy(zero_copy_only=False)
-            rr = tbl.column("r").to_numpy(zero_copy_only=False)
-            qv = list_column_matrix(tbl, "qvec")
-            qc = encode_q(qv)
-            keep = refine_k + PAD
-            best_cd = np.full((nq, keep), big, dtype=np.int64)
-            best_pi = np.full((nq, keep), -1, dtype=np.int64)
-
-            def dist_pair(qsel, sub, rows):
-                return Q.code_l2_sqr_np(qc[qsel], sub)
-
-            # phase 1: quantized cut via the predicate-sliced scan
-            # (S3/F2-F4 — selective queries score only their slice,
-            # type 0 keeps the chunked full GEMM); best_pi holds corpus
-            # POSITIONS (id-sorted, so the (cdist, pos) order ≡
-            # (cdist, id))
-            knn.sliced_predicate_topk(
-                best_cd, best_pi, (qtype, vv, ll, rr), pos64, cats, ts, codes, dist_pair, keep
-            )
-            _, p2, fin = knn.resolve_topk_rows(best_cd, best_pi, refine_k, big)
-            qidx, _ = np.nonzero(fin)  # row-major ⇒ per-query contiguous
-            pos = p2[fin]
-            if len(pos) == 0:
-                continue
-            # phase 2 (K12, fused): exact float64 re-rank of this
-            # task's own candidates — no pool shuffle, no second pass
-            sub = V_[pos]
-            qq = np.einsum("ij,ij->i", qv, qv)
-            d = qq[qidx] + bbV[pos] - 2.0 * np.einsum("ij,ij->i", sub, qv[qidx])
-            np.maximum(d, 0.0, out=d)
-            ordr = np.lexsort((pos, d, qidx))
-            grp = qidx[ordr]
-            new = np.concatenate([[True], grp[1:] != grp[:-1]])
-            gstart = np.maximum.accumulate(np.where(new, np.arange(len(grp)), 0))
-            rnk = np.arange(len(grp)) - gstart
-            sel = ordr[rnk < k]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[qidx[sel]]),
-                    pa.array(ids_s[pos[sel]]),
-                    pa.array((rnk[rnk < k] + 1).astype(np.int64)),
-                ],
-                schema=out_schema,
-            )
-
-    qdf = queries.select("query_id", "query_type", "v", "l", "r", "qvec")
-    # pin the task count: the GEMM wall-clock is nq/parallelism, and an
-    # upstream shuffle (bf_queries is a join output) would otherwise be
-    # AQE-coalesced to one ~20 MB partition, serializing the kernel
-    target = spark.sparkContext.defaultParallelism
-    if qdf.rdd.getNumPartitions() != target:
-        qdf = qdf.repartition(target)
-    return qdf.mapInArrow(kernel, "query_id long, id long, rnk long")
+    if packed is None:
+        return spark.createDataFrame([], knn.RESULT_SCHEMA)
+    cands = packed.select("query_id", F.explode(F.arrays_zip("cids", "cdists")).alias("z"))
+    cands = cands.select("query_id", F.col("z.cids").alias("id"), F.col("z.cdists").alias("cdist"))
+    return knn.exact_rerank_pooled(
+        base, queries, cands, k, refine_k, corpus_rows=corpus_rows, dim=dim
+    )
 
 
 def knn_sq8_rerank(
@@ -190,155 +121,23 @@ def knn_sq8_rerank(
     dim: int | None = None,
 ) -> DataFrame:
     """(query_id, id, rnk) — exact-reranked SQ8 brute force, all 4
-    query types. Identical to exact kNN whenever the true top-k
-    survives the 140-deep quantized cut (the reference's operating
-    assumption). ``codes_base`` (id, category, ts, codes) switches
-    phase 1 to the persisted-codes scan (module docstring); its codes
-    MUST be SQ8(alpha) of the same rows.
+    query types (:func:`quant_rerank` on the symmetric SQ8(alpha) grid,
+    the reference's ``bruteforce.h:244-265`` codes). Identical to exact
+    kNN whenever the true top-k survives the 140-deep quantized cut
+    (the reference's operating assumption). ``codes_base``
+    (id, category, ts, codes) switches the scan plan to the
+    persisted-codes scan (module docstring); its codes MUST be
+    SQ8(alpha) of the same rows. ``force_scan`` pins the scan plan
+    (tests, ablations)."""
+    a = float(alpha)
 
-    Cost-based side selection (same rule as ``knn.knn_exact_arrow``):
-    a corpus at or under ``knn.CORPUS_BC_MAX_ROWS`` flips to the fused
-    corpus-broadcast plan (``fused_quant_bc_search`` — both phases in
-    one kernel over query partitions, zero shuffles); above it, the
-    query-broadcast codes scan below is the 100 TB shape.
-    ``force_scan`` pins the scan plan (tests, ablations).
+    def enc(m):
+        return Q.encode_np(m, a)
 
-    Physical plan: ONE codes scan per query batch + a candidate-pool
-    join. Queries (as int16 codes) broadcast in bounded batches
-    (``knn.QUERY_BATCH_ROWS``) so 1M-query workloads never hold the
-    full query table on the driver. The kernel maintains a RUNNING
-    per-partition top-refine_k per query across row chunks and emits
-    once per partition — a per-chunk emit degenerates to all pairs
-    whenever the chunk is narrower than refine_k (the many-query
-    regime). A global (cdist, id) window then cuts to refine_k per
-    query — the reference's quantized cut — and the exact float
-    re-rank is the K12 join over those nq×refine_k candidate rows
-    (independent of corpus size and partition count), mirroring
-    knn_hybrid's global-refine phase. Integer distances are
-    order-independent, so GEMM ≡ the SQL oracle's fold bit-for-bit.
-
-    Tie note: per-chunk merges pre-cut by cdist with a 64-row slack,
-    then the partition emit resolves (cdist, id) order exactly; a tie
-    is mis-cut only if >64 rows share the boundary cdist in one chunk.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    from . import knn
-    from .knn import list_column_matrix
-
-    spark = base.sparkSession
-
-    def payload(qrows):
-        qmeta = np.array(
-            [(r["query_id"], r["query_type"], r["v"], r["l"], r["r"]) for r in qrows],
-            dtype=np.float64,
-        )
-        qcodes = Q.encode_np(np.array([r["qvec"] for r in qrows], dtype=np.float64), alpha)
-        return qmeta, qcodes, float(alpha)
-
-    schema = pa.schema(
-        [
-            pa.field("query_id", pa.int64()),
-            pa.field("id", pa.int64()),
-            pa.field("cdist", pa.int64()),
-        ]
+    return quant_rerank(
+        base, queries, enc, enc, ("sq8", a), k, refine_k, batch_rows=batch_rows,
+        codes_base=codes_base, corpus_rows=corpus_rows, force_scan=force_scan, dim=dim,
     )
-
-    def make_kernel(bc):
-        return lambda batches: partial(bc, batches)
-
-    PAD = 64
-    big = np.int64(1) << 62
-
-    def partial(bc, batches):
-        qm, qc, a = bc.value
-        qid = qm[:, 0].astype(np.int64)
-        qpred = (qm[:, 1].astype(np.int64), qm[:, 2], qm[:, 3], qm[:, 4])
-        nq = len(qid)
-        if nq == 0:
-            return
-        keep = refine_k + PAD
-        best_cd = np.full((nq, keep), big, dtype=np.int64)
-        best_id = np.full((nq, keep), -1, dtype=np.int64)
-        saw = False
-        for tbl in batches:
-            ids_all = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-            if not len(ids_all):
-                continue
-            saw = True
-            cats_all = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.float64)
-            ts_all = tbl.column("ts").to_numpy(zero_copy_only=False)
-            if pre_encoded:
-                # persisted-codes scan: no float column in this plan
-                # branch at all (B10 — codes_both/codes_time parity)
-                codes_all = list_column_matrix(tbl, "codes", dtype=np.int16)
-            else:
-                codes_all = Q.encode_np(list_column_matrix(tbl, "vec"), a)
-
-            def dist_pair(qsel, sub, rows):
-                return Q.code_l2_sqr_np(qc[qsel], sub)
-
-            # predicate-sliced scan (S3/F2-F4): this kernel serves the
-            # bf route, whose queries are low-selectivity by
-            # construction (routed bf because sel < 8 %) — score only
-            # the admissible slice, never GEMM-then-mask the block
-            knn.sliced_predicate_topk(
-                best_cd, best_id, qpred, ids_all, cats_all, ts_all, codes_all, dist_pair, keep
-            )
-        if not saw:
-            return
-        # exact (cdist, id) order for the final refine_k cut
-        c2, i2, fin = knn.resolve_topk_rows(best_cd, best_id, refine_k, big)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.broadcast_to(qid[:, None], c2.shape)[fin]),
-                pa.array(i2[fin]),
-                pa.array(c2[fin]),
-            ],
-            schema=schema,
-        )
-
-    pre_encoded = codes_base is not None
-    scan = (
-        codes_base.select("id", "category", "ts", "codes")
-        if pre_encoded
-        else base.select("id", "category", "ts", "vec")
-    )
-    if corpus_rows is None:
-        corpus_rows = scan.count()
-    if corpus_rows <= knn.bc_rows_bound(dim) and not force_scan:
-        # fused small-corpus plan; codes re-derive from the broadcast
-        # floats (bit-identical to encode_expr), so codes_base is only
-        # a scan-plan artifact here
-        a = float(alpha)
-        return fused_quant_bc_search(
-            base,
-            queries,
-            lambda qm: Q.encode_np(qm, a),
-            lambda bm: Q.encode_np(bm, a),
-            k,
-            refine_k,
-            cache_key=("sq8", a),
-        )
-    cands = knn.chunked_broadcast_scan(
-        scan,
-        queries.select("query_id", "query_type", "v", "l", "r", "qvec"),
-        payload,
-        make_kernel,
-        "query_id long, id long, cdist long",
-        batch_rows or knn.QUERY_BATCH_ROWS,
-        scan_rows=corpus_rows,
-    )
-    if cands is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
-    wc = Window.partitionBy("query_id").orderBy(F.col("cdist").asc(), F.col("id").asc())
-    pool = (
-        cands.withColumn("crnk", F.row_number().over(wc))
-        .filter(F.col("crnk") <= refine_k)
-        .select("query_id", "id")
-    )
-    return knn.exact_rerank(base, queries, pool, k, corpus_rows=corpus_rows, dim=dim)
 
 
 def knn_sq8_rerank_expr(

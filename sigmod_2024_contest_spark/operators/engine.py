@@ -7,13 +7,18 @@ translation (SURVEY §3.2): each phase is a DataFrame job, phase
 boundaries are shuffles:
 
 1. selectivity + routing   → stats join + ``route`` column (routing.py)
-2. brute-force branch      → SQ8 codes scan + exact re-rank (bruteforce_sq8.py)
+2. brute-force branch      → SQ8 cut + exact re-rank on knn.py's
+                             brute-force kernels: the corpus-broadcast
+                             kernel, or the query-broadcast scan kernel
+                             + the pooled re-rank (bruteforce_sq8.py)
 3. type-1/3 graph branch   → per-category index partitions
 4. type-0 branch           → all decile index partitions
 5. type-2 branch           → overlapped decile partitions (SplitInterval)
-6. global merge            → union candidates + pooled K12 re-rank
-                             (fused kernel on broadcastable bases,
-                             window + join above CORPUS_BC_MAX_ROWS)
+6. global merge            → union candidates + the pooled K12 re-rank
+                             ``knn.exact_rerank_pooled`` (one cogroup
+                             kernel over the broadcast corpus when
+                             corpus_rows ≤ knn.bc_rows_bound(dim);
+                             window pool + candidates-only join above)
 
 Index partitions are built once (``build_index``) as a Parquet-able
 DataFrame; search ships each query group to exactly the partitions its
@@ -205,9 +210,9 @@ def build_groups(
     def kernel(batches):
         import pyarrow as pa
 
-        from .knn import prefault_worker_arena
+        from .knn import tune_worker_arena
 
-        prefault_worker_arena()
+        tune_worker_arena()
         out_schema = pa.schema(
             [
                 pa.field("pkey", pa.string()),
@@ -1196,9 +1201,9 @@ def _search_cogroup_arrow(itbl, qtbl, k: int, ef: int | None, gemm_thr: int, alp
     from numpy into one Arrow table."""
     import pyarrow as pa
 
-    from .knn import prefault_worker_arena
+    from .knn import tune_worker_arena
 
-    prefault_worker_arena()
+    tune_worker_arena()
     out_schema = pa.schema(
         [
             pa.field("query_id", pa.int64()),

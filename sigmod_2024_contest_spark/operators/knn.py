@@ -13,12 +13,24 @@ strategies for the same logical op:
    base streamed — no shuffle of the corpus, only (nq×k-ish) rows into
    the final window.
 
-2. ``knn_exact_arrow`` — the 100 TB path: queries broadcast as a NumPy
-   matrix, ``mapInArrow`` over base partitions computes a *partial*
-   top-k per partition with one GEMM per Arrow batch (partial agg),
-   then a window merges per-partition candidates into the global top-k
-   (final agg). Shuffle volume is nq×k×P rows, independent of corpus
-   width; corpus never leaves its partitions.
+2. ``knn_exact_arrow`` — the Arrow path, one of two plans picked by
+   :func:`exact_plan_is_corpus_bc`:
+
+   - the **corpus-broadcast kernel** (:func:`corpus_broadcast_topk`):
+     the id-sorted corpus ships to every query partition and each task
+     answers its queries completely — output is final;
+   - the **query-broadcast scan kernel** (:func:`query_broadcast_topk`):
+     queries ship in bounded batches to every base partition, each
+     task keeps a running top-k over its Arrow blocks and emits packed
+     per-query lists (``PACKED_CAND_SCHEMA``), and
+     :func:`packed_topk_merge` merges them into the global top-k.
+     Shuffle volume is ≤P rows per query; the corpus never leaves its
+     partitions.
+
+The same two kernels serve the quantized brute force (SQ8, asym, SQ4 —
+``bruteforce_sq8.quant_rerank``) with integer code distances; their
+candidates go through the one pooled exact re-rank,
+:func:`exact_rerank_pooled`.
 
 Top-k ordering is explicit ``(dist, id)`` everywhere (the reference's
 heap leaves ties unspecified; we pin them — SURVEY §7.6).
@@ -27,53 +39,41 @@ heap leaves ties unspecified; we pin them — SURVEY §7.6).
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import quantization as Q
 from ..functions.distance import l2_sqr_expr
 from ..plans import workload
 
-# Per-worker-process allocator warmup (guide §4.5 heavyweight-init-once
-# + §5 memory churn). Two halves, both idempotent per process:
-#
-# - ``mallopt(M_MMAP_THRESHOLD/M_TRIM_THRESHOLD)``: keeps the kernels'
-#   large NumPy buffers (distance blocks are ~64 MB each) in the sbrk
-#   arena and keeps them after free, instead of mmap/munmap + refault
-#   per allocation. session.get_spark already sets the equivalent env
-#   for workers it spawns; calling mallopt in the LIVE worker also
-#   covers sessions this package did not create (the driver-contract
-#   ``__spark_entry__`` path, where executorEnv is frozen before we
-#   load — r13 ADVICE item 1).
-# - a one-shot arena pre-fault: touch SPARK_GRAFT_PREFAULT_MB of pages
-#   once so the first full-size kernel invocation of each worker does
-#   not pay the faults inside a timed region (measured r13/r14: the
-#   first contest rep runs 2-3× its warm wall purely on first-touch
-#   faults; this host's THP stalls amplify it).
-#
-# Standard public glibc tunables; on a cluster, size executor
-# memoryOverhead to include the retained arena (≤ the threshold per
-# worker). SPARK_GRAFT_PREFAULT_MB=0 / SPARK_GRAFT_MALLOC_ARENA_MB=0
-# disable the respective half.
+# Per-worker-process allocator tuning (guide §5 memory churn),
+# idempotent per process: ``mallopt(M_MMAP_THRESHOLD/M_TRIM_THRESHOLD)``
+# keeps the kernels' large NumPy buffers (distance blocks are ~64 MB
+# each) in the sbrk arena and keeps them after free, instead of
+# mmap/munmap + refault per allocation. session.get_spark already sets
+# the equivalent env for workers it spawns; calling mallopt in the LIVE
+# worker also covers sessions this package did not create (the
+# driver-contract ``__spark_entry__`` path, where executorEnv is frozen
+# before we load). Standard public glibc tunables; on a cluster, size
+# executor memoryOverhead to include the retained arena (≤ the
+# threshold per worker). SPARK_GRAFT_MALLOC_ARENA_MB=0 disables it.
 _ARENA_PID: int | None = None
 
 
-def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, default))
-    except (TypeError, ValueError):
-        return int(default)
-
-
-def prefault_worker_arena() -> None:
+def tune_worker_arena() -> None:
     global _ARENA_PID
     pid = os.getpid()
     if _ARENA_PID == pid:
         return
     _ARENA_PID = pid
-    arena_mb = _env_int("SPARK_GRAFT_MALLOC_ARENA_MB", 1024)
+    try:
+        arena_mb = int(os.environ.get("SPARK_GRAFT_MALLOC_ARENA_MB", 1024))
+    except (TypeError, ValueError):
+        arena_mb = 1024
     if arena_mb > 0:
         try:
             import ctypes
@@ -84,11 +84,6 @@ def prefault_worker_arena() -> None:
             libc.mallopt(ctypes.c_int(-1), ctypes.c_int(thr))  # M_TRIM_THRESHOLD
         except Exception:
             pass  # non-glibc platform: the env-based tuning still applies
-    pf_mb = _env_int("SPARK_GRAFT_PREFAULT_MB", 512)
-    if pf_mb > 0:
-        buf = np.empty((pf_mb << 20) // 8, dtype=np.float64)
-        buf[::512] = 0.0  # one write per 4 KiB page
-        del buf
 
 
 def list_column_matrix(batch, name: str, dtype=np.float64) -> np.ndarray:
@@ -127,7 +122,7 @@ QUERY_BATCH_ROWS = 65536
 # smaller-id row before the final (dist, id) lexsort. Keeping k+PAD
 # columns through the merge and resolving the boundary with the lexsort
 # at emit makes the kept set exact up to >PAD duplicates at the kth
-# distance — the same guard the sq8/sq4 kernels use.
+# distance — every brute-force kernel keeps this slack.
 MERGE_PAD = 64
 
 
@@ -564,21 +559,58 @@ def cached_corpus_broadcast(base: DataFrame, cols: tuple[str, ...], extra_key, b
     return bc
 
 
-def _ids_vec_payload(pdf) -> tuple[np.ndarray, np.ndarray]:
-    """(ids_sorted, V) — the K12 re-rank kernels' corpus payload."""
+# Corpus columns every corpus-broadcast payload collects; one cache
+# entry per (corpus, quantizer grid) serves the exact scan, the
+# quantized scans and the pooled re-rank alike.
+CORPUS_COLS = ("id", "category", "ts", "vec")
+QUERY_COLS = ("query_id", "query_type", "v", "l", "r", "qvec")
+RESULT_SCHEMA = "query_id long, id long, rnk long"
+_RESULT_TYPE = pa.schema(
+    [pa.field("query_id", pa.int64()), pa.field("id", pa.int64()), pa.field("rnk", pa.int64())]
+)
+
+
+def _ids_vec_payload(pdf, encode_b=None) -> dict[str, np.ndarray]:
+    """The one corpus-broadcast payload: the collected columns as NumPy
+    arrays with rows sorted by id, so position order IS id order and
+    the kernels carry positions (position ties ≡ id ties). ``vec``
+    becomes a float64 (n, dim) matrix; ``category``/``ts`` float64
+    vectors when collected. With a quantizer grid ``encode_b``,
+    ``codes`` holds the corpus encoded once on the driver — pre-cast to
+    float32 when every code is ≤127 (exact in f32), so
+    code_l2_sqr_np's sgemm cast is a no-op per task."""
     ids = pdf["id"].to_numpy().astype(np.int64)
     order = np.argsort(ids)
-    V = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["vec"]])[order]
-    return ids[order], V
+    out = {"id": ids[order]}
+    out["vec"] = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["vec"]])[order]
+    for c in ("category", "ts"):
+        if c in pdf:
+            out[c] = pdf[c].to_numpy().astype(np.float64)[order]
+    if encode_b is not None:
+        codes = encode_b(out["vec"])
+        if np.abs(codes).max(initial=0) <= 127:
+            codes = codes.astype(np.float32)
+        out["codes"] = codes
+    return out
 
 
-def _topk_window(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("id").asc())
+def _topk_window(scored: DataFrame, k: int, by: str = "dist") -> DataFrame:
+    w = Window.partitionBy("query_id").orderBy(F.col(by).asc(), F.col("id").asc())
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("query_id", "id", F.col("rnk").cast("long").alias("rnk"))
     )
+
+
+def _group_ranks(keys: np.ndarray) -> np.ndarray:
+    """Ranks 0.. within each contiguous run of ``keys``."""
+    n = len(keys)
+    if n == 0:
+        return np.empty(0, dtype=np.int64)
+    new = np.concatenate([[True], keys[1:] != keys[:-1]])
+    gstart = np.maximum.accumulate(np.where(new, np.arange(n), 0))
+    return np.arange(n) - gstart
 
 
 # Packed candidate schema for the query-broadcast scan's final merge:
@@ -604,13 +636,9 @@ def packed_topk_merge(packed: DataFrame, k: int) -> DataFrame:
     nbuckets = spark.sparkContext.defaultParallelism * 4
     b = packed.withColumn("qb", F.pmod(F.hash("query_id"), F.lit(nbuckets)))
 
-    out_type = pa.schema(
-        [pa.field("query_id", pa.int64()), pa.field("id", pa.int64()), pa.field("rnk", pa.int64())]
-    )
-
     def kernel(tbl):
         if tbl.num_rows == 0:
-            return pa.table({"query_id": [], "id": [], "rnk": []}, schema=out_type)
+            return _RESULT_TYPE.empty_table()
         tbl = tbl.combine_chunks()
 
         def list_parts(name):
@@ -628,10 +656,7 @@ def packed_topk_merge(packed: DataFrame, k: int) -> DataFrame:
         rowq = np.repeat(qid, lens)
         ids_v = ids_v.astype(np.int64)
         o = np.lexsort((ids_v, d_v, rowq))
-        rq = rowq[o]
-        new = np.concatenate([[True], rq[1:] != rq[:-1]]) if len(rq) else np.empty(0, bool)
-        gstart = np.maximum.accumulate(np.where(new, np.arange(len(rq)), 0))
-        rnk = np.arange(len(rq)) - gstart
+        rnk = _group_ranks(rowq[o])
         keepm = rnk < k
         sel = o[keepm]
         return pa.table(
@@ -640,10 +665,10 @@ def packed_topk_merge(packed: DataFrame, k: int) -> DataFrame:
                 "id": ids_v[sel],
                 "rnk": (rnk[keepm] + 1).astype(np.int64),
             },
-            schema=out_type,
+            schema=_RESULT_TYPE,
         )
 
-    return b.groupby("qb").applyInArrow(kernel, "query_id long, id long, rnk long")
+    return b.groupby("qb").applyInArrow(kernel, RESULT_SCHEMA)
 
 
 def knn_exact_expr(base: DataFrame, queries: DataFrame, k: int = workload.K) -> DataFrame:
@@ -686,105 +711,69 @@ SELECT query_id, id, CAST(rnk AS BIGINT) AS rnk FROM ranked WHERE rnk <= {k}
 """
 
 
-def exact_rerank(
-    base: DataFrame,
-    queries: DataFrame,
-    pool: DataFrame,
-    k: int,
-    corpus_rows: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """K12 exact re-rank of a candidate pool (query_id, id) →
-    (query_id, id, rnk): fetch float vectors for candidates ONLY and
-    rank by exact L2 with the (dist, id) tie-break. Shared by the
-    hybrid engine and every quantized brute-force operator
-    (hybrid_graph.cpp:207-228 / the quant reorder). Two physical
-    strategies, the same cost-based side selection as the exact kNN:
 
-    - **corpus-broadcast** (corpus ≤ CORPUS_BC_MAX_ROWS): candidates
-      group per query into one (id-list, qvec) row and a mapInArrow
-      kernel looks candidate vectors up in the broadcast corpus —
-      output is final, and no (id, vec) row ever shuffles. At contest
-      scale this replaces a pool×vec sort-merge join that moved
-      pool_rows×dim floats through the shuffle.
-    - **join path** (large corpus): candidates-only join + window —
-      the plan that scales when the corpus cannot be broadcast; the
-      join input stays nq×refine_k rows, independent of corpus size.
 
-    Both compute float64 ``qq + bb − 2·q·b`` (the exact kernels'
-    formula, hash-matched against the DuckDB fold oracle)."""
-    spark = base.sparkSession
-    if corpus_rows is None:
-        corpus_rows = base.count()
-    if corpus_rows > bc_rows_bound(dim):
-        rer = (
-            pool.select("query_id", "id")
-            .join(base.select("id", "vec"), "id")
-            .join(queries.select("query_id", "qvec"), "query_id")
-            .select("query_id", "id", l2_sqr_expr("qvec", "vec").alias("dist"))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("id").asc())
-        return (
-            rer.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "id", F.col("rnk").cast("long").alias("rnk"))
-        )
-    bc = cached_corpus_broadcast(base, ("id", "vec"), "ids_vec", _ids_vec_payload)
-    if bc is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
+# ---------------------------------------------------------------------------
+# Distances and the exact re-rank
+# ---------------------------------------------------------------------------
 
-    grouped = (
-        pool.groupBy("query_id")
-        .agg(F.collect_list("id").alias("cids"))
-        .join(queries.select("query_id", "qvec"), "query_id")
-    )
 
-    def kernel(batches):
-        prefault_worker_arena()
-        ids_s, V_ = bc.value
-        bb_s = np.einsum("ij,ij->i", V_, V_)
-        for tbl in batches:
-            if tbl.num_rows == 0:
-                continue
-            qid = tbl.column("query_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            cids = tbl.column("cids")
-            if hasattr(cids, "combine_chunks"):
-                cids = cids.combine_chunks()
-            off = cids.offsets.to_numpy()
-            vals = cids.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            vals = vals[off[0] : off[-1]]
-            lens = np.diff(off)
-            qvm = list_column_matrix(tbl, "qvec")
-            pos = np.searchsorted(ids_s, vals)
-            sub = V_[pos]
-            rowi = np.repeat(np.arange(len(qid)), lens)
-            qq = np.einsum("ij,ij->i", qvm, qvm)
-            qb = np.einsum("ij,ij->i", sub, qvm[rowi])
-            d = qq[rowi] + bb_s[pos] - 2.0 * qb
-            np.maximum(d, 0.0, out=d)
-            # global (row, dist, id) sort; rows stay contiguous, so the
-            # within-row rank is position − row start
-            ordr = np.lexsort((vals, d, rowi))
-            starts = np.concatenate([[0], np.cumsum(lens)])
-            ranks = np.arange(len(ordr)) - starts[rowi[ordr]]
-            keep = ranks < k
-            sel = ordr[keep]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid[rowi[sel]]),
-                    pa.array(vals[sel]),
-                    pa.array((ranks[keep] + 1).astype(np.int64)),
-                ],
-                schema=pa.schema(
-                    [
-                        pa.field("query_id", pa.int64()),
-                        pa.field("id", pa.int64()),
-                        pa.field("rnk", pa.int64()),
-                    ]
-                ),
-            )
+class PairDistance(NamedTuple):
+    """A brute-force kernel's distance. ``make(qmat, mat)`` returns the
+    ``pair_dist(qsel, sub, rows)`` callable :func:`sliced_predicate_topk`
+    expects for query-side matrix ``qmat`` against row matrix ``mat``;
+    ``sentinel`` fills empty top-k slots and sorts after every real
+    distance (it also fixes the running top-k's dtype)."""
 
-    return grouped.mapInArrow(kernel, "query_id long, id long, rnk long")
+    make: Callable
+    sentinel: object
+
+
+def _l2_pairs(qv: np.ndarray, mat: np.ndarray):
+    qq = np.einsum("ij,ij->i", qv, qv)
+    bb = np.einsum("ij,ij->i", mat, mat)
+
+    def pair_dist(qsel, sub, rows):
+        # GEMM on the pre-gathered view; norms indexed by the original
+        # row positions. In-place (qq + bb) − 2·G — bitwise-identical
+        # to the naive broadcast expression at half the temporaries.
+        g = qv[qsel] @ sub.T
+        t = np.add(qq[qsel][:, None], bb[rows][None, :])
+        g *= 2.0
+        np.subtract(t, g, out=t)
+        np.maximum(t, 0.0, out=t)
+        return t
+
+    return pair_dist
+
+
+def _code_pairs(qc: np.ndarray, codes: np.ndarray):
+    # integer code distance, exact via float BLAS (Q.code_l2_sqr_np);
+    # order-independent, so it equals the SQL oracle's fold bit-for-bit
+    return lambda qsel, sub, rows: Q.code_l2_sqr_np(qc[qsel], sub)
+
+
+CODE_SENTINEL = np.int64(1) << 62
+EXACT_L2 = PairDistance(_l2_pairs, np.inf)  # float64 rows, float64 queries
+CODE_L2 = PairDistance(_code_pairs, CODE_SENTINEL)  # integer codes, both sides
+
+
+def rerank_exact(
+    qv: np.ndarray, qrow: np.ndarray, V: np.ndarray, pos: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """K12 exact re-rank core (hybrid_graph.cpp:207-228): float64
+    ``qq + bb − 2·q·b`` for the (query row, corpus position) pairs, then
+    per query the ``k`` smallest by (dist, position) — position order is
+    id order in the id-sorted payload. Returns (sel, rnk): indices into
+    the pairs in output order and their 1-based ranks."""
+    sub = V[pos]
+    qq = np.einsum("ij,ij->i", qv, qv)
+    d = qq[qrow] + np.einsum("ij,ij->i", sub, sub) - 2.0 * np.einsum("ij,ij->i", sub, qv[qrow])
+    np.maximum(d, 0.0, out=d)
+    o = np.lexsort((pos, d, qrow))
+    rnk = _group_ranks(qrow[o])
+    keep = rnk < k
+    return o[keep], rnk[keep] + 1
 
 
 def exact_rerank_pooled(
@@ -796,31 +785,35 @@ def exact_rerank_pooled(
     corpus_rows: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """Global code-space pool + K12 exact re-rank in ONE pass over the
-    candidate rows ``(query_id, id, cdist)``.
+    """The one K12 exact re-rank: pool the candidate rows
+    ``(query_id, id, cdist)`` to the per-query top ``pool_k`` by
+    (cdist, id), then rank the pooled rows by exact L2 with the
+    (dist, id) tie-break → (query_id, id, rnk). Serves the hybrid
+    engine's graph candidates and the quantized scans' candidates.
 
-    Small corpus (≤ CORPUS_BC_MAX_ROWS): the per-query pool cut and the
-    exact re-rank fuse into one cogroup kernel — candidate rows shuffle
+    Broadcastable corpus (≤ ``bc_rows_bound(dim)``): the pool cut and
+    the re-rank fuse into one cogroup kernel — candidate rows shuffle
     ONCE, skinny and codegen'd, on a coarse query-hash bucket (no
-    collect_list object aggregation, no fat-row repartition, no
-    row_number window), and the matching query vectors cogroup in by
-    the same bucket; pooling and ranking are in-kernel lexsorts. Large
-    corpus: falls back to the window pool + ``exact_rerank`` join — the
-    plan that never broadcasts the corpus."""
+    collect_list, no row_number window), the matching query vectors
+    cogroup in by the same bucket, and candidate vectors come from the
+    broadcast corpus. Large corpus: a window pool + candidates-only
+    join + window — the plan that never broadcasts the corpus; its join
+    input stays nq×pool_k rows, independent of corpus size."""
     spark = base.sparkSession
     if corpus_rows is None:
         corpus_rows = base.count()
     if corpus_rows > bc_rows_bound(dim):
-        wc = Window.partitionBy("query_id").orderBy(F.col("cdist").asc(), F.col("id").asc())
-        pool = (
-            cands.withColumn("crnk", F.row_number().over(wc))
-            .filter(F.col("crnk") <= pool_k)
+        rer = (
+            _topk_window(cands, pool_k, by="cdist")
             .select("query_id", "id")
+            .join(base.select("id", "vec"), "id")
+            .join(queries.select("query_id", "qvec"), "query_id")
+            .select("query_id", "id", l2_sqr_expr("qvec", "vec").alias("dist"))
         )
-        return exact_rerank(base, queries, pool, k, corpus_rows=corpus_rows, dim=dim)
-    bc = cached_corpus_broadcast(base, ("id", "vec"), "ids_vec", _ids_vec_payload)
+        return _topk_window(rer, k)
+    bc = cached_corpus_broadcast(base, CORPUS_COLS, "exact", _ids_vec_payload)
     if bc is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
+        return spark.createDataFrame([], RESULT_SCHEMA)
 
     # coarse buckets: enough groups to spread the lexsort/GEMM work,
     # few enough that per-group Arrow overhead is negligible. The hash
@@ -840,26 +833,11 @@ def exact_rerank_pooled(
         "qb", F.pmod(F.hash("query_id"), F.lit(nbuckets))
     )
 
-    out_type = pa.schema(
-        [pa.field("query_id", pa.int64()), pa.field("id", pa.int64()), pa.field("rnk", pa.int64())]
-    )
-
-    def _group_ranks(keys_row: np.ndarray) -> np.ndarray:
-        """Ranks 0.. within each contiguous run of keys_row."""
-        n = len(keys_row)
-        if n == 0:
-            return np.empty(0, dtype=np.int64)
-        new = np.concatenate([[True], keys_row[1:] != keys_row[:-1]])
-        gstart = np.maximum.accumulate(np.where(new, np.arange(n), 0))
-        return np.arange(n) - gstart
-
     def kernel(ctbl, qtbl):
-        prefault_worker_arena()
-        ids_s, V_ = bc.value
+        tune_worker_arena()
+        p = bc.value
         if ctbl.num_rows == 0 or qtbl.num_rows == 0:
-            return pa.table(
-                {"query_id": [], "id": [], "rnk": []}, schema=out_type
-            )
+            return _RESULT_TYPE.empty_table()
         ctbl = ctbl.combine_chunks()
         qtbl = qtbl.combine_chunks()
         qid_c = ctbl.column("cqid").to_numpy(zero_copy_only=False).astype(np.int64)
@@ -868,177 +846,212 @@ def exact_rerank_pooled(
         # pool: per-query top-pool_k by (cdist, id) — candidate
         # (query, id) pairs are unique by construction upstream
         o = np.lexsort((cand_ids, cd, qid_c))
-        keep = _group_ranks(qid_c[o]) < pool_k
-        sel = o[keep]
+        sel = o[_group_ranks(qid_c[o]) < pool_k]
         qsel, pids = qid_c[sel], cand_ids[sel]
         # query vectors for this bucket, addressed by searchsorted
         qids_q = qtbl.column("query_id").to_numpy(zero_copy_only=False).astype(np.int64)
         qorder = np.argsort(qids_q)
-        qids_s = qids_q[qorder]
         qvm = list_column_matrix(qtbl, "qvec")[qorder]
-        qq = np.einsum("ij,ij->i", qvm, qvm)
-        qpos = np.searchsorted(qids_s, qsel)
-        pos = np.searchsorted(ids_s, pids)
-        sub = V_[pos]
-        bb = np.einsum("ij,ij->i", sub, sub)  # pooled rows only
-        d = qq[qpos] + bb - 2.0 * np.einsum("ij,ij->i", sub, qvm[qpos])
-        np.maximum(d, 0.0, out=d)
-        o2 = np.lexsort((pids, d, qsel))
-        rnk = _group_ranks(qsel[o2])
-        keep2 = rnk < k
-        sel2 = o2[keep2]
-        return pa.table(
-            {
-                "query_id": qsel[sel2],
-                "id": pids[sel2],
-                "rnk": (rnk[keep2] + 1).astype(np.int64),
-            },
-            schema=out_type,
+        r, rnk = rerank_exact(
+            qvm, np.searchsorted(qids_q[qorder], qsel), p["vec"],
+            np.searchsorted(p["id"], pids), k,
         )
+        return pa.table({"query_id": qsel[r], "id": pids[r], "rnk": rnk}, schema=_RESULT_TYPE)
 
     cg = cb.groupby("qb").cogroup(qb.groupby("qb"))
-    return cg.applyInArrow(kernel, "query_id long, id long, rnk long")
+    return cg.applyInArrow(kernel, RESULT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# Arrow scale path
+# The two brute-force kernels: query-broadcast scan, corpus broadcast
 # ---------------------------------------------------------------------------
 
 
-def collect_corpus(base: DataFrame):
-    """Driver-side corpus tuple for the corpus-broadcast plan, or None
-    when the base is empty. Collect once; reuse across calls (streaming
-    answers every micro-batch against the same broadcast)."""
-    pdf = base.select("id", "category", "ts", "vec").toPandas()
-    if len(pdf) == 0:
-        return None
-    return (
-        pdf["id"].to_numpy().astype(np.int64),
-        pdf["category"].to_numpy().astype(np.float64),
-        pdf["ts"].to_numpy().astype(np.float64),
-        np.stack([np.asarray(x, dtype=np.float64) for x in pdf["vec"]]),
+def _query_payload(qrows, encode_q) -> tuple[np.ndarray, np.ndarray]:
+    """(qmeta, qmat) for one query batch: (query_id, query_type, v, l, r)
+    as float64 columns, and the query-side matrix — float64 qvecs, or
+    their codes under ``encode_q``."""
+    qmeta = np.array(
+        [(r["query_id"], r["query_type"], r["v"], r["l"], r["r"]) for r in qrows],
+        dtype=np.float64,
+    )
+    qvecs = np.array([r["qvec"] for r in qrows], dtype=np.float64)
+    return qmeta, (qvecs if encode_q is None else encode_q(qvecs))
+
+
+def query_broadcast_topk(
+    scan: DataFrame,
+    queries: DataFrame,
+    read_rows,
+    dist: PairDistance,
+    out_k: int,
+    encode_q=None,
+    batch_rows: int = QUERY_BATCH_ROWS,
+    scan_rows: int | None = None,
+) -> DataFrame | None:
+    """The one query-broadcast scan kernel (exact, SQ8, asym, SQ4).
+
+    Queries broadcast in bounded batches (:func:`chunked_broadcast_scan`)
+    as (qmeta, ``encode_q(qvecs)``) — float qvecs when ``encode_q`` is
+    None. ``scan`` is (id, category, ts, <row column>); ``read_rows(tbl)``
+    reads an Arrow block's row matrix (float ``vec``, an in-kernel
+    encode, or the persisted ``codes`` column). Per partition a RUNNING
+    top-(out_k + MERGE_PAD) per query is kept across blocks with the
+    predicate-sliced ``dist`` scan and emitted ONCE at partition end — a
+    per-block emit degenerates to all pairs whenever blocks are narrower
+    than out_k. The emit resolves the exact (dist, id) boundary, so ≤
+    out_k candidates per query leave the task, packed one row per query
+    (``PACKED_CAND_SCHEMA``; integer code distances are exact in its
+    float64 list wherever code_l2_sqr_np takes its float path,
+    4·d·m² < 2⁵²). Returns None when there are no queries.
+
+    Tie note: chunk merges pre-cut by distance with MERGE_PAD slack; a
+    tie is mis-cut only if >PAD rows share the boundary distance."""
+    keep = out_k + MERGE_PAD
+    out_type = pa.schema(
+        [
+            pa.field("query_id", pa.int64()),
+            pa.field("cids", pa.list_(pa.int64())),
+            pa.field("cdists", pa.list_(pa.float64())),
+        ]
+    )
+
+    def make_kernel(bc):
+        def kernel(batches):
+            tune_worker_arena()
+            qm, qmat = bc.value
+            nq = len(qm)
+            if nq == 0:
+                return
+            qid = qm[:, 0].astype(np.int64)
+            qpred = (qm[:, 1].astype(np.int64), qm[:, 2], qm[:, 3], qm[:, 4])
+            best_d = np.full((nq, keep), dist.sentinel)
+            best_i = np.full((nq, keep), -1, dtype=np.int64)
+            saw = False
+            for tbl in batches:
+                ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
+                if not len(ids):
+                    continue
+                saw = True
+                cats = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.float64)
+                ts = tbl.column("ts").to_numpy(zero_copy_only=False)
+                mat = read_rows(tbl)
+                # predicate-sliced scan (S3/F2-F4): selective queries
+                # score only their (cat, ts) slice of the block
+                sliced_predicate_topk(
+                    best_d, best_i, qpred, ids, cats, ts, mat, dist.make(qmat, mat), keep
+                )
+            if saw:
+                d2, i2, fin = resolve_topk_rows(best_d, best_i, out_k, dist.sentinel)
+                offsets = np.concatenate([[0], np.cumsum(fin.sum(axis=1))]).astype(np.int32)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(qid),
+                        pa.ListArray.from_arrays(offsets, pa.array(i2[fin])),
+                        pa.ListArray.from_arrays(
+                            offsets, pa.array(d2[fin].astype(np.float64, copy=False))
+                        ),
+                    ],
+                    schema=out_type,
+                )
+
+        return kernel
+
+    return chunked_broadcast_scan(
+        scan,
+        queries.select(*QUERY_COLS),
+        lambda qrows: _query_payload(qrows, encode_q),
+        make_kernel,
+        PACKED_CAND_SCHEMA,
+        batch_rows,
+        scan_rows=scan_rows,
     )
 
 
-def prepare_corpus(spark: SparkSession, base: DataFrame, dim: int | None = None):
-    """Amortize the per-call corpus work of ``knn_exact_arrow``: one
-    count job and (when the corpus-broadcast plan applies) one collect +
-    one broadcast. Pass the returned handle as ``prepared=`` to every
-    subsequent call — ``knn_stream`` does this once per stream instead
-    of once per micro-batch."""
-    rows = base.count()
-    bc = None
-    if 0 < rows <= bc_rows_bound(dim):
-        corpus = collect_corpus(base)
-        if corpus is not None:
-            bc = spark.sparkContext.broadcast(corpus)
-    return rows, bc
-
-
-def _knn_exact_corpus_broadcast(
-    spark: SparkSession, base: DataFrame, queries: DataFrame, k: int, bc=None
+def corpus_broadcast_topk(
+    base: DataFrame,
+    queries: DataFrame,
+    k: int,
+    encode_q=None,
+    encode_b=None,
+    refine_k: int | None = None,
+    grid_key="exact",
 ) -> DataFrame:
-    """Small-corpus plan: broadcast the whole base, scan the queries.
+    """The one corpus-broadcast kernel: the small-corpus plan of the
+    exact scan and of every quantized brute force. Output is final
+    (query_id, id, rnk) — zero candidate shuffle, no window.
 
-    Each query-partition task answers its queries exactly against the
-    full corpus — the output is final (query_id, id, rnk), no candidate
-    shuffle, no merge window. Queries are repartitioned up to the
-    session parallelism when the source delivered too few partitions
-    (e.g. a single .bin shard), so all cores share the GEMM work."""
+    The id-sorted corpus payload (:func:`_ids_vec_payload`, cached per
+    (corpus, ``grid_key``) by :func:`cached_corpus_broadcast`) ships to
+    every *query* partition. Exact (``encode_b`` None): each task cuts
+    its queries' top-k by float64 L2 with the predicate-sliced scan.
+    Quantized: ``encode_b`` codes the corpus once on the driver,
+    ``encode_q`` the queries per batch; the task cuts to the top
+    ``refine_k`` by code distance, then re-ranks those survivors by
+    exact L2 in place (:func:`rerank_exact`) — both phases in one
+    kernel. The query task count is pinned to the session parallelism:
+    an upstream shuffle would otherwise be AQE-coalesced to one small
+    partition (serializing the kernel) and a thin file source
+    under-splits it."""
+    spark = base.sparkSession
+    bc = cached_corpus_broadcast(
+        base, CORPUS_COLS, grid_key, lambda pdf: _ids_vec_payload(pdf, encode_b)
+    )
     if bc is None:
-        corpus = collect_corpus(base)
-        if corpus is None:
-            return spark.createDataFrame([], "query_id long, id long, rnk long")
-        bc = spark.sparkContext.broadcast(corpus)
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    quantized = encode_b is not None
+    dist = CODE_L2 if quantized else EXACT_L2
+    out_k = refine_k if quantized else k
+    keep = out_k + MERGE_PAD
 
     def kernel(batches):
-        import os as _os
-        import sys as _sys
-        import time as _time
-        prefault_worker_arena()
-        _t0 = _time.time()
-        ids, cats, ts, vecs = bc.value
-        bb = np.einsum("ij,ij->i", vecs, vecs)
-        _nq_tot = 0
-        _t_bc = _time.time() - _t0
+        tune_worker_arena()
+        p = bc.value
+        ids_s, V = p["id"], p["vec"]
+        rows = p["codes"] if quantized else V
+        pos64 = np.arange(len(ids_s), dtype=np.int64)
         for tbl in batches:
             qid = tbl.column("query_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            qtype = tbl.column("query_type").to_numpy(zero_copy_only=False).astype(np.int64)
-            vv = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.float64)
-            ll = tbl.column("l").to_numpy(zero_copy_only=False)
-            rr = tbl.column("r").to_numpy(zero_copy_only=False)
-            qv = list_column_matrix(tbl, "qvec")
             nq = len(qid)
             if nq == 0:
                 continue
-            keep = k + MERGE_PAD
-            best_d = np.full((nq, keep), np.inf)
-            best_i = np.full((nq, keep), -1, dtype=np.int64)
-            qq = np.einsum("ij,ij->i", qv, qv)
-
-            def dist_pair(qsel, sub, rows):
-                # GEMM on the pre-gathered view; norms indexed by the
-                # original row positions. In-place (qq + bb) − 2·G —
-                # bitwise-identical to the naive broadcast expression
-                # at half the full-size temporaries.
-                g = qv[qsel] @ sub.T
-                t = np.add(qq[qsel][:, None], bb[rows][None, :])
-                g *= 2.0
-                np.subtract(t, g, out=t)
-                np.maximum(t, 0.0, out=t)
-                return t
-
-            # predicate-sliced scan (S3/F2-F4): selective queries score
-            # only their (cat, ts) slice of the broadcast corpus
-            _nq_tot += nq
+            qpred = (
+                tbl.column("query_type").to_numpy(zero_copy_only=False).astype(np.int64),
+                tbl.column("v").to_numpy(zero_copy_only=False).astype(np.float64),
+                tbl.column("l").to_numpy(zero_copy_only=False),
+                tbl.column("r").to_numpy(zero_copy_only=False),
+            )
+            qv = list_column_matrix(tbl, "qvec")
+            qmat = encode_q(qv) if quantized else qv
+            best_d = np.full((nq, keep), dist.sentinel)
+            best_p = np.full((nq, keep), -1, dtype=np.int64)
+            # best_p holds corpus POSITIONS: (dist, pos) ≡ (dist, id)
             sliced_predicate_topk(
-                best_d, best_i, (qtype, vv, ll, rr), ids, cats, ts, vecs, dist_pair, keep
+                best_d, best_p, qpred, pos64, p["category"], p["ts"], rows,
+                dist.make(qmat, rows), keep,
             )
-            # finite entries' ranks are their column index + 1 after the
-            # row-wise (dist, id) resolve — no per-query Python loop
-            d2, i2, finite = resolve_topk_rows(best_d, best_i, k, np.inf)
-            rnks = np.broadcast_to(
-                np.arange(1, d2.shape[1] + 1, dtype=np.int64)[None, :], d2.shape
-            )
+            _, p2, fin = resolve_topk_rows(best_d, best_p, out_k, dist.sentinel)
+            qrow, col = np.nonzero(fin)  # row-major ⇒ per-query rank order
+            pos = p2[fin]
+            if quantized:
+                sel, rnk = rerank_exact(qv, qrow, V, pos, k)
+                qrow, pos = qrow[sel], pos[sel]
+            else:
+                rnk = (col + 1).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.broadcast_to(qid[:, None], d2.shape)[finite]),
-                    pa.array(i2[finite]),
-                    pa.array(rnks[finite]),
-                ],
-                schema=pa.schema(
-                    [
-                        pa.field("query_id", pa.int64()),
-                        pa.field("id", pa.int64()),
-                        pa.field("rnk", pa.int64()),
-                    ]
-                ),
+                [pa.array(qid[qrow]), pa.array(ids_s[pos]), pa.array(rnk)], schema=_RESULT_TYPE
             )
 
-        if _os.environ.get("SG_KERNEL_PROF"):
-            print(
-                f"SGPROF corpus_bc pid={_os.getpid()} nq={_nq_tot}"
-                f" bc={_t_bc:.2f} total={_time.time() - _t0:.2f}",
-                file=_sys.stderr,
-                flush=True,
-            )
-
-    qdf = queries.select("query_id", "query_type", "v", "l", "r", "qvec")
-    # pin the task count (see fused_quant_bc_search: AQE would coalesce
-    # a small shuffled query side to one partition, serializing the
-    # kernel; a thin file source under-splits it)
+    qdf = queries.select(*QUERY_COLS)
     target = spark.sparkContext.defaultParallelism
     if qdf.rdd.getNumPartitions() != target:
         qdf = qdf.repartition(target)
-    return qdf.mapInArrow(kernel, "query_id long, id long, rnk long")
+    return qdf.mapInArrow(kernel, RESULT_SCHEMA)
 
 
-def _exact_payload(qrows) -> tuple[np.ndarray, np.ndarray]:
-    qmeta = np.array(
-        [(r.query_id, r.query_type, r.v, r.l, r.r) for r in qrows], dtype=np.float64
-    )
-    qvecs = np.array([r.qvec for r in qrows], dtype=np.float64)
-    return qmeta, qvecs
+# ---------------------------------------------------------------------------
+# Side selection and the exact Arrow operator
+# ---------------------------------------------------------------------------
 
 
 # Corpus side small enough to broadcast whole: flip the join sides.
@@ -1069,7 +1082,9 @@ CORPUS_BC_EXT_MIN_NQ = 16_384
 def bc_rows_bound(dim: int | None) -> int:
     """Max corpus rows for the corpus-broadcast plans given the vector
     width (``None`` = unknown → the conservative row default). Never
-    below CORPUS_BC_MAX_ROWS so dim>200 callers keep the r4 behavior."""
+    below CORPUS_BC_MAX_ROWS so dim>200 callers keep the r4 behavior.
+    The quantized family and the pooled re-rank use exactly
+    ``corpus_rows <= bc_rows_bound(dim)``."""
     if dim is None:
         return CORPUS_BC_MAX_ROWS
     return max(CORPUS_BC_MAX_ROWS, CORPUS_BC_MAX_CELLS // int(dim))
@@ -1084,8 +1099,8 @@ def exact_plan_is_corpus_bc(
     """The exact scan's side-selection ladder, as a pure constant-cost
     gate (testable without Spark). Corpus-broadcast iff:
 
-    - the broadcast is already paid (``have_prepared_bc`` — streaming
-      callers reuse one corpus broadcast across micro-batches), or
+    - the caller has already paid for a corpus broadcast
+      (``have_prepared_bc``), or
     - the corpus is under the unconditional row bound (≤160 MB f64 at
       dim 100 — the ship cost is small at any batch size), or
     - it is under the byte-extended bound AND the caller's known query
@@ -1109,7 +1124,6 @@ def knn_exact_arrow(
     k: int = workload.K,
     batch_rows: int = QUERY_BATCH_ROWS,
     corpus_rows: int | None = None,
-    prepared=None,
     force_query_broadcast: bool = False,
     dim: int | None = None,
     n_queries: int | None = None,
@@ -1122,119 +1136,37 @@ def knn_exact_arrow(
     region (``n_queries``: pass when known; unknown defaults to the
     scan above CORPUS_BC_MAX_ROWS — no hidden count job):
 
-    - **corpus-broadcast** (corpus ≤ ``CORPUS_BC_MAX_ROWS``): the whole
+    - **corpus-broadcast** (:func:`corpus_broadcast_topk`): the whole
       base ships to every *query* partition; each task answers its
-      queries exactly and completely — zero candidate shuffle, no merge
-      window, output is final. The right plan whenever queries
-      outnumber the corpus (the 1M-query contest regime on small bases).
-    - **query-broadcast** (large corpus — the 100 TB regime): queries
-      ship to every base partition in batches of ``batch_rows`` so the
-      driver never holds the full query table; per partition a running
-      float64-GEMM top-k is maintained across row chunks (emitting once
-      per partition, NOT per chunk — a per-chunk emit degenerates to
-      all-pairs when chunks are narrower than k), then a window merges
-      the ≤ nq×k×P candidates.
+      queries exactly and completely — output is final. The right plan
+      whenever queries outnumber the corpus (the 1M-query contest
+      regime on small bases). The broadcast is cached per corpus plan,
+      so repeated callers (streaming micro-batches) ship it once.
+    - **query-broadcast** (:func:`query_broadcast_topk`, the 100 TB
+      regime): queries ship to every base partition in batches of
+      ``batch_rows`` so the driver never holds the full query table;
+      each partition emits its packed per-query top-k and
+      :func:`packed_topk_merge` merges the ≤P lists per query.
 
     Both paths use the same distance formula and (dist, id) tie-break,
-    so they produce identical rows. Repeated callers (streaming) pass
-    ``prepared=prepare_corpus(spark, base)`` to skip the per-call count
-    job and reuse one corpus broadcast across calls.
+    so they produce identical rows. ``corpus_rows``: pass when known to
+    skip the count job.
     """
-    corpus_bc = None
-    if prepared is not None:
-        corpus_rows, corpus_bc = prepared
     if corpus_rows is None:
         corpus_rows = base.count()
     if not force_query_broadcast and exact_plan_is_corpus_bc(
-        corpus_rows, dim, n_queries, corpus_bc is not None
+        corpus_rows, dim, n_queries, False
     ):
-        return _knn_exact_corpus_broadcast(spark, base, queries, k, bc=corpus_bc)
-    out_schema = PACKED_CAND_SCHEMA
-    result_type = pa.schema(
-        [
-            pa.field("query_id", pa.int64()),
-            pa.field("cids", pa.list_(pa.int64())),
-            pa.field("cdists", pa.list_(pa.float64())),
-        ]
-    )
-
-    def make_kernel(bc):
-        return lambda batches: partial_topk(bc, batches)
-
-    def partial_topk(bc, batches):
-        prefault_worker_arena()
-        qm, qv = bc.value
-        qid = qm[:, 0].astype(np.int64)
-        qpred = (qm[:, 1].astype(np.int64), qm[:, 2], qm[:, 3], qm[:, 4])
-        nq = len(qid)
-        if nq == 0:
-            return
-        keep = k + MERGE_PAD
-        # running per-partition top-k (dist, id) per query — emitted
-        # ONCE at partition end. Emitting per chunk is wrong when the
-        # chunk is narrower than k: min(k, chunk) keeps every row and
-        # the "partial top-k" degenerates to all pairs.
-        best_d = np.full((nq, keep), np.inf)
-        best_i = np.full((nq, keep), -1, dtype=np.int64)
-        qq = np.einsum("ij,ij->i", qv, qv)
-        saw = False
-        for tbl in batches:
-            ids_all = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-            if not len(ids_all):
-                continue
-            saw = True
-            cats_all = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.float64)
-            ts_all = tbl.column("ts").to_numpy(zero_copy_only=False)
-            vecs_all = list_column_matrix(tbl, "vec")
-            bb = np.einsum("ij,ij->i", vecs_all, vecs_all)
-
-            def dist_pair(qsel, sub, rows):
-                # in-place (qq + bb) − 2·G: bitwise-identical values to
-                # the naive broadcast expression at half the temporaries
-                g = qv[qsel] @ sub.T
-                t = np.add(qq[qsel][:, None], bb[rows][None, :])
-                g *= 2.0
-                np.subtract(t, g, out=t)
-                np.maximum(t, 0.0, out=t)
-                return t
-
-            # predicate-sliced scan (S3/F2-F4): the same sorted-replica
-            # kernel every other brute-force path uses — the
-            # GEMM-then-mask shape spent ~15× the sliced kernel's wall
-            # in mask temporaries and full-width merges at contest
-            # query counts (measured r13; see OPTIMIZATION_r13.md)
-            sliced_predicate_topk(
-                best_d, best_i, qpred, ids_all, cats_all, ts_all, vecs_all,
-                dist_pair, keep, sentinel=np.inf,
-            )
-        if saw:
-            # resolve the (dist, id) boundary before emitting, so the
-            # ≤k rows shipped per query are the exact partial top-k —
-            # the slack columns never reach the shuffle. Emitted PACKED
-            # (one list row per query, row-major ⇒ per-query rank
-            # order), so the final merge shuffles ≤P rows per query
-            # instead of ≤k×P (PACKED_CAND_SCHEMA rationale above).
-            d2, i2, finite = resolve_topk_rows(best_d, best_i, k, np.inf)
-            counts = finite.sum(axis=1)
-            offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(qid),
-                    pa.ListArray.from_arrays(offsets, pa.array(i2[finite])),
-                    pa.ListArray.from_arrays(offsets, pa.array(d2[finite])),
-                ],
-                schema=result_type,
-            )
-
-    candidates = chunked_broadcast_scan(
-        base.select("id", "category", "ts", "vec"),
-        queries.select("query_id", "query_type", "v", "l", "r", "qvec"),
-        _exact_payload,
-        make_kernel,
-        out_schema,
-        batch_rows,
+        return corpus_broadcast_topk(base, queries, k)
+    candidates = query_broadcast_topk(
+        base.select(*CORPUS_COLS),
+        queries,
+        lambda tbl: list_column_matrix(tbl, "vec"),
+        EXACT_L2,
+        k,
+        batch_rows=batch_rows,
         scan_rows=corpus_rows,
     )
     if candidates is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
+        return spark.createDataFrame([], RESULT_SCHEMA)
     return packed_topk_merge(candidates, k)

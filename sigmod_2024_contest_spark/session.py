@@ -95,7 +95,7 @@ def get_spark(
     # Sessions NOT created here (the driver-contract __spark_entry__
     # path, where executorEnv is frozen before this package loads) get
     # the same tuning at first kernel call via mallopt in the live
-    # worker — operators.knn.prefault_worker_arena.
+    # worker — operators.knn.tune_worker_arena.
     try:
         arena_mb = int(os.environ.get("SPARK_GRAFT_MALLOC_ARENA_MB", "1024"))
     except (TypeError, ValueError):

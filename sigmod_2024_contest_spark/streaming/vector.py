@@ -10,9 +10,11 @@ and written to a batch_id-partitioned parquet sink. Exactly-once comes
 from the streaming checkpoint plus an idempotent per-batch write: each
 micro-batch dynamically OVERWRITES its own ``batch_id=`` partition, so
 a retried batch replaces its partial output instead of appending
-duplicates. The corpus is prepared ONCE per stream
-(``knn.prepare_corpus`` — one count + one broadcast) and reused by
-every micro-batch, so per-batch cost is the search, not a reload.
+duplicates. The corpus is counted ONCE per stream and every
+micro-batch passes that ``corpus_rows``; the corpus-broadcast kernel's
+broadcast is cached per corpus plan (``knn.cached_corpus_broadcast``),
+and the base plan is the same in every micro-batch, so the stream ships
+one broadcast and per-batch cost is the search, not a reload.
 
 This is the engine's answer surface for "index once, serve query
 batches forever" — the same structure the hybrid engine uses, reachable
@@ -58,11 +60,11 @@ def knn_stream(
 
     from ..operators import knn
 
-    prepared = knn.prepare_corpus(spark, base)
+    corpus_rows = base.count()
 
     def answer(batch_df: DataFrame, batch_id: int) -> None:
         (
-            knn.knn_exact_arrow(spark, base, batch_df, k=k, prepared=prepared)
+            knn.knn_exact_arrow(spark, base, batch_df, k=k, corpus_rows=corpus_rows)
             .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

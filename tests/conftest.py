@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -24,7 +26,8 @@ TABLES = (
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8)
+    # an exported SPARK_GRAFT_CPUS sizes the test session; 8 otherwise
+    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS") or 8))
     yield s
     s.stop()
 

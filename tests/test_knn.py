@@ -3,6 +3,7 @@ utils.h:80-158 brute force, searcher.hpp:29-43 predicates)."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_SMOKE, assert_matches_oracle, duck_con, rows_set
 
 from sigmod_2024_contest_spark.operators import knn
@@ -41,18 +42,25 @@ def test_every_query_answered(spark):
 def test_knn_arrow_chunked_batches_match(spark):
     """Chunked query broadcast (batch_rows smaller than the query set)
     must produce exactly the single-batch result — the union of
-    per-batch candidate sets feeds one global merge window."""
+    per-batch packed candidate sets feeds one global merge. The
+    chunked side is pinned to the query-broadcast scan, so the
+    multi-batch branch of chunked_broadcast_scan (localCheckpoint,
+    unpersist, union) really runs."""
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
     whole = rows_set(knn.knn_exact_arrow(spark, base, q).collect())
-    chunked = rows_set(knn.knn_exact_arrow(spark, base, q, batch_rows=7).collect())
+    chunked = rows_set(
+        knn.knn_exact_arrow(spark, base, q, batch_rows=7, force_query_broadcast=True).collect()
+    )
     assert whole == chunked
 
 
 def test_knn_arrow_100k_queries_bounded_driver(spark):
     """Contest-scale query-count stress (1M queries in production;
-    100k here): the batched broadcast loop must complete without the
-    driver ever holding the full query table."""
+    100k here): on a small corpus the side rule picks the
+    corpus-broadcast kernel, which partitions the 100k queries across
+    tasks — the driver never collects the query table and every query
+    gets its k rows."""
     from pyspark.sql import functions as F
 
     base = base_vectors(spark, SF_SMOKE)
@@ -75,30 +83,6 @@ def test_knn_arrow_100k_queries_bounded_driver(spark):
     assert res.count() == n_q * 3
 
 
-def test_exact_rerank_paths_identical(spark):
-    """exact_rerank's two physical strategies — corpus-broadcast lookup
-    kernel vs candidates-only join + window — are the same logical op
-    and must emit identical rows for the same candidate pool."""
-    from pyspark.sql import functions as F
-
-    base = base_vectors(spark, SF_SMOKE)
-    q = workload.queries_df(spark, SF_SMOKE)
-    # candidate pool: every query's 30 smallest base ids (predicate-free
-    # — the rerank ranks whatever pool it is given)
-    pool = (
-        q.select("query_id")
-        .crossJoin(base.select("id").orderBy("id").limit(30))
-    )
-    bcast = sorted(
-        map(tuple, knn.exact_rerank(base, q, pool, k=10, corpus_rows=1).collect())
-    )
-    joined = sorted(
-        map(tuple, knn.exact_rerank(base, q, pool, k=10, corpus_rows=1 << 40).collect())
-    )
-    assert bcast == joined
-    assert len(bcast) == q.count() * 10
-
-
 def test_sq8_paths_identical(spark):
     """knn_sq8_rerank's two physical plans — the fused corpus-broadcast
     kernel (small base) and the query-broadcast codes scan + pool
@@ -119,9 +103,9 @@ def test_sq8_paths_identical(spark):
 
 
 def test_exact_rerank_pooled_paths_identical(spark):
-    """exact_rerank_pooled's fused groupBy kernel vs the window pool +
-    exact_rerank fallback: same candidate rows in, identical final
-    rows out."""
+    """exact_rerank_pooled's cogroup kernel over the broadcast corpus
+    vs its window pool + candidates-only join fallback: same candidate
+    rows in, identical final rows out."""
     from pyspark.sql import functions as F
 
     base = base_vectors(spark, SF_SMOKE)
@@ -173,7 +157,7 @@ def test_corpus_broadcast_cache_reuse(spark):
 
 def test_quant_variants_paths_identical(spark):
     """asym/SQ4 inherit the same cost-based twin plans via
-    _int_cut_rerank — fused corpus-broadcast vs forced codes scan must
+    quant_rerank — fused corpus-broadcast vs forced codes scan must
     be row-identical for both grids."""
     from sigmod_2024_contest_spark.functions import quantization as Q
     from sigmod_2024_contest_spark.operators import bruteforce_quant as BQ
@@ -204,6 +188,39 @@ def test_sq8_fused_plan_shape(spark):
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 1, plan
     for op in ("Window", "SortMergeJoin", "BroadcastHashJoin", "Sort "):
+        assert op not in plan, (op, plan)
+
+
+@pytest.mark.parametrize("variant", ["sq8", "asym", "sq4"])
+def test_quant_family_one_side_rule(spark, monkeypatch, variant):
+    """SQ8, asym and SQ4 share one side rule,
+    ``corpus_rows <= knn.bc_rows_bound(dim)``: with the bare row bound
+    below the smoke corpus but the byte bound (CORPUS_BC_MAX_CELLS //
+    dim) above it, each variant given ``dim`` must still take the fused
+    corpus-broadcast plan — a single MapInArrow behind at most one
+    exchange, no window, sort or join."""
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import bruteforce_quant as BQ
+    from sigmod_2024_contest_spark.operators import bruteforce_sq8
+
+    base = base_vectors(spark, SF_SMOKE)
+    q = workload.queries_df(spark, SF_SMOKE)
+    rows = base.count()
+    dim = len(base.select("vec").head()["vec"])
+    monkeypatch.setattr(knn, "CORPUS_BC_MAX_ROWS", 16)
+    assert knn.CORPUS_BC_MAX_ROWS < rows <= knn.CORPUS_BC_MAX_CELLS // dim
+    if variant == "sq8":
+        res = bruteforce_sq8.knn_sq8_rerank(base, q, Q.train_alpha(base), dim=dim)
+    elif variant == "asym":
+        mins, maxs = Q.train_minmax(base, "vec")
+        res = BQ.knn_asym_rerank(base, q, mins, maxs, dim=dim)
+    else:
+        mn, mx = Q.train_global_minmax(base, "vec")
+        res = BQ.knn_sq4_rerank(base, q, mn, mx, dim=dim)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("Exchange") <= 1, plan
+    for op in ("Window", "SortMergeJoin", "BroadcastHashJoin", "Sort ", "Cogroup"):
         assert op not in plan, (op, plan)
 
 

@@ -112,8 +112,11 @@ def test_sq8_arrow_matches_expr_path(spark):
 
 def test_sq8_chunked_batches_match(spark):
     """Multi-batch query broadcast (batch_rows < nq) through the
-    running-top-k kernel must equal the single-batch result — the
-    regression class where a per-chunk emit degenerates to all pairs."""
+    running-top-k scan kernel must equal the single-batch result — the
+    regression class where a per-chunk emit degenerates to all pairs.
+    The chunked side is pinned to the scan plan (force_scan), so the
+    multi-batch branch of chunked_broadcast_scan runs for every grid:
+    SQ8, asym and SQ4."""
     from conftest import SF_SMOKE
 
     from sigmod_2024_contest_spark.functions import quantization as Q
@@ -123,21 +126,18 @@ def test_sq8_chunked_batches_match(spark):
 
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
-    alpha = Q.train_alpha(base)
-    whole = sorted(map(tuple, bruteforce_sq8.knn_sq8_rerank(base, q, alpha).collect()))
-    chunked = sorted(
-        map(tuple, bruteforce_sq8.knn_sq8_rerank(base, q, alpha, batch_rows=7).collect())
-    )
+
+    def both(fn, *args):
+        whole = sorted(map(tuple, fn(base, q, *args).collect()))
+        chunked = sorted(map(tuple, fn(base, q, *args, batch_rows=7, force_scan=True).collect()))
+        return whole, chunked
+
+    whole, chunked = both(bruteforce_sq8.knn_sq8_rerank, Q.train_alpha(base))
     assert whole == chunked
-    mins, maxs = Q.train_minmax(base, "vec")
-    aw = sorted(map(tuple, bruteforce_quant.knn_asym_rerank(base, q, mins, maxs).collect()))
-    ac = sorted(
-        map(
-            tuple,
-            bruteforce_quant.knn_asym_rerank(base, q, mins, maxs, batch_rows=7).collect(),
-        )
-    )
-    assert aw == ac
+    whole, chunked = both(bruteforce_quant.knn_asym_rerank, *Q.train_minmax(base, "vec"))
+    assert whole == chunked
+    whole, chunked = both(bruteforce_quant.knn_sq4_rerank, *Q.train_global_minmax(base, "vec"))
+    assert whole == chunked
 
 
 def test_knn_asym_rerank_oracle(spark):
