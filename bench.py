@@ -596,13 +596,16 @@ def main() -> None:
     # maintenance timer that outlives the session and logs once SparkEnv
     # is gone), so "last JSON line of stdout" parsing is fragile. Stop
     # the state-store machinery explicitly, stop Spark, and only then
-    # print the compact line — it is the process's last stdout act.
+    # print the compact line — it is the process's last stdout act, and
+    # printed even when the shutdown fails.
     try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass
-    spark.stop()
-    print(compact_line, flush=True)
+        try:
+            spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+        except Exception:
+            pass
+        spark.stop()
+    finally:
+        print(compact_line, flush=True)
 
 
 if __name__ == "__main__":

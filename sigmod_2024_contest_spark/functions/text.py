@@ -44,8 +44,8 @@ def text_stats(docs: DataFrame, hoist: bool = False) -> DataFrame:
 
     ``hoist``: evaluate the split in its own projection vs inline per
     feature. Values are bit-identical either way; the r11 A/B
-    (min-of-3 at sf0.1, tools/ab_hoist.py) picked INLINE as the
-    default — whole-stage codegen's subexpression elimination already
+    (min-of-3 at sf0.1, tools/ab_hoist.py at commit 9f5e074) picked
+    INLINE as the default — whole-stage codegen's subexpression elimination already
     evaluates the repeated split once within one ProjectExec, so the
     hoist's extra projection only adds a row-materialization boundary
     (the r10 text_stats 2× wall drift)."""

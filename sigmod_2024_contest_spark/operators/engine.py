@@ -551,20 +551,43 @@ def upsert_index(
         affected = [r["pkey"] for r in sliced.select("pkey").distinct().collect()]
     if not affected:
         return index
-    untouched = index.filter(~F.col("pkey").isin(affected))
+    return _rebuild_affected(
+        index, new_base, sliced, affected, alpha, m, efc, graph_min_nodes,
+        hnsw_levels, max_nodes,
+    )
 
-    # Replay idempotence: a retried micro-batch (streaming checkpoint
-    # replay after the LATEST pointer already moved) re-applies rows
-    # the index already holds; without this anti-join the rebuild
-    # would duplicate them and diverge from the from-scratch build.
-    # Dropping retained rows whose id re-arrives also gives true
-    # UPSERT semantics for value updates — under the standing
-    # assumption that (category, ts) per id are immutable (routing is
-    # deterministic in them, so the stale copy lives in an affected
-    # shard). The arrival-id side is micro-batch-sized — broadcast.
+
+def _rebuild_affected(
+    index: DataFrame,
+    new_base: DataFrame,
+    sliced: DataFrame,
+    affected: list[str],
+    alpha: float,
+    m: int,
+    efc: int,
+    graph_min_nodes: int,
+    hnsw_levels: bool,
+    max_nodes: int,
+) -> DataFrame:
+    """The rebuild tail of both upserts: shards outside ``affected``
+    pass through as a pure filter; each affected shard rebuilds from
+    its retained rows (codes decoded back to arrays) plus the
+    arrivals ``sliced`` (pkey, id, category, ts, codes).
+
+    Replay idempotence: a retried micro-batch (streaming checkpoint
+    replay after the LATEST pointer already moved) re-applies rows the
+    index already holds; without the anti-join the rebuild would
+    duplicate them and diverge from the from-scratch build. Dropping
+    retained rows whose id re-arrives also gives true UPSERT semantics
+    for value updates — under the standing assumption that (category,
+    ts) per id are immutable (routing is deterministic in them, so the
+    stale copy lives in an affected shard). For the append-only epoch
+    fold only the open shard has retained rows and the anti-join is
+    defense in depth. The arrival-id side is micro-batch-sized —
+    broadcast."""
+    untouched = index.filter(~F.col("pkey").isin(affected))
     arrival_ids = F.broadcast(new_base.select("id").distinct())
     bin_to_codes = F.pandas_udf(_bin_to_codes_batch, "array<tinyint>")
-
     retained = (
         index.filter(F.col("pkey").isin(affected))
         .join(arrival_ids, "id", "left_anti")
@@ -587,7 +610,8 @@ def upsert_index(
 # micro-batch's arrivals across ALL shards of each touched slice, so in
 # manifest-mode ingest a hot big-CATEGORY slice — whose rows span all
 # time — rebuilds every one of its shards every batch: the measured
-# ~112-shard/batch write floor (tools/measure_manifest.py, README).
+# ~112-shard/batch write floor (tools/measure_manifest.py at commit
+# 9f5e074, README).
 # Epoch routing assigns shard ids append-only instead: each slice keeps
 # ONE open shard that fills to ``max_nodes`` and seals; arrivals go to
 # the open shard (and spill into fresh epochs when a batch overflows
@@ -702,25 +726,11 @@ def upsert_index_epoch(
     )
     if not affected:
         return index, new_state, []
-    untouched = index.filter(~F.col("pkey").isin(affected))
-    bin_to_codes = F.pandas_udf(_bin_to_codes_batch, "array<tinyint>")
-    # only the open shard has retained rows (sealed shards are never in
-    # `affected`); the anti-join is defense in depth — the append-only
-    # contract says arrival ids are new
-    arrival_ids = F.broadcast(new_base.select("id").distinct())
-    retained = (
-        index.filter(F.col("pkey").isin(affected))
-        .join(arrival_ids, "id", "left_anti")
-        .select(
-            "pkey", "id", "category", "ts",
-            bin_to_codes(F.col("codes")).alias("codes"),
-        )
+    rebuilt = _rebuild_affected(
+        index, new_base, sliced, affected, alpha, m, efc, graph_min_nodes,
+        hnsw_levels, max_nodes,
     )
-    rebuilt = build_groups(
-        retained.unionByName(sliced), m, efc, graph_min_nodes, float(alpha),
-        hnsw_levels, n_groups=len(affected), max_nodes=max_nodes,
-    )
-    return untouched.unionByName(rebuilt), new_state, affected
+    return rebuilt, new_state, affected
 
 
 COMPACT_FACTOR = 2.0
@@ -970,12 +980,6 @@ _EMPTY_TRIPLE = (
 )
 
 
-def _empty_cands() -> pd.DataFrame:
-    return pd.DataFrame({"query_id": [], "id": [], "cdist": []}).astype(
-        {"query_id": "int64", "id": "int64", "cdist": "float64"}
-    )
-
-
 def _search_shard_gemm(
     codes: np.ndarray,
     ids: np.ndarray,
@@ -1121,87 +1125,14 @@ def _search_arrays(
     )
 
 
-def _pad_adjacency(rows, trows, n: int):
-    """Ragged neighbor lists → padded (nbrs int32, nbr_ts float64)
-    matrices. Padding slots hold -1 / 0 — the beam masks nbrs >= 0
-    before any nbr_ts read."""
-    lens = np.fromiter((len(x) for x in rows), dtype=np.int64, count=n)
-    m0 = int(lens.max(initial=0)) or 1
-    nbrs = np.full((n, m0), -1, dtype=np.int32)
-    nbr_ts = np.zeros((n, m0), dtype=np.float64)
-    mask = np.arange(m0)[None, :] < lens[:, None]
-    if lens.sum():
-        nbrs[mask] = np.concatenate([np.asarray(r, dtype=np.int32) for r in rows])
-        nbr_ts[mask] = np.concatenate([np.asarray(r, dtype=np.float64) for r in trows])
-    return nbrs, nbr_ts
-
-
-def _q_arrays_pdf(q_pdf: pd.DataFrame):
-    return (
-        q_pdf["query_id"].to_numpy().astype(np.int64),
-        q_pdf["query_type"].to_numpy().astype(np.int64),
-        q_pdf["v"].to_numpy().astype(np.float64),
-        q_pdf["l"].to_numpy().astype(np.float64),
-        q_pdf["r"].to_numpy().astype(np.float64),
-        np.asarray([np.asarray(x, dtype=np.float64) for x in q_pdf["qvec"]]),
-    )
-
-
-def _search_cogroup(
-    index_pdf: pd.DataFrame,
-    q_pdf: pd.DataFrame,
-    k: int,
-    ef: int | None,
-    gemm_thr: int,
-    alpha: float,
-) -> pd.DataFrame:
-    """pandas adapter over :func:`_search_arrays` (kept for tests and
-    as the readable reference shape; the Spark job runs the Arrow
-    adapter below)."""
-    if index_pdf.empty or q_pdf.empty:
-        return _empty_cands()
-    index_pdf = index_pdf.sort_values("pos").reset_index(drop=True)
-    n = len(index_pdf)
-    codes = np.frombuffer(b"".join(index_pdf["codes"]), dtype=np.int8).reshape(n, -1)
-    levels = (
-        index_pdf["level"].to_numpy().astype(np.int32)
-        if "level" in index_pdf
-        else np.zeros(n, dtype=np.int32)
-    )
-    oq, oi, od = _search_arrays(
-        codes,
-        index_pdf["id"].to_numpy(),
-        index_pdf["category"].to_numpy(),
-        index_pdf["ts"].to_numpy(),
-        lambda: _pad_adjacency(list(index_pdf["nbrs"]), list(index_pdf["nbr_ts"]), n),
-        levels,
-        lambda: list(index_pdf["upper"]),
-        _q_arrays_pdf(q_pdf),
-        k,
-        ef,
-        gemm_thr,
-        alpha,
-    )
-    return pd.DataFrame({"query_id": oq, "id": oi, "cdist": od})
-
-
-def _list_matrix(arr, dtype=np.float64) -> np.ndarray:
-    """Arrow ListArray of fixed-width lists → (n, dim) matrix."""
-    offs = arr.offsets.to_numpy()
-    vals = arr.values.to_numpy(zero_copy_only=False)
-    widths = np.diff(offs)
-    if widths.size and (widths == widths[0]).all():
-        return vals[offs[0] : offs[-1]].reshape(len(arr), int(widths[0])).astype(dtype)
-    return np.asarray(arr.to_pylist(), dtype=dtype)
-
-
 def _search_cogroup_arrow(itbl, qtbl, k: int, ef: int | None, gemm_thr: int, alpha: float):
-    """Arrow adapter: no pandas on either side — the candidate output
-    (the dominant volume: ~1.5k rows per (query, shard)) goes straight
-    from numpy into one Arrow table."""
+    """The graph-search cogroup kernel over :func:`_search_arrays`: no
+    pandas on either side — the candidate output (the dominant volume:
+    ~1.5k rows per (query, shard)) goes straight from numpy into one
+    Arrow table."""
     import pyarrow as pa
 
-    from .knn import tune_worker_arena
+    from .knn import list_column_matrix, tune_worker_arena
 
     tune_worker_arena()
     out_schema = pa.schema(
@@ -1253,7 +1184,7 @@ def _search_cogroup_arrow(itbl, qtbl, k: int, ef: int | None, gemm_thr: int, alp
         col(qtbl, "v").to_numpy(zero_copy_only=False).astype(np.float64),
         col(qtbl, "l").to_numpy(zero_copy_only=False).astype(np.float64),
         col(qtbl, "r").to_numpy(zero_copy_only=False).astype(np.float64),
-        _list_matrix(col(qtbl, "qvec")),
+        list_column_matrix(qtbl, "qvec"),
     )
     oq, oi, od = _search_arrays(
         codes,

@@ -270,7 +270,7 @@ def build_pruned_knn_graph(
             # slower than the pack, and allocation-churn-prone)
             Bp = np.zeros(B.shape[:2] + (64,), dtype=bool)
             Bp[:, :, :C] = B
-            DOM = np.packbits(Bp, axis=-1, bitorder="little").view(np.int64)[:, :, 0]
+            DOM = np.packbits(Bp, axis=-1, bitorder="little").view("<i8")[:, :, 0]
         else:
             DOM = None
         for i in range(s, e):

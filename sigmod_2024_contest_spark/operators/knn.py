@@ -30,7 +30,11 @@ strategies for the same logical op:
 The same two kernels serve the quantized brute force (SQ8, asym, SQ4 —
 ``bruteforce_sq8.quant_rerank``) with integer code distances; their
 candidates go through the one pooled exact re-rank,
-:func:`exact_rerank_pooled`.
+:func:`exact_rerank_pooled`. The embedding ANN family (``similarity``,
+``pq``) runs the query-broadcast kernel's body too: the cosine and PQ
+scans through :func:`query_broadcast_topk` (``COSINE``/``PQ_ADC``
+distances), the LSH/IVF/IVF-PQ probes per bucket or cell through
+:func:`probe_cogroup_topk`, all merged by :func:`packed_topk_merge`.
 
 Top-k ordering is explicit ``(dist, id)`` everywhere (the reference's
 heap leaves ties unspecified; we pin them — SURVEY §7.6).
@@ -87,11 +91,14 @@ def tune_worker_arena() -> None:
 
 
 def list_column_matrix(batch, name: str, dtype=np.float64) -> np.ndarray:
-    """Arrow list<float> column → (n, dim) NumPy matrix without
-    materializing Python lists (to_pylist builds n·dim PyObjects — the
-    single biggest overhead of a GEMM-per-batch kernel). Zero-copy when
-    offsets are dense; falls back to to_pylist for ragged input."""
+    """Arrow list<float> column of a RecordBatch or Table → (n, dim)
+    NumPy matrix without materializing Python lists (to_pylist builds
+    n·dim PyObjects — the single biggest overhead of a GEMM-per-batch
+    kernel). Zero-copy when offsets are dense; falls back to to_pylist
+    for ragged input."""
     col = batch.column(name)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
     try:
         offs = col.offsets.to_numpy()
         widths = np.diff(offs)
@@ -622,6 +629,13 @@ def _group_ranks(keys: np.ndarray) -> np.ndarray:
 # path. The merge kernel reproduces the window's exact (dist, id)
 # per-query order, so results are identical.
 PACKED_CAND_SCHEMA = "query_id long, cids array<long>, cdists array<double>"
+_PACKED_TYPE = pa.schema(
+    [
+        pa.field("query_id", pa.int64()),
+        pa.field("cids", pa.list_(pa.int64())),
+        pa.field("cdists", pa.list_(pa.float64())),
+    ]
+)
 
 
 def packed_topk_merge(packed: DataFrame, k: int) -> DataFrame:
@@ -719,9 +733,11 @@ SELECT query_id, id, CAST(rnk AS BIGINT) AS rnk FROM ranked WHERE rnk <= {k}
 
 
 class PairDistance(NamedTuple):
-    """A brute-force kernel's distance. ``make(qmat, mat)`` returns the
-    ``pair_dist(qsel, sub, rows)`` callable :func:`sliced_predicate_topk`
-    expects for query-side matrix ``qmat`` against row matrix ``mat``;
+    """A top-k kernel's distance. ``make(qmat, mat, qids, ids)`` returns
+    the ``pair_dist(qsel, sub, rows)`` callable
+    :func:`sliced_predicate_topk` expects for query-side matrix ``qmat``
+    against row matrix ``mat``; ``qids``/``ids`` are the query ids and
+    the rows' ids, for distances that exclude a query's own row.
     ``sentinel`` fills empty top-k slots and sorts after every real
     distance (it also fixes the running top-k's dtype)."""
 
@@ -729,7 +745,7 @@ class PairDistance(NamedTuple):
     sentinel: object
 
 
-def _l2_pairs(qv: np.ndarray, mat: np.ndarray):
+def _l2_pairs(qv: np.ndarray, mat: np.ndarray, _qids, _ids):
     qq = np.einsum("ij,ij->i", qv, qv)
     bb = np.einsum("ij,ij->i", mat, mat)
 
@@ -747,15 +763,51 @@ def _l2_pairs(qv: np.ndarray, mat: np.ndarray):
     return pair_dist
 
 
-def _code_pairs(qc: np.ndarray, codes: np.ndarray):
+def _code_pairs(qc: np.ndarray, codes: np.ndarray, _qids, _ids):
     # integer code distance, exact via float BLAS (Q.code_l2_sqr_np);
     # order-independent, so it equals the SQL oracle's fold bit-for-bit
     return lambda qsel, sub, rows: Q.code_l2_sqr_np(qc[qsel], sub)
 
 
+def _mask_self(d, qids, ids, qsel, rows):
+    # the embedding family queries the corpus with its own rows: a
+    # query's own row sorts last (dropped at resolve, like the sentinel)
+    d[qids[qsel][:, None] == ids[rows][None, :]] = np.inf
+    return d
+
+
+def _cosine_pairs(qv: np.ndarray, mat: np.ndarray, qids, ids):
+    qn = np.sqrt(np.einsum("ij,ij->i", qv, qv))
+    vn = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+
+    def pair_dist(qsel, sub, rows):
+        # dist = −cos, so ascending (dist, id) is the oracle's
+        # (cos desc, id asc); negation is exact
+        d = (qv[qsel] @ sub.T) / (qn[qsel][:, None] * vn[rows][None, :])
+        np.negative(d, out=d)
+        return _mask_self(d, qids, ids, qsel, rows)
+
+    return pair_dist
+
+
+def _adc_pairs(luts: np.ndarray, codes: np.ndarray, qids, ids):
+    def pair_dist(qsel, sub, rows):
+        # ADC: dist[q, r] = sum_j LUT[q, j, code_j(r)], folded in j order
+        lq = luts[qsel]
+        d = np.zeros((lq.shape[0], sub.shape[0]))
+        for j in range(lq.shape[1]):
+            d += lq[:, j, sub[:, j]]
+        return _mask_self(d, qids, ids, qsel, rows)
+
+    return pair_dist
+
+
 CODE_SENTINEL = np.int64(1) << 62
 EXACT_L2 = PairDistance(_l2_pairs, np.inf)  # float64 rows, float64 queries
 CODE_L2 = PairDistance(_code_pairs, CODE_SENTINEL)  # integer codes, both sides
+COSINE = PairDistance(_cosine_pairs, np.inf)  # float64 rows and queries, self excluded
+# PQ codes against per-query lookup tables (nq, m, ksub), self excluded
+PQ_ADC = PairDistance(_adc_pairs, np.inf)
 
 
 def rerank_exact(
@@ -879,6 +931,59 @@ def _query_payload(qrows, encode_q) -> tuple[np.ndarray, np.ndarray]:
     return qmeta, (qvecs if encode_q is None else encode_q(qvecs))
 
 
+def packed_scan_topk(qm, qmat, blocks, read_rows, dist: PairDistance, out_k: int):
+    """The kernel body every scan and probe kernel runs: a RUNNING
+    top-(out_k + MERGE_PAD) per query across the Arrow ``blocks``
+    (id, category, ts, <row column>) with the predicate-sliced ``dist``
+    scan, emitted ONCE at the end — a per-block emit degenerates to all
+    pairs whenever blocks are narrower than out_k. The emit resolves the
+    exact (dist, id) boundary, so ≤ out_k candidates per query leave,
+    packed one row per query (``PACKED_CAND_SCHEMA``; integer code
+    distances are exact in its float64 list wherever code_l2_sqr_np
+    takes its float path, 4·d·m² < 2⁵²). ``qm`` is the (nq, 5) float64
+    (query_id, query_type, v, l, r) matrix, ``qmat`` the query-side
+    matrix ``dist.make`` takes; ``read_rows(tbl)`` reads a block's row
+    matrix.
+
+    Tie note: chunk merges pre-cut by distance with MERGE_PAD slack; a
+    tie is mis-cut only if >PAD rows share the boundary distance."""
+    nq = len(qm)
+    if nq == 0:
+        return
+    keep = out_k + MERGE_PAD
+    qid = qm[:, 0].astype(np.int64)
+    qpred = (qm[:, 1].astype(np.int64), qm[:, 2], qm[:, 3], qm[:, 4])
+    best_d = np.full((nq, keep), dist.sentinel)
+    best_i = np.full((nq, keep), -1, dtype=np.int64)
+    saw = False
+    for tbl in blocks:
+        ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
+        if not len(ids):
+            continue
+        saw = True
+        cats = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.float64)
+        ts = tbl.column("ts").to_numpy(zero_copy_only=False)
+        mat = read_rows(tbl)
+        # predicate-sliced scan (S3/F2-F4): selective queries score only
+        # their (cat, ts) slice of the block
+        sliced_predicate_topk(
+            best_d, best_i, qpred, ids, cats, ts, mat, dist.make(qmat, mat, qid, ids), keep
+        )
+    if saw:
+        d2, i2, fin = resolve_topk_rows(best_d, best_i, out_k, dist.sentinel)
+        offsets = np.concatenate([[0], np.cumsum(fin.sum(axis=1))]).astype(np.int32)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(qid),
+                pa.ListArray.from_arrays(offsets, pa.array(i2[fin])),
+                pa.ListArray.from_arrays(
+                    offsets, pa.array(d2[fin].astype(np.float64, copy=False))
+                ),
+            ],
+            schema=_PACKED_TYPE,
+        )
+
+
 def query_broadcast_topk(
     scan: DataFrame,
     queries: DataFrame,
@@ -889,71 +994,23 @@ def query_broadcast_topk(
     batch_rows: int = QUERY_BATCH_ROWS,
     scan_rows: int | None = None,
 ) -> DataFrame | None:
-    """The one query-broadcast scan kernel (exact, SQ8, asym, SQ4).
+    """The one query-broadcast scan kernel (exact, SQ8, asym, SQ4,
+    cosine, PQ ADC).
 
     Queries broadcast in bounded batches (:func:`chunked_broadcast_scan`)
     as (qmeta, ``encode_q(qvecs)``) — float qvecs when ``encode_q`` is
     None. ``scan`` is (id, category, ts, <row column>); ``read_rows(tbl)``
     reads an Arrow block's row matrix (float ``vec``, an in-kernel
-    encode, or the persisted ``codes`` column). Per partition a RUNNING
-    top-(out_k + MERGE_PAD) per query is kept across blocks with the
-    predicate-sliced ``dist`` scan and emitted ONCE at partition end — a
-    per-block emit degenerates to all pairs whenever blocks are narrower
-    than out_k. The emit resolves the exact (dist, id) boundary, so ≤
-    out_k candidates per query leave the task, packed one row per query
-    (``PACKED_CAND_SCHEMA``; integer code distances are exact in its
-    float64 list wherever code_l2_sqr_np takes its float path,
-    4·d·m² < 2⁵²). Returns None when there are no queries.
-
-    Tie note: chunk merges pre-cut by distance with MERGE_PAD slack; a
-    tie is mis-cut only if >PAD rows share the boundary distance."""
-    keep = out_k + MERGE_PAD
-    out_type = pa.schema(
-        [
-            pa.field("query_id", pa.int64()),
-            pa.field("cids", pa.list_(pa.int64())),
-            pa.field("cdists", pa.list_(pa.float64())),
-        ]
-    )
+    encode, or the persisted ``codes`` column). Each partition runs
+    :func:`packed_scan_topk` over its blocks, so ≤ out_k candidates per
+    query leave the task, packed one row per query; merge them with
+    :func:`packed_topk_merge`. Returns None when there are no queries."""
 
     def make_kernel(bc):
         def kernel(batches):
             tune_worker_arena()
             qm, qmat = bc.value
-            nq = len(qm)
-            if nq == 0:
-                return
-            qid = qm[:, 0].astype(np.int64)
-            qpred = (qm[:, 1].astype(np.int64), qm[:, 2], qm[:, 3], qm[:, 4])
-            best_d = np.full((nq, keep), dist.sentinel)
-            best_i = np.full((nq, keep), -1, dtype=np.int64)
-            saw = False
-            for tbl in batches:
-                ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-                if not len(ids):
-                    continue
-                saw = True
-                cats = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.float64)
-                ts = tbl.column("ts").to_numpy(zero_copy_only=False)
-                mat = read_rows(tbl)
-                # predicate-sliced scan (S3/F2-F4): selective queries
-                # score only their (cat, ts) slice of the block
-                sliced_predicate_topk(
-                    best_d, best_i, qpred, ids, cats, ts, mat, dist.make(qmat, mat), keep
-                )
-            if saw:
-                d2, i2, fin = resolve_topk_rows(best_d, best_i, out_k, dist.sentinel)
-                offsets = np.concatenate([[0], np.cumsum(fin.sum(axis=1))]).astype(np.int32)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(qid),
-                        pa.ListArray.from_arrays(offsets, pa.array(i2[fin])),
-                        pa.ListArray.from_arrays(
-                            offsets, pa.array(d2[fin].astype(np.float64, copy=False))
-                        ),
-                    ],
-                    schema=out_type,
-                )
+            yield from packed_scan_topk(qm, qmat, batches, read_rows, dist, out_k)
 
         return kernel
 
@@ -966,6 +1023,43 @@ def query_broadcast_topk(
         batch_rows,
         scan_rows=scan_rows,
     )
+
+
+def probe_cogroup_topk(
+    scan: DataFrame,
+    key: str,
+    queries: DataFrame,
+    read_rows,
+    dist: PairDistance,
+    out_k: int,
+    encode_q=None,
+) -> DataFrame:
+    """The probe family's plan (LSH buckets, IVF cells) on the same
+    kernel body as :func:`query_broadcast_topk`: ``scan`` (id, category,
+    ts, <row column>, ``key``) shuffles once on ``key`` and cogroups
+    with ``queries`` (``QUERY_COLS`` + ``probe``, one row per probed
+    key); each group runs :func:`packed_scan_topk` over its rows, so a
+    query is scored only against the keys it probes. ``encode_q(qvecs,
+    key)`` maps the group's queries onto the rows' space (IVF-PQ: the
+    cell's residual lookup tables); None keeps float qvecs. Emits
+    ``PACKED_CAND_SCHEMA`` rows — one per (probed key, query) — for
+    :func:`packed_topk_merge`."""
+
+    def kernel(btbl, qtbl):
+        tune_worker_arena()
+        if btbl.num_rows == 0 or qtbl.num_rows == 0:
+            return _PACKED_TYPE.empty_table()
+        qb = qtbl.combine_chunks().to_batches()[0]
+        qm = np.column_stack(
+            [qb.column(c).to_numpy(zero_copy_only=False).astype(np.float64) for c in QUERY_COLS[:5]]
+        )
+        qv = list_column_matrix(qb, "qvec")
+        qmat = qv if encode_q is None else encode_q(qv, btbl.column(key)[0].as_py())
+        out = packed_scan_topk(qm, qmat, btbl.to_batches(), read_rows, dist, out_k)
+        return pa.Table.from_batches(list(out), schema=_PACKED_TYPE)
+
+    cg = scan.groupby(key).cogroup(queries.groupby("probe"))
+    return cg.applyInArrow(kernel, PACKED_CAND_SCHEMA)
 
 
 def corpus_broadcast_topk(
@@ -1028,7 +1122,7 @@ def corpus_broadcast_topk(
             # best_p holds corpus POSITIONS: (dist, pos) ≡ (dist, id)
             sliced_predicate_topk(
                 best_d, best_p, qpred, pos64, p["category"], p["ts"], rows,
-                dist.make(qmat, rows), keep,
+                dist.make(qmat, rows, qid, ids_s), keep,
             )
             _, p2, fin = resolve_topk_rows(best_d, best_p, out_k, dist.sentinel)
             qrow, col = np.nonzero(fin)  # row-major ⇒ per-query rank order
@@ -1061,9 +1155,10 @@ def corpus_broadcast_topk(
 # width, the real bound is BYTES — CORPUS_BC_MAX_CELLS caps the f64
 # payload at ~320 MB (plus ≤½ that again of codes in the quantized
 # kernels), so a 500k×64 corpus broadcasts while a 500k×100 one
-# doesn't. Measured r6 (tools/measure_bf_pair.py, post kernel fix) at
-# 500k×64 / 1428 bf queries, warmed min-of-2: fused broadcast kernel
-# 10.5 s vs codes scan + window + re-rank 24.0-38.5 s.
+# doesn't. Measured r6 (tools/measure_bf_pair.py at commit 9f5e074,
+# post kernel fix) at 500k×64 / 1428 bf queries, warmed min-of-2:
+# fused broadcast kernel 10.5 s vs codes scan + window + re-rank
+# 24.0-38.5 s.
 CORPUS_BC_MAX_ROWS = 200_000
 CORPUS_BC_MAX_CELLS = 40_000_000
 # The byte-extended region (CORPUS_BC_MAX_ROWS < rows ≤ cells/dim)

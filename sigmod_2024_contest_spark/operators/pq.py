@@ -10,20 +10,24 @@ IEEE TPAMI 2011 (public) — is the vector-codebook sibling every
 two-phase contract as the reference's K2/K12 pair: compressed-domain
 candidate cut, exact float re-rank.
 
-Scale shape (mirrors bruteforce_sq8 / ann_cosine_topk):
-- training is cost-routed like IVF's k-means: a bounded driver-side
-  Lloyd twin under ``PQ_LOCAL_ROWS`` and a distributed
-  one-Arrow-pass-per-iteration loop above it (all ``m`` subspaces
-  accumulate in the SAME pass — the fact table is scanned ``iters``
-  times, never ``m × iters``), pinned equal by a forced
-  ``local_rows=0`` test;
+Scale shape (the embedding family's one kernel, ``operators/knn.py``):
+- :func:`pq_train` is the one k-means trainer (IVF's coarse quantizer
+  is its ``m = 1`` case): a bounded driver-side Lloyd under
+  ``PQ_LOCAL_ROWS`` and a distributed one-Arrow-pass-per-iteration
+  loop above it (all ``m`` subspaces accumulate in the SAME pass — the
+  fact table is scanned ``iters`` times, never ``m × iters``), sharing
+  init and arithmetic; :func:`nearest_centroid` is its assign step and
+  also the PQ encoder's and the IVF cell assignment's;
 - the codes table is the compressed replica (n × m small ints — the
   table that still fits when the floats don't); the ADC scan reads
-  ONLY it via the chunked query broadcast (O(1) driver memory, the
-  corpus never moves), computing per-batch LUT lookups — no GEMM in
-  the compressed domain, just ``sum_j LUT[q, j, code_j]``;
-- the per-partition partial top-pool means the shuffle is
-  nq × pool × P candidate rows; the exact re-rank joins float vectors
+  ONLY it through ``knn.query_broadcast_topk`` with the ``knn.PQ_ADC``
+  distance (queries broadcast as their (nq, m, ksub) lookup tables,
+  ``sum_j LUT[q, j, code_j]`` per row — no GEMM in the compressed
+  domain, the corpus never moves); IVF-PQ runs the same kernel body per
+  coarse cell through ``knn.probe_cogroup_topk``;
+- each partition keeps its top ``pool`` by (adc, id) and
+  ``knn.packed_topk_merge`` cuts the global pool, so the shuffle is
+  ≤ P packed lists per query; the exact re-rank joins float vectors
   for CANDIDATES ONLY (the K12 pattern) and re-scores with the same
   float64 cosine arithmetic as ann_cosine_topk, so with
   ``pool >= corpus`` the result is bit-identical to the exact oracle
@@ -36,21 +40,28 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.workload import QUERY_STRIDE
+from . import knn
 
 PQ_M = 8  # subspaces (dim 64 -> 8 dims each)
 PQ_KSUB = 32  # centroids per subspace (5-bit codes)
 PQ_ITERS = 5
+# Local-training bound (rows) of the k-means trainer: below it the
+# training set rides one bounded collect (≈ rows·dim·8 B — 32 MB at
+# dim 64) and all Lloyd iterations run driver-side in one pass, instead
+# of iters+2 Spark jobs whose wall is pure scheduler constants at small
+# n (the same cost route as nndescent.NND_LOCAL_ROWS).
 PQ_LOCAL_ROWS = 65_536
 PQ_POOL = 128  # approximate-config re-rank pool (recall 0.954 @ sf0.01)
 TOPK = 10
 
 
 def _value_stride_seeds(ids: np.ndarray, V: np.ndarray, ksub: int) -> np.ndarray:
-    """Deterministic init shared by both twins and with IVF's: the rows
+    """Deterministic init shared by both twins (and so by IVF): the rows
     whose vec_id is a multiple of stride = max(n//ksub, 1) with
     vec_id/stride < ksub, ordered by vec_id. Selecting by id VALUE (not
     sorted position) makes the local and forced-distributed twins pick
@@ -65,12 +76,19 @@ def _value_stride_seeds(ids: np.ndarray, V: np.ndarray, ksub: int) -> np.ndarray
     return V[sel][:ksub].astype(np.float64).copy()
 
 
+def nearest_centroid(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Row index into ``C`` of each row of ``V``'s nearest centroid:
+    argmin of ||c||² − 2c·v (||v||² is constant per row). The one
+    assign step of the trainer, the PQ encoder and the IVF cells."""
+    cc = np.einsum("ij,ij->i", C, C)
+    return np.argmin(cc[:, None] - 2.0 * (C @ V.T), axis=0)
+
+
 def _lloyd(V: np.ndarray, cents: np.ndarray, iters: int) -> np.ndarray:
     if cents.shape[0] == 0 or V.shape[0] == 0:
         return cents
     for _ in range(iters):
-        cc = np.einsum("ij,ij->i", cents, cents)
-        assign = np.argmin(cc[:, None] - 2.0 * (cents @ V.T), axis=0)
+        assign = nearest_centroid(V, cents)
         sums = np.zeros_like(cents)
         np.add.at(sums, assign, V)
         cnts = np.bincount(assign, minlength=cents.shape[0]).astype(np.float64)
@@ -92,11 +110,8 @@ def pq_train(
     driver Lloyd; above it, one mapInArrow pass per iteration emits
     per-(subspace, centroid) partial sums/counts for ALL subspaces —
     the twins share init and update arithmetic and are pinned equal by
-    a forced-distributed test."""
-    import pyarrow as pa
-
-    from .knn import list_column_matrix
-
+    a forced-distributed test. ``m = 1`` is the IVF coarse quantizer
+    (``similarity.ivf_train``)."""
     spark = emb.sparkSession
     n = emb.count()
     if local_rows and n <= local_rows:
@@ -137,12 +152,10 @@ def pq_train(
             B = bc.value
             m_, ksub_, dsub_ = B.shape
             for batch in batches:
-                V = list_column_matrix(batch, col)
+                V = knn.list_column_matrix(batch, col)
                 for j in range(m_):
                     sub = V[:, j * dsub_ : (j + 1) * dsub_]
-                    c = B[j]
-                    cc = np.einsum("ij,ij->i", c, c)
-                    assign = np.argmin(cc[:, None] - 2.0 * (c @ sub.T), axis=0)
+                    assign = nearest_centroid(sub, B[j])
                     sums = np.zeros((ksub_, dsub_))
                     np.add.at(sums, assign, sub)
                     cnts = np.bincount(assign, minlength=ksub_)
@@ -170,7 +183,7 @@ def pq_train(
 
 def pq_codes(emb: DataFrame, books: np.ndarray, col: str = "embedding") -> DataFrame:
     """(vec_id, codes array<long>): the compressed replica — m small
-    ints per vector (the argmin centroid per subspace), one Arrow
+    ints per vector (the nearest centroid per subspace), one Arrow
     projection, no shuffle."""
     spark = emb.sparkSession
     bc = spark.sparkContext.broadcast(books)
@@ -178,17 +191,66 @@ def pq_codes(emb: DataFrame, books: np.ndarray, col: str = "embedding") -> DataF
     @F.pandas_udf("array<long>")
     def encode(vs: pd.Series) -> pd.Series:
         B = bc.value
-        m_, ksub_, dsub_ = B.shape
+        dsub = B.shape[2]
         V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        out = np.empty((V.shape[0], m_), dtype=np.int64)
-        for j in range(m_):
-            sub = V[:, j * dsub_ : (j + 1) * dsub_]
-            c = B[j]
-            cc = np.einsum("ij,ij->i", c, c)
-            out[:, j] = np.argmin(cc[:, None] - 2.0 * (c @ sub.T), axis=0)
+        out = np.stack(
+            [nearest_centroid(V[:, j * dsub : (j + 1) * dsub], B[j]) for j in range(B.shape[0])],
+            axis=1,
+        ).astype(np.int64)
         return pd.Series(list(out))
 
     return emb.select("vec_id", encode(col).alias("codes"))
+
+
+def assign_cells(emb: DataFrame, cents: np.ndarray) -> DataFrame:
+    """(vec_id, embedding, cell): each vector's nearest coarse centroid
+    — the IVF and IVF-PQ partition key."""
+    bc = emb.sparkSession.sparkContext.broadcast(cents)
+
+    @F.pandas_udf("long")
+    def cell_of(vs: pd.Series) -> pd.Series:
+        V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
+        return pd.Series(nearest_centroid(V, bc.value).astype(np.int64))
+
+    return emb.select("vec_id", "embedding", cell_of("embedding").alias("cell"))
+
+
+def as_scan(df: DataFrame, row_col: str, *extra) -> DataFrame:
+    """Embedding rows in the knn kernels' scan shape: (id, category, ts,
+    ``row_col``, *extra). The family has no predicates, so category and
+    ts are constants."""
+    return df.select(
+        F.col("vec_id").alias("id"), F.lit(0).alias("category"), F.lit(0).alias("ts"),
+        row_col, *extra,
+    )
+
+
+def derived_queries(emb: DataFrame, *extra) -> DataFrame:
+    """The embedding family's query set — every QUERY_STRIDE-th vector
+    — as type-0 (no predicate) ``knn.QUERY_COLS`` rows, plus ``extra``
+    columns."""
+    return emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
+        F.col("vec_id").alias("query_id"), F.lit(0).alias("query_type"),
+        F.lit(0).alias("v"), F.lit(0).alias("l"), F.lit(0).alias("r"),
+        F.col("embedding").alias("qvec"), *extra,
+    )
+
+
+def pq_luts(Q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(nq, m, ksub) ADC lookup tables: LUT[q, j, c] = ||c||² − 2 q_j·c
+    for sub-vector j of query row q against codebook j (||q_j||² is
+    constant per query — rank-safe). The ``encode_q`` of ``knn.PQ_ADC``."""
+    m_, ksub_, dsub_ = books.shape
+    luts = np.empty((Q.shape[0], m_, ksub_))
+    for j in range(m_):
+        sub = Q[:, j * dsub_ : (j + 1) * dsub_]
+        c = books[j]
+        luts[:, j, :] = np.einsum("ij,ij->i", c, c)[None, :] - 2.0 * (sub @ c.T)
+    return luts
+
+
+def _code_rows(tbl) -> np.ndarray:
+    return knn.list_column_matrix(tbl, "codes", dtype=np.int64)
 
 
 def knn_pq_rerank(
@@ -205,100 +267,41 @@ def knn_pq_rerank(
     everything and the exact re-rank fully determines the answer, so
     the result hash-matches the exact-cosine oracle end-to-end
     through the codes pipeline (registry config). A finite ``pool``
-    is the production config: the ADC scan cuts to nq × pool
-    candidates and ONLY those join back to float vectors (K12), with
+    is the production config: the ADC scan (``knn.query_broadcast_topk``
+    with ``knn.PQ_ADC``) cuts each partition to its top ``pool`` by
+    (adc, id), ``knn.packed_topk_merge`` cuts the global pool, and ONLY
+    those nq × pool candidates join back to float vectors (K12), with
     quality pinned by the recall gate."""
-    import pyarrow as pa
-
-    from .knn import chunked_broadcast_scan, list_column_matrix
-
-    spark = emb.sparkSession
     n = emb.count()
     eff_pool = n if pool is None else min(pool, n)
     books = pq_train(emb, m=m, ksub=ksub)
-    codes = pq_codes(emb, books)
-
-    def payload(qrows):
-        qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-        Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-        m_, ksub_, dsub_ = books.shape
-        # LUT[q, j, c] = || Q[q] subspace j  -  books[j, c] ||² term:
-        # -2 q·c + ||c||²  (||q||² is constant per query — rank-safe)
-        luts = np.empty((Q.shape[0], m_, ksub_))
-        for j in range(m_):
-            sub = Q[:, j * dsub_ : (j + 1) * dsub_]
-            c = books[j]
-            luts[:, j, :] = np.einsum("ij,ij->i", c, c)[None, :] - 2.0 * (sub @ c.T)
-        return qids, luts
-
-    schema = pa.schema(
-        [pa.field("query_id", pa.int64()), pa.field("id", pa.int64()), pa.field("adc", pa.float64())]
+    packed = knn.query_broadcast_topk(
+        as_scan(pq_codes(emb, books), "codes"),
+        derived_queries(emb),
+        _code_rows,
+        knn.PQ_ADC,
+        eff_pool,
+        lambda Q: pq_luts(Q, books),
+        scan_rows=n,
     )
-
-    def make_kernel(bc):
-        def kernel(batches):
-            qids_, luts_ = bc.value
-            nq = qids_.shape[0]
-            for batch in batches:
-                ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
-                C = list_column_matrix(batch, "codes").astype(np.int64)  # (rows, m)
-                # ADC: dist[q, r] = sum_j LUT[q, j, C[r, j]]
-                d = np.zeros((nq, C.shape[0]))
-                for j in range(luts_.shape[1]):
-                    d += luts_[:, j, C[:, j]]
-                d[qids_[:, None] == ids[None, :]] = np.inf  # self
-                pp = min(eff_pool, d.shape[1])
-                part = np.argpartition(d, pp - 1, axis=1)[:, :pp]
-                rows_q, rows_id, rows_d = [], [], []
-                for i in range(nq):
-                    sel = part[i][np.isfinite(d[i, part[i]])]
-                    rows_q.append(np.full(sel.shape[0], qids_[i], dtype=np.int64))
-                    rows_id.append(ids[sel].astype(np.int64))
-                    rows_d.append(d[i, sel])
-                if rows_q:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(np.concatenate(rows_q)),
-                            pa.array(np.concatenate(rows_id)),
-                            pa.array(np.concatenate(rows_d)),
-                        ],
-                        schema=schema,
-                    )
-
-        return kernel
-
-    queries = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select("vec_id", "embedding")
-    cands = chunked_broadcast_scan(
-        codes, queries, payload, make_kernel, "query_id long, id long, adc double", scan_rows=n
-    )
-    if cands is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
-    # pool cut across partitions (adc asc), then candidates-only float join
-    wp = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("id").asc())
-    pool_df = (
-        cands.withColumn("prnk", F.row_number().over(wp))
-        .filter(F.col("prnk") <= eff_pool)
-        .select("query_id", "id")
-    )
-    return exact_cosine_rerank(pool_df, emb, k)
+    if packed is None:
+        return emb.sparkSession.createDataFrame([], knn.RESULT_SCHEMA)
+    return exact_cosine_rerank(knn.packed_topk_merge(packed, eff_pool), emb, k)
 
 
 def exact_cosine_rerank(pool_df: DataFrame, emb: DataFrame, k: int) -> DataFrame:
     """(query_id, id, rnk): K12 — join float vectors for the CANDIDATE
-    set only, re-score with float64 cosine, window top-k. Shared by
-    the PQ and IVF-PQ pipelines; candidate volume is nq × pool, so
-    both joins are candidate-sized, never corpus-sized.
+    pairs of ``pool_df`` (query_id, id) only, re-score with float64
+    cosine, and rank by (−cos, id) with ``knn._topk_window``. Shared by
+    the PQ and IVF-PQ pipelines; candidate volume is nq × pool, so both
+    joins are candidate-sized, never corpus-sized.
 
     Scoring runs as a mapInArrow kernel over the joined batches using
-    ``list_column_matrix`` (the repo-wide Arrow convention, r7 verdict
-    #3): list<float> columns decode to (n, dim) matrices without
-    per-row Python objects, and each batch is one pair of einsum folds.
+    ``knn.list_column_matrix``: list<float> columns decode to (n, dim)
+    matrices without per-row Python objects, and each batch is one pair
+    of einsum folds.
     """
-    import pyarrow as pa
-
-    from .knn import list_column_matrix
-
-    withv = pool_df.join(
+    withv = pool_df.select("query_id", "id").join(
         emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("bvec")), "id"
     ).join(
         emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")),
@@ -309,7 +312,7 @@ def exact_cosine_rerank(pool_df: DataFrame, emb: DataFrame, k: int) -> DataFrame
         [
             pa.field("query_id", pa.int64()),
             pa.field("id", pa.int64()),
-            pa.field("cos", pa.float64()),
+            pa.field("dist", pa.float64()),
         ]
     )
 
@@ -317,8 +320,8 @@ def exact_cosine_rerank(pool_df: DataFrame, emb: DataFrame, k: int) -> DataFrame
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            Q = list_column_matrix(batch, "qvec")
-            V = list_column_matrix(batch, "bvec")
+            Q = knn.list_column_matrix(batch, "qvec")
+            V = knn.list_column_matrix(batch, "bvec")
             qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
             vn = np.sqrt(np.einsum("ij,ij->i", V, V))
             c = np.einsum("ij,ij->i", Q, V) / (qn * vn)
@@ -326,20 +329,15 @@ def exact_cosine_rerank(pool_df: DataFrame, emb: DataFrame, k: int) -> DataFrame
                 [
                     batch.column("query_id").cast(pa.int64()),
                     batch.column("id").cast(pa.int64()),
-                    pa.array(c),
+                    pa.array(-c),
                 ],
                 schema=out_schema,
             )
 
     scored = withv.select("query_id", "id", "qvec", "bvec").mapInArrow(
-        score, "query_id long, id long, cos double"
+        score, "query_id long, id long, dist double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "id", F.col("rnk").cast("long").alias("rnk"))
-    )
+    return knn._topk_window(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -359,26 +357,19 @@ def ivfpq_index(
     m: int = PQ_M,
     ksub: int = PQ_KSUB,
 ):
-    """(coarse, books, codes_df): the IVF-PQ index. Coarse k-means
-    reuses the IVF trainer (cost-routed, deterministic stride init);
-    PQ codebooks train on RESIDUALS (v − coarse[cell]) — the canonical
-    composition, residual magnitudes being what the codebooks must
-    cover, not absolute positions; the codes table carries
-    (vec_id, cell, codes) — at 100 TB ``cell`` is the physical
-    partition key and ``codes`` the n × m compressed payload, so a
-    probe touches only its cells' partitions and never a float."""
+    """(coarse, books, codes_df): the IVF-PQ index. Coarse k-means is
+    the IVF trainer (:func:`pq_train` with ``m = 1``); PQ codebooks
+    train on RESIDUALS (v − coarse[cell]) — the canonical composition,
+    residual magnitudes being what the codebooks must cover, not
+    absolute positions; the codes table carries (vec_id, codes, cell) —
+    at 100 TB ``cell`` is the physical partition key and ``codes`` the
+    n × m compressed payload, so a probe touches only its cells'
+    partitions and never a float."""
     from .similarity import ivf_train
 
     spark = emb.sparkSession
     coarse = ivf_train(emb, nlist)
     bc = spark.sparkContext.broadcast(coarse)
-
-    @F.pandas_udf("long")
-    def cell_of(vs: pd.Series) -> pd.Series:
-        c = bc.value
-        cc = np.einsum("ij,ij->i", c, c)
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        return pd.Series(np.argmin(cc[:, None] - 2.0 * (c @ V.T), axis=0).astype(np.int64))
 
     @F.pandas_udf("array<double>")
     def residual_of(vs: pd.Series, cells: pd.Series) -> pd.Series:
@@ -387,7 +378,7 @@ def ivfpq_index(
         R = V - c[cells.to_numpy()]
         return pd.Series(list(R))
 
-    with_cell = emb.select("vec_id", "embedding", cell_of("embedding").alias("cell"))
+    with_cell = assign_cells(emb, coarse)
     res = with_cell.select(
         "vec_id", "cell", residual_of("embedding", "cell").alias("residual")
     )
@@ -413,13 +404,16 @@ def knn_ivfpq_rerank(
     (per-cell LUT: the query residual against that cell's centroid),
     then the global pool re-ranks exactly (K12).
 
-    Physical plan = the cell cogroup of ann_ivf_topk with the codes
-    table in place of floats: the corpus shuffles ONCE on cell;
-    queries explode to nprobe probe rows and cogroup in; per-task work
-    is LUT lookups over that cell's codes. With nprobe = nlist and
-    pool = None every vector is scored and exactly re-ranked, so the
-    registry config hash-matches the exact-cosine oracle through the
-    full cluster-route + residual-codes pipeline (the IVF
+    Physical plan = the cell cogroup of ann_ivf_topk
+    (``knn.probe_cogroup_topk``) with the codes table in place of
+    floats: the corpus shuffles ONCE on cell; queries explode to nprobe
+    probe rows and cogroup in; each group runs the scan kernel's
+    running top-``pool`` by (adc, id) over that cell's codes, with the
+    cell's residual lookup tables as the query side, and
+    ``knn.packed_topk_merge`` cuts the global pool. With nprobe = nlist
+    and pool = None every vector is scored and exactly re-ranked, so
+    the registry config hash-matches the exact-cosine oracle through
+    the full cluster-route + residual-codes pipeline (the IVF
     forced-exhaustive trick); the production (nprobe, pool) config is
     recall-gated."""
     spark = emb.sparkSession
@@ -427,73 +421,25 @@ def knn_ivfpq_rerank(
     coarse, books, codes = ivfpq_index(emb, nlist=nlist, m=m, ksub=ksub)
     n = emb.count()
     eff_pool = n if pool is None else min(pool, n)
-    bc = spark.sparkContext.broadcast((coarse, books))
+    bc = spark.sparkContext.broadcast(coarse)
 
     @F.pandas_udf("array<long>")
     def probes_of(vs: pd.Series) -> pd.Series:
-        c, _ = bc.value
+        c = bc.value
         cc = np.einsum("ij,ij->i", c, c)
         Q = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
         d = cc[None, :] - 2.0 * (Q @ c.T)  # L2 rank (||q||² constant per row)
         top = np.argsort(d, axis=1)[:, :nprobe]
         return pd.Series(list(top.astype(np.int64)))
 
-    qp = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.explode(probes_of("embedding")).alias("probe"),
+    cands = knn.probe_cogroup_topk(
+        as_scan(codes, "codes", "cell"),
+        "cell",
+        derived_queries(emb, F.explode(probes_of("embedding")).alias("probe")),
+        _code_rows,
+        knn.PQ_ADC,
+        eff_pool,
+        # query residual against THIS cell's centroid
+        lambda Q, cell: pq_luts(Q - coarse[cell][None, :], books),
     )
-
-    def per_cell(b_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "id": [], "adc": []}).astype(
-            {"query_id": "int64", "id": "int64", "adc": "float64"}
-        )
-        if b_pdf.empty or q_pdf.empty:
-            return empty
-        c, B = bc.value
-        m_, ksub_, dsub_ = B.shape
-        cell = int(b_pdf["cell"].iloc[0])
-        ids = b_pdf["vec_id"].to_numpy()
-        C = np.stack([np.asarray(x, dtype=np.int64) for x in b_pdf["codes"]])
-        qids = q_pdf["query_id"].to_numpy()
-        Q = np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf["qvec"]])
-        R = Q - c[cell][None, :]  # query residual vs THIS cell's centroid
-        luts = np.empty((R.shape[0], m_, ksub_))
-        for j in range(m_):
-            sub = R[:, j * dsub_ : (j + 1) * dsub_]
-            cb = B[j]
-            luts[:, j, :] = np.einsum("ij,ij->i", cb, cb)[None, :] - 2.0 * (sub @ cb.T)
-        d = np.zeros((R.shape[0], C.shape[0]))
-        for j in range(m_):
-            d += luts[:, j, C[:, j]]
-        d[qids[:, None] == ids[None, :]] = np.inf  # self
-        pp = min(eff_pool, d.shape[1])
-        part = np.argpartition(d, pp - 1, axis=1)[:, :pp]
-        rows_q, rows_id, rows_d = [], [], []
-        for i in range(d.shape[0]):
-            sel = part[i][np.isfinite(d[i, part[i]])]
-            rows_q.append(np.full(sel.shape[0], qids[i], dtype=np.int64))
-            rows_id.append(ids[sel].astype(np.int64))
-            rows_d.append(d[i, sel])
-        if not rows_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(rows_q),
-                "id": np.concatenate(rows_id),
-                "adc": np.concatenate(rows_d),
-            }
-        )
-
-    cands = (
-        codes.groupby("cell")
-        .cogroup(qp.groupby("probe"))
-        .applyInPandas(per_cell, "query_id long, id long, adc double")
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.col("adc").asc(), F.col("id").asc())
-    pool_df = (
-        cands.withColumn("prnk", F.row_number().over(wp))
-        .filter(F.col("prnk") <= eff_pool)
-        .select("query_id", "id")
-    )
-    return exact_cosine_rerank(pool_df, emb, k)
+    return exact_cosine_rerank(knn.packed_topk_merge(cands, eff_pool), emb, k)

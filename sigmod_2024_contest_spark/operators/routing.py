@@ -49,7 +49,8 @@ ROUTE_GLOBAL_GRAPH = "global_graph"
 # shuffle against only −5 s of saved beam work, so the graph fan-out
 # wins wall-clock even with a ~3 ms/shard Python beam constant — but
 # when the FUSED plan applies (zero-shuffle, no candidate window;
-# re-measured r6 post kernel fix via tools/measure_bf_pair.py: 10.5 s
+# re-measured r6 post kernel fix via tools/measure_bf_pair.py at
+# commit 9f5e074: 10.5 s
 # fused vs 24.0-38.5 s scan for the same bf queries at 500k×64), bf
 # dominates again. The bound is therefore exactly fused-plan
 # applicability: ``knn.bc_rows_bound(dim)`` — byte-based when the
@@ -66,8 +67,8 @@ from .knn import CORPUS_BC_MAX_ROWS as BF_ALL_MAX_ROWS
 # 500k×dim64 = 32M cells). Fused-plan applicability (bc_rows_bound =
 # 40M cells) is necessary but NOT sufficient: the fused kernel must
 # also BEAT the decile-graph fan-out, and that crossover is lower.
-# Measured (tools/sweep_router_crossover.py, nq=2048, in-run
-# interleaved pairs, min-of-2, idle host):
+# Measured (tools/sweep_router_crossover.py at commit 9f5e074, nq=2048,
+# in-run interleaved pairs, min-of-2, idle host):
 #   250k×64 = 16M cells: bf 52.4 s vs graph 66.2 s  → bf wins
 #   500k×64 = 32M cells: bf 90.9 s vs graph 54.9 s  → graph wins
 #   1M×64   = 64M cells: bf 88.6 s vs graph 54.0 s  → graph wins
@@ -101,23 +102,19 @@ def route_plan(
     ts_bins: int | None = ROUTING_TS_BINS,
     stats: tuple[DataFrame, int] | None = None,
     dim: int | None = None,
-    t0_bf_bound: int | None = None,
 ) -> DataFrame:
     """(query_id, query_type, sel_num, n_total, route).
 
     sel < bf_thr → brute force over the predicate slice;
     type 1/3 above threshold → that category's graph;
     type 2 above threshold → decile graphs (SplitInterval downstream);
-    type 0 → global/decile graphs.
-
-    ``t0_bf_bound`` overrides the type-0 bf corpus bound (default:
-    the measured crossover, ``t0_bf_rows_bound(dim)``) — the
-    measurement knob behind tools/sweep_router_crossover.py.
+    type 0 → global/decile graphs; type 0 takes bf instead while the
+    corpus is within the measured crossover ``t0_bf_rows_bound(dim)``.
     """
     sel = selectivity(base, queries, ts_bins=ts_bins, stats=stats)
     frac = F.col("sel_num").cast("double") / F.col("n_total").cast("double")
     thr = F.when(F.col("query_type") == 3, F.lit(BF_THR_T3)).otherwise(F.lit(BF_THR))
-    bound = t0_bf_rows_bound(dim) if t0_bf_bound is None else t0_bf_bound
+    bound = t0_bf_rows_bound(dim)
     route = (
         F.when(frac < thr, F.lit(ROUTE_BF))
         .when(

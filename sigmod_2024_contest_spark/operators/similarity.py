@@ -1,12 +1,19 @@
 """Similarity search over embedding columns: brute-force cosine top-k
-(the exact baseline) and a hyperplane-LSH bucketed variant (the scale
-path).
+(the exact baseline), a hyperplane-LSH bucketed variant and IVF
+(k-means cells) — the scale paths.
 
 Beyond the reference's own L2 workload (SURVEY §7.5) but the same
 shape: candidate generation must never touch the O(n²) pair space.
-The LSH variant mirrors the reference's category partitioning — hash
-buckets play the role of category slices, and search happens only
-inside the query's bucket.
+The LSH and IVF variants mirror the reference's category partitioning
+— hash buckets / cells play the role of category slices, and search
+happens only inside the query's probed buckets / cells.
+
+All three run on the contest kernels of ``operators/knn.py`` with the
+``knn.COSINE`` distance (−cos, self excluded): the exact scan is
+``knn.query_broadcast_topk``, the bucket and cell cogroups are
+``knn.probe_cogroup_topk`` (the same kernel body per group), and
+``knn.packed_topk_merge`` ranks every result by (−cos, id) — the
+oracle's ``ORDER BY cos DESC, id ASC``.
 
 Hyperplane components are generated from a portable LCG formula (not
 engine RNG), so bucket assignment — and therefore the whole result —
@@ -17,10 +24,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.workload import QUERY_STRIDE
+from . import knn, pq
 
 TOPK = 10
 DIM = 64
@@ -99,78 +107,26 @@ def ann_cosine_topk(emb: DataFrame, k: int = TOPK) -> DataFrame:
     set (every QUERY_STRIDE-th vector), self excluded. The brute-force
     baseline every ANN variant is measured against.
 
-    Physical plan = the same partial/final top-k split as
-    knn.knn_exact_arrow: queries broadcast as a NumPy matrix (in
-    bounded batches — driver never holds the full query table), one
-    GEMM per Arrow batch of the corpus, per-partition top-k, then a
-    window merges candidates (shuffle is nq×k×P rows — corpus never
-    moves). ~10× the throughput of the per-pair Catalyst fold this
-    replaces."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .knn import chunked_broadcast_scan, list_column_matrix
-
-    spark = emb.sparkSession
-
-    def payload(qrows):
-        qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-        qv = np.array([r["embedding"] for r in qrows], dtype=np.float64)
-        qn = np.sqrt(np.einsum("ij,ij->i", qv, qv))
-        return qids, qv, qn
-
-    schema = pa.schema(
-        [pa.field("query_id", pa.int64()), pa.field("id", pa.int64()), pa.field("cos", pa.float64())]
+    Physical plan = the exact scan's: ``knn.query_broadcast_topk`` with
+    the ``knn.COSINE`` distance (−cos, so (dist, id) order is the
+    oracle's (cos desc, id asc)) — queries broadcast in bounded
+    batches, each corpus partition keeps a running top-k and emits one
+    packed list per query, and ``knn.packed_topk_merge`` merges the ≤P
+    lists per query. The corpus never moves."""
+    packed = knn.query_broadcast_topk(
+        pq.as_scan(emb, "embedding"),
+        pq.derived_queries(emb),
+        _embedding_rows,
+        knn.COSINE,
+        k,
     )
+    if packed is None:
+        return emb.sparkSession.createDataFrame([], knn.RESULT_SCHEMA)
+    return knn.packed_topk_merge(packed, k)
 
-    def make_kernel(bc):
-        return lambda batches: partial(bc, batches)
 
-    def partial(bc, batches):
-        qids_, qv_, qn_ = bc.value
-        chunk = max(1, (1 << 22) // max(len(qids_), 1))  # ≈32 MB sim blocks
-        for batch in batches:
-            ids_all = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            V_all = list_column_matrix(batch, "embedding")
-            for s in range(0, V_all.shape[0], chunk):
-                V = V_all[s : s + chunk]
-                ids = ids_all[s : s + chunk]
-                vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-                sims = (qv_ @ V.T) / (qn_[:, None] * vn[None, :])
-                sims[qids_[:, None] == ids[None, :]] = -np.inf  # self
-                kk = min(k, sims.shape[1])
-                part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-                rows_q, rows_id, rows_c = [], [], []
-                for i in range(sims.shape[0]):
-                    sel = part[i][np.isfinite(sims[i, part[i]])]
-                    rows_q.append(np.full(sel.shape[0], qids_[i], dtype=np.int64))
-                    rows_id.append(ids[sel].astype(np.int64))
-                    rows_c.append(sims[i, sel])
-                if rows_q:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(np.concatenate(rows_q)),
-                            pa.array(np.concatenate(rows_id)),
-                            pa.array(np.concatenate(rows_c)),
-                        ],
-                        schema=schema,
-                    )
-
-    cands = chunked_broadcast_scan(
-        emb.select("vec_id", "embedding"),
-        emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select("vec_id", "embedding"),
-        payload,
-        make_kernel,
-        "query_id long, id long, cos double",
-    )
-    if cands is None:
-        return spark.createDataFrame([], "query_id long, id long, rnk long")
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("id").asc())
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "id", F.col("rnk").cast("long").alias("rnk"))
-    )
+def _embedding_rows(tbl) -> np.ndarray:
+    return knn.list_column_matrix(tbl, "embedding")
 
 
 _COS = (
@@ -239,194 +195,54 @@ def ann_lsh_topk(emb: DataFrame, k: int = TOPK) -> DataFrame:
     buckets partition the corpus, so probes never produce duplicate
     candidates.
 
-    Physical plan = bucket cogroup: the corpus shuffles ONCE on its
-    bucket id, queries (exploded to their 9 probes) cogroup in, and
-    each task runs one GEMM of (queries probing this bucket ×
+    Physical plan = bucket cogroup (``knn.probe_cogroup_topk``): the
+    corpus shuffles ONCE on its bucket id, queries (exploded to their
+    planes+1 probes) cogroup in, and each group runs the scan kernel's
+    running top-k (``knn.COSINE``) over (queries probing this bucket ×
     bucket rows) — total compute is the true LSH fraction
-    (≈9/2^planes of brute force) and no (qvec, vec) pair row is ever
-    materialized. At 100 TB the bucket id becomes the physical
+    (≈(planes+1)/2^planes of brute force) and no (qvec, vec) pair row
+    is ever materialized; ``knn.packed_topk_merge`` merges the
+    per-bucket lists. At 100 TB the bucket id becomes the physical
     partition key (the reference's category_map trick). Recall vs the
     exact baseline is the quality metric (tests)."""
-    import numpy as np
-    import pandas as pd
-
-    from .knn import list_column_matrix  # noqa: F401  (shared helper)
-
     planes = n_planes_for(emb.count())
     wb = emb.select("vec_id", "embedding", _bucket_expr("embedding", planes).alias("bucket"))
     probes = F.array(
-        F.col("qbucket"),
-        *[F.col("qbucket").bitwiseXOR(F.lit(1 << j)) for j in range(planes)],
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(planes)],
     )
-    qp = (
-        wb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-            F.col("bucket").alias("qbucket"),
-        )
-        .select("query_id", "qvec", F.explode(probes).alias("probe"))
+    cands = knn.probe_cogroup_topk(
+        pq.as_scan(wb, "embedding", "bucket"),
+        "bucket",
+        pq.derived_queries(wb, F.explode(probes).alias("probe")),
+        _embedding_rows,
+        knn.COSINE,
+        k,
     )
-
-    def per_bucket(b_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "id": [], "cos": []}).astype(
-            {"query_id": "int64", "id": "int64", "cos": "float64"}
-        )
-        if b_pdf.empty or q_pdf.empty:
-            return empty
-        ids = b_pdf["vec_id"].to_numpy()
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in b_pdf["embedding"]])
-        qids = q_pdf["query_id"].to_numpy()
-        Q = np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf["qvec"]])
-        vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-        sims = (Q @ V.T) / (qn[:, None] * vn[None, :])
-        sims[qids[:, None] == ids[None, :]] = -np.inf
-        kk = min(k, sims.shape[1])
-        part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-        rows_q, rows_id, rows_c = [], [], []
-        for i in range(sims.shape[0]):
-            sel = part[i][np.isfinite(sims[i, part[i]])]
-            rows_q.append(np.full(sel.shape[0], qids[i], dtype=np.int64))
-            rows_id.append(ids[sel].astype(np.int64))
-            rows_c.append(sims[i, sel])
-        if not rows_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(rows_q),
-                "id": np.concatenate(rows_id),
-                "cos": np.concatenate(rows_c),
-            }
-        )
-
-    scored = (
-        wb.groupby("bucket")
-        .cogroup(qp.groupby("probe"))
-        .applyInPandas(per_bucket, "query_id long, id long, cos double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "id", F.col("rnk").cast("long").alias("rnk"))
-    )
+    return knn.packed_topk_merge(cands, k)
 
 
 N_LIST = 64  # IVF cells
 N_PROBE = 16  # cells scanned per query (compute fraction = 16/64 = 0.25)
-# Local-training bound (rows): below this the embedding set rides one
-# bounded collect (≈ rows·dim·8 B — 32 MB at dim 64) and all Lloyd
-# iterations run driver-side in one pass, instead of iters+2 Spark
-# jobs whose wall is pure scheduler constants at small n (the same
-# cost route as nndescent.NND_LOCAL_ROWS / dedup_clusters' driver CC).
-IVF_LOCAL_ROWS = 65_536
 
 
 def ivf_train(
     emb: DataFrame, nlist: int = N_LIST, iters: int = 4,
-    local_rows: int | None = IVF_LOCAL_ROWS,
+    local_rows: int | None = pq.PQ_LOCAL_ROWS,
 ):
-    """Deterministic distributed k-means (the IVF coarse quantizer).
+    """Deterministic k-means (the IVF coarse quantizer): the ``m = 1``
+    case of :func:`pq.pq_train` — one subspace spanning the whole
+    vector, ``nlist`` centroids.
 
-    Init = every (n/nlist)-th vector by id rank (seedless, stable).
-    Each Lloyd iteration is ONE job: mapInArrow assigns a batch to its
-    nearest centroid via GEMM and emits per-partition partial sums
-    (nlist rows per partition — not the corpus), which the driver
-    reduces into new centroids. Only the (nlist × dim) centroid table
-    ever reaches the driver; the corpus never moves.
-
-    Below ``local_rows`` the same Lloyd updates run driver-side over
-    one bounded collect (0/None forces distributed). Both paths use
-    the same init and the same assignment/update formulas; centroid
-    floats can differ at ulp level because the local sum folds in one
-    order and the distributed one reduces per-partition partials —
-    every consumer is recall-gated, not centroid-bit-gated, and the
-    forced-distributed twin is pinned approximately equal in tests."""
-    import numpy as np
-    import pyarrow as pa
-
-    from .knn import list_column_matrix
-
-    spark = emb.sparkSession
-    n = emb.count()
-    if local_rows and n <= local_rows:
-        return _ivf_train_local(emb, nlist, iters)
-    stride = max(n // nlist, 1)
-    init = (
-        emb.filter((F.col("vec_id") % stride == 0) & (F.col("vec_id") / stride < nlist))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    cents = np.array([r["embedding"] for r in init], dtype=np.float64)[:nlist]
-    nlist = cents.shape[0]  # sparse/non-dense ids can under-fill the init
-
-    partial_schema = "cluster long, cnt long, vsum array<double>"
-
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(cents)
-
-        def partials(batches):
-            c = bc.value
-            cc = np.einsum("ij,ij->i", c, c)
-            for batch in batches:
-                V = list_column_matrix(batch, "embedding")
-                d = cc[:, None] - 2.0 * (c @ V.T)  # ||c||² - 2c·v (v² constant per column)
-                assign = np.argmin(d, axis=0)
-                sums = np.zeros((c.shape[0], V.shape[1]))
-                np.add.at(sums, assign, V)
-                cnts = np.bincount(assign, minlength=c.shape[0])
-                nz = np.flatnonzero(cnts)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(nz.astype(np.int64)),
-                        pa.array(cnts[nz].astype(np.int64)),
-                        pa.array(list(sums[nz])),
-                    ],
-                    names=["cluster", "cnt", "vsum"],
-                )
-
-        rows = emb.select("embedding").mapInArrow(partials, partial_schema).collect()
-        cnts = np.zeros(nlist)
-        sums = np.zeros_like(cents)
-        for r in rows:
-            cnts[r["cluster"]] += r["cnt"]
-            sums[r["cluster"]] += np.asarray(r["vsum"])
-        nz = cnts > 0
-        cents[nz] = sums[nz] / cnts[nz, None]
-    return cents
-
-
-def _ivf_train_local(emb: DataFrame, nlist: int, iters: int):
-    """Driver-side Lloyd twin for sub-``IVF_LOCAL_ROWS`` embedding
-    sets: one bounded collect, then the same init rule and
-    assignment/update arithmetic as the distributed loop."""
-    import numpy as np
-
-    rows = emb.select("vec_id", "embedding").collect()
-    rows.sort(key=lambda r: r["vec_id"])
-    n = len(rows)
-    stride = max(n // nlist, 1)
-    init = [
-        r["embedding"]
-        for r in rows
-        if r["vec_id"] % stride == 0 and r["vec_id"] / stride < nlist
-    ]
-    cents = np.array(init, dtype=np.float64)[:nlist]
-    nlist = cents.shape[0]
-    if nlist == 0 or n == 0:
-        return cents
-    V = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    for _ in range(iters):
-        cc = np.einsum("ij,ij->i", cents, cents)
-        assign = np.argmin(cc[:, None] - 2.0 * (cents @ V.T), axis=0)
-        sums = np.zeros_like(cents)
-        np.add.at(sums, assign, V)
-        cnts = np.bincount(assign, minlength=nlist).astype(np.float64)
-        nz = cnts > 0
-        cents[nz] = sums[nz] / cnts[nz, None]
-    return cents
+    Init = the rows whose vec_id is a multiple of n/nlist, by id
+    (seedless, stable). Below ``local_rows`` every Lloyd iteration runs
+    driver-side over one bounded collect; above it (0/None forces it)
+    each iteration is ONE mapInArrow job emitting per-partition partial
+    sums, so only the (nlist × dim) centroid table reaches the driver.
+    The two routes share init and arithmetic; their centroids can
+    differ at ulp level (the local sum folds in one order, the
+    distributed one reduces per-partition partials)."""
+    return pq.pq_train(emb, "embedding", 1, nlist, iters, local_rows)[0]
 
 
 def ann_ivf_topk(
@@ -435,30 +251,23 @@ def ann_ivf_topk(
     """(query_id, id, rnk): IVF ANN — each query scans ONLY its
     ``nprobe`` nearest k-means cells.
 
-    Physical plan = cell cogroup (the same shape as
-    :func:`ann_lsh_topk`'s bucket cogroup): the corpus gets a ``cell``
-    column (one Arrow pass: argmin distance to the broadcast centroid
-    table) and shuffles ONCE on it; queries explode to their nprobe
-    probe cells and cogroup in; each task GEMMs (queries probing this
-    cell × cell rows). Per-query compute fraction is genuinely
-    nprobe/nlist — vectors outside probed cells are never scored (the
-    earlier formulation scored the whole corpus and masked, i.e. a full
-    scan in IVF clothing). At 100 TB ``cell`` is the physical partition
-    key — cluster-then-prune, the reference's category_map structure.
-    Iterative float training ⇒ no SQL oracle; quality is driver-gated
-    via ``recall_ivf_vs_exact`` (mean recall vs the exact baseline)."""
+    Physical plan = cell cogroup (``knn.probe_cogroup_topk``, the same
+    shape as :func:`ann_lsh_topk`'s bucket cogroup): the corpus gets a
+    ``cell`` column (``pq.assign_cells``: nearest centroid of the
+    broadcast table) and shuffles ONCE on it; queries explode to their
+    nprobe probe cells and cogroup in; each group runs the scan
+    kernel's running top-k over (queries probing this cell × cell rows)
+    and ``knn.packed_topk_merge`` merges the per-cell lists. Per-query
+    compute fraction is genuinely nprobe/nlist — vectors outside probed
+    cells are never scored. At 100 TB ``cell`` is the physical
+    partition key — cluster-then-prune, the reference's category_map
+    structure. Iterative float training ⇒ no SQL oracle of its own;
+    quality is driver-gated via ``recall_ivf_vs_exact`` (mean recall vs
+    the exact baseline)."""
     spark = emb.sparkSession
     cents = ivf_train(emb, nlist)
     nprobe = min(nprobe, cents.shape[0])
     bc = spark.sparkContext.broadcast(cents)
-
-    @F.pandas_udf("long")
-    def cell_of(embs: pd.Series) -> pd.Series:
-        c = bc.value
-        cc = np.einsum("ij,ij->i", c, c)
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in embs])
-        # ||c||² − 2c·v: argmin over cells (||v||² constant per row)
-        return pd.Series(np.argmin(cc[:, None] - 2.0 * (c @ V.T), axis=0).astype(np.int64))
 
     @F.pandas_udf("array<long>")
     def probes_of(embs: pd.Series) -> pd.Series:
@@ -472,59 +281,15 @@ def ann_ivf_topk(
         top = np.argsort(-qc, axis=1)[:, :nprobe]
         return pd.Series(list(top.astype(np.int64)))
 
-    wc = emb.select("vec_id", "embedding", cell_of("embedding").alias("cell"))
-    qp = (
-        emb.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qvec"),
-            F.explode(probes_of("embedding")).alias("probe"),
-        )
+    cands = knn.probe_cogroup_topk(
+        pq.as_scan(pq.assign_cells(emb, cents), "embedding", "cell"),
+        "cell",
+        pq.derived_queries(emb, F.explode(probes_of("embedding")).alias("probe")),
+        _embedding_rows,
+        knn.COSINE,
+        k,
     )
-
-    def per_cell(b_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"query_id": [], "id": [], "cos": []}).astype(
-            {"query_id": "int64", "id": "int64", "cos": "float64"}
-        )
-        if b_pdf.empty or q_pdf.empty:
-            return empty
-        ids = b_pdf["vec_id"].to_numpy()
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in b_pdf["embedding"]])
-        qids = q_pdf["query_id"].to_numpy()
-        Q = np.stack([np.asarray(v, dtype=np.float64) for v in q_pdf["qvec"]])
-        vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-        sims = (Q @ V.T) / (qn[:, None] * vn[None, :])
-        sims[qids[:, None] == ids[None, :]] = -np.inf  # self
-        kk = min(k, sims.shape[1])
-        part = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-        rows_q, rows_id, rows_c = [], [], []
-        for i in range(sims.shape[0]):
-            sel = part[i][np.isfinite(sims[i, part[i]])]
-            rows_q.append(np.full(sel.shape[0], qids[i], dtype=np.int64))
-            rows_id.append(ids[sel].astype(np.int64))
-            rows_c.append(sims[i, sel])
-        if not rows_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(rows_q),
-                "id": np.concatenate(rows_id),
-                "cos": np.concatenate(rows_c),
-            }
-        )
-
-    scored = (
-        wc.groupby("cell")
-        .cogroup(qp.groupby("probe"))
-        .applyInPandas(per_cell, "query_id long, id long, cos double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "id", F.col("rnk").cast("long").alias("rnk"))
-    )
+    return knn.packed_topk_merge(cands, k)
 
 
 def ann_lsh_topk_sql(k: int = TOPK) -> str:
@@ -592,17 +357,14 @@ def embed_project(
             dots.append(F.floor(dot * 1e6).cast("long"))
         return emb.select("vec_id", F.array(*dots).alias("proj_ppm"))
 
-    import numpy as np
     import pyarrow as pa
-
-    from .knn import list_column_matrix
 
     P = np.array(planes, dtype=np.float64)  # (out_dim, dim)
 
     def kernel(batches):
         for batch in batches:
             ids = batch.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            V = list_column_matrix(batch, "embedding")
+            V = knn.list_column_matrix(batch, "embedding")
             yield pa.RecordBatch.from_arrays(
                 [pa.array(ids), pa.array(list(V @ P.T))],
                 names=["vec_id", "proj"],

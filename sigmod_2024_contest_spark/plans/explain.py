@@ -206,7 +206,8 @@ def render_route_report(
         f"  type-0 fused-bf bound: corpus <= {t0_rows} rows at dim={dim} "
         f"(min of the broadcast cap and the MEASURED beat-the-graph "
         f"crossover T0_BF_MAX_CELLS={routing.T0_BF_MAX_CELLS} cells "
-        f"— r12 recalibration, tools/sweep_router_crossover.py: bf wins "
+        f"— r12 recalibration, tools/sweep_router_crossover.py at "
+        f"commit 9f5e074: bf wins "
         f"16M cells, loses 32M+)",
         "",
         f"  {'route':<14}{'type':>4}{'queries':>9}{'sel_ppm':>18}"

@@ -351,6 +351,7 @@ def test_small_coverage_routes_to_masked_gemm(monkeypatch):
     full-coverage queries still take the beam."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from sigmod_2024_contest_spark.functions import quantization as Q
     from sigmod_2024_contest_spark.operators import engine, hnsw
@@ -397,7 +398,12 @@ def test_small_coverage_routes_to_masked_gemm(monkeypatch):
             "qvec": [qvec.tolist()],
         }
     )
-    out = engine._search_cogroup(index_pdf, q_small, k, None, 256, alpha)
+    def search(q_pdf):
+        return engine._search_cogroup_arrow(
+            pa.Table.from_pandas(index_pdf), pa.Table.from_pandas(q_pdf), k, None, 256, alpha
+        ).to_pandas()
+
+    out = search(q_small)
     assert calls["n"] == 0, "small-coverage query must not touch the beam"
     # exact over the covered slice: candidate distances are the
     # code-space top-kk of the allowed rows, nothing outside the slice
@@ -411,7 +417,7 @@ def test_small_coverage_routes_to_masked_gemm(monkeypatch):
     np.testing.assert_allclose(np.sort(out["cdist"].to_numpy()), expect_d)
 
     q_full = q_small.assign(l=[0.0], r=[1.0])
-    engine._search_cogroup(index_pdf, q_full, k, None, 256, alpha)
+    search(q_full)
     assert calls["n"] == 1, "full-coverage query still takes the beam"
 
 

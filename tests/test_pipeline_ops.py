@@ -942,7 +942,8 @@ def test_text_stats_and_lang_id_single_split(spark):
     """The hoisted shape of the other multi-feature projections keeps
     exactly one split in the plan (CollapseProject does not re-inline
     it); the inline default relies on codegen CSE instead — both
-    shapes are value-identical (asserted in tools/ab_hoist.py and by
+    shapes are value-identical (asserted in tools/ab_hoist.py at
+    commit 9f5e074 and by
     every oracle row)."""
     from sigmod_2024_contest_spark.functions.text import lang_id, text_stats
     from sigmod_2024_contest_spark.sources.tables import load_table

@@ -1,9 +1,11 @@
 """Product quantization: twin-parity, exact hash gate, recall gate,
-and the compressed-pipeline invariants."""
+and the compressed-pipeline invariants; plus the planted-duplicate tie
+test shared by the whole embedding ANN family."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from sigmod_2024_contest_spark import api
 from sigmod_2024_contest_spark.operators import pq, similarity
@@ -156,3 +158,51 @@ def test_ivfpq_probe_restriction_is_real(spark):
         by_q.setdefault(r["query_id"], set()).add(cell_of[r["id"]])
     # each query's results all come from exactly one cell
     assert by_q and all(len(cells) == 1 for cells in by_q.values())
+
+
+def _planted_duplicates(spark, qid=0, n_dup=15, seed=7):
+    """Smoke embeddings with ``n_dup`` non-query rows overwritten by
+    query ``qid``'s vector: every duplicate ties at the query's best
+    cosine, so its top-10 is exactly the 10 smallest duplicate ids under
+    the (cos desc, id asc) rule."""
+    from pyspark.sql import functions as F
+
+    from sigmod_2024_contest_spark.plans.workload import QUERY_STRIDE
+
+    emb = _emb(spark)
+    ids = np.array(sorted(r["vec_id"] for r in emb.select("vec_id").collect()))
+    pool = ids[(ids % QUERY_STRIDE != 0) & (ids != qid)]
+    planted = sorted(int(x) for x in np.random.default_rng(seed).choice(pool, n_dup, replace=False))
+    qvec = emb.filter(F.col("vec_id") == qid).first()["embedding"]
+    lit = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<float>")
+    emb = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id").isin(planted), lit).otherwise(F.col("embedding")),
+    )
+    return emb, planted
+
+
+PLANTED_OPS = {
+    "ann_cosine_topk": lambda emb: similarity.ann_cosine_topk(emb),
+    "ann_lsh_topk": lambda emb: similarity.ann_lsh_topk(emb),
+    "ann_ivf_topk_exhaustive": lambda emb: similarity.ann_ivf_topk(
+        emb, nprobe=similarity.N_LIST
+    ),
+    "knn_pq_rerank_all": lambda emb: pq.knn_pq_rerank(emb, pool=None),
+    "knn_ivfpq_rerank_exhaustive": lambda emb: pq.knn_ivfpq_rerank(
+        emb, nprobe=pq.IVFPQ_NLIST, pool=None
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(PLANTED_OPS))
+def test_planted_duplicates_rank_by_id(spark, op):
+    """More than k exact ties: every operator must keep the k smallest
+    ids, as the oracle's ``ORDER BY cos DESC, id ASC`` does — a bare
+    distance cut keeps an arbitrary subset of the tied rows."""
+    emb, planted = _planted_duplicates(spark)
+    got = sorted(
+        (r["rnk"], r["id"]) for r in PLANTED_OPS[op](emb).filter("query_id = 0").collect()
+    )
+    assert [i for _, i in got] == planted[:10], (got, planted)
+    assert [r for r, _ in got] == list(range(1, 11))
