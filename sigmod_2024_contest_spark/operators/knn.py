@@ -782,9 +782,14 @@ def _cosine_pairs(qv: np.ndarray, mat: np.ndarray, qids, ids):
 
     def pair_dist(qsel, sub, rows):
         # dist = −cos, so ascending (dist, id) is the oracle's
-        # (cos desc, id asc); negation is exact
-        d = (qv[qsel] @ sub.T) / (qn[qsel][:, None] * vn[rows][None, :])
+        # (cos desc, id asc); negation is exact. A zero-norm side gives
+        # 0/0 = NaN: it sorts last like the sentinel (the oracle's NULL
+        # cos sorts last), and a NaN left in the block would fail the
+        # running merge's `min < worst` guard for the whole chunk
+        with np.errstate(invalid="ignore", divide="ignore"):
+            d = (qv[qsel] @ sub.T) / (qn[qsel][:, None] * vn[rows][None, :])
         np.negative(d, out=d)
+        d[np.isnan(d)] = np.inf
         return _mask_self(d, qids, ids, qsel, rows)
 
     return pair_dist
@@ -805,7 +810,8 @@ def _adc_pairs(luts: np.ndarray, codes: np.ndarray, qids, ids):
 CODE_SENTINEL = np.int64(1) << 62
 EXACT_L2 = PairDistance(_l2_pairs, np.inf)  # float64 rows, float64 queries
 CODE_L2 = PairDistance(_code_pairs, CODE_SENTINEL)  # integer codes, both sides
-COSINE = PairDistance(_cosine_pairs, np.inf)  # float64 rows and queries, self excluded
+# float64 rows and queries; self and zero-norm rows excluded
+COSINE = PairDistance(_cosine_pairs, np.inf)
 # PQ codes against per-query lookup tables (nq, m, ksub), self excluded
 PQ_ADC = PairDistance(_adc_pairs, np.inf)
 
@@ -1055,7 +1061,10 @@ def probe_cogroup_topk(
         )
         qv = list_column_matrix(qb, "qvec")
         qmat = qv if encode_q is None else encode_q(qv, btbl.column(key)[0].as_py())
-        out = packed_scan_topk(qm, qmat, btbl.to_batches(), read_rows, dist, out_k)
+        # a group emits at most its own rows: an exhaustive pool (out_k
+        # = corpus size) must not size every group's top-k to the corpus
+        kk = min(out_k, btbl.num_rows)
+        out = packed_scan_topk(qm, qmat, btbl.to_batches(), read_rows, dist, kk)
         return pa.Table.from_batches(list(out), schema=_PACKED_TYPE)
 
     cg = scan.groupby(key).cogroup(queries.groupby("probe"))

@@ -50,6 +50,7 @@ from . import knn
 PQ_M = 8  # subspaces (dim 64 -> 8 dims each)
 PQ_KSUB = 32  # centroids per subspace (5-bit codes)
 PQ_ITERS = 5
+IVF_ITERS = 4  # Lloyd iterations of the m = 1 (IVF coarse) trainer
 # Local-training bound (rows) of the k-means trainer: below it the
 # training set rides one bounded collect (≈ rows·dim·8 B — 32 MB at
 # dim 64) and all Lloyd iterations run driver-side in one pass, instead
@@ -365,10 +366,8 @@ def ivfpq_index(
     at 100 TB ``cell`` is the physical partition key and ``codes`` the
     n × m compressed payload, so a probe touches only its cells'
     partitions and never a float."""
-    from .similarity import ivf_train
-
     spark = emb.sparkSession
-    coarse = ivf_train(emb, nlist)
+    coarse = pq_train(emb, "embedding", 1, nlist, IVF_ITERS)[0]
     bc = spark.sparkContext.broadcast(coarse)
 
     @F.pandas_udf("array<double>")

@@ -227,7 +227,7 @@ N_PROBE = 16  # cells scanned per query (compute fraction = 16/64 = 0.25)
 
 
 def ivf_train(
-    emb: DataFrame, nlist: int = N_LIST, iters: int = 4,
+    emb: DataFrame, nlist: int = N_LIST, iters: int = pq.IVF_ITERS,
     local_rows: int | None = pq.PQ_LOCAL_ROWS,
 ):
     """Deterministic k-means (the IVF coarse quantizer): the ``m = 1``

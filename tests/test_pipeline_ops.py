@@ -280,7 +280,7 @@ def test_embed_project_arrow_matches_fold(spark):
 
 
 def test_ivf_train_local_twin_matches_distributed(spark):
-    """The driver-side Lloyd twin (default route under IVF_LOCAL_ROWS)
+    """The driver-side Lloyd twin (default route under pq.PQ_LOCAL_ROWS)
     and the forced-distributed loop share init and update formulas —
     centroids must agree to float tolerance (exact equality is not
     promised: the two sides fold partial sums in different orders)."""

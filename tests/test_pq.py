@@ -164,7 +164,9 @@ def _planted_duplicates(spark, qid=0, n_dup=15, seed=7):
     """Smoke embeddings with ``n_dup`` non-query rows overwritten by
     query ``qid``'s vector: every duplicate ties at the query's best
     cosine, so its top-10 is exactly the 10 smallest duplicate ids under
-    the (cos desc, id asc) rule."""
+    the (cos desc, id asc) rule. One more non-query row is all zeros:
+    its cosine is undefined (the oracle's NULL, sorted last), so it must
+    neither rank nor disturb the rows scored with it."""
     from pyspark.sql import functions as F
 
     from sigmod_2024_contest_spark.plans.workload import QUERY_STRIDE
@@ -172,12 +174,16 @@ def _planted_duplicates(spark, qid=0, n_dup=15, seed=7):
     emb = _emb(spark)
     ids = np.array(sorted(r["vec_id"] for r in emb.select("vec_id").collect()))
     pool = ids[(ids % QUERY_STRIDE != 0) & (ids != qid)]
-    planted = sorted(int(x) for x in np.random.default_rng(seed).choice(pool, n_dup, replace=False))
+    picked = np.random.default_rng(seed).choice(pool, n_dup + 1, replace=False)
+    planted, zero = sorted(int(x) for x in picked[:n_dup]), int(picked[n_dup])
     qvec = emb.filter(F.col("vec_id") == qid).first()["embedding"]
     lit = F.array(*[F.lit(float(x)) for x in qvec]).cast("array<float>")
+    zeros = F.array(*[F.lit(0.0)] * len(qvec)).cast("array<float>")
     emb = emb.withColumn(
         "embedding",
-        F.when(F.col("vec_id").isin(planted), lit).otherwise(F.col("embedding")),
+        F.when(F.col("vec_id").isin(planted), lit)
+        .when(F.col("vec_id") == zero, zeros)
+        .otherwise(F.col("embedding")),
     )
     return emb, planted
 
@@ -206,3 +212,38 @@ def test_planted_duplicates_rank_by_id(spark, op):
     )
     assert [i for _, i in got] == planted[:10], (got, planted)
     assert [r for r, _ in got] == list(range(1, 11))
+
+
+def test_cosine_kernel_drops_zero_norm_rows():
+    """A zero-norm row has no cosine (0/0): the shared scan-and-top-k
+    body must drop that row alone. Left as NaN it fails the running
+    merge's ``min < worst`` guard, and every query loses the whole
+    chunk it sits in."""
+    import pyarrow as pa
+
+    from sigmod_2024_contest_spark.operators import knn
+
+    rng = np.random.default_rng(3)
+    n, dim, k = 300, 8, 10
+    V = rng.standard_normal((n, dim))
+    V[37] = 0.0
+    ids = np.arange(n, dtype=np.int64)
+    block = pa.table(
+        {
+            "id": ids,
+            "category": np.zeros(n, dtype=np.int64),
+            "ts": np.zeros(n, dtype=np.int64),
+        }
+    )
+    qids = np.array([0, 10, 20, 30], dtype=np.int64)
+    qm = np.column_stack([qids, np.zeros((len(qids), 4))]).astype(np.float64)
+    out = pa.Table.from_batches(
+        list(knn.packed_scan_topk(qm, V[qids], [block], lambda t: V, knn.COSINE, k))
+    )
+    got = dict(zip(out.column("query_id").to_pylist(), out.column("cids").to_pylist()))
+    vn = np.linalg.norm(V, axis=1)
+    for q in qids:
+        keep = (ids != q) & (vn > 0)
+        cos = (V[keep] @ V[q]) / (vn[keep] * vn[q])
+        want = ids[keep][np.lexsort((ids[keep], -cos))][:k]
+        assert got[int(q)] == want.tolist(), (q, got[int(q)], want)
