@@ -14,6 +14,8 @@ OUT.bin [k] [exact|hybrid|auto]``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import engine, knn
@@ -62,7 +64,10 @@ def contest_run(
     else:
         result = engine.knn_hybrid(spark, base, queries, k=k)
     if out_path is not None:
-        bin_format.write_knn_bin(result, out_path, k=k)
+        # the header's query count keeps trailing queries with no
+        # admissible row in the matrix (a 4-byte read, no job)
+        n_queries = bin_format.bin_count(queries_path) if os.path.isfile(queries_path) else None
+        bin_format.write_knn_bin(result, out_path, k=k, n_queries=n_queries)
     return result
 
 

@@ -584,9 +584,10 @@ def _rebuild_affected(
     stale copy lives in an affected shard). For the append-only epoch
     fold only the open shard has retained rows and the anti-join is
     defense in depth. The arrival-id side is micro-batch-sized —
-    broadcast."""
+    broadcast, and not de-duplicated: a left-anti join ignores
+    duplicate keys, and a distinct would add an aggregate shuffle."""
     untouched = index.filter(~F.col("pkey").isin(affected))
-    arrival_ids = F.broadcast(new_base.select("id").distinct())
+    arrival_ids = F.broadcast(new_base.select("id"))
     bin_to_codes = F.pandas_udf(_bin_to_codes_batch, "array<tinyint>")
     retained = (
         index.filter(F.col("pkey").isin(affected))
@@ -752,24 +753,31 @@ def compaction_due(
     - a category not in the plan now holds ≥ ``cat_thr`` of the corpus
       (it has been riding its decile shards without a cat: slice).
 
-    Both checks are catalog-sized aggregations over the index: per-pkey
-    counts (≤ shard count rows) and per-category counts over the decile
-    rows (deciles partition the corpus exactly once). No raw-corpus
-    scan, no driver-side data."""
-    counts = index.groupBy("pkey").count()
-    if counts.filter(F.col("count") > factor * max_nodes).limit(1).count() > 0:
-        return True
-    planned_cats = [
-        int(p.split(":")[1]) for p in shard_plan if p.startswith("cat:")
-    ]
-    decs = index.filter(F.col("pkey").startswith("dec:"))
-    cat_counts = decs.groupBy("category").agg(F.count("*").alias("cnt"))
-    total = decs.count()
-    big_new = cat_counts.filter(
-        (F.col("cnt") >= F.lit(cat_thr) * F.lit(total))
-        & ~F.col("category").cast("long").isin([int(c) for c in planned_cats])
+    Both checks read ONE catalog-sized aggregation over the index,
+    collected once: every row counts toward its pkey (the null pkey
+    too), and a decile row also counts toward its category (deciles
+    partition the corpus exactly once, so their category counts sum to
+    the corpus) — the explode pattern of ``_shard_plan``. The driver
+    applies both rules to the ≤ shards + categories rows. No raw-corpus
+    scan."""
+    pkey = F.struct(F.lit("pkey").alias("kind"), F.col("pkey").alias("key"))
+    cat = F.struct(F.lit("cat").alias("kind"), F.col("category").cast("string").alias("key"))
+    member = F.when(F.col("pkey").startswith("dec:"), F.array(pkey, cat)).otherwise(F.array(pkey))
+    rows = (
+        index.select(F.explode(member).alias("m"))
+        .groupBy(F.col("m.kind").alias("kind"), F.col("m.key").alias("key"))
+        .count()
+        .collect()
     )
-    return big_new.limit(1).count() > 0
+    if any(r["kind"] == "pkey" and r["count"] > factor * max_nodes for r in rows):
+        return True
+    planned_cats = {int(p.split(":")[1]) for p in shard_plan if p.startswith("cat:")}
+    cat_counts = [(r["key"], r["count"]) for r in rows if r["kind"] == "cat"]
+    total = sum(c for _, c in cat_counts)
+    return any(
+        key is not None and c >= cat_thr * total and int(key) not in planned_cats
+        for key, c in cat_counts
+    )
 
 
 def compact_index(

@@ -667,6 +667,76 @@ def test_compaction_due_new_big_category(spark):
     assert engine.compaction_due(drifted, splan, max_nodes=4096)
 
 
+def test_compaction_due_counts_null_pkey_shard(spark):
+    """Rows whose slice prefix is missing from a frozen plan get a null
+    pkey (``_pkey_expr``'s map lookup misses); they form one group, and
+    that group must still trip the size trigger."""
+    from pyspark.sql import functions as F
+
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import routing
+
+    base_all = base_vectors(spark, SF_SMOKE)
+    alpha = Q.train_alpha(base_all)
+    # the plan of the ts < 0.2 corpus has deciles 0 and 1 only
+    splan = engine._shard_plan(base_all.filter(F.col("ts") < 0.2), routing.CAT_GRAPH_THR, 4096)
+    idx = engine.build_index(base_all, shard_plan=splan, alpha=alpha, max_nodes=4096).persist()
+    sizes = {r["pkey"]: r["count"] for r in idx.groupBy("pkey").count().collect()}
+    max_nodes = 64
+    bound = engine.COMPACT_FACTOR * max_nodes
+    assert sizes.get(None, 0) > bound
+    assert max(c for p, c in sizes.items() if p is not None) <= bound
+    assert engine.compaction_due(idx, splan, max_nodes=max_nodes)
+    assert not engine.compaction_due(
+        idx.filter(F.col("pkey").isNotNull()), splan, max_nodes=max_nodes
+    )
+    idx.unpersist()
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_edges_job_budget(spark, tmp_path):
+    """The ingest fold's fixed job costs: ``compaction_due`` is one
+    aggregation collected once (≤ 2 jobs under AQE), and a query .bin
+    decodes without a shuffle (``count()`` ≤ 2 jobs, no Exchange in
+    the reader's plan)."""
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import routing
+    from sigmod_2024_contest_spark.sources import bin_format
+
+    base_all = base_vectors(spark, SF_SMOKE)
+    alpha = Q.train_alpha(base_all)
+    splan = engine._shard_plan(base_all, routing.CAT_GRAPH_THR, 64)
+    idx = engine.build_index(base_all, shard_plan=splan, alpha=alpha, max_nodes=64).persist()
+    idx.count()
+    assert _jobs_run(spark, lambda: engine.compaction_due(idx, splan, max_nodes=64)) <= 2
+    idx.unpersist()
+
+    rng = np.random.default_rng(3)
+    n, dim = 3000, 8
+    p = str(tmp_path / "q.bin")
+    bin_format.write_queries_bin(
+        p, rng.integers(0, 4, n), rng.integers(-1, 5, n), rng.random(n), rng.random(n),
+        rng.standard_normal((n, dim)).astype(np.float32),
+    )
+    q = bin_format.read_queries_bin(spark, p, dim=dim)
+    assert "Exchange" not in q._jdf.queryExecution().executedPlan().toString()
+    assert _jobs_run(spark, q.count) <= 2
+
+
 def test_upsert_index_preserves_hnsw_levels_parity(spark):
     """Upsert under the S9 levels build (hnsw_levels=True): rebuilt
     shards must reproduce the from-scratch level structure too —

@@ -63,6 +63,135 @@ def test_knn_bin_roundtrip(spark, tmp_path):
     assert got[2] == [200, 201, 202, 203, 204]
 
 
+def test_knn_bin_keeps_rows_of_queries_without_results(spark, tmp_path):
+    """Row i of the matrix is query i: a query with no admissible row
+    keeps an all-UINT32_MAX row instead of shifting later queries up,
+    and ``n_queries`` keeps trailing empty queries too."""
+    res = spark.createDataFrame(
+        [(0, 5, 1), (0, 6, 2), (2, 7, 1), (2, 8, 2)], "query_id long, id long, rnk long"
+    )
+    pad = np.iinfo(np.uint32).max
+    p = str(tmp_path / "knn.bin")
+    bin_format.write_knn_bin(res, p, k=2)
+    mat = np.fromfile(p, dtype="<u4").reshape(-1, 2)
+    np.testing.assert_array_equal(mat, [[5, 6], [pad, pad], [7, 8]])
+    bin_format.write_knn_bin(res, p, k=2, n_queries=4)
+    mat = np.fromfile(p, dtype="<u4").reshape(-1, 2)
+    np.testing.assert_array_equal(mat, [[5, 6], [pad, pad], [7, 8], [pad, pad]])
+
+
+def test_contest_run_matrix_keeps_unanswerable_queries(spark, tmp_path):
+    """contest_run sizes the matrix from the queries file's header:
+    queries 1 and 3 (the last) filter on an absent category, answer
+    nothing, and keep their all-UINT32_MAX rows in place."""
+    from sigmod_2024_contest_spark import contest
+
+    rng = np.random.default_rng(9)
+    n, dim, k = 200, 100, 10  # contest_run reads the contest's dim
+    pb, pq, out = str(tmp_path / "base.bin"), str(tmp_path / "q.bin"), str(tmp_path / "out.bin")
+    bin_format.write_base_bin(
+        pb, rng.integers(0, 5, n), rng.random(n), rng.standard_normal((n, dim)).astype(np.float32)
+    )
+    bin_format.write_queries_bin(
+        pq, np.array([0, 1, 1, 1]), np.array([-1, 99, 2, 99]), np.zeros(4), np.ones(4),
+        rng.standard_normal((4, dim)).astype(np.float32),
+    )
+    res = contest.contest_run(spark, pb, pq, out_path=out, k=k, mode="exact").collect()
+    mat = np.fromfile(out, dtype="<u4").reshape(-1, k)
+    assert mat.shape == (4, k)
+    pad = np.iinfo(np.uint32).max
+    for q in range(4):
+        ids = [r.id for r in sorted((r for r in res if r.query_id == q), key=lambda r: r.rnk)]
+        assert list(mat[q][mat[q] != pad]) == ids
+    assert (mat[1] == pad).all() and (mat[3] == pad).all() and (mat[0] != pad).all()
+
+
+def _base_file(path, rng, n, dim):
+    labels = rng.integers(0, 5, n).astype(np.float32)
+    ts = rng.random(n).astype(np.float32)
+    vecs = rng.standard_normal((n, dim)).astype(np.float32)
+    bin_format.write_base_bin(path, labels, ts, vecs)
+    return labels, ts, vecs
+
+
+def _queries_file(path, rng, n, dim):
+    cols = (
+        rng.integers(0, 4, n).astype(np.float32),
+        rng.integers(-1, 5, n).astype(np.float32),
+        rng.random(n).astype(np.float32),
+        rng.random(n).astype(np.float32),
+        rng.standard_normal((n, dim)).astype(np.float32),
+    )
+    bin_format.write_queries_bin(path, *cols)
+    return cols
+
+
+def _assert_base_rows(rows, ids, labels, ts, vecs):
+    rows = sorted(rows, key=lambda r: r["id"])
+    assert [r["id"] for r in rows] == list(ids)
+    np.testing.assert_array_equal([r["category"] for r in rows], labels.astype(np.int32))
+    np.testing.assert_array_equal([r["ts"] for r in rows], ts.astype(np.float64))
+    np.testing.assert_array_equal(np.array([r["vec"] for r in rows], dtype=np.float32), vecs)
+
+
+def test_bin_readers_shard_directory(spark, tmp_path):
+    """A directory of two shard files: ids are seq·SHARD_STRIDE + pos
+    (seq from the sorted file names), values equal the NumPy inputs."""
+    rng = np.random.default_rng(11)
+    dim = 6
+    (tmp_path / "base").mkdir()
+    (tmp_path / "q").mkdir()
+    parts = [_base_file(str(tmp_path / "base" / f"{s}.bin"), rng, n, dim)
+             for s, n in ((0, 30), (1, 17))]
+    rows = bin_format.read_base_bin(spark, str(tmp_path / "base"), dim=dim).collect()
+    ids = [s * bin_format.SHARD_STRIDE + i for s, n in ((0, 30), (1, 17)) for i in range(n)]
+    _assert_base_rows(rows, ids, *(np.concatenate(c) for c in zip(*parts)))
+
+    qparts = [_queries_file(str(tmp_path / "q" / f"{s}.bin"), rng, n, dim)
+              for s, n in ((0, 9), (1, 4))]
+    qrows = sorted(
+        bin_format.read_queries_bin(spark, str(tmp_path / "q"), dim=dim).collect(),
+        key=lambda r: r["query_id"],
+    )
+    assert [r["query_id"] for r in qrows] == [
+        s * bin_format.SHARD_STRIDE + i for s, n in ((0, 9), (1, 4)) for i in range(n)
+    ]
+    qt, v, l, r, vecs = (np.concatenate(c) for c in zip(*qparts))
+    np.testing.assert_array_equal([x["query_type"] for x in qrows], qt.astype(np.int32))
+    np.testing.assert_array_equal([x["v"] for x in qrows], v.astype(np.int32))
+    np.testing.assert_array_equal([x["l"] for x in qrows], l.astype(np.float64))
+    np.testing.assert_array_equal([x["r"] for x in qrows], r.astype(np.float64))
+    np.testing.assert_array_equal(np.array([x["qvec"] for x in qrows], dtype=np.float32), vecs)
+
+
+def test_bin_reader_ragged_last_range(spark, tmp_path):
+    """A single file whose row count is not a multiple of the per-task
+    range: every row decodes once, at its own position."""
+    rng = np.random.default_rng(12)
+    n, dim = 1000, 5
+    p = str(tmp_path / "base.bin")
+    labels, ts, vecs = _base_file(p, rng, n, dim)
+    df = bin_format._read_bin_df(
+        spark, p, dim + 2, bin_format._base_batch, bin_format.BASE_SCHEMA, rows_per_task=64
+    )
+    assert df.rdd.getNumPartitions() == 16
+    _assert_base_rows(df.collect(), range(n), labels, ts, vecs)
+
+
+def test_bin_readers_empty_file(spark, tmp_path):
+    """n = 0: an empty frame with the readers' schema."""
+    rng = np.random.default_rng(13)
+    pb, pq = str(tmp_path / "base.bin"), str(tmp_path / "q.bin")
+    _base_file(pb, rng, 0, 4)
+    _queries_file(pq, rng, 0, 4)
+    for df, schema in (
+        (bin_format.read_base_bin(spark, pb, dim=4), bin_format.BASE_SCHEMA),
+        (bin_format.read_queries_bin(spark, pq, dim=4), bin_format.QUERIES_SCHEMA),
+    ):
+        assert df.collect() == []
+        assert df.schema.simpleString() == spark.createDataFrame([], schema).schema.simpleString()
+
+
 def test_partitioned_layout_prunes(spark, tmp_path):
     base = base_vectors(spark, SF_SMOKE)
     out = str(tmp_path / "replicas")
