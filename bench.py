@@ -398,9 +398,9 @@ def _sized_shuffle_partitions(sf_dir: str, cpus: int) -> int:
 
 def main() -> None:
     from sigmod_2024_contest_spark import api
-    from sigmod_2024_contest_spark.session import get_spark
+    from sigmod_2024_contest_spark.session import default_cpus, get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_spark("bench", shuffle_partitions=_sized_shuffle_partitions(SF_DIR, cpus))
     reg = api.queries()
     # warm the session once (JVM/codegen/python-worker startup + package

@@ -430,9 +430,7 @@ def _index_upsert_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         alpha=alpha,
         max_nodes=UPSERT_PARITY_MAX_NODES,
     )
-    up = engine.upsert_index(
-        idx, arrivals, plan, alpha, max_nodes=UPSERT_PARITY_MAX_NODES
-    )
+    up = engine.upsert_index(idx, arrivals, plan, alpha)
     scratch = engine.build_index(
         base, shard_plan=plan, alpha=alpha, max_nodes=UPSERT_PARITY_MAX_NODES
     )
@@ -617,9 +615,7 @@ def _index_compaction_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed, shard_plan=old_plan, alpha=old_alpha,
         max_nodes=COMPACT_PARITY_MAX_NODES,
     )
-    up = engine.upsert_index(
-        idx, arrivals, old_plan, old_alpha, max_nodes=COMPACT_PARITY_MAX_NODES
-    ).persist()
+    up = engine.upsert_index(idx, arrivals, old_plan, old_alpha).persist()
     try:
         fired = engine.compaction_due(
             up,
@@ -1034,7 +1030,7 @@ def _epoch_parity_body(
             bin_to_codes(F.col("codes")).alias("codes"),
         ),
         16, 100, 0, a, False,
-        n_groups=len(owners) or None, max_nodes=INGEST_PARITY_MAX_NODES,
+        n_groups=len(owners) or None,
     )
     joined = (
         idx.select("pkey", "id", "nbrs", "nbr_ts", "level").alias("u")

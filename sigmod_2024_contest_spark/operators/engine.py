@@ -168,47 +168,42 @@ def build_groups(
     alpha: float,
     hnsw_levels: bool = False,
     n_groups: int | None = None,
-    max_nodes: int | None = None,
 ) -> DataFrame:
     """Batched shard construction: every per-shard build in one
-    ``mapInArrow`` pass over ``(pkey, id, category, ts, codes)`` rows
-    hash-partitioned by pkey — each task splits its partition into
-    pkey runs and runs the SAME :func:`_build_group_graph` core per
-    shard. Replaces ``groupBy(pkey).applyInPandas(_build_group)``
-    (bit-identical output — the graph core is shared and the id-sort
-    is reproduced) for two measured reasons (guide §4.2/§2.5):
+    ``mapInArrow`` pass over ``(pkey, id, category, ts, codes)`` rows,
+    running the SAME :func:`_build_group_graph` core per shard as the
+    grouped-pandas reference ``groupBy(pkey).applyInPandas(_build_group)``
+    (bit-identical rows; the codes column decodes per shard via Arrow
+    offsets instead of a pandas frame + per-row decode).
 
-    - **per-group constants**: the grouped-pandas path pays a pandas
-      DataFrame + per-row codes decode per shard; entries that build
-      thousands of ≤128-node shards (the parity entries) spent more
-      wall in that per-group overhead than in graph math. Here the
-      codes column decodes once per batch via Arrow offsets.
-    - **task balance**: the grouped exchange inherits
-      ``spark.sql.shuffle.partitions`` and AQE coalesces it toward the
-      core count, so ~107 multi-second shard builds landed on ~32
-      partitions with a max load of 5-6 sequential builds (the
-      stress_build straggler wall). ``n_groups`` (known from the shard
-      plan) sizes an explicit hash repartition to 4× the group count —
-      user-specified N, so AQE keeps it — making the expected max
-      2 builds per task. ``max_nodes`` (the per-shard row bound) caps
-      that at ≥512 input rows per task, so MANY-TINY-shard builds (the
-      parity entries: dozens of ≤128-node shards per build) pack into
-      a few tasks instead of paying hundreds of task constants —
-      measured r14: the 4×n_groups rule alone tripled those entries.
+    **Task count: ``min(n_groups, 2 × defaultParallelism)``** (``2 ×
+    defaultParallelism`` when ``n_groups`` is unknown). A Python task
+    has a fixed cost whatever it carries: at ``local[2]`` on a 4-vCPU
+    VM, 8 one-row ``mapInArrow`` tasks take 1.1-1.4 s against
+    0.07-0.18 s for the same job without Python. Tasks past the slots'
+    second wave, and tasks that hold no shard, only add set-up time;
+    two waves still let multi-second graph shards balance against
+    GEMM-sized ones that build no graph. The explicit count is a
+    user-specified N (REPARTITION_BY_NUM), which AQE keeps.
+
+    **Streaming bound.** ``sortWithinPartitions(pkey, id)`` runs in the
+    JVM (spillable), so the kernel walks the Arrow batches, cuts a run
+    where ``pkey`` changes, carries the open run across batch
+    boundaries and builds each shard as its run closes: a Python worker
+    holds one shard plus one batch, not its whole partition. Rows of a
+    run arrive id-ascending — the reference's ``sort_values("id")``.
+    Null pkeys (rows whose slice prefix is missing from a frozen shard
+    plan, between compactions) sort first and form ONE group, as
+    ``groupBy(pkey)`` makes them.
     """
-    spark = sliced.sparkSession
+    npart = 2 * sliced.sparkSession.sparkContext.defaultParallelism
     if n_groups:
-        npart = 4 * int(n_groups)
-        if max_nodes:
-            npart = min(npart, max(1, (int(n_groups) * int(max_nodes)) // 512))
-        npart = max(1, min(npart, 4096))
-        part = sliced.repartition(npart, "pkey")
-    else:
-        part = sliced.repartition("pkey")
-    a = float(alpha)  # noqa: F841 — kept for signature parity with _build_group
+        npart = max(1, min(int(n_groups), npart))
+    part = sliced.repartition(npart, "pkey").sortWithinPartitions("pkey", "id")
 
     def kernel(batches):
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from .knn import tune_worker_arena
 
@@ -227,82 +222,53 @@ def build_groups(
                 pa.field("upper", pa.list_(pa.list_(pa.int32()))),
             ]
         )
-        tabs = list(batches)
-        if not tabs:
-            return
-        tbl = pa.Table.from_batches(tabs).combine_chunks()
-        if tbl.num_rows == 0:
-            return
-        # null pkeys form ONE group, like groupBy(pkey) did: rows whose
-        # slice prefix is missing from a FROZEN shard plan route to a
-        # null shard between compactions (the delta+compact contract) —
-        # factorize with a sentinel no real "prefix:int" pkey can be
-        pk_raw = tbl.column("pkey").to_pylist()
-        has_null = any(p is None for p in pk_raw)
+        # the null pkey's run key: no real "prefix:int" pkey can equal it
         null_key = "\x00null"
-        pk = np.asarray(
-            [null_key if p is None else p for p in pk_raw], dtype=object
-        )
-        ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-        cats = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.int32)
-        ts_all = tbl.column("ts").to_numpy(zero_copy_only=False).astype(np.float64)
-        cc = tbl.column("codes")
-        if isinstance(cc, pa.ChunkedArray):
-            cc = cc.combine_chunks()
-        offs = cc.offsets.to_numpy()
-        cvals = cc.values.to_numpy(zero_copy_only=False).astype(np.int8, copy=False)
-        widths = np.diff(offs)
-        d = int(widths[0]) if widths.size else 0
-        if widths.size and (widths == widths[0]).all() and d > 0:
-            codes_all = cvals[offs[0] : offs[-1]].reshape(len(ids), d)
-        else:  # ragged codes — not produced by the encoders; stay safe
-            codes_all = np.asarray(cc.to_pylist(), dtype=np.int8)
-            d = codes_all.shape[1] if codes_all.ndim == 2 else 0
-        # one stable (pkey, id) order: groups become contiguous runs,
-        # rows within a run are id-ascending — exactly the per-group
-        # sort_values("id") the pandas adapter performs (pkeys are
-        # factorized to ints first; lexsort on object strings is slow)
-        uniq, inv = np.unique(pk, return_inverse=True)
-        order = np.lexsort((ids, inv))
-        inv_s = inv[order]
-        bounds = np.flatnonzero(
-            np.concatenate([[True], inv_s[1:] != inv_s[:-1]])
-        ).tolist() + [len(inv_s)]
-        for gi in range(len(bounds) - 1):
-            s, e = bounds[gi], bounds[gi + 1]
-            sel = order[s:e]
-            n = len(sel)
-            g_ids, g_cats, g_ts = ids[sel], cats[sel], ts_all[sel]
-            g_codes = codes_all[sel] if d else np.empty((n, 0), np.int8)
-            pkey_val = str(uniq[inv_s[s]])
-            is_null = has_null and pkey_val == null_key
-            if is_null:
-                # the pandas adapter saw pkey=None here: its seed key
-                # was str(None) and its output pkey stayed null
-                pkey_val = str(None)
+
+        def shard(run, key):
+            tbl = pa.Table.from_batches(run).combine_chunks()
+            n = tbl.num_rows
+            ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
+            cats = tbl.column("category").to_numpy(zero_copy_only=False).astype(np.int32)
+            ts = tbl.column("ts").to_numpy(zero_copy_only=False).astype(np.float64)
+            cc = tbl.column("codes").chunk(0)
+            offs = cc.offsets.to_numpy()
+            cvals = cc.values.to_numpy(zero_copy_only=False).astype(np.int8, copy=False)
+            widths = np.diff(offs)
+            d = int(widths[0])
+            if (widths == d).all():
+                codes = cvals[offs[0] : offs[-1]].reshape(n, d)
+            else:  # ragged codes — not produced by the encoders; stay safe
+                codes = np.asarray(cc.to_pylist(), dtype=np.int8)
+                d = codes.shape[1]
+            is_null = key == null_key
+            # the pandas reference saw pkey=None here: its seed key was
+            # str(None) and its output pkey stayed null
+            pkey_val = str(None) if is_null else key
             nbr_lists, nbr_ts_lists, level_arr, upper_lists = _build_group_graph(
-                pkey_val, g_codes, g_ts, m, efc, graph_min_nodes, hnsw_levels
-            )
-            boffs = (np.arange(n + 1, dtype=np.int32) * d) if d else np.zeros(
-                n + 1, dtype=np.int32
+                pkey_val, codes, ts, m, efc, graph_min_nodes, hnsw_levels
             )
             codes_arr = pa.Array.from_buffers(
                 pa.binary(),
                 n,
-                [None, pa.py_buffer(boffs.tobytes()), pa.py_buffer(g_codes.tobytes())],
+                [
+                    None,
+                    pa.py_buffer((np.arange(n + 1, dtype=np.int32) * d).tobytes()),
+                    pa.py_buffer(codes.tobytes()),
+                ],
             )
             pkey_arr = (
                 pa.nulls(n, pa.string())
                 if is_null
                 else pa.array(np.full(n, pkey_val, dtype=object), type=pa.string())
             )
-            yield pa.RecordBatch.from_arrays(
+            return pa.RecordBatch.from_arrays(
                 [
                     pkey_arr,
                     pa.array(np.arange(n, dtype=np.int64)),
-                    pa.array(g_ids),
-                    pa.array(g_cats),
-                    pa.array(g_ts),
+                    pa.array(ids),
+                    pa.array(cats),
+                    pa.array(ts),
                     codes_arr,
                     pa.array(nbr_lists, type=pa.list_(pa.int32())),
                     pa.array(nbr_ts_lists, type=pa.list_(pa.float64())),
@@ -311,6 +277,26 @@ def build_groups(
                 ],
                 schema=out_schema,
             )
+
+        run: list = []  # batch slices of the open pkey run
+        run_key = None
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            pk = pc.fill_null(rb.column("pkey"), null_key)
+            cuts = np.flatnonzero(
+                pc.not_equal(pk[1:], pk[:-1]).to_numpy(zero_copy_only=False)
+            ) + 1
+            for s, e in zip([0, *cuts.tolist()], [*cuts.tolist(), n]):
+                key = pk[s].as_py()
+                if run and key != run_key:
+                    yield shard(run, run_key)
+                    run = []
+                run.append(rb.slice(s, e - s))
+                run_key = key
+        if run:
+            yield shard(run, run_key)
 
     return part.mapInArrow(kernel, INDEX_SCHEMA)
 
@@ -418,7 +404,7 @@ def build_index(
     both = _slice_rows(base, shard_plan, alpha)
     return build_groups(
         both, m, efc, graph_min_nodes, float(alpha), hnsw_levels,
-        n_groups=sum(shard_plan.values()), max_nodes=max_nodes,
+        n_groups=sum(shard_plan.values()),
     )
 
 
@@ -517,7 +503,6 @@ def upsert_index(
     graph_min_nodes: int = 0,
     hnsw_levels: bool = False,
     affected: list[str] | None = None,
-    max_nodes: int = MAX_NODES_PER_GRAPH,
 ) -> DataFrame:
     """Incremental index maintenance: fold new vectors into an existing
     partitioned graph index, rebuilding ONLY the shards they land in.
@@ -545,7 +530,6 @@ def upsert_index(
     corpus — the classic delta + compact split. ``shard_catalog``/
     search need no changes between compactions: pkeys are stable.
     """
-    spark = index.sparkSession
     sliced = _slice_rows(new_base, shard_plan, alpha)
     if affected is None:
         affected = [r["pkey"] for r in sliced.select("pkey").distinct().collect()]
@@ -553,7 +537,7 @@ def upsert_index(
         return index
     return _rebuild_affected(
         index, new_base, sliced, affected, alpha, m, efc, graph_min_nodes,
-        hnsw_levels, max_nodes,
+        hnsw_levels,
     )
 
 
@@ -567,7 +551,6 @@ def _rebuild_affected(
     efc: int,
     graph_min_nodes: int,
     hnsw_levels: bool,
-    max_nodes: int,
 ) -> DataFrame:
     """The rebuild tail of both upserts: shards outside ``affected``
     pass through as a pure filter; each affected shard rebuilds from
@@ -585,12 +568,23 @@ def _rebuild_affected(
     fold only the open shard has retained rows and the anti-join is
     defense in depth. The arrival-id side is micro-batch-sized —
     broadcast, and not de-duplicated: a left-anti join ignores
-    duplicate keys, and a distinct would add an aggregate shuffle."""
-    untouched = index.filter(~F.col("pkey").isin(affected))
+    duplicate keys, and a distinct would add an aggregate shuffle.
+
+    ``affected`` holds ``None`` when an arrival's slice prefix is
+    missing from the frozen plan (its rows form the null-pkey shard).
+    ``pkey IN (..., NULL)`` is never false and ``NULL IN (...)`` is
+    never true, so the null shard is decided apart from the ``IN``:
+    ``hit`` is true or false on every row, never NULL, and no shard
+    drops out of both sides of the split."""
+    pkey = F.col("pkey")
+    hit = F.when(pkey.isNull(), F.lit(None in affected)).otherwise(
+        pkey.isin([p for p in affected if p is not None])
+    )
+    untouched = index.filter(~hit)
     arrival_ids = F.broadcast(new_base.select("id"))
     bin_to_codes = F.pandas_udf(_bin_to_codes_batch, "array<tinyint>")
     retained = (
-        index.filter(F.col("pkey").isin(affected))
+        index.filter(hit)
         .join(arrival_ids, "id", "left_anti")
         .select(
             "pkey", "id", "category", "ts",
@@ -599,7 +593,7 @@ def _rebuild_affected(
     )
     rebuilt = build_groups(
         retained.unionByName(sliced), m, efc, graph_min_nodes, float(alpha),
-        hnsw_levels, n_groups=len(affected), max_nodes=max_nodes,
+        hnsw_levels, n_groups=len(affected),
     )
     return untouched.unionByName(rebuilt)
 
@@ -729,7 +723,7 @@ def upsert_index_epoch(
         return index, new_state, []
     rebuilt = _rebuild_affected(
         index, new_base, sliced, affected, alpha, m, efc, graph_min_nodes,
-        hnsw_levels, max_nodes,
+        hnsw_levels,
     )
     return rebuilt, new_state, affected
 

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cpus
+this process may run on, :func:`default_cpus`); the
 configs below are the ones that matter identically on a real cluster:
 AQE (runtime re-plan + skew-join handling), Arrow for all
 pandas/NumPy-backed operators, and a shuffle-partition count sized to
@@ -62,6 +63,13 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cpus this process may run on — a
+    fixed default oversubscribes a small host (``local[32]`` on 4 vCPUs)
+    and leaves a large one idle."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "sigmod2024-spark",
     cpus: int | None = None,
@@ -73,7 +81,7 @@ def get_spark(
     overhead, which dominates multi-stage plans there. Defaults to
     ``SPARK_GRAFT_SHUFFLE`` or ``cpus``."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus)))
     # One BLAS thread per Python worker: Spark already runs `cpus`

@@ -392,8 +392,7 @@ def index_ingest_stream(
                 if not affected:
                     return
                 new_index = engine.upsert_index(
-                    cur, batch_df, plan, a, m=m, efc=efc, affected=affected,
-                    max_nodes=mn,
+                    cur, batch_df, plan, a, m=m, efc=efc, affected=affected
                 )
         if corpus_dir is not None and (
             engine.compaction_due(new_index, plan, max_nodes=mn, factor=factor)

@@ -693,8 +693,8 @@ def test_compaction_due_counts_null_pkey_shard(spark):
     idx.unpersist()
 
 
-def _jobs_run(spark, fn) -> int:
-    """Spark jobs ``fn()`` starts, counted through a job group."""
+def _job_group_run(spark, fn) -> str:
+    """Runs ``fn()`` under a fresh Spark job group; returns the group."""
     import uuid
 
     sc = spark.sparkContext
@@ -705,7 +705,21 @@ def _jobs_run(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return group
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs ``fn()`` starts, counted through a job group."""
+    group = _job_group_run(spark, fn)
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _last_stage_tasks(spark, fn) -> int:
+    """Tasks of the last stage ``fn()`` runs (its result stage)."""
+    group = _job_group_run(spark, fn)
+    st = spark.sparkContext.statusTracker()
+    stages = [sid for jid in st.getJobIdsForGroup(group) for sid in st.getJobInfo(jid).stageIds]
+    return st.getStageInfo(max(stages)).numTasks
 
 
 def test_ingest_edges_job_budget(spark, tmp_path):
@@ -831,3 +845,111 @@ def test_build_groups_bit_identical_to_grouped_pandas(spark):
     ref_rows, new_rows = snap(reference), snap(batched)
     assert ref_rows == new_rows
     assert any(r[0] == "\x00<null>" for r in ref_rows)  # null group exercised
+
+
+def _index_rows(df):
+    """Every index column of every row, null pkey first, in a total order."""
+    return sorted(
+        (
+            r["pkey"] is not None, r["pkey"] or "", r["pos"], r["id"], r["category"],
+            r["ts"], bytes(r["codes"]), tuple(r["nbrs"]), tuple(r["nbr_ts"]),
+            r["level"], tuple(tuple(u) for u in r["upper"]),
+        )
+        for r in df.collect()
+    )
+
+
+def test_build_groups_streams_runs_across_batches(spark):
+    """The build kernel reads a (pkey, id)-sorted stream and builds each
+    shard as its pkey run closes, carrying the open run from one Arrow
+    batch to the next. With 7-row batches almost every shard straddles
+    a batch boundary; the rows must still equal the grouped-pandas
+    reference, the frozen plan's null-pkey group included."""
+    from pyspark.sql import functions as F
+
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import routing
+
+    base = base_vectors(spark, SF_SMOKE)
+    alpha = float(Q.train_alpha(base))
+    frozen = engine._shard_plan(base.filter(F.col("ts") < 0.2), routing.CAT_GRAPH_THR, 64)
+    sliced = engine._slice_rows(base, frozen, alpha)
+    ref_rows = _index_rows(
+        sliced.groupBy("pkey").applyInPandas(
+            lambda pdf: engine._build_group(pdf, 16, 100, 0, alpha, False),
+            engine.INDEX_SCHEMA,
+        )
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        new_rows = _index_rows(
+            engine.build_groups(
+                sliced, 16, 100, 0, alpha, False, n_groups=sum(frozen.values())
+            )
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert new_rows == ref_rows
+    assert not ref_rows[0][0]  # the null group is there
+    sizes = {}
+    for r in ref_rows:
+        sizes[r[1]] = sizes.get(r[1], 0) + 1
+    assert sum(n > 7 for n in sizes.values()) >= len(sizes) // 2  # runs span batches
+
+
+def test_build_groups_task_count(spark):
+    """The build's Python stage runs at most min(n_groups, 2 ×
+    defaultParallelism) tasks (2 × defaultParallelism when the group
+    count is unknown): every Python task has a fixed cost, so tasks
+    past the slots' second wave, or holding no shard, are waste."""
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import routing
+
+    base = base_vectors(spark, SF_SMOKE)
+    alpha = float(Q.train_alpha(base))
+    splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, 16)
+    sliced = engine._slice_rows(base, splan, alpha)
+    n_groups = sum(splan.values())
+    slots2 = 2 * spark.sparkContext.defaultParallelism
+    assert n_groups > slots2  # the slot bound is the one that binds
+    for ng, bound in ((n_groups, slots2), (None, slots2), (3, 3)):
+        built = engine.build_groups(sliced, 16, 100, 0, alpha, False, n_groups=ng)
+        assert 1 <= _last_stage_tasks(spark, built.collect) <= bound, ng
+
+
+def test_upsert_keeps_shards_beside_null_pkey_arrivals(spark):
+    """Arrivals whose slice prefix is missing from the frozen plan route
+    to the null-pkey shard, so the rebuild's affected list holds None
+    (beside other shards, then alone). Neither the untouched shards
+    nor the null shard's earlier members may drop out: after the
+    upserts the index holds exactly the rows a build of the whole
+    corpus under the same plan holds, graphs and positions included."""
+    from pyspark.sql import functions as F
+
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import routing
+
+    base_all = base_vectors(spark, SF_SMOKE)
+    alpha = Q.train_alpha(base_all)
+    seed = base_all.filter(F.col("ts") < 0.2)
+    first = base_all.filter((F.col("ts") >= 0.2) & (F.col("ts") < 0.35))
+    frozen = engine._shard_plan(seed, routing.CAT_GRAPH_THR, 64)
+    idx = engine.build_index(seed, shard_plan=frozen, alpha=alpha, max_nodes=64)
+    idx = engine.upsert_index(idx, first, frozen, alpha)
+    late = base_all.filter(F.col("ts") >= 0.35)  # the smoke corpus's ts < 0.5
+    # a category outside the plan: these rows reach only unplanned deciles
+    null_only = late.filter(F.col("id") % 2 == 0).withColumn("category", F.lit(99))
+    rest = late.filter(F.col("id") % 2 == 1)
+    assert {r["pkey"] for r in engine._slice_rows(null_only, frozen, alpha).collect()} == {None}
+    idx = engine.upsert_index(idx, rest, frozen, alpha)
+    idx = engine.upsert_index(idx, null_only, frozen, alpha)
+
+    corpus = seed.unionByName(first).unionByName(null_only).unionByName(rest)
+    got = _index_rows(idx)
+    assert not got[0][0]  # the null shard is there
+    # every shard, rebuilt or passed through, equals a from-scratch build's
+    assert got == _index_rows(
+        engine.build_index(corpus, shard_plan=frozen, alpha=alpha, max_nodes=64)
+    )

@@ -9,9 +9,13 @@ rotation plan must raise at import, not silently land outside every
 window (the ``bda2c85`` failure mode, twice flagged by the judge).
 """
 
+import os
+
 import pytest
 
 from sigmod_2024_contest_spark import api
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 ROUND8_WINDOW = {
@@ -71,7 +75,7 @@ def test_round14_window_is_exactly_the_planned_set():
 
     r13 = {
         k
-        for k, v in json.load(open("/root/repo/CORRECTNESS_r13.json")).items()
+        for k, v in json.load(open(os.path.join(ROOT, "CORRECTNESS_r13.json"))).items()
         if v.get("err") is None
     }
     assert (r13 - set(FORCED)).isdisjoint(first)
@@ -84,10 +88,10 @@ def test_rotate_window_tool_reproduces_r14_window():
     r14 lists — the rotation stays mechanical, not hand-curated."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from rotate_window import load_green_rounds, plan_next_window
 
-    rounds = {k: v for k, v in load_green_rounds("/root/repo").items() if k <= 13}
+    rounds = {k: v for k, v in load_green_rounds(ROOT).items() if k <= 13}
     assert max(rounds) == 13
     nxt, prior = plan_next_window(
         list(api._REGISTRY), rounds, window=50, force=tuple(FORCED)
@@ -106,14 +110,14 @@ def test_rotation_cadence_bound():
     import math
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from rotate_window import load_green_rounds, plan_next_window
 
     names = list(api._REGISTRY)
     window = api._DRIVER_WINDOW
     bound = math.ceil(len(names) / window)
     assert bound == 3  # 125 entries / 50 slots — update alongside the registry
-    rounds = {k: set(v) for k, v in load_green_rounds("/root/repo").items()}
+    rounds = {k: set(v) for k, v in load_green_rounds(ROOT).items()}
     cur = max(rounds)
     latest: dict[str, int] = {}
     for rnd, g in rounds.items():
@@ -178,7 +182,7 @@ def test_rotate_window_tool_plans_stalest_first():
     the mechanical form of the standing half-swap obligation."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from rotate_window import plan_next_window
 
     names = ["a", "b", "c", "d", "e"]
@@ -196,14 +200,14 @@ def test_rotate_window_tool_reproduces_r8_window():
     the committed r8 window (same 50 names)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from rotate_window import load_green_rounds, plan_next_window
 
     # pin to rounds <= 7 and to the LITERAL r8 window: the input and
     # the expectation are both frozen facts, so this stays green after
     # the driver writes CORRECTNESS_r08+ and after future rotations
     # change api._CHECK_FIRST
-    rounds = {k: v for k, v in load_green_rounds("/root/repo").items() if k <= 7}
+    rounds = {k: v for k, v in load_green_rounds(ROOT).items() if k <= 7}
     assert max(rounds) == 7
     names = sorted(ROUND8_WINDOW | rounds[7])  # the r8-era registry, frozen
     nxt, prior = plan_next_window(names, rounds, window=50)

@@ -13,12 +13,13 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
@@ -53,7 +54,7 @@ def main():
     import __spark_entry__ as entry
     from sigmod_2024_contest_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cpus=8)
+    spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

@@ -19,7 +19,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def load_green_rounds(repo: str) -> dict[int, set[str]]:
@@ -82,7 +83,7 @@ def plan_next_window(
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--dir", default="/root/repo")
+    ap.add_argument("--dir", default=ROOT)
     ap.add_argument("--window", type=int, default=50)
     ap.add_argument(
         "--force",

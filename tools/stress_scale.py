@@ -19,10 +19,11 @@ cold reading on this host carries a documented ~2× spread.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def synth_base(spark, n_rows: int, dim: int = 64):

@@ -2,11 +2,13 @@
 with a plain SparkSession. Exact tuple compare vs the DuckDB oracle at
 sf0.01 (stricter than the hash compare in check_oracle.py)."""
 import importlib.util
+import os
 import sys
 import traceback
 
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(ROOT, "__spark_entry__.py"))
+sys.path.insert(0, ROOT)
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 from pyspark.sql import SparkSession  # noqa: E402
