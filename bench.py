@@ -156,7 +156,7 @@ def _contest_bench(spark) -> dict[str, float]:
         st = stats_ops.corpus_stats(base, routing.ROUTING_TS_BINS)
         alpha = Q.train_alpha(base)
         index = engine.partition_index_for_search(
-            engine.build_index(base, graph_min_nodes=engine.GEMM_SHARD_THR, alpha=alpha)
+            engine.build_index(base, alpha=alpha)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         index.count()
         catalog = engine.shard_catalog(index)  # build-phase metadata
@@ -205,11 +205,11 @@ def _contest_bench(spark) -> dict[str, float]:
     spark.conf.set("spark.sql.shuffle.partitions", old_shuffle)
     return out
 
-# Beam-path stress scale: big enough that every decile/category shard
-# exceeds GEMM_SHARD_THR, so the hybrid engine actually walks graphs
-# (at sf0.1 and contest scale every shard routes to the exact GEMM —
-# correct cost-based behavior, but then the bench never exercises the
-# beam at scale). 500k rows → 107 shards of ~7-8k nodes.
+# Shard-scan stress scale: big enough that every decile/category slice
+# splits into several shards of up to MAX_NODES_PER_GRAPH rows (at
+# sf0.1 and contest scale every slice is one small shard), so the
+# engine's shard fan-out and global merge run at scale. 500k rows →
+# 107 shards of ~7-8k rows.
 STRESS_NB = int(os.environ.get("SPARK_GRAFT_STRESS_NB", "500000"))
 STRESS_NQ = int(os.environ.get("SPARK_GRAFT_STRESS_NQ", "2048"))
 # r11 verdict #5: the stress legs were the last single-context readings
@@ -221,10 +221,10 @@ STRESS_REPS = int(os.environ.get("SPARK_GRAFT_STRESS_REPS", "3"))
 
 
 def _stress_bench(spark) -> dict[str, float]:
-    """The beam path at scale, captured in the artifact: build the
-    partitioned graph index on a 500k-row synthetic corpus (107 shards,
-    all above GEMM_SHARD_THR → graph branches genuinely walk beams),
-    answer a mixed 4-type 2048-query batch with the routed engine, and
+    """The shard scans at scale, captured in the artifact: build the
+    partitioned index on a 500k-row synthetic corpus (107 shards of
+    ~7-8k rows, each scanned exactly in code space by the queries it
+    serves), answer a mixed 4-type 2048-query batch with the routed engine, and
     run the forced exact scan (query-broadcast over the float corpus —
     the no-index plan) at IDENTICAL inputs — STRESS_REPS interleaved
     (hybrid, scan, auto) triples, min per leg plus the median paired
@@ -232,11 +232,11 @@ def _stress_bench(spark) -> dict[str, float]:
     scan result (exact), outside the clocks.
 
     What this pair claims, precisely: the cost-based engine answers the
-    batch at recall ≥ 0.95 with the graph branches serving the
+    batch at recall ≥ 0.95 with the shard branches serving the
     above-threshold selective queries (~30 % of the batch; the router
     sends the rest to the fused quantized bf, its measured-cheaper
     plan). This pair deliberately FORCES the engine to exercise the
-    beam path — at 2048 queries the exact scan wins the wall
+    shard fan-out — at 2048 queries the exact scan wins the wall
     (engine.knn_auto exists for exactly this regime and routes small
     batches to the scan); the decisive engine-beats-scan evidence at
     grading scale is the contest pair (hybrid ≈ 0.5-0.6× the forced
@@ -269,9 +269,7 @@ def _stress_bench(spark) -> dict[str, float]:
         alpha = Q.train_alpha(base)
         splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH)
         index = engine.partition_index_for_search(
-            engine.build_index(
-                base, graph_min_nodes=engine.GEMM_SHARD_THR, shard_plan=splan, alpha=alpha
-            )
+            engine.build_index(base, shard_plan=splan, alpha=alpha)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         index.count()
         catalog = engine.catalog_from_plan(spark, splan)
@@ -351,8 +349,8 @@ def _stress_bench(spark) -> dict[str, float]:
         if ratios:
             out["stress_ratio_runs"] = ratios  # per-rep paired hybrid/scan
             out["stress_hybrid_vs_scan_ratio"] = ratios[len(ratios) // 2]
-        # route mix, outside the clocks: documents that the graph
-        # branches genuinely served queries (the beam path is live)
+        # route mix, outside the clocks: documents that the shard
+        # branches genuinely served queries
         for r in plan.groupBy("route").count().collect():
             out[f"stress_routed_{r['route']}"] = float(r["count"])
         mean_ppm = (
@@ -415,7 +413,7 @@ def main() -> None:
     names += [n for n in sorted(reg) if n not in names]
 
     # Build/Search split (reference baseline.cpp:96,152): the one-time
-    # graph-index build + parquet save/load is timed here, OUTSIDE the
+    # index build + parquet save/load is timed here, OUTSIDE the
     # per-query search clocks, and reported under "prep" — knn_hybrid /
     # recall_hybrid_vs_exact then measure search over the loaded index.
     prep: dict[str, float] = {}

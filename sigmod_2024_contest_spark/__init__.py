@@ -6,8 +6,9 @@ reference at /root/reference): filtered top-k nearest-neighbor search
 over a vector corpus (4 query types: unfiltered / category / time-range
 / both — reference ``searcher.hpp:29-43``), SQ8 quantization
 (``sq8_sym_quant.hpp``), selectivity-based routing
-(``hybrid_graph.cpp:147-503``), and partitioned HNSW graph indexes
-(``hnswalg.h``, ``hnsw.hpp``) — plus the large-scale training-data
+(``hybrid_graph.cpp:147-503``), and a partitioned index whose shards
+are scanned exactly in SQ8 code space where the reference walks HNSW
+graphs (``hnswalg.h``) — plus the large-scale training-data
 pipeline operators (dedup, similarity search, multimodal columns, text
 analysis) a 100 TB corpus needs.
 

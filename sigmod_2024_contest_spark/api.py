@@ -223,17 +223,17 @@ register("knn_sq4_rerank", _knn_sq4_rerank, bruteforce_quant.knn_sq4_rerank_sql(
 
 
 # ---------------------------------------------------------------------------
-# Hybrid engine: routed bf + partitioned-HNSW graph search
-# (BatchSearch, hybrid_graph.cpp:147-503). ANN → rows-only check;
-# recall vs the exact oracle is gated in tests/test_hnsw_engine.py.
+# Hybrid engine: routed bf + per-shard exact code-space scans
+# (BatchSearch, hybrid_graph.cpp:147-503). Recall vs the exact oracle
+# is gated in tests/test_hnsw_engine.py.
 # ---------------------------------------------------------------------------
 
 
 # Build-once, search-many — the reference's own usage (Build /
 # BuildCategoryIndex run once, BatchSearch many; the contest clock
 # measures search, baseline.cpp:96,152). The first entry that needs the
-# graph index builds it, round-trips it through the S8/S9 parquet
-# persistence (Graph::save/load, graph.hpp:101-137), and every later
+# index builds it, round-trips it through the S8 parquet persistence
+# (Graph::save/load, graph.hpp:101-137), and every later
 # entry searches the *loaded* index — so the driver exercises
 # save_index/load_index, not just pytest. Keyed by (application,
 # sf_dir) so a new session never sees a stale plan.
@@ -254,9 +254,7 @@ def _hybrid_index(spark: SparkSession, sf_dir: str, base: DataFrame) -> tuple[Da
             tempfile.gettempdir(),
             f"sg_index_{spark.sparkContext.applicationId}_{os.path.basename(sf_dir.rstrip('/'))}",
         )
-        layout.save_index(
-            engine.build_index(base, graph_min_nodes=engine.GEMM_SHARD_THR), path
-        )
+        layout.save_index(engine.build_index(base), path)
         # pkey-clustered cache: searches cogroup on pkey, so persisting
         # the loaded index pre-partitioned elides the index-side
         # exchange in every subsequent search (build-once cost)
@@ -344,18 +342,14 @@ def _knn_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Full hash-matched oracle (r4 verdict #1): at correctness scale every
 # branch the engine takes is EXACT, so the oracle is the exact filtered
-# kNN itself — (a) every shard is ≤ GEMM_SHARD_THR (engine.py
-# MAX_NODES_PER_GRAPH sharding at sf0.01 yields ≤4k-row shards), so
-# type-0/1 graph queries take the all-queries masked code GEMM whose
-# SHARD_REFINE_MULT·k per-shard candidates contain the true top-k of
-# their slice, and slices cover each query's allowed set; (b) SMALL
-# type-2/3 slices take the masked code GEMM; (c) the bf branch's SQ8
-# cut to refine_k=140 retains the true top-100 for the low-selectivity
+# kNN itself — (a) every shard is scanned exactly in code space (the
+# predicate-sliced code GEMM), its SHARD_REFINE_MULT·k per-shard
+# candidates contain the true top-k of their slice, and slices cover
+# each query's allowed set; (b) the bf branch's SQ8 cut to
+# refine_k=140 retains the true top-100 for the low-selectivity
 # queries it is routed (hash-proven since r4, knn_hybrid_bf_exact);
-# (d) the K12 re-rank restores exact float (dist, id) order. If a
-# future shard config breaks (a), fall back per-route the way
-# knn_hybrid_bf_exact does. The sf-independent quality gate stays
-# recall_hybrid_vs_exact (bar 0.95).
+# (c) the K12 re-rank restores exact float (dist, id) order. The
+# sf-independent quality gate stays recall_hybrid_vs_exact (bar 0.95).
 register("knn_hybrid", _knn_hybrid, knn.knn_oracle_sql())
 
 
@@ -405,13 +399,36 @@ register("knn_hybrid_bf_exact", _knn_hybrid_bf_exact, _KNN_HYBRID_BF_EXACT_SQL)
 # 90% of the corpus, upsert the rest, and emit per-shard digests that
 # the oracle recomputes STRUCTURALLY from the raw table — shard routing
 # is pmod(id, nshards) under the derived plan and codes are the SQ8
-# encode, both SQL-expressible — plus an in-plan graph-equality flag
-# against a from-scratch build under the same plan/alpha (adjacency is
-# not SQL-expressible, but build determinism makes equality checkable
-# in-plan; the oracle expects literal TRUE).
+# encode, both SQL-expressible — plus an in-plan row-equality flag
+# (`graph_equal`): every index column of every (pkey, id) equals a
+# from-scratch build's under the same plan/alpha; the oracle expects
+# literal TRUE.
 # ---------------------------------------------------------------------------
 
 UPSERT_PARITY_MAX_NODES = 128
+
+
+def _graph_equal(live: DataFrame, scratch: DataFrame, on: list[str]) -> DataFrame:
+    """(pkey, graph_equal) per live shard: TRUE iff each of its rows
+    equals the ``scratch`` row with the same ``on`` keys in every index
+    column (category, ts, codes) and neither side lacks a row. A
+    scratch row missing from ``live`` lands in a null-pkey group."""
+    from pyspark.sql import functions as F
+
+    vals = ["category", "ts", "codes"]
+    keys = on if "pkey" in on else ["pkey", *on]
+    joined = live.select(*keys, *vals).alias("u").join(
+        scratch.select(*on, *vals).alias("s"), on, "full_outer"
+    )
+    match = F.coalesce(
+        F.col("u.codes").isNotNull()
+        & F.col("s.codes").isNotNull()
+        & (F.col("u.codes") == F.col("s.codes"))
+        & (F.col("u.category") == F.col("s.category"))
+        & (F.col("u.ts") == F.col("s.ts")),
+        F.lit(False),
+    )
+    return joined.groupBy("pkey").agg(F.min(match).alias("graph_equal"))
 
 
 def _index_upsert_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,27 +452,7 @@ def _index_upsert_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, shard_plan=plan, alpha=alpha, max_nodes=UPSERT_PARITY_MAX_NODES
     )
 
-    u = up.select("pkey", "id", "category", "ts", "codes", "nbrs", "nbr_ts", "level")
-    s = scratch.select(
-        "pkey", "id", "category", "ts", "codes", "nbrs", "nbr_ts", "level"
-    )
-    joined = u.alias("u").join(s.alias("s"), ["pkey", "id"], "full_outer")
-    match = F.coalesce(
-        F.col("u.codes").isNotNull()
-        & F.col("s.codes").isNotNull()
-        & (F.col("u.codes") == F.col("s.codes"))
-        & (F.col("u.category") == F.col("s.category"))
-        & (F.col("u.ts") == F.col("s.ts"))
-        & (F.col("u.nbrs") == F.col("s.nbrs"))
-        & (F.col("u.nbr_ts") == F.col("s.nbr_ts"))
-        & (F.col("u.level") == F.col("s.level")),
-        F.lit(False),
-    )
-    eq = (
-        joined.select("pkey", match.alias("m"))
-        .groupBy("pkey")
-        .agg(F.min("m").alias("graph_equal"))
-    )
+    eq = _graph_equal(up, scratch, ["pkey", "id"])
     digest = F.pandas_udf(engine._codes_weighted_digest_batch, "long")
     stats_df = (
         up.select("pkey", "id", digest(F.col("codes")).alias("dg"))
@@ -708,11 +705,11 @@ register(
 # pruned reads. The emitted per-shard digests are recomputed
 # structurally by the oracle (same shape as index_upsert_parity), and
 # two in-plan flags the oracle expects TRUE certify what SQL cannot:
-# `graph_equal` — the manifest-assembled index is row-identical
-# (adjacency included) to a from-scratch `build_index` under the same
-# plan/alpha, i.e. the incremental write path and the batch build
-# converge; `store_bounded` — after GC the store holds only
-# manifest-referenced versions plus the retention window.
+# `graph_equal` — the manifest-assembled index is row-identical to a
+# from-scratch `build_index` under the same plan/alpha, i.e. the
+# incremental write path and the batch build converge;
+# `store_bounded` — after GC the store holds only manifest-referenced
+# versions plus the retention window.
 # ---------------------------------------------------------------------------
 
 INGEST_PARITY_MAX_NODES = 128
@@ -795,27 +792,7 @@ def _ingest_parity_body(
     scratch = _e.build_index(
         base, shard_plan=plan, alpha=alpha, max_nodes=INGEST_PARITY_MAX_NODES
     )
-    cols = ["pkey", "id", "category", "ts", "codes", "nbrs", "nbr_ts", "level"]
-    joined = (
-        idx.select(*cols).alias("u")
-        .join(scratch.select(*cols).alias("s"), ["pkey", "id"], "full_outer")
-    )
-    match = F.coalesce(
-        F.col("u.codes").isNotNull()
-        & F.col("s.codes").isNotNull()
-        & (F.col("u.codes") == F.col("s.codes"))
-        & (F.col("u.category") == F.col("s.category"))
-        & (F.col("u.ts") == F.col("s.ts"))
-        & (F.col("u.nbrs") == F.col("s.nbrs"))
-        & (F.col("u.nbr_ts") == F.col("s.nbr_ts"))
-        & (F.col("u.level") == F.col("s.level")),
-        F.lit(False),
-    )
-    eq = (
-        joined.select("pkey", match.alias("m"))
-        .groupBy("pkey")
-        .agg(F.min("m").alias("graph_equal"))
-    )
+    eq = _graph_equal(idx, scratch, ["pkey", "id"])
     digest = F.pandas_udf(engine._codes_weighted_digest_batch, "long")
     stats_df = (
         idx.select("pkey", "id", digest(F.col("codes")).alias("dg"))
@@ -900,12 +877,12 @@ register(
 # (ordered by (batch, id) — the fold's per-batch id-asc window chained
 # through the persisted epoch state). Per-shard digests prove the
 # membership AND the codes; three flags certify what SQL cannot see:
-# `graph_equal` — every live shard's adjacency equals a deterministic
-# from-scratch _build_group over its members (the incremental fold
-# converges to the batch build per shard); `sealed_immutable` — no
-# version directory ever rewrites a shard that an earlier version
-# committed full (the write-amplification claim, including the
-# batch-ends-on-boundary edge the eager seal closes);
+# `graph_equal` — every live shard's rows equal a from-scratch encode
+# of the raw corpus under the same plan/alpha, matched by slice and id
+# (the incremental fold converges to the batch build per shard);
+# `sealed_immutable` — no version directory ever rewrites a shard that
+# an earlier version committed full (the write-amplification claim,
+# including the batch-ends-on-boundary edge the eager seal closes);
 # `owners_bounded` — live shards are owned by ≤ n_batches versions.
 # ---------------------------------------------------------------------------
 
@@ -1022,34 +999,13 @@ def _epoch_parity_body(
             committed_full |= {p for p, n in counts.items() if n >= mn}
 
     idx = V.load_latest_index(spark, index_dir)
-    a = float(meta.get("alpha", alpha))
-    bin_to_codes = F.pandas_udf(_e._bin_to_codes_batch, "array<tinyint>")
-    rebuilt = _e.build_groups(
-        idx.select(
-            "pkey", "id", "category", "ts",
-            bin_to_codes(F.col("codes")).alias("codes"),
-        ),
-        16, 100, 0, a, False,
-        n_groups=len(owners) or None,
+    scratch = _e._prefix_rows(
+        base, meta.get("shard_plan", plan), float(meta.get("alpha", alpha))
     )
-    joined = (
-        idx.select("pkey", "id", "nbrs", "nbr_ts", "level").alias("u")
-        .join(
-            rebuilt.select("pkey", "id", "nbrs", "nbr_ts", "level").alias("s"),
-            ["pkey", "id"],
-            "full_outer",
-        )
-    )
-    match = F.coalesce(
-        (F.col("u.nbrs") == F.col("s.nbrs"))
-        & (F.col("u.nbr_ts") == F.col("s.nbr_ts"))
-        & (F.col("u.level") == F.col("s.level")),
-        F.lit(False),
-    )
-    eq = (
-        joined.select("pkey", match.alias("m"))
-        .groupBy("pkey")
-        .agg(F.min("m").alias("graph_equal"))
+    eq = _graph_equal(
+        idx.withColumn("prefix", F.regexp_extract("pkey", r"^(.*):\d+$", 1)),
+        scratch,
+        ["prefix", "id"],
     )
     digest = F.pandas_udf(_e._codes_weighted_digest_batch, "long")
     stats_df = (

@@ -28,7 +28,6 @@ kernel.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -85,10 +84,7 @@ def quant_rerank(
         # persisted-codes scan: no float column in this plan branch at
         # all (B10 — codes_both/codes_time parity)
         scan = codes_base.select("id", "category", "ts", "codes")
-
-        def read_rows(tbl):
-            return knn.list_column_matrix(tbl, "codes", dtype=np.int16)
-
+        read_rows = knn.read_codes
     else:
         scan = base.select(*knn.CORPUS_COLS)
 
@@ -101,10 +97,9 @@ def quant_rerank(
     )
     if packed is None:
         return spark.createDataFrame([], knn.RESULT_SCHEMA)
-    cands = packed.select("query_id", F.explode(F.arrays_zip("cids", "cdists")).alias("z"))
-    cands = cands.select("query_id", F.col("z.cids").alias("id"), F.col("z.cdists").alias("cdist"))
     return knn.exact_rerank_pooled(
-        base, queries, cands, k, refine_k, corpus_rows=corpus_rows, dim=dim
+        base, queries, knn.unpack_candidates(packed), k, refine_k, corpus_rows=corpus_rows,
+        dim=dim,
     )
 
 

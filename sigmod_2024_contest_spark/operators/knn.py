@@ -685,6 +685,20 @@ def packed_topk_merge(packed: DataFrame, k: int) -> DataFrame:
     return b.groupby("qb").applyInArrow(kernel, RESULT_SCHEMA)
 
 
+def read_codes(tbl) -> np.ndarray:
+    """An Arrow block's ``array<tinyint>`` SQ8 codes column as an (n, d)
+    int16 matrix — the row reader of every persisted-codes scan."""
+    return list_column_matrix(tbl, "codes", dtype=np.int16)
+
+
+def unpack_candidates(packed: DataFrame) -> DataFrame:
+    """Packed candidate lists (``PACKED_CAND_SCHEMA``) → one
+    ``(query_id, id, cdist)`` row per candidate, the input of
+    :func:`exact_rerank_pooled`."""
+    z = packed.select("query_id", F.explode(F.arrays_zip("cids", "cdists")).alias("z"))
+    return z.select("query_id", F.col("z.cids").alias("id"), F.col("z.cdists").alias("cdist"))
+
+
 def knn_exact_expr(base: DataFrame, queries: DataFrame, k: int = workload.K) -> DataFrame:
     """Declarative exact kNN for all four query types.
 

@@ -6,9 +6,9 @@ NSG pruning (``nsg.hpp:15-96``). In the reference's final pipeline both
 are dead code — the shipped build uses per-shard HNSW inserts — but
 NN-Descent is the one graph builder whose inner loop IS a join, which
 makes it the natural Spark formulation for graphs too large to build
-inside one task: the engine's current answer to an oversized shard is
-sub-sharding (``engine.build_index(max_nodes=...)``); this operator is
-the whole-shard alternative when sub-shard recall isn't enough.
+inside one task. The hybrid engine builds no graph (every index shard
+is scanned exactly); the kNN graph is this operator's own output,
+gated against :func:`exact_knn_graph` (``recall_nndescent_vs_exact``).
 
 Spark-first shape (everything a DataFrame op, nothing driver-side):
 
@@ -231,9 +231,8 @@ def nndescent_graph(
     compute IS the optimal graph and costs less than even one
     refinement round (500 nodes: the 5-round join loop is ~10 s of
     pure scheduler constants; the local kernel is milliseconds of
-    BLAS), so the builder returns :func:`_local_exact_graph` — exactly
-    the choice ``engine.build_index`` already makes for sub-threshold
-    shards (build_pruned_knn_graph's candidate GEMM). Above the bound,
+    BLAS), so the builder returns :func:`_local_exact_graph` — one
+    all-pairs GEMM inside one task. Above the bound,
     the NN-Descent join loop below is the only plan whose per-pass
     work is bounded (n·sample² candidates, never all pairs); that loop
     is what runs at 100 TB, and what the forced-distributed tests pin.
@@ -347,73 +346,6 @@ def exact_knn_graph(
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= k)
     )
-
-
-def graph_to_pruned_nbrs(vecs, ids, edges, m: int = 16):
-    """Kernel-level bridge from an NN-Descent edge set to the engine's
-    searchable graph format: the same ``(n, 2m)`` int32 neighbor
-    POSITION matrix ``hnsw.build_pruned_knn_graph`` emits, so
-    ``hnsw.beam_search`` runs on it unchanged. Applies the reference's
-    diversity rule (getNeighborsByHeuristic2, hnswalg.h:629-656: keep a
-    candidate iff it is closer to the node than to every already-kept
-    neighbor — the MRNG prune that is NSG's whole contribution,
-    nsg.hpp:15-96) to each node's NN-Descent candidates, then caps
-    reverse edges (hnswalg.h:682-797). This is the whole-shard build
-    path: NN-Descent supplies distributed candidates where the default
-    build's exact O(n²) candidate GEMM no longer fits one task.
-
-    ``vecs``: (n, d) float array in position order; ``ids``: (n,)
-    SORTED node ids mapping id → position; ``edges``: iterable of
-    (id, nbr, dist) rows (any order; dist used for candidate order).
-    """
-    import numpy as np
-
-    n = len(ids)
-    m0 = 2 * m
-    nbrs = np.full((n, m0), -1, dtype=np.int32)
-    if n <= 1:
-        return nbrs
-    ids = np.asarray(ids)
-    e = np.asarray([(a, b, d) for a, b, d in edges], dtype=np.float64)
-    if e.size == 0:
-        return nbrs
-    src = np.searchsorted(ids, e[:, 0].astype(np.int64))
-    dst = np.searchsorted(ids, e[:, 1].astype(np.int64))
-    # group by node, (dist, nbr) ascending — the nbr tie-break makes
-    # the prune deterministic under duplicate points (input edge order
-    # must never matter)
-    order = np.lexsort((dst, e[:, 2], src))
-    src, dst, dd = src[order], dst[order], e[:, 2][order]
-    starts = np.searchsorted(src, np.arange(n))
-    ends = np.searchsorted(src, np.arange(n) + 1)
-    v = np.asarray(vecs, dtype=np.float64)
-    deg = np.zeros(n, dtype=np.int32)
-    for i in range(n):
-        cand = dst[starts[i] : ends[i]]
-        cd = dd[starts[i] : ends[i]]
-        if cand.size == 0:
-            continue
-        cv = v[cand]
-        kept: list[int] = []
-        for j in range(cand.size):
-            if len(kept) >= m:
-                break
-            if not kept:
-                kept.append(j)
-                continue
-            kv = cv[kept]
-            d_jk = np.einsum("kd,kd->k", kv - cv[j], kv - cv[j])
-            if not (d_jk < cd[j]).any():  # no kept nbr dominates j
-                kept.append(j)
-        kk = cand[kept]
-        nbrs[i, : len(kk)] = kk
-        deg[i] = len(kk)
-    for i in range(n):
-        for j in nbrs[i, : deg[i]]:
-            if deg[j] < m0 and i not in nbrs[j, : deg[j]]:
-                nbrs[j, deg[j]] = i
-                deg[j] += 1
-    return nbrs
 
 
 def exact_knn_graph_sql(k: int = NND_K, max_id: int | None = None) -> str:

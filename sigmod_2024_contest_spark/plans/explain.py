@@ -1,24 +1,23 @@
 """Route-plan EXPLAIN surface: render the hybrid engine's per-query
-decisions — route, shard fan-out, adaptive beam width — as an
+decisions — route, shard fan-out, shard rows scanned — as an
 inspectable DataFrame plus a text report.
 
 The reference prints per-query diagnostics at search time
 (``getquery.cpp``'s timing/route dumps); here the cost model is
 DECLARATIVE, so the same decisions can be rendered *before* running
-anything: the route ladder (`routing.route_plan`), the shard plan
-(`engine._shard_plan` metadata math), and the beam-width bands
-(`engine.adaptive_ef`) are all pure functions of corpus statistics.
-This module composes exactly those functions — no re-implementation,
-so the report cannot drift from what the engine executes.
+anything: the route ladder (`routing.route_plan`) and the shard plan
+(`engine._shard_plan` metadata math) are pure functions of corpus
+statistics, and every shard a query is assigned to is scanned whole
+by its code GEMM. This module composes exactly those functions — no
+re-implementation, so the report cannot drift from what the engine
+executes.
 
 Scale shape: everything driver-side here is planning metadata (the
 slice catalog, ≤ 1/cat_thr + 10 rows); the per-query table stays
 distributed. The kernel loops Python rows *inside* mapInPandas —
 acceptable here and only here because this is a diagnostics surface
 sized to the query batch being explained (the reference's analogue is
-a per-query printf), NOT a corpus-sized operator; it reuses the
-engine's scalar `adaptive_ef` verbatim so the reported bands cannot
-drift from the executed ones.
+a per-query printf), NOT a corpus-sized operator.
 """
 
 from __future__ import annotations
@@ -31,12 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import routing
-from ..operators.engine import (
-    GEMM_SHARD_THR,
-    MAX_NODES_PER_GRAPH,
-    SHARD_REFINE_MULT,
-    adaptive_ef,
-)
+from ..operators.engine import MAX_NODES_PER_GRAPH, SHARD_REFINE_MULT
 from . import workload
 
 
@@ -68,7 +62,7 @@ def _slice_counts(base: DataFrame, cat_thr: float) -> dict[str, int]:
 
 EXPLAIN_SCHEMA = (
     "query_id long, query_type int, route string, sel_ppm long, "
-    "n_shards int, ef_min int, ef_max int, est_candidates long"
+    "n_shards int, rows_scanned long, est_candidates long"
 )
 
 
@@ -80,13 +74,15 @@ def explain_routes(
     max_nodes: int = MAX_NODES_PER_GRAPH,
 ) -> DataFrame:
     """One row per workload query: the route the ladder picks, how many
-    index shards the search will fan out to, the adaptive-ef band the
-    beam will run at (min/max across that query's shards), and the
-    candidate volume the refine stage will see.
+    index shards the search will fan out to, the shard rows those
+    shards' code GEMMs cover (``rows_scanned``: the summed row counts of
+    the query's shards; inside them the predicate-sliced kernel scores
+    only the rows the predicate admits), and the candidate volume the
+    refine stage will see.
 
-    bf routes report n_shards=0 and est_candidates=sel (the GEMM scans
-    the predicate slice exactly once); graph routes report
-    n_shards × ceil(1.5k) candidates (`SHARD_REFINE_MULT`)."""
+    bf routes report n_shards=0, rows_scanned=0 and est_candidates=sel
+    (the bf GEMM scans the predicate slice exactly once); shard routes
+    report n_shards × ceil(1.5k) candidates (`SHARD_REFINE_MULT`)."""
     from ..sources.tables import base_vectors
 
     base = base_vectors(spark, sf_dir)
@@ -112,37 +108,18 @@ def explain_routes(
         # join drops those (query, prefix) pairs the same way
         return [p for p in cand if p in shards]
 
-    def dec_overlap(l: float, r: float, d: int) -> float:
-        return max(0.0, (min(r, (d + 1) / 10.0) - max(l, d / 10.0)) * 10.0)
-
     refine_k = int(math.ceil(SHARD_REFINE_MULT * k))
 
     def kernel(pdfs):
         for pdf in pdfs:
             out = {c: [] for c in (
                 "query_id", "query_type", "route", "sel_ppm",
-                "n_shards", "ef_min", "ef_max", "est_candidates",
+                "n_shards", "rows_scanned", "est_candidates",
             )}
             for _, row in pdf.iterrows():
                 t = int(row["query_type"])
                 pref = prefixes(row)
-                efs: list[int] = []
-                n_sh = 0
-                for p in pref:
-                    nsh = shards[p]
-                    n_sh += nsh
-                    shard_n = int(math.ceil(counts[p] / nsh))
-                    if t == 2:
-                        frac = dec_overlap(row["l"], row["r"], int(p.split(":")[1]))
-                        n_allowed = int(round(frac * shard_n))
-                    elif t == 3:
-                        n_allowed = int(round((row["r"] - row["l"]) * shard_n))
-                    else:
-                        n_allowed = shard_n
-                    if shard_n <= GEMM_SHARD_THR:
-                        efs.append(max(k, min(refine_k, max(k, n_allowed))))
-                    else:
-                        efs.append(adaptive_ef(t, shard_n, max(1, n_allowed), k))
+                n_sh = sum(shards[p] for p in pref)
                 sel = int(row["sel_num"])
                 est = sel if not pref else n_sh * refine_k
                 out["query_id"].append(int(row["query_id"]))
@@ -152,8 +129,8 @@ def explain_routes(
                     int(round(1_000_000 * sel / row["n_total"])) if row["n_total"] else 0
                 )
                 out["n_shards"].append(n_sh)
-                out["ef_min"].append(min(efs) if efs else 0)
-                out["ef_max"].append(max(efs) if efs else 0)
+                # a slice's shards split its rows disjointly (id % ns)
+                out["rows_scanned"].append(sum(counts[p] for p in pref))
                 out["est_candidates"].append(est)
             yield pd.DataFrame(
                 {
@@ -162,8 +139,7 @@ def explain_routes(
                     "route": out["route"],
                     "sel_ppm": np.asarray(out["sel_ppm"], dtype=np.int64),
                     "n_shards": np.asarray(out["n_shards"], dtype=np.int32),
-                    "ef_min": np.asarray(out["ef_min"], dtype=np.int32),
-                    "ef_max": np.asarray(out["ef_max"], dtype=np.int32),
+                    "rows_scanned": np.asarray(out["rows_scanned"], dtype=np.int64),
                     "est_candidates": np.asarray(out["est_candidates"], dtype=np.int64),
                 }
             )
@@ -177,7 +153,8 @@ def render_route_report(
 ) -> str:
     """Aggregate the per-query explain table to a text report — the
     `getquery.cpp` diagnostics analogue: route mix, selectivity bands,
-    fan-out and ef ranges per (route, type), plus the shard catalog."""
+    fan-out and shard rows scanned per (route, type), plus the shard
+    catalog."""
     from ..sources.tables import base_vectors
 
     ex = explain_routes(spark, sf_dir, k=k)
@@ -188,8 +165,8 @@ def render_route_report(
             F.min("sel_ppm").alias("sel_lo"),
             F.max("sel_ppm").alias("sel_hi"),
             F.avg("n_shards").alias("fan"),
-            F.min("ef_min").alias("ef_lo"),
-            F.max("ef_max").alias("ef_hi"),
+            F.min("rows_scanned").alias("rows_lo"),
+            F.max("rows_scanned").alias("rows_hi"),
             F.sum("est_candidates").alias("cands"),
         )
         .orderBy("route", "query_type")
@@ -204,21 +181,21 @@ def render_route_report(
         f"  thresholds: bf<{routing.BF_THR} (type3 <{routing.BF_THR_T3}),"
         f" cat-graph>={routing.CAT_GRAPH_THR}, max_nodes/shard={MAX_NODES_PER_GRAPH}",
         f"  type-0 fused-bf bound: corpus <= {t0_rows} rows at dim={dim} "
-        f"(min of the broadcast cap and the MEASURED beat-the-graph "
+        f"(min of the broadcast cap and the MEASURED bf-vs-shard-route "
         f"crossover T0_BF_MAX_CELLS={routing.T0_BF_MAX_CELLS} cells "
         f"— r12 recalibration, tools/sweep_router_crossover.py at "
         f"commit 9f5e074: bf wins "
         f"16M cells, loses 32M+)",
         "",
         f"  {'route':<14}{'type':>4}{'queries':>9}{'sel_ppm':>18}"
-        f"{'fanout':>8}{'ef':>12}{'candidates':>12}",
+        f"{'fanout':>8}{'rows':>16}{'candidates':>12}",
     ]
     for r in agg:
         sel = f"{r['sel_lo']}..{r['sel_hi']}"
-        ef = "-" if r["ef_hi"] == 0 else f"{r['ef_lo']}..{r['ef_hi']}"
+        rows = "-" if r["rows_hi"] == 0 else f"{r['rows_lo']}..{r['rows_hi']}"
         lines.append(
             f"  {r['route']:<14}{r['query_type']:>4}{r['n']:>9}{sel:>18}"
-            f"{r['fan']:>8.1f}{ef:>12}{r['cands']:>12}"
+            f"{r['fan']:>8.1f}{rows:>16}{r['cands']:>12}"
         )
     lines += ["", "SHARD CATALOG (slice -> rows, shards)"]
     for p in sorted(counts):

@@ -9,11 +9,10 @@ pruning does the (start,count) lookup), and ``sortWithinPartitions``
 gives Parquet row-group min/max skipping inside each directory — the
 same binary-search property, but distributed and spill-safe.
 
-Index persistence mirrors ``Graph::save/load`` (``graph.hpp:101-137``)
-and ``HierarchicalNSW::saveIndex/loadIndex`` (``hnswalg.h:821-946``):
-our graph is already a DataFrame (SURVEY S8 mapping: one row per node
-with neighbor arrays), so save/load are plain Parquet round-trips
-partitioned by the graph key — loading one partition's graph touches
+Index persistence mirrors the reference's index save/load
+(``graph.hpp:101-137``): the index is already a DataFrame (one row per
+shard member with its SQ8 codes), so save/load are plain Parquet
+round-trips partitioned by the shard key — loading one shard touches
 exactly one directory.
 """
 
@@ -98,7 +97,7 @@ def read_decile_range(spark: SparkSession, out_dir: str, l: float, r: float) -> 
 
 
 def save_index(index: DataFrame, path: str) -> None:
-    """S8/S9: persist the graph index partitioned by pkey."""
+    """S8: persist the index partitioned by pkey."""
     index.write.mode("overwrite").partitionBy("pkey").parquet(path)
 
 
@@ -106,6 +105,4 @@ def load_index(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(path)
     # partitionBy writes pkey as a partition column at the end; restore
     # the canonical column order of engine.INDEX_SCHEMA
-    return df.select(
-        "pkey", "pos", "id", "category", "ts", "codes", "nbrs", "nbr_ts", "level", "upper"
-    )
+    return df.select("pkey", "id", "category", "ts", "codes")

@@ -89,10 +89,10 @@ def knn_stream_indexed(
     k: int = 100,
     alpha: float | None = None,
 ):
-    """Streaming HYBRID search over a prebuilt graph index — the
+    """Streaming HYBRID search over a prebuilt index — the
     "index once, serve query batches forever" surface with the routed
     engine (not the exact scan) answering each micro-batch. Pass the
-    index straight from ``layout.load_index`` (the S8/S9 parquet
+    index straight from ``layout.load_index`` (the S8 parquet
     round-trip); it is persisted once and stays executor-resident
     across batches. Routing runs per micro-batch — the reference
     likewise routes per query batch (hybrid_graph.cpp:168-230) — while
@@ -163,8 +163,6 @@ def index_ingest_stream(
     index_dir: str,
     shard_plan: dict[str, int],
     alpha: float,
-    m: int = 16,
-    efc: int = 100,
     corpus_dir: str | None = None,
     max_nodes: int | None = None,
     compact_factor: float | None = None,
@@ -175,8 +173,8 @@ def index_ingest_stream(
     max_manifest_versions: int | None = None,
 ):
     """Continuous corpus ingest: each micro-batch of new vectors folds
-    into the persisted graph index via ``engine.upsert_index`` —
-    rebuild cost per batch is O(affected shards), never corpus-sized.
+    into the persisted index via ``engine.upsert_index`` — rewrite cost
+    per batch is O(affected shards), never corpus-sized.
 
     Versioned persistence makes the fold idempotent AND readable mid-
     ingest: batch ``b`` reads the newest committed version, upserts,
@@ -321,7 +319,7 @@ def index_ingest_stream(
             if batch_df.isEmpty():
                 return
             new_index = engine.build_index(
-                batch_df, shard_plan=plan, alpha=a, m=m, efc=efc, max_nodes=mn
+                batch_df, shard_plan=plan, alpha=a, max_nodes=mn
             )
             if epoch_sharding:
                 epochs = engine._epoch_state_from_plan(plan)
@@ -371,8 +369,7 @@ def index_ingest_stream(
                 if epochs is None:  # pre-epoch snapshot: start past ns
                     epochs = engine._epoch_state_from_plan(plan)
                 new_index, epochs, affected = engine.upsert_index_epoch(
-                    cur, batch_df, plan, a, epochs,
-                    max_nodes=mn, m=m, efc=efc,
+                    cur, batch_df, plan, a, epochs, max_nodes=mn
                 )
                 # empty micro-batch: nothing routed, nothing to commit
                 # (the routing job doubles as the old isEmpty check —
@@ -392,7 +389,7 @@ def index_ingest_stream(
                 if not affected:
                     return
                 new_index = engine.upsert_index(
-                    cur, batch_df, plan, a, m=m, efc=efc, affected=affected
+                    cur, batch_df, plan, a, affected=affected
                 )
         if corpus_dir is not None and (
             engine.compaction_due(new_index, plan, max_nodes=mn, factor=factor)
@@ -405,8 +402,7 @@ def index_ingest_stream(
             # compaction_due does not (epoch shards never exceed
             # max_nodes), so compact_index must not re-check it
             new_index, plan, a = engine.compact_index(
-                new_index, corpus, plan, a, max_nodes=mn, factor=factor,
-                m=m, efc=efc, force=True,
+                new_index, corpus, plan, a, max_nodes=mn, factor=factor, force=True
             )
             affected = None  # full rebuild: this version owns everything
             if epoch_sharding:

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import duckdb
 import pytest
 
@@ -26,8 +24,9 @@ TABLES = (
 
 @pytest.fixture(scope="session")
 def spark():
-    # an exported SPARK_GRAFT_CPUS sizes the test session; 8 otherwise
-    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS") or 8))
+    # an exported SPARK_GRAFT_CPUS sizes the test session; the cpus this
+    # process may run on otherwise (session.default_cpus)
+    s = get_spark("tests")
     yield s
     s.stop()
 

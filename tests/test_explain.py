@@ -34,27 +34,35 @@ def test_explain_one_row_per_query_and_route_parity(spark):
 
 
 def test_explain_fanout_matches_shard_metadata(spark):
-    """bf → zero shards; cat_graph → exactly that category's shard
-    count; graph ef floors at k (never 0 on a routed query)."""
+    """bf → zero shards and zero shard rows; cat_graph → exactly that
+    category's shard count and rows; decile routes → the summed rows of
+    the deciles they probe (type 0: every decile, i.e. the corpus)."""
     base = base_vectors(spark, SF_SMOKE)
     counts = _slice_counts(base, routing.CAT_GRAPH_THR)
     queries = {
         r["query_id"]: r
         for r in workload.queries_df(spark, SF_SMOKE)
-        .select("query_id", "v")
+        .select("query_id", "v", "l", "r")
         .collect()
     }
+    total = sum(c for p, c in counts.items() if p.startswith("dec:"))
     for r in explain_routes(spark, SF_SMOKE).collect():
+        q = queries[r["query_id"]]
         if r["route"] == routing.ROUTE_BF:
-            assert r["n_shards"] == 0 and r["ef_max"] == 0
+            assert r["n_shards"] == 0 and r["rows_scanned"] == 0
             assert r["est_candidates"] >= 0
+        elif r["route"] == routing.ROUTE_CAT_GRAPH:
+            prefix = f"cat:{int(q['v'])}"
+            want = math.ceil(counts[prefix] / engine.MAX_NODES_PER_GRAPH)
+            assert r["n_shards"] == want
+            assert r["rows_scanned"] == counts[prefix]
+        elif r["query_type"] == 0:
+            assert r["rows_scanned"] == total
         else:
-            assert r["n_shards"] >= 1
-            assert r["ef_min"] >= workload.K
-            if r["route"] == routing.ROUTE_CAT_GRAPH:
-                prefix = f"cat:{int(queries[r['query_id']]['v'])}"
-                want = math.ceil(counts[prefix] / engine.MAX_NODES_PER_GRAPH)
-                assert r["n_shards"] == want
+            lo = max(math.floor(q["l"] * 10), 0)
+            hi = min(math.ceil(q["r"] * 10) - 1, 9)
+            want = sum(counts.get(f"dec:{d}", 0) for d in range(lo, hi + 1))
+            assert r["n_shards"] >= 1 and r["rows_scanned"] == want
 
 
 def test_explain_fanout_matches_engine_assignments(spark):

@@ -61,38 +61,6 @@ def test_nndescent_converges_to_exact(spark):
     assert mean_ppm >= 950_000, mean_ppm
 
 
-def test_nndescent_pruned_graph_beam_searchable(spark):
-    """B12 end-to-end: NN-Descent candidates → MRNG diversity prune →
-    the engine's OWN beam search. Recall@10 vs exact must clear the
-    ANN bar — proves the distributed builder is a drop-in candidate
-    source for the default shard build."""
-    import numpy as np
-
-    from sigmod_2024_contest_spark.operators import hnsw
-
-    emb = _emb(spark)
-    g = nndescent.nndescent_graph(
-        emb, vec_col="embedding", id_col="vec_id", local_rows=0
-    )
-    edges = [(r.id, r.nbr, r.dist) for r in g.collect()]
-    pdf = emb.toPandas().sort_values("vec_id")
-    ids = pdf["vec_id"].to_numpy()
-    vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    nbrs = nndescent.graph_to_pruned_nbrs(vecs, ids, edges, m=16)
-    assert nbrs.shape == (len(ids), 32)
-    # every 10th vector queries the graph (self excluded via k+1)
-    hits = total = 0
-    for qi in range(0, len(ids), 10):
-        pos, _ = hnsw.beam_search(vecs, nbrs, vecs[qi], 11, ef=64)
-        got = {int(ids[p]) for p in pos if p != qi}
-        d = ((vecs - vecs[qi]) ** 2).sum(axis=1)
-        d[qi] = np.inf
-        true10 = set(ids[np.lexsort((ids, d))[:10]].tolist())
-        hits += len(got & true10)
-        total += len(true10)
-    assert hits / total >= 0.95, hits / total
-
-
 def test_nndescent_edge_sizes(spark):
     """Degenerate inputs: empty, single node, and n ≤ k must not crash
     and must respect k ≤ n−1 — on BOTH kernels (local and the forced

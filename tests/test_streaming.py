@@ -142,9 +142,7 @@ def test_knn_stream_over_loaded_index_matches_batch(spark, tmp_path):
     base = base_vectors(spark, SF_SMOKE).persist()
     q = workload.queries_df(spark, SF_SMOKE)
     idx_path = str(tmp_path / "index")
-    layout.save_index(
-        engine.build_index(base, graph_min_nodes=engine.GEMM_SHARD_THR), idx_path
-    )
+    layout.save_index(engine.build_index(base), idx_path)
     index = layout.load_index(spark, idx_path).persist()
 
     qdir = str(tmp_path / "qstream")
@@ -443,7 +441,7 @@ def test_index_ingest_stream_end_to_end(spark, tmp_path):
     def members(df):
         out = {}
         for r in df.select("pkey", "id", "codes").collect():
-            out.setdefault(r["pkey"], {})[r["id"]] = bytes(r["codes"])
+            out.setdefault(r["pkey"], {})[r["id"]] = tuple(r["codes"])
         return out
 
     assert members(idx) == members(idx_full)
@@ -682,7 +680,7 @@ def test_index_ingest_stream_incremental_manifest(spark, tmp_path):
     def members(df):
         out = {}
         for r in df.select("pkey", "id", "codes").collect():
-            out.setdefault(r["pkey"], {})[r["id"]] = bytes(r["codes"])
+            out.setdefault(r["pkey"], {})[r["id"]] = tuple(r["codes"])
         return out
 
     assert members(idx) == members(idx_full)
@@ -914,7 +912,7 @@ def test_upsert_index_epoch_rebuilds_only_open_shards(spark):
 
     def rows_map(df):
         return {
-            (r["pkey"], r["id"]): (bytes(r["codes"]), list(r["nbrs"]))
+            (r["pkey"], r["id"]): (r["category"], r["ts"], tuple(r["codes"]))
             for r in df.collect()
         }
 
@@ -1060,7 +1058,7 @@ def test_index_ingest_stream_replay_guard(spark, tmp_path):
     latest_before = V.latest_index_path(index_dir)
     meta_before = V.latest_index_meta(index_dir)
     members_before = {
-        (r["pkey"], r["id"]): bytes(r["codes"])
+        (r["pkey"], r["id"]): tuple(r["codes"])
         for r in V.load_latest_index(spark, index_dir).collect()
     }
     # simulate the crash: the snapshot committed (LATEST moved) but the
@@ -1074,7 +1072,7 @@ def test_index_ingest_stream_replay_guard(spark, tmp_path):
     assert V.latest_index_path(index_dir) == latest_before
     assert V.latest_index_meta(index_dir) == meta_before
     members_after = {
-        (r["pkey"], r["id"]): bytes(r["codes"])
+        (r["pkey"], r["id"]): tuple(r["codes"])
         for r in V.load_latest_index(spark, index_dir).collect()
     }
     assert members_after == members_before

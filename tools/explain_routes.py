@@ -1,4 +1,4 @@
-"""CLI: render the hybrid engine's route/ef/fan-out plan for the
+"""CLI: render the hybrid engine's route/fan-out/rows-scanned plan for the
 workload at a testdata SF dir — the declarative analogue of the
 reference's per-query search diagnostics (getquery.cpp prints).
 
@@ -11,19 +11,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 
 def main() -> None:
+    from sigmod_2024_contest_spark.session import get_spark
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .appName("explain-routes")
-        .getOrCreate()
-    )
+    # sized like every session of this package: $SPARK_GRAFT_CPUS, else
+    # the cpus this process may run on (session.default_cpus)
+    spark = get_spark("explain-routes")
     spark.sparkContext.setLogLevel("ERROR")
     from sigmod_2024_contest_spark.plans.explain import render_route_report
 

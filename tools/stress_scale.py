@@ -1,9 +1,9 @@
 """Scale stress for the hybrid engine beyond testdata sizes.
 
 The sf0.1 bench cannot exercise sub-sharding (every slice fits one
-shard) or the beam-search path at realistic shard sizes. This script
+shard) or the shard scans at realistic shard sizes. This script
 synthesizes an N-row corpus (default 200k, dim 64, 12 categories two
-of which are index-worthy, uniform ts), builds the partitioned graph
+of which are index-worthy, uniform ts), builds the partitioned
 index, answers a mixed 4-type query batch with the full routed engine,
 and reports recall@k against the exact oracle on a subsample — one
 JSON line, same spirit as bench.py.
@@ -95,9 +95,7 @@ def main() -> None:
             base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH
         )
         idx = engine.partition_index_for_search(
-            engine.build_index(
-                base, graph_min_nodes=engine.GEMM_SHARD_THR, shard_plan=splan
-            )
+            engine.build_index(base, shard_plan=splan)
         ).persist()
         idx_rows = idx.count()
         build_walls.append(round(time.time() - t0, 2))
