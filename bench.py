@@ -561,15 +561,19 @@ def main() -> None:
     # two rounds running — ALSO persist the full detail map to a file
     # the driver (and the judge) can read whole. Same numbers, same
     # run; the stdout contract above is unchanged.
+    # A second copy named for the cpu count (BENCH_DETAIL_c<cpus>.json)
+    # keeps runs at different cpu counts from overwriting each other.
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"),
     )
-    try:
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1)
-    except OSError as e:
-        print(f"bench: could not write {detail_path}: {e}", file=sys.stderr)
+    stem, ext = os.path.splitext(detail_path)
+    for path in (detail_path, f"{stem}_c{cpus}{ext}"):
+        try:
+            with open(path, "w") as f:
+                json.dump(detail, f, indent=1)
+        except OSError as e:
+            print(f"bench: could not write {path}: {e}", file=sys.stderr)
     compact = {
         "metric": "headline_queries_total_wall",
         "value": total,

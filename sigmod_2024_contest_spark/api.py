@@ -94,11 +94,15 @@ def _category_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _selectivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stats.selectivity(base_vectors(spark, sf_dir), workload.queries_df(spark, sf_dir))
+    return stats.selectivity(
+        base_vectors(spark, sf_dir), workload.queries_df(spark, sf_dir)
+    ).select("query_id", "query_type", "sel_num", "n_total")
 
 
 def _route_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return routing.route_plan(base_vectors(spark, sf_dir), workload.queries_df(spark, sf_dir))
+    return routing.route_plan(
+        base_vectors(spark, sf_dir), workload.queries_df(spark, sf_dir)
+    ).select("query_id", "query_type", "sel_num", "n_total", "route")
 
 
 def _split_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,14 +372,13 @@ def _knn_hybrid_bf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = base_vectors(spark, sf_dir)
     plan, alpha, dim = _hybrid_plan(spark, sf_dir, base)
     index, catalog = _hybrid_index(spark, sf_dir, base)
-    bf_ids = plan.filter(F.col("route") == routing.ROUTE_BF).select("query_id")
-    bf_queries = workload.queries_df(spark, sf_dir).join(bf_ids, "query_id")
+    bf_plan = plan.filter(F.col("route") == routing.ROUTE_BF)
     return engine.knn_hybrid(
         spark,
         base,
-        bf_queries,
+        bf_plan,
         index=index,
-        plan=plan,
+        plan=bf_plan,
         alpha=alpha,
         codes_base=_codes_replica(spark, sf_dir, base)[0],
         catalog=catalog,

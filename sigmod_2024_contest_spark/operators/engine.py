@@ -6,7 +6,12 @@ hybrid_graph.cpp:147-503``) — the six-phase executor. The Spark
 translation (SURVEY §3.2): each phase is a DataFrame job, phase
 boundaries are shuffles:
 
-1. selectivity + routing   → stats join + ``route`` column (routing.py)
+1. selectivity + routing   → the routed query table: one narrow Arrow
+                             kernel binary-searches the stats snapshot
+                             and appends ``sel_num``/``n_total``, then
+                             the ``route`` column (stats.py,
+                             routing.py); every later phase reads its
+                             query rows from this table
 2. brute-force branch      → SQ8 cut + exact re-rank on knn.py's
                              brute-force kernels: the corpus-broadcast
                              kernel, or the query-broadcast scan kernel
@@ -552,14 +557,14 @@ def shard_catalog(index: DataFrame) -> DataFrame:
     )
 
 
-def _assignments(queries: DataFrame, plan: DataFrame, catalog: DataFrame) -> DataFrame:
+def _assignments(queries: DataFrame | None, plan: DataFrame, catalog: DataFrame) -> DataFrame:
     """(pkey, query_id, query_type, v, l, r, qvec) — which index
     partitions serve which graph-routed query. Pruning is relational:
-    queries map to slice *prefixes* (their category / overlapped
-    deciles), then the broadcast shard catalog fans each prefix out to
-    its shards."""
-    q = queries.join(plan.select("query_id", "route"), "query_id")
-    graph_q = q.filter(F.col("route") != routing.ROUTE_BF)
+    the routed query table's rows map to slice *prefixes* (their
+    category / overlapped deciles), then the broadcast shard catalog
+    fans each prefix out to its shards. Reads only ``plan`` (it carries
+    the query columns); ``queries`` is kept for perfbench only."""
+    graph_q = plan.filter(F.col("route") != routing.ROUTE_BF)
     # type 1/3 → its category slice
     cat_assign = graph_q.filter(F.col("query_type").isin(1, 3)).select(
         F.concat(F.lit("cat:"), F.col("v").cast("string")).alias("prefix"),
@@ -654,10 +659,16 @@ def knn_hybrid(
     """The full BatchSearch pipeline: route → bf/shard branches →
     global top-k. Returns (query_id, id, rnk).
 
-    ``plan`` / ``alpha``: pass precomputed routing plan / quantizer
-    scale to share them across searches of the same (base, queries)
-    pair — the reference likewise routes once per batch and trains the
-    quantizer once at build (hybrid_graph.cpp:168-230, hnsw.hpp:38-40).
+    ``plan`` / ``alpha``: pass a persisted ``routing.route_plan`` /
+    quantizer scale to share them across searches of the same (base,
+    queries) pair — the reference likewise routes once per batch and
+    trains the quantizer once at build (hybrid_graph.cpp:168-230,
+    hnsw.hpp:38-40). A given ``plan`` supersedes ``queries``: it is the
+    batch's routed query table, and every branch reads its query rows
+    from it — the bf branch its bf rows, the shard assignment the rest,
+    the re-rank all of them — so the query source is read once, with
+    no ``queries ⋈ plan`` join. ``queries`` is read only to build the
+    plan when none is given.
     ``codes_base``: persisted SQ8(alpha) codes replica for the bf route
     (B10, hybrid_graph.cpp:505-524) — the candidate scan then reads
     codes only instead of re-encoding the float column.
@@ -679,9 +690,7 @@ def knn_hybrid(
             dim = len(head["vec"])
     if plan is None:
         plan = routing.route_plan(base, queries, dim=dim).cache()
-    bf_queries = queries.join(
-        plan.filter(F.col("route") == routing.ROUTE_BF).select("query_id"), "query_id"
-    )
+    bf_queries = plan.filter(F.col("route") == routing.ROUTE_BF)
     if alpha is None:
         alpha = Q.train_alpha(base)
     bf_res = bruteforce_sq8.knn_sq8_rerank(
@@ -705,7 +714,7 @@ def knn_hybrid(
             index = index.persist()
         if catalog is None:
             catalog = shard_catalog(index)
-    assigns = _assignments(queries, plan, catalog)
+    assigns = _assignments(None, plan, catalog)
     cands = graph_search(index, assigns, k=k, alpha=alpha)
     # Candidate pool (hybrid_graph.cpp phase 4/5: per-query k=150 heap
     # across sub-searches, THEN the global refine :465-494): one global
@@ -730,7 +739,7 @@ def knn_hybrid(
     # partition the corpus), and sub-shards split disjointly by
     # id % nshards.
     graph_res = knn.exact_rerank_pooled(
-        base, queries, cands, k, pool_k, corpus_rows=corpus_rows, dim=dim
+        base, plan, cands, k, pool_k, corpus_rows=corpus_rows, dim=dim
     )
     return bf_res.unionByName(graph_res)
 

@@ -9,11 +9,13 @@ per-decile time graphs (type 0/2). ``SplitInterval``
 (``hybrid_graph.cpp:91-134``) decomposes a time range into per-decile
 sub-predicates tagged SMALL / MEDIUM / FULL.
 
-Spark-first: routing is a computed column (``F.when`` ladder) over the
-selectivity join — each route becomes a filtered branch DataFrame the
-engine executes with its own physical strategy. Catalyst cannot make
-this choice (it plans joins, not ANN strategies) — this is the one
-planner the engine adds on top.
+Spark-first: routing is a computed column (``F.when`` ladder) appended
+to the selectivity kernel's output, so the route plan is the batch's
+one query table — the query columns plus ``sel_num``, ``n_total`` and
+``route``, computed in one narrow pass. Each route becomes a filtered
+branch of that table the engine executes with its own physical
+strategy. Catalyst cannot make this choice (it plans joins, not ANN
+strategies) — this is the one planner the engine adds on top.
 """
 
 from __future__ import annotations
@@ -103,7 +105,11 @@ def route_plan(
     stats: tuple[DataFrame, int] | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """(query_id, query_type, sel_num, n_total, route).
+    """The routed query table: the ``queries`` columns plus
+    ``sel_num``, ``n_total`` and ``route`` — one narrow pass over the
+    queries (no join, no exchange). Persist it and hand it to
+    ``engine.knn_hybrid(plan=...)``: the engine reads every query row
+    from it.
 
     sel < bf_thr → brute force over the predicate slice;
     type 1/3 above threshold → that category's graph;
@@ -125,7 +131,7 @@ def route_plan(
         .when(F.col("query_type") == 2, F.lit(ROUTE_TIME_GRAPH))
         .otherwise(F.lit(ROUTE_GLOBAL_GRAPH))
     )
-    return sel.select("query_id", "query_type", "sel_num", "n_total", route.alias("route"))
+    return sel.withColumn("route", route)
 
 
 def route_plan_sql(ts_bins: int | None = ROUTING_TS_BINS, dim: int | None = None) -> str:

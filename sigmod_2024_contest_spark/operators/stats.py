@@ -4,22 +4,30 @@ Reference: category histogram during scan (``utils.h:377-384``),
 max/min category size (``utils.h:387-395``), and per-query selectivity
 by binary search over sorted replicas (``hybrid_graph.cpp:176-200``).
 
-Spark-first: the sorted-replica binary search becomes arithmetic over
-small pre-aggregated stats tables. ``(category, ts) → count`` has at
-most |categories|×|distinct ts| rows — tiny next to the corpus — so a
-selectivity lookup is a broadcast join against stats, never a scan of
-the base table. At 100 TB the stats table is the only thing that
-moves; it is the same trick as the reference's (start,count) partition
-maps, expressed relationally.
+Spark-first: the sorted replicas become a small pre-aggregated stats
+table. ``(category, ts) → count`` has at most |categories|×|distinct ts|
+rows — tiny next to the corpus — and is built once (``corpus_stats``).
+Selectivity is the reference's binary search run against that table:
+its rows ship once to the executors as sorted ts edges with prefix
+sums (one set over every category, one per category), and one narrow
+Arrow kernel over the queries answers each predicate with two
+``searchsorted`` calls — no join, no shuffle, the query table read
+once. At 100 TB the stats table is the only thing that moves; it is
+the same trick as the reference's (start,count) partition maps.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..plans import workload
 from ..sources.tables import TS_SQL
+from . import knn
 
 
 def category_counts(base: DataFrame) -> DataFrame:
@@ -66,80 +74,114 @@ def corpus_stats(base: DataFrame, ts_bins: int | None = None) -> tuple[DataFrame
     return cat_ts, int(total)
 
 
+def _sel_snapshot(pdf) -> dict[str, np.ndarray]:
+    """The selectivity payload built from the collected (category, ts,
+    cnt, ts_null) stats rows: ``ts``/``ps`` — the ts of every row with
+    one, sorted, with prefix sums of the counts (the all-category set);
+    ``cats`` — the sorted non-null categories, with their totals
+    ``ctot`` and their rows with a ts at ``cts[lo[i]:hi[i]]``, sorted
+    by ts, with prefix sums ``cps`` (the per-category sets). A null ts
+    counts in the totals only — no range holds it — while a NaN ts
+    sorts above every number, as Spark orders it."""
+    cat = pdf["category"].to_numpy(dtype=np.float64, na_value=np.nan)
+    ts = pdf["ts"].to_numpy(dtype=np.float64, na_value=np.nan)
+    cnt = pdf["cnt"].to_numpy(dtype=np.int64)
+    has_ts = ~pdf["ts_null"].to_numpy(dtype=bool)
+    has_cat = ~np.isnan(cat)
+
+    def prefix(c):
+        return np.concatenate([[0], np.cumsum(c)]).astype(np.int64)
+
+    o = np.argsort(ts[has_ts], kind="stable")
+    cats, inv = np.unique(cat[has_cat], return_inverse=True)
+    ctot = np.zeros(len(cats), np.int64)
+    np.add.at(ctot, inv, cnt[has_cat])
+    both = has_cat & has_ts
+    co = np.lexsort((ts[both], cat[both]))
+    cat_s = cat[both][co]
+    return {
+        "ts": ts[has_ts][o], "ps": prefix(cnt[has_ts][o]),
+        "cats": cats, "ctot": ctot,
+        "lo": np.searchsorted(cat_s, cats, "left"), "hi": np.searchsorted(cat_s, cats, "right"),
+        "cts": ts[both][co], "cps": prefix(cnt[both][co]),
+    }
+
+
+def _range_count(edges: np.ndarray, ps: np.ndarray, l: np.ndarray, r: np.ndarray) -> np.ndarray:
+    """Rows with ``l <= ts <= r`` (inclusive BETWEEN) over sorted
+    ``edges`` and their prefix sums; an empty range (l > r) counts 0."""
+    hi = ps[np.searchsorted(edges, r, "right")]
+    lo = ps[np.searchsorted(edges, l, "left")]
+    return np.maximum(hi - lo, 0)
+
+
 def selectivity(
     base: DataFrame,
     queries: DataFrame,
     ts_bins: int | None = None,
     stats: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
-    """A3: per-query selectivity via per-type broadcast joins of
-    queries against small histograms (never the corpus).
+    """A3: per-query selectivity by binary search over the stats table
+    (never the corpus) — ``queries.mapInArrow`` with one kernel.
 
-    Physical plan — one branch per query type, unioned:
-    type 0 → no join (sel = N); type 1 → equi-join on the category
-    histogram (|cats| rows); type 2 → range join on the ts histogram
-    (≤ ts_bins distinct ts); type 3 → equi-join on category (hash
-    join) + range residual on the (category, ts) table. A single
-    OR-of-all-types theta join would force a nested-loop over the full
-    stats table for every query — the per-type split keeps each join's
-    build side minimal and lets Spark use hash joins wherever there is
-    an equality key.
+    The (category, ts) histogram ships once per application as sorted
+    ts edges with prefix sums (:func:`_sel_snapshot`, cached by
+    ``knn.cached_corpus_broadcast``). Per query: type 0 → N; type 1 →
+    its category's total; type 2/3 → ``ps[searchsorted(edges, r,
+    "right")] − ps[searchsorted(edges, l, "left")]`` over the
+    all-category / the category's edges, clipped at 0. An absent
+    category, a null ``v``, null bounds and ``l > r`` count 0.
 
-    Returns (query_id, query_type, sel_num, n_total); integers only,
-    so the oracle hash-matches without float care. ``ts_bins`` makes
-    sel approximate within one bin's mass (routing thresholds don't
-    care) while keeping the table bounded at scale.
+    Returns the input query columns plus ``sel_num`` and ``n_total``
+    (integers, so the oracle hash-matches without float care); narrow,
+    so it keeps the queries' partitioning. ``ts_bins`` makes sel
+    approximate within one bin's mass (routing thresholds don't care)
+    while keeping the stats table bounded at scale. ``stats`` (from
+    :func:`corpus_stats`) supplies the histogram and N precomputed —
+    the build-once path; without it the histogram is built here, one
+    corpus scan.
     """
-    # one corpus scan total: the (category, ts) table is cached (it is
-    # tiny — ≤ |cats|×bins rows) and every other stat derives from it,
-    # including N. Without this, each histogram branch AND the count
-    # would re-evaluate the base lineage — ruinous when base is an
-    # expensive source (.bin decode) rather than a parquet scan.
-    # ``stats`` (from corpus_stats) supplies both precomputed — the
-    # build-once path.
     if stats is None:
         stats = corpus_stats(base, ts_bins)
     cat_ts, total = stats
-    ts_hist = cat_ts.groupBy("ts").agg(F.sum("cnt").alias("cnt"))
-    cat_hist = cat_ts.groupBy("category").agg(F.sum("cnt").alias("cnt"))
+    bc = knn.cached_corpus_broadcast(
+        cat_ts.withColumn("ts_null", F.isnull("ts")),
+        ("category", "ts", "cnt", "ts_null"), "sel", _sel_snapshot,
+    )
 
-    q = queries.select("query_id", "query_type", "v", "l", "r")
-    q0 = q.filter(F.col("query_type") == 0).select(
-        "query_id", "query_type", F.lit(total).alias("sel_num")
+    def kernel(batches):
+        p = None if bc is None else bc.value
+        for b in batches:
+            def num(name, fill):
+                return pc.fill_null(pc.cast(b.column(name), pa.float64()), fill).to_numpy()
+
+            qt, v, l, r = num("query_type", -1.0), num("v", np.nan), num("l", 0.0), num("r", 0.0)
+            bounded = pc.and_(pc.is_valid(b.column("l")), pc.is_valid(b.column("r")))
+            bounded = bounded.to_numpy(zero_copy_only=False)
+            sel = np.where(qt == 0, total, 0).astype(np.int64)
+            if p is not None:
+                m = (qt == 2) & bounded
+                sel[m] = _range_count(p["ts"], p["ps"], l[m], r[m])
+                cats = p["cats"]
+                ci = np.searchsorted(cats, v)
+                hit = ((qt == 1) | ((qt == 3) & bounded)) & (ci < len(cats))
+                hit[hit] = cats[ci[hit]] == v[hit]
+                m1 = hit & (qt == 1)
+                sel[m1] = p["ctot"][ci[m1]]
+                for c in np.unique(ci[hit & (qt == 3)]):
+                    s, e = p["lo"][c], p["hi"][c]
+                    m3 = hit & (ci == c) & (qt == 3)
+                    sel[m3] = _range_count(p["cts"][s:e], p["cps"][s : e + 1], l[m3], r[m3])
+            yield pa.RecordBatch.from_arrays(
+                list(b.columns) + [pa.array(sel), pa.array(np.full(len(sel), total, np.int64))],
+                names=b.schema.names + ["sel_num", "n_total"],
+            )
+
+    schema = StructType(
+        queries.schema.fields
+        + [StructField("sel_num", LongType()), StructField("n_total", LongType())]
     )
-    q1 = (
-        q.filter(F.col("query_type") == 1)
-        .join(F.broadcast(cat_hist), F.col("v") == cat_hist["category"], "left")
-        .groupBy("query_id", "query_type")
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("sel_num"))
-    )
-    q2 = (
-        q.filter(F.col("query_type") == 2)
-        .join(F.broadcast(ts_hist), ts_hist["ts"].between(F.col("l"), F.col("r")), "left")
-        .groupBy("query_id", "query_type")
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("sel_num"))
-    )
-    q3 = (
-        q.filter(F.col("query_type") == 3)
-        .join(
-            F.broadcast(cat_ts),
-            (F.col("v") == cat_ts["category"]) & cat_ts["ts"].between(F.col("l"), F.col("r")),
-            "left",
-        )
-        .groupBy("query_id", "query_type")
-        .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("sel_num"))
-    )
-    return (
-        q0.unionByName(q1)
-        .unionByName(q2)
-        .unionByName(q3)
-        .select(
-            "query_id",
-            "query_type",
-            F.col("sel_num").cast("long").alias("sel_num"),
-            F.lit(total).cast("long").alias("n_total"),
-        )
-    )
+    return queries.mapInArrow(kernel, schema)
 
 
 def selectivity_sql(ts_bins: int | None = None) -> str:

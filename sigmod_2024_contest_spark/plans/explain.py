@@ -144,8 +144,8 @@ def explain_routes(
                 }
             )
 
-    per_q = queries.select("query_id", "v", "l", "r").join(plan, "query_id")
-    return per_q.mapInPandas(kernel, EXPLAIN_SCHEMA)
+    # the route plan carries the query columns (v, l, r) itself
+    return plan.drop("qvec").mapInPandas(kernel, EXPLAIN_SCHEMA)
 
 
 def render_route_report(

@@ -121,18 +121,23 @@ def knn_stream_indexed(
     dim = len(head["vec"]) if head is not None else None
 
     def answer(batch_df: DataFrame, batch_id: int) -> None:
-        plan = routing.route_plan(base, batch_df, stats=stats, dim=dim)
+        # the batch's routed query table, computed once and read by
+        # every engine branch; released once the batch is written
+        plan = routing.route_plan(base, batch_df, stats=stats, dim=dim).persist()
         res = engine.knn_hybrid(
             spark, base, batch_df, k=k, index=index, plan=plan, alpha=alpha,
             catalog=catalog, dim=dim,
         )
-        (
-            res.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        try:
+            (
+                res.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(out_dir)
+            )
+        finally:
+            plan.unpersist()
 
     return (
         queries.writeStream.foreachBatch(answer)

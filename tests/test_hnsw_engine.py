@@ -564,3 +564,47 @@ def test_graph_search_keeps_index_partitioning(spark):
     index_side = lines[cg + 1 : next(i for i in range(cg, len(lines)) if "InMemoryTableScan" in lines[i])]
     assert index_side and not any("Exchange" in ln for ln in index_side), lines[cg : cg + 4]
     idx.unpersist()
+
+
+def _outside_cached(plan_text: str) -> list[str]:
+    """The executed-plan lines that are not inside an InMemoryRelation,
+    i.e. what the query runs itself rather than reads from a cache."""
+    out, cached_at = [], None
+    for ln in plan_text.splitlines():
+        col = len(ln) - len(ln.lstrip(" :|+-"))
+        if cached_at is not None and col > cached_at:
+            continue
+        cached_at = col if "InMemoryRelation" in ln else None
+        out.append(ln)
+    return out
+
+
+def test_knn_hybrid_reads_queries_only_through_the_route_plan(spark, tmp_path):
+    """The persisted route plan is the batch's one query table: the
+    route plan itself is narrow (no exchange, no join), and the engine
+    reads the query source only through the plan's InMemoryTableScan,
+    with no join keyed on query_id."""
+    import re
+
+    from sigmod_2024_contest_spark.operators import routing
+
+    base = base_vectors(spark, SF_SMOKE)
+    qpath = str(tmp_path / "route_plan_queries")
+    workload.queries_df(spark, SF_SMOKE).write.parquet(qpath)
+    q = spark.read.parquet(qpath)
+
+    own = routing.route_plan(base, q)
+    own.collect()
+    text = own._jdf.queryExecution().executedPlan().toString()
+    for node in ("Exchange", "Join"):
+        assert node not in text, (node, text)
+
+    plan = routing.route_plan(base, q).persist()
+    res = engine.knn_hybrid(spark, base, q, plan=plan)
+    assert len(res.collect()) > 0
+    text = res._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in text
+    outside = _outside_cached(text)
+    assert not [ln for ln in outside if "route_plan_queries" in ln], text
+    assert not [ln for ln in outside if re.search(r"Join \[[^\]]*query_id", ln)], text
+    plan.unpersist()

@@ -3,6 +3,7 @@ DuckDB oracles (reference hybrid_graph.cpp:91-230, sq8_sym_quant.hpp)."""
 
 from __future__ import annotations
 
+import numpy as np
 from conftest import SF_SMOKE, assert_matches_oracle, duck_con
 
 from sigmod_2024_contest_spark import api
@@ -24,6 +25,62 @@ def test_selectivity(spark):
 
 def test_route_plan(spark):
     _check(spark, "route_plan")
+
+
+def _brute_selectivity(cat, ts, qt, v, l, r):
+    """Per-query predicate counts by direct evaluation over the rows."""
+    out = []
+    for t, vv, ll, rr in zip(qt, v, l, r):
+        in_cat = cat == vv
+        in_ts = (ts >= ll) & (ts <= rr)
+        m = {0: np.ones_like(in_cat), 1: in_cat, 2: in_ts, 3: in_cat & in_ts}[int(t)]
+        out.append(int(m.sum()))
+    return out
+
+
+def test_selectivity_kernel_matches_brute_force_counts(spark):
+    """The binary-search kernel equals direct predicate counts over a
+    crafted corpus, on the binned (ts_bins=1000) and the exact
+    (ts_bins=None) stats table: every query type, a category absent
+    from the corpus, l > r, bounds exactly on bin edges, r beyond the
+    last edge, and an empty query frame."""
+    import pandas as pd
+
+    from sigmod_2024_contest_spark.operators import stats
+
+    rng = np.random.default_rng(11)
+    n = 4000
+    cat = rng.choice([0, 1, 2, 5], size=n, p=[0.5, 0.3, 0.15, 0.05]).astype(np.int32)
+    ts = rng.random(n)
+    ts[:200] = rng.integers(0, 1000, 200) / 1000.0  # rows sitting on bin edges
+    base = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64), "category": cat, "ts": ts,
+                      "vec": [[0.0, 0.0]] * n}),
+        "id long, category int, ts double, vec array<float>",
+    )
+    for bins in (1000, None):
+        tsb = np.floor(ts * bins) / float(bins) if bins else ts
+        edge_l, edge_r = np.sort(tsb[:200])[[20, 150]]
+        rows = [
+            (0, -1, -1.0, -1.0),
+            (1, 0, -1.0, -1.0), (1, 5, -1.0, -1.0), (1, 9, -1.0, -1.0),  # 9: absent
+            (2, -1, 0.2, 0.7), (2, -1, 0.7, 0.2),  # l > r
+            (2, -1, edge_l, edge_r), (2, -1, edge_r, edge_r),  # on bin edges
+            (2, -1, 0.5, 3.0), (2, -1, -1.0, 3.0),  # r beyond the last edge
+            (3, 1, 0.1, 0.6), (3, 2, edge_l, edge_r), (3, 0, 0.9, 2.0),
+            (3, 9, 0.0, 1.0), (3, 1, 0.6, 0.1),
+        ]
+        qt, v, l, r = (np.array(c) for c in zip(*rows))
+        queries = spark.createDataFrame(
+            [(i, int(t), int(vv), float(ll), float(rr)) for i, (t, vv, ll, rr) in enumerate(rows)],
+            "query_id long, query_type int, v int, l double, r double",
+        )
+        sel = stats.selectivity(base, queries, ts_bins=bins)
+        assert sel.columns == queries.columns + ["sel_num", "n_total"]
+        got = {x["query_id"]: (x["sel_num"], x["n_total"]) for x in sel.collect()}
+        want = _brute_selectivity(cat, tsb, qt, v, l, r)
+        assert got == {i: (w, n) for i, w in enumerate(want)}, (bins, got, want)
+        assert stats.selectivity(base, queries.limit(0), ts_bins=bins).count() == 0
 
 
 def test_split_interval(spark):
