@@ -1,5 +1,6 @@
-"""Hybrid batch search engine: routing + partitioned exact code-space
-scans + quantized brute force + global merge/re-rank.
+"""Hybrid batch search engine: routing + one of two physical plans —
+the fused corpus-broadcast SQ8 kernel, or quantized brute force +
+partitioned exact code-space shard scans + global merge/re-rank.
 
 Reference: ``HybridGraph::BatchSearch`` (``/root/reference/
 hybrid_graph.cpp:147-503``) — the six-phase executor. The Spark
@@ -12,26 +13,37 @@ boundaries are shuffles:
                              the ``route`` column (stats.py,
                              routing.py); every later phase reads its
                              query rows from this table
-2. brute-force branch      → SQ8 cut + exact re-rank on knn.py's
-                             brute-force kernels: the corpus-broadcast
-                             kernel, or the query-broadcast scan kernel
-                             + the pooled re-rank (bruteforce_sq8.py)
-3. type-1/3 shard branch   → the query's category shards
-4. type-0 branch           → every decile shard
-5. type-2 branch           → the overlapped decile shards (SplitInterval)
-6. global merge            → union candidates + the pooled K12 re-rank
-                             ``knn.exact_rerank_pooled`` (one cogroup
-                             kernel over the broadcast corpus when
-                             corpus_rows ≤ knn.bc_rows_bound(dim);
-                             window pool + candidates-only join above)
+2. side rule               → ``search_side``: the fused plan while
+                             corpus_rows ≤ routing.t0_bf_rows_bound(dim),
+                             the shard plan above it
 
-Phases 3-5 run one kernel: ``knn.probe_cogroup_topk`` cogroups each
+Fused plan (``corpus_bc``): ONE ``knn.corpus_broadcast_topk`` pass over
+every route-plan row — the SQ8 code cut to the row's route depth
+(140 for bf, ⌈1.5k⌉ for shard routes) and the exact re-rank in one
+kernel over the broadcast corpus. Every task already holds the whole
+corpus, so a shard route's shards would score the same predicate slice
+the kernel scores; the route sets only the cut depth. Phases 3-6 do
+not run.
+
+Shard plan (``shards``):
+
+3. brute-force branch      → the bf rows: SQ8 cut + exact re-rank on
+                             knn.py's brute-force kernels
+                             (bruteforce_sq8.py)
+4. type-1/3 shard branch   → the query's category shards
+5. type-0/2 shard branch   → every decile shard (type 0), the deciles
+                             holding [l, r] (type 2)
+6. global merge            → union candidates + the pooled K12 re-rank
+                             ``knn.exact_rerank_pooled``
+
+Phases 4-5 run one kernel: ``knn.probe_cogroup_topk`` cogroups each
 index shard with the queries assigned to it and scans the shard's
 codes exactly — the predicate-sliced code GEMM with a running
 (cdist, id) top-k, the reference's small-partition brute force
 (hybrid_graph.cpp:399-419) applied to every shard. Then one global
 merge: REPOSE's plan shape (ICDE 2021), exact top-k local to each
-partition, then one merge.
+partition, then one merge — the shape that pays once the corpus is
+partitioned, i.e. above the fused bound.
 
 The index is a DataFrame of rows (``build_index``), Parquet-able and
 built with no Python stage; search ships each query group to exactly
@@ -525,18 +537,29 @@ def partition_index_for_search(index: DataFrame) -> DataFrame:
     return index.repartition(F.col("pkey"))
 
 
+def _catalog_frame(spark: SparkSession, rows: list[tuple[str, str]]) -> DataFrame:
+    """The (prefix, pkey) rows as a local relation. A pandas frame plans
+    as a ``LocalTableScan``; a Python list would plan as ``Scan
+    ExistingRDD``, a ``parallelize|map`` Python job every search that
+    broadcasts the catalog pays again."""
+    pdf = pd.DataFrame(rows, columns=["prefix", "pkey"], dtype=object)
+    return spark.createDataFrame(pdf, "prefix string, pkey string")
+
+
 def catalog_from_plan(spark: SparkSession, shard_plan: dict[str, int]) -> DataFrame:
     """(prefix, pkey) catalog derived from the shard plan — pure
     metadata, no index scan. The analytic twin of ``shard_catalog``:
     use this when the plan is in hand (index built this run); use
     ``shard_catalog`` when only the index DataFrame exists (loaded
     from disk)."""
-    rows = [
-        (prefix, f"{prefix}:{s}")
-        for prefix, nshards in shard_plan.items()
-        for s in range(nshards)
-    ]
-    return spark.createDataFrame(rows, "prefix string, pkey string")
+    return _catalog_frame(
+        spark,
+        [
+            (prefix, f"{prefix}:{s}")
+            for prefix, nshards in shard_plan.items()
+            for s in range(nshards)
+        ],
+    )
 
 
 def shard_catalog(index: DataFrame) -> DataFrame:
@@ -552,9 +575,7 @@ def shard_catalog(index: DataFrame) -> DataFrame:
         .select(F.regexp_extract("pkey", r"^(.*):\d+$", 1).alias("prefix"), "pkey")
         .collect()
     )
-    return index.sparkSession.createDataFrame(
-        [(r["prefix"], r["pkey"]) for r in rows], "prefix string, pkey string"
-    )
+    return _catalog_frame(index.sparkSession, [(r["prefix"], r["pkey"]) for r in rows])
 
 
 def _assignments(queries: DataFrame | None, plan: DataFrame, catalog: DataFrame) -> DataFrame:
@@ -575,7 +596,14 @@ def _assignments(queries: DataFrame | None, plan: DataFrame, catalog: DataFrame)
         "r",
         "qvec",
     )
-    # type 0 → every decile slice; type 2 → overlapped deciles only
+    # type 0 → every decile slice; type 2 → the deciles holding a ts in
+    # [l, r]. A row sits in decile least(floor(ts·10), 9), so l and r
+    # map through that same formula (clamped to 0..9): a row with
+    # ts == r is in decile floor(r·10) even when r·10 is a whole number.
+    # An empty interval (l > r) probes no decile.
+    def decile(c: str) -> F.Column:
+        return F.least(F.greatest(F.floor(F.col(c) * 10).cast("int"), F.lit(0)), F.lit(9))
+
     deciles = graph_q.filter(F.col("query_type").isin(0, 2)).select(
         "query_id",
         "query_type",
@@ -584,12 +612,9 @@ def _assignments(queries: DataFrame | None, plan: DataFrame, catalog: DataFrame)
         "r",
         "qvec",
         F.explode(
-            F.when(F.col("query_type") == 0, F.sequence(F.lit(0), F.lit(9))).otherwise(
-                F.sequence(
-                    F.greatest(F.floor(F.col("l") * 10).cast("int"), F.lit(0)),
-                    F.least(F.ceil(F.col("r") * 10).cast("int") - 1, F.lit(9)),
-                )
-            )
+            F.when(F.col("query_type") == 0, F.sequence(F.lit(0), F.lit(9)))
+            .when(F.col("l") <= F.col("r"), F.sequence(decile("l"), decile("r")))
+            .otherwise(F.array().cast("array<int>"))
         ).alias("dec"),
     )
     dec_assign = deciles.select(
@@ -643,6 +668,20 @@ def graph_search(
     return knn.unpack_candidates(packed)
 
 
+# The engine's two physical plans (``search_side``).
+SIDE_CORPUS_BC = "corpus_bc"
+SIDE_SHARDS = "shards"
+
+
+def search_side(corpus_rows: int, dim: int | None) -> str:
+    """Which physical plan :func:`knn_hybrid` runs: the one fused
+    corpus-broadcast kernel while the corpus is within the measured
+    fused-vs-fan-out bound ``routing.t0_bf_rows_bound(dim)`` (the bound
+    the route ladder applies to type 0), the shard fan-out above it.
+    ``plans/explain.py`` reports the same call."""
+    return SIDE_CORPUS_BC if corpus_rows <= routing.t0_bf_rows_bound(dim) else SIDE_SHARDS
+
+
 def knn_hybrid(
     spark: SparkSession,
     base: DataFrame,
@@ -656,8 +695,26 @@ def knn_hybrid(
     corpus_rows: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """The full BatchSearch pipeline: route → bf/shard branches →
+    """The full BatchSearch pipeline: route → one physical plan →
     global top-k. Returns (query_id, id, rnk).
+
+    The plan is chosen once per batch by :func:`search_side`:
+
+    - ``corpus_bc`` (corpus within ``routing.t0_bf_rows_bound(dim)``):
+      one ``knn.corpus_broadcast_topk`` pass over every plan row on the
+      ``("sq8", alpha)`` grid — the bf branch's cached payload. Each row
+      is cut in SQ8 code space to its route's depth (``BF_REFINE_K``
+      for bf, ⌈``SHARD_REFINE_MULT``·k⌉ for shard routes) and re-ranked
+      exactly in the same kernel. A shard route's shards cover exactly
+      its predicate slice, so every row equals what the shard plan
+      returns (up to ``knn.MERGE_PAD`` tie slack); the route only sets
+      the depth. No index, catalog, assignment or cogroup is built, and
+      ``index``/``catalog``/``codes_base`` are ignored.
+    - ``shards`` (above the bound): the bf rows take
+      ``bruteforce_sq8.knn_sq8_rerank``; the rest are assigned to the
+      index shards their predicate can touch, scanned per shard
+      (:func:`graph_search`) and pooled into the exact re-rank
+      ``knn.exact_rerank_pooled``.
 
     ``plan`` / ``alpha``: pass a persisted ``routing.route_plan`` /
     quantizer scale to share them across searches of the same (base,
@@ -665,13 +722,12 @@ def knn_hybrid(
     trains the quantizer once at build (hybrid_graph.cpp:168-230,
     hnsw.hpp:38-40). A given ``plan`` supersedes ``queries``: it is the
     batch's routed query table, and every branch reads its query rows
-    from it — the bf branch its bf rows, the shard assignment the rest,
-    the re-rank all of them — so the query source is read once, with
-    no ``queries ⋈ plan`` join. ``queries`` is read only to build the
-    plan when none is given.
+    from it, so the query source is read once, with no ``queries ⋈
+    plan`` join. ``queries`` is read only to build the plan when none
+    is given.
     ``codes_base``: persisted SQ8(alpha) codes replica for the bf route
-    (B10, hybrid_graph.cpp:505-524) — the candidate scan then reads
-    codes only instead of re-encoding the float column.
+    above the bound (B10, hybrid_graph.cpp:505-524) — the candidate
+    scan then reads codes only instead of re-encoding the float column.
     ``catalog``: precomputed ``shard_catalog(index)`` — build-phase
     metadata; pass it so repeated searches of one loaded index skip the
     distinct-pkey collect. ``corpus_rows``: base row count when known
@@ -680,19 +736,30 @@ def knn_hybrid(
     if corpus_rows is None:
         corpus_rows = base.count()
     if dim is None and corpus_rows:
-        # Derive the vector width once so the routing ladder and the bf
-        # branch agree on bc_rows_bound(dim): a caller threading dim to
-        # only one side would silently route type-0 to bf while the
-        # branch falls back to the measured-slower scan plan. One
-        # head() job, skipped whenever the caller already knows dim.
+        # Derive the vector width once so the routing ladder, the side
+        # rule and the bf branch agree on one bound: a caller threading
+        # dim to only one of them would silently pick different plans.
+        # One head() job, skipped whenever the caller already knows dim.
         head = base.select("vec").head()
         if head is not None:
             dim = len(head["vec"])
     if plan is None:
         plan = routing.route_plan(base, queries, dim=dim).cache()
-    bf_queries = plan.filter(F.col("route") == routing.ROUTE_BF)
     if alpha is None:
         alpha = Q.train_alpha(base)
+    pool_k = max(k, int(math.ceil(SHARD_REFINE_MULT * k)))
+    if search_side(corpus_rows, dim) == SIDE_CORPUS_BC:
+        a = float(alpha)
+
+        def enc(m):
+            return Q.encode_np(m, a)
+
+        depth = F.when(
+            F.col("route") == routing.ROUTE_BF, F.lit(bruteforce_sq8.BF_REFINE_K)
+        ).otherwise(F.lit(pool_k))
+        return knn.corpus_broadcast_topk(base, plan, k, enc, enc, depth, ("sq8", a))
+
+    bf_queries = plan.filter(F.col("route") == routing.ROUTE_BF)
     bf_res = bruteforce_sq8.knn_sq8_rerank(
         base, bf_queries, alpha, k=k, codes_base=codes_base, corpus_rows=corpus_rows,
         dim=dim,
@@ -720,11 +787,10 @@ def knn_hybrid(
     # across sub-searches, THEN the global refine :465-494): one global
     # α makes code distances comparable across shards, so a code-space
     # top-(1.5k) window first cuts nq × nshards × 1.5k candidate rows
-    # to nq × 1.5k before anything touches the corpus — the re-rank
-    # join cost becomes independent of the shard fan-out (a type-0
-    # query searches every decile shard; without this the join is 10×
-    # wider). WindowGroupLimit pushes the rank filter map-side.
-    pool_k = max(k, int(math.ceil(SHARD_REFINE_MULT * k)))
+    # to nq × 1.5k (pool_k) before anything touches the corpus — the
+    # re-rank join cost becomes independent of the shard fan-out (a
+    # type-0 query searches every decile shard; without this the join
+    # is 10× wider). WindowGroupLimit pushes the rank filter map-side.
     # K12 exact re-rank (hybrid_graph.cpp:207-228 / quant reorder):
     # the index is codes-only, so candidate ranks are approximate —
     # pool to nq × 1.5k code-space candidates (independent of shard

@@ -116,6 +116,9 @@ def route_plan(
     type 2 above threshold → decile graphs (SplitInterval downstream);
     type 0 → global/decile graphs; type 0 takes bf instead while the
     corpus is within the measured crossover ``t0_bf_rows_bound(dim)``.
+    Within that same bound ``engine.knn_hybrid`` answers every route
+    with its one fused kernel, so there the route sets only a row's
+    code-cut depth.
     """
     sel = selectivity(base, queries, ts_bins=ts_bins, stats=stats)
     frac = F.col("sel_num").cast("double") / F.col("n_total").cast("double")

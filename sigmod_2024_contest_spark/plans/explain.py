@@ -1,16 +1,16 @@
 """Route-plan EXPLAIN surface: render the hybrid engine's per-query
-decisions — route, shard fan-out, shard rows scanned — as an
+decisions — route, physical side, shard fan-out, rows scanned — as an
 inspectable DataFrame plus a text report.
 
 The reference prints per-query diagnostics at search time
 (``getquery.cpp``'s timing/route dumps); here the cost model is
 DECLARATIVE, so the same decisions can be rendered *before* running
-anything: the route ladder (`routing.route_plan`) and the shard plan
-(`engine._shard_plan` metadata math) are pure functions of corpus
-statistics, and every shard a query is assigned to is scanned whole
-by its code GEMM. This module composes exactly those functions — no
-re-implementation, so the report cannot drift from what the engine
-executes.
+anything: the route ladder (`routing.route_plan`), the side rule
+(`engine.search_side`) and the shard plan (`engine._shard_plan`
+metadata math) are pure functions of corpus statistics, and every
+shard a query is assigned to is scanned whole by its code GEMM. This
+module composes exactly those functions — no re-implementation, so the
+report cannot drift from what the engine executes.
 
 Scale shape: everything driver-side here is planning metadata (the
 slice catalog, ≤ 1/cat_thr + 10 rows); the per-query table stays
@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import routing
+from ..operators import engine, routing
+from ..operators.bruteforce_sq8 import BF_REFINE_K
 from ..operators.engine import MAX_NODES_PER_GRAPH, SHARD_REFINE_MULT
 from . import workload
 
@@ -61,7 +62,7 @@ def _slice_counts(base: DataFrame, cat_thr: float) -> dict[str, int]:
 
 
 EXPLAIN_SCHEMA = (
-    "query_id long, query_type int, route string, sel_ppm long, "
+    "query_id long, query_type int, route string, side string, sel_ppm long, "
     "n_shards int, rows_scanned long, est_candidates long"
 )
 
@@ -73,23 +74,31 @@ def explain_routes(
     cat_thr: float = routing.CAT_GRAPH_THR,
     max_nodes: int = MAX_NODES_PER_GRAPH,
 ) -> DataFrame:
-    """One row per workload query: the route the ladder picks, how many
-    index shards the search will fan out to, the shard rows those
-    shards' code GEMMs cover (``rows_scanned``: the summed row counts of
-    the query's shards; inside them the predicate-sliced kernel scores
-    only the rows the predicate admits), and the candidate volume the
-    refine stage will see.
+    """One row per workload query: the route the ladder picks, the
+    physical plan the engine runs (``side``, ``engine.search_side``),
+    how many index shards the search will fan out to, the rows it
+    scores and the candidate volume the refine stage will see.
 
-    bf routes report n_shards=0, rows_scanned=0 and est_candidates=sel
-    (the bf GEMM scans the predicate slice exactly once); shard routes
-    report n_shards × ceil(1.5k) candidates (`SHARD_REFINE_MULT`)."""
+    ``corpus_bc`` side: no shard is probed (n_shards=0); the fused
+    kernel scores the predicate slice (rows_scanned=sel_num) and cuts it
+    to the route's depth (est_candidates=min(sel, depth): BF_REFINE_K
+    for bf, ceil(1.5k) for shard routes).
+    ``shards`` side: bf routes report n_shards=0, rows_scanned=0 and
+    est_candidates=sel (the bf GEMM scans the predicate slice exactly
+    once); shard routes report the summed row counts of their shards
+    (inside them the predicate-sliced kernel scores only the rows the
+    predicate admits) and n_shards × ceil(1.5k) candidates
+    (`SHARD_REFINE_MULT`)."""
     from ..sources.tables import base_vectors
 
     base = base_vectors(spark, sf_dir)
     queries = workload.queries_df(spark, sf_dir)
-    plan = routing.route_plan(base, queries)
+    dim = len(base.select("vec").head()["vec"])
+    plan = routing.route_plan(base, queries, dim=dim)
     counts = _slice_counts(base, cat_thr)
     shards = {p: math.ceil(c / max_nodes) for p, c in counts.items()}
+    # deciles partition the corpus: their counts sum to its rows
+    side = engine.search_side(sum(c for p, c in counts.items() if p.startswith("dec:")), dim)
 
     def prefixes(row) -> list[str]:
         t, route = row["query_type"], row["route"]
@@ -99,8 +108,12 @@ def explain_routes(
             p = f"cat:{int(row['v'])}"
             return [p] if p in shards else []
         if t == 2:
-            lo = max(int(math.floor(row["l"] * 10)), 0)
-            hi = min(int(math.ceil(row["r"] * 10)) - 1, 9)
+            # the engine's decile formula: a row sits in
+            # least(floor(ts·10), 9); an empty interval probes none
+            if row["l"] > row["r"]:
+                return []
+            lo = min(max(int(math.floor(row["l"] * 10)), 0), 9)
+            hi = min(max(int(math.floor(row["r"] * 10)), 0), 9)
             cand = [f"dec:{d}" for d in range(lo, hi + 1)]
         else:
             cand = [f"dec:{d}" for d in range(10)]
@@ -118,10 +131,16 @@ def explain_routes(
             )}
             for _, row in pdf.iterrows():
                 t = int(row["query_type"])
-                pref = prefixes(row)
-                n_sh = sum(shards[p] for p in pref)
                 sel = int(row["sel_num"])
-                est = sel if not pref else n_sh * refine_k
+                if side == engine.SIDE_CORPUS_BC:
+                    depth = BF_REFINE_K if row["route"] == routing.ROUTE_BF else refine_k
+                    n_sh, rows, est = 0, sel, min(sel, depth)
+                else:
+                    pref = prefixes(row)
+                    n_sh = sum(shards[p] for p in pref)
+                    # a slice's shards split its rows disjointly (id % ns)
+                    rows = sum(counts[p] for p in pref)
+                    est = sel if not pref else n_sh * refine_k
                 out["query_id"].append(int(row["query_id"]))
                 out["query_type"].append(t)
                 out["route"].append(row["route"])
@@ -129,14 +148,14 @@ def explain_routes(
                     int(round(1_000_000 * sel / row["n_total"])) if row["n_total"] else 0
                 )
                 out["n_shards"].append(n_sh)
-                # a slice's shards split its rows disjointly (id % ns)
-                out["rows_scanned"].append(sum(counts[p] for p in pref))
+                out["rows_scanned"].append(rows)
                 out["est_candidates"].append(est)
             yield pd.DataFrame(
                 {
                     "query_id": np.asarray(out["query_id"], dtype=np.int64),
                     "query_type": np.asarray(out["query_type"], dtype=np.int32),
                     "route": out["route"],
+                    "side": [side] * len(out["route"]),
                     "sel_ppm": np.asarray(out["sel_ppm"], dtype=np.int64),
                     "n_shards": np.asarray(out["n_shards"], dtype=np.int32),
                     "rows_scanned": np.asarray(out["rows_scanned"], dtype=np.int64),
@@ -152,9 +171,9 @@ def render_route_report(
     spark: SparkSession, sf_dir: str, k: int = workload.K
 ) -> str:
     """Aggregate the per-query explain table to a text report — the
-    `getquery.cpp` diagnostics analogue: route mix, selectivity bands,
-    fan-out and shard rows scanned per (route, type), plus the shard
-    catalog."""
+    `getquery.cpp` diagnostics analogue: the side the engine runs, then
+    route mix, selectivity bands, fan-out and rows scanned per
+    (route, type), plus the shard catalog."""
     from ..sources.tables import base_vectors
 
     ex = explain_routes(spark, sf_dir, k=k)
@@ -176,16 +195,18 @@ def render_route_report(
     counts = _slice_counts(base, routing.CAT_GRAPH_THR)
     dim = len(base.select("vec").first()[0])
     t0_rows = routing.t0_bf_rows_bound(dim)
+    n_rows = sum(c for p, c in counts.items() if p.startswith("dec:"))
     lines = [
         f"ROUTE PLAN  k={k}  sf_dir={sf_dir}",
         f"  thresholds: bf<{routing.BF_THR} (type3 <{routing.BF_THR_T3}),"
         f" cat-graph>={routing.CAT_GRAPH_THR}, max_nodes/shard={MAX_NODES_PER_GRAPH}",
-        f"  type-0 fused-bf bound: corpus <= {t0_rows} rows at dim={dim} "
-        f"(min of the broadcast cap and the MEASURED bf-vs-shard-route "
-        f"crossover T0_BF_MAX_CELLS={routing.T0_BF_MAX_CELLS} cells "
-        f"— r12 recalibration, tools/sweep_router_crossover.py at "
-        f"commit 9f5e074: bf wins "
-        f"16M cells, loses 32M+)",
+        f"  fused-plan bound: corpus <= {t0_rows} rows at dim={dim} "
+        f"(routing.t0_bf_rows_bound: min of the broadcast cap and the "
+        f"measured fused-vs-fan-out crossover "
+        f"T0_BF_MAX_CELLS={routing.T0_BF_MAX_CELLS} cells)",
+        f"  side: {engine.search_side(n_rows, dim)} (corpus {n_rows} rows; "
+        f"{engine.SIDE_CORPUS_BC} = one fused SQ8 kernel, the route sets "
+        f"only the cut depth; {engine.SIDE_SHARDS} = bf branch + shard fan-out)",
         "",
         f"  {'route':<14}{'type':>4}{'queries':>9}{'sel_ppm':>18}"
         f"{'fanout':>8}{'rows':>16}{'candidates':>12}",

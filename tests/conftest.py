@@ -31,6 +31,17 @@ def spark():
     s.stop()
 
 
+def force_shard_plan(monkeypatch) -> None:
+    """Pin ``engine.knn_hybrid`` to its shard plan for the rest of the
+    test: the fused-plan bound ``routing.t0_bf_rows_bound`` becomes 0
+    rows, so every corpus lies above it (and the route ladder sends
+    type 0 to the decile fan-out)."""
+    from sigmod_2024_contest_spark.operators import routing
+
+    monkeypatch.setattr(routing, "BF_ALL_MAX_ROWS", 0)
+    monkeypatch.setattr(routing, "T0_BF_MAX_CELLS", 0)
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

@@ -16,7 +16,7 @@ from sigmod_2024_contest_spark.plans.explain import (
 )
 from sigmod_2024_contest_spark.sources.tables import base_vectors
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, force_shard_plan
 
 
 def test_explain_one_row_per_query_and_route_parity(spark):
@@ -33,10 +33,12 @@ def test_explain_one_row_per_query_and_route_parity(spark):
     assert got == want
 
 
-def test_explain_fanout_matches_shard_metadata(spark):
-    """bf → zero shards and zero shard rows; cat_graph → exactly that
-    category's shard count and rows; decile routes → the summed rows of
-    the deciles they probe (type 0: every decile, i.e. the corpus)."""
+def test_explain_fanout_matches_shard_metadata(spark, monkeypatch):
+    """On the shard side: bf → zero shards and zero shard rows;
+    cat_graph → exactly that category's shard count and rows; decile
+    routes → the summed rows of the deciles they probe (type 0: every
+    decile, i.e. the corpus)."""
+    force_shard_plan(monkeypatch)
     base = base_vectors(spark, SF_SMOKE)
     counts = _slice_counts(base, routing.CAT_GRAPH_THR)
     queries = {
@@ -48,6 +50,7 @@ def test_explain_fanout_matches_shard_metadata(spark):
     total = sum(c for p, c in counts.items() if p.startswith("dec:"))
     for r in explain_routes(spark, SF_SMOKE).collect():
         q = queries[r["query_id"]]
+        assert r["side"] == engine.SIDE_SHARDS
         if r["route"] == routing.ROUTE_BF:
             assert r["n_shards"] == 0 and r["rows_scanned"] == 0
             assert r["est_candidates"] >= 0
@@ -59,17 +62,20 @@ def test_explain_fanout_matches_shard_metadata(spark):
         elif r["query_type"] == 0:
             assert r["rows_scanned"] == total
         else:
-            lo = max(math.floor(q["l"] * 10), 0)
-            hi = min(math.ceil(q["r"] * 10) - 1, 9)
+            # a row sits in decile least(floor(ts·10), 9)
+            lo = min(max(math.floor(q["l"] * 10), 0), 9)
+            hi = min(max(math.floor(q["r"] * 10), 0), 9)
             want = sum(counts.get(f"dec:{d}", 0) for d in range(lo, hi + 1))
             assert r["n_shards"] >= 1 and r["rows_scanned"] == want
 
 
-def test_explain_fanout_matches_engine_assignments(spark):
-    """The strongest tie: for every graph-routed query, the explain
-    table's n_shards must equal the number of (query, pkey) pairs the
-    ENGINE's assignment join actually produces against the analytic
-    shard catalog — same slice math, same empty-slice drops."""
+def test_explain_fanout_matches_engine_assignments(spark, monkeypatch):
+    """The strongest tie: on the shard side, for every graph-routed
+    query, the explain table's n_shards must equal the number of
+    (query, pkey) pairs the ENGINE's assignment join actually produces
+    against the analytic shard catalog — same slice math, same
+    empty-slice drops."""
+    force_shard_plan(monkeypatch)
     base = base_vectors(spark, SF_SMOKE)
     queries = workload.queries_df(spark, SF_SMOKE)
     plan = routing.route_plan(base, queries)
@@ -90,6 +96,27 @@ def test_explain_fanout_matches_engine_assignments(spark):
             r["n_shards"],
             actual.get(r["query_id"], 0),
         )
+
+
+def test_explain_corpus_bc_side(spark):
+    """Below the fused-plan bound every query runs on the fused
+    corpus-broadcast kernel: no shard is probed and the kernel scores
+    the query's predicate slice (rows_scanned = sel_num)."""
+    base = base_vectors(spark, SF_SMOKE)
+    queries = workload.queries_df(spark, SF_SMOKE)
+    dim = len(base.select("vec").head()["vec"])
+    assert engine.search_side(base.count(), dim) == engine.SIDE_CORPUS_BC
+    sel = {
+        r["query_id"]: r["sel_num"]
+        for r in routing.route_plan(base, queries, dim=dim).collect()
+    }
+    rows = explain_routes(spark, SF_SMOKE).collect()
+    assert {r["query_id"] for r in rows} == set(sel)
+    for r in rows:
+        assert r["side"] == engine.SIDE_CORPUS_BC
+        assert r["n_shards"] == 0
+        assert r["rows_scanned"] == sel[r["query_id"]]
+        assert 0 <= r["est_candidates"] <= r["rows_scanned"]
 
 
 def test_render_route_report_sections(spark):

@@ -7,7 +7,7 @@ reference's own methodology (utils.h:224-253, SURVEY §5)."""
 from __future__ import annotations
 
 import numpy as np
-from conftest import SF_SMOKE
+from conftest import SF_CORRECT, SF_SMOKE, force_shard_plan
 
 from sigmod_2024_contest_spark.operators import engine, knn
 from sigmod_2024_contest_spark.plans import workload
@@ -30,10 +30,11 @@ def test_hybrid_engine_recall(spark):
     assert mean_recall >= 0.95, mean_recall
 
 
-def test_hybrid_engine_sharded_recall(spark):
+def test_hybrid_engine_sharded_recall(spark, monkeypatch):
     """Forcing tiny shards (max_nodes=16 → many shards per slice)
     must not change the answer quality: the shard fan-out + global
     merge is the 100 TB build path."""
+    force_shard_plan(monkeypatch)
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
     idx = engine.build_index(base, max_nodes=16)
@@ -49,12 +50,13 @@ def test_hybrid_engine_sharded_recall(spark):
     assert sum(recalls) / len(recalls) >= 0.95, sum(recalls) / len(recalls)
 
 
-def test_analytic_catalog_covers_built_shards(spark):
+def test_analytic_catalog_covers_built_shards(spark, monkeypatch):
     """The analytic catalog (shard plan → metadata, no index scan) must
     enumerate every shard the build actually emits — a missed pkey
     would silently drop that shard from every search. Superset is fine:
     id-mod hashing can leave a planned shard empty, and an empty
     cogroup side contributes nothing."""
+    force_shard_plan(monkeypatch)
     base = base_vectors(spark, SF_SMOKE)
     from sigmod_2024_contest_spark.operators import routing
 
@@ -454,11 +456,12 @@ def _clustered_space(rng, dim: int, latent: int = 16, clusters: int = 48):
     return sample
 
 
-def test_clustered_big_category_shard_recall(spark):
+def test_clustered_big_category_shard_recall(spark, monkeypatch):
     """A clustered 20k × 100 corpus whose category 0 holds 6000 rows:
     its cat: slice is one shard above GEMM_SHARD_THR. Type-1/3 queries
     on category 0 route to cat_graph and must reach recall@100 ≥ 0.9
     per query and ≥ 0.95 on average against a NumPy brute force."""
+    force_shard_plan(monkeypatch)
     import pandas as pd
 
     from sigmod_2024_contest_spark.operators import routing
@@ -608,3 +611,131 @@ def test_knn_hybrid_reads_queries_only_through_the_route_plan(spark, tmp_path):
     assert not [ln for ln in outside if "route_plan_queries" in ln], text
     assert not [ln for ln in outside if re.search(r"Join \[[^\]]*query_id", ln)], text
     plan.unpersist()
+
+
+def _ranked(df) -> list[tuple[int, int, int]]:
+    return sorted((r["query_id"], r["id"], r["rnk"]) for r in df.collect())
+
+
+def test_fused_and_shard_plans_identical(spark, monkeypatch):
+    """Below the fused-plan bound one corpus-broadcast kernel answers
+    every route; forced onto the shard plan, the same persisted route
+    plan goes through the bf branch + shard cogroup + pooled re-rank.
+    Both give the same (query_id, id, rnk) rows, and both equal the
+    exact scan."""
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import routing
+
+    for sf in (SF_SMOKE, SF_CORRECT):
+        base = base_vectors(spark, sf)
+        q = workload.queries_df(spark, sf)
+        n = base.count()
+        dim = len(base.select("vec").head()["vec"])
+        alpha = Q.train_alpha(base)
+        plan = routing.route_plan(base, q, dim=dim).persist()
+        routes = {r["route"] for r in plan.select("route").distinct().collect()}
+        assert routes - {routing.ROUTE_BF}, routes  # shard routes are present
+        kw = dict(plan=plan, alpha=alpha, corpus_rows=n, dim=dim)
+        assert engine.search_side(n, dim) == engine.SIDE_CORPUS_BC
+        fused = _ranked(engine.knn_hybrid(spark, base, q, **kw))
+        with monkeypatch.context() as m:
+            force_shard_plan(m)
+            assert engine.search_side(n, dim) == engine.SIDE_SHARDS
+            sharded = _ranked(engine.knn_hybrid(spark, base, q, **kw))
+        assert fused == sharded
+        assert fused == _ranked(knn.knn_exact_arrow(spark, base, q, corpus_rows=n, dim=dim))
+        plan.unpersist()
+
+
+def test_fused_knn_hybrid_job_budget(spark):
+    """Below the fused-plan bound, once the corpus payload is resident
+    (it is cached per corpus and grid, so the first batch ships it), a
+    batch over an unmaterialized persisted route plan runs at most 3
+    Spark jobs — the plan's cache stage, the query repartition and the
+    kernel — with no shard cogroup and no catalog broadcast in its
+    executed plan, even when an index and a catalog are passed in."""
+    from sigmod_2024_contest_spark.functions import quantization as Q
+    from sigmod_2024_contest_spark.operators import routing
+
+    base = base_vectors(spark, SF_SMOKE)
+    q = workload.queries_df(spark, SF_SMOKE)
+    n = base.count()
+    dim = len(base.select("vec").head()["vec"])
+    alpha = Q.train_alpha(base)
+    splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH)
+    index = engine.build_index(base, shard_plan=splan, alpha=alpha)
+    catalog = engine.catalog_from_plan(spark, splan)
+    out = {}
+
+    def run():
+        out["df"] = engine.knn_hybrid(
+            spark, base, q, index=index, plan=plan, alpha=alpha, catalog=catalog,
+            corpus_rows=n, dim=dim,
+        )
+        out["rows"] = out["df"].collect()
+
+    plan = routing.route_plan(base, q, dim=dim).persist()
+    run()  # the first batch ships the corpus payload
+    plan.unpersist()
+    plan = routing.route_plan(base, q, dim=dim).persist()
+    assert _jobs_run(spark, run) <= 3
+    assert len(out["rows"]) > 0
+    text = out["df"]._jdf.queryExecution().executedPlan().toString()
+    for node in ("FlatMapCoGroupsInArrow", "BroadcastExchange"):
+        assert node not in text, (node, text)
+    plan.unpersist()
+
+
+def test_time_graph_probes_the_decile_holding_r(spark, monkeypatch):
+    """A row sits in decile least(floor(ts·10), 9). With r = 0.5 the
+    row at ts == 0.5 is in decile 5; a type-2 query over [0.3, 0.5]
+    whose vector IS that row must rank it first on the shard plan."""
+    import pandas as pd
+
+    from sigmod_2024_contest_spark.operators import routing
+
+    force_shard_plan(monkeypatch)
+    rng = np.random.default_rng(11)
+    n, dim = 2000, 8
+    vecs = rng.standard_normal((n, dim)).astype(np.float32)
+    ts = rng.random(n)
+    ts[7] = 0.5
+    base = spark.createDataFrame(
+        pd.DataFrame({"id": np.arange(n, dtype=np.int64),
+                      "category": rng.integers(0, 5, n).astype(np.int32), "ts": ts,
+                      "vec": list(vecs)}),
+        "id long, category int, ts double, vec array<float>",
+    )
+    queries = spark.createDataFrame(
+        pd.DataFrame({"query_id": np.array([0], np.int64), "query_type": np.array([2], np.int32),
+                      "v": np.array([-1], np.int32), "l": [0.3], "r": [0.5],
+                      "qvec": [vecs[7]]}),
+        "query_id long, query_type int, v int, l double, r double, qvec array<float>",
+    )
+    plan = routing.route_plan(base, queries, dim=dim).persist()
+    assert [r["route"] for r in plan.collect()] == [routing.ROUTE_TIME_GRAPH]
+    splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH)
+    probed = {r["pkey"] for r in engine._assignments(
+        None, plan, engine.catalog_from_plan(spark, splan)).collect()}
+    assert probed == {"dec:3:0", "dec:4:0", "dec:5:0"}, probed
+    got = _ranked(engine.knn_hybrid(spark, base, queries, k=5, plan=plan))
+    assert got[0][1] == 7, got
+    assert got == _ranked(knn.knn_exact_arrow(spark, base, queries, k=5))
+    plan.unpersist()
+
+
+def test_shard_catalogs_plan_no_python_stage(spark):
+    """Both catalogs are local relations: broadcasting one runs no
+    ``parallelize|map`` job (no ``Scan ExistingRDD`` in its plan)."""
+    from sigmod_2024_contest_spark.operators import routing
+
+    base = base_vectors(spark, SF_SMOKE)
+    splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, 64)
+    for cat in (
+        engine.catalog_from_plan(spark, splan),
+        engine.shard_catalog(engine.build_index(base, shard_plan=splan)),
+    ):
+        assert cat.count() > 0
+        text = cat._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in text, text
+        assert "LocalTableScan" in text, text
