@@ -227,7 +227,8 @@ register("knn_sq4_rerank", _knn_sq4_rerank, bruteforce_quant.knn_sq4_rerank_sql(
 
 
 # ---------------------------------------------------------------------------
-# Hybrid engine: routed bf + per-shard exact code-space scans
+# Hybrid engine: the fused corpus-broadcast kernel below the fused-plan
+# bound; routed bf + per-shard exact code-space scans above it
 # (BatchSearch, hybrid_graph.cpp:147-503). Recall vs the exact oracle
 # is gated in tests/test_hnsw_engine.py.
 # ---------------------------------------------------------------------------
@@ -238,9 +239,10 @@ register("knn_sq4_rerank", _knn_sq4_rerank, bruteforce_quant.knn_sq4_rerank_sql(
 # measures search, baseline.cpp:96,152). The first entry that needs the
 # index builds it, round-trips it through the S8 parquet persistence
 # (Graph::save/load, graph.hpp:101-137), and every later
-# entry searches the *loaded* index — so the driver exercises
-# save_index/load_index, not just pytest. Keyed by (application,
-# sf_dir) so a new session never sees a stale plan.
+# entry searches the *loaded* index. Only the shard plan reads an
+# index (``_hybrid_shard_inputs``): below the fused-plan bound nothing
+# is built. Keyed by (application, sf_dir) so a new session never sees
+# a stale plan.
 _INDEX_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
@@ -273,19 +275,38 @@ def prepare_hybrid_index(spark: SparkSession, sf_dir: str) -> int:
     clocks — the reference times Build and Search separately
     (baseline.cpp:96,152) and its build covers the quantizer, the
     sorted replicas/partition maps, and the graphs; ours covers the
-    index (build + parquet save/load), the shard catalog, the corpus
-    stats, and the routing plan + alpha shared by the hybrid entries.
-    Returns the node-row count. bench.py calls this before timing
-    ``knn_hybrid`` and reports the wall as ``knn_hybrid_build``."""
+    corpus stats, the routing plan + alpha shared by the hybrid
+    entries and, when the shard plan serves the corpus, the index
+    (build + parquet save/load), its shard catalog and the SQ8 codes
+    replica. Returns the node-row count (0 when the fused plan serves
+    the corpus and no index is built). bench.py calls this before
+    timing ``knn_hybrid`` and reports the wall as ``knn_hybrid_build``."""
     from .session import ship_package
 
     ship_package(spark)
     base = base_vectors(spark, sf_dir)
-    _hybrid_stats(spark, sf_dir, base)  # warm the build-phase stats too
-    index, _catalog = _hybrid_index(spark, sf_dir, base)
-    plan, _alpha, _dim = _hybrid_plan(spark, sf_dir, base)
+    plan, _alpha, dim = _hybrid_plan(spark, sf_dir, base)
     plan.count()
-    return index.count()
+    shard = _hybrid_shard_inputs(spark, sf_dir, base, dim)
+    return shard["index"].count() if shard else 0
+
+
+def _hybrid_shard_inputs(
+    spark: SparkSession, sf_dir: str, base: DataFrame, dim: int | None
+) -> dict[str, DataFrame]:
+    """The index, its catalog and the SQ8 codes replica as
+    ``engine.knn_hybrid`` keywords — what its shard plan reads. Below
+    the fused-plan bound (``engine.search_side``) the fused kernel reads
+    none of them, so none is built and this is empty."""
+    corpus_rows = _hybrid_stats(spark, sf_dir, base)[1]
+    if engine.search_side(corpus_rows, dim) != engine.SIDE_SHARDS:
+        return {}
+    index, catalog = _hybrid_index(spark, sf_dir, base)
+    return {
+        "index": index,
+        "catalog": catalog,
+        "codes_base": _codes_replica(spark, sf_dir, base)[0],
+    }
 
 
 # Route plan + quantizer scale shared across the hybrid entries
@@ -329,18 +350,15 @@ def _hybrid_plan(
 def _knn_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = base_vectors(spark, sf_dir)
     plan, alpha, dim = _hybrid_plan(spark, sf_dir, base)
-    index, catalog = _hybrid_index(spark, sf_dir, base)
     return engine.knn_hybrid(
         spark,
         base,
         workload.queries_df(spark, sf_dir),
-        index=index,
         plan=plan,
         alpha=alpha,
-        codes_base=_codes_replica(spark, sf_dir, base)[0],
-        catalog=catalog,
         corpus_rows=_hybrid_stats(spark, sf_dir, base)[1],
         dim=dim,
+        **_hybrid_shard_inputs(spark, sf_dir, base, dim),
     )
 
 
@@ -352,8 +370,12 @@ def _knn_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # each query's allowed set; (b) the bf branch's SQ8 cut to
 # refine_k=140 retains the true top-100 for the low-selectivity
 # queries it is routed (hash-proven since r4, knn_hybrid_bf_exact);
-# (c) the K12 re-rank restores exact float (dist, id) order. The
-# sf-independent quality gate stays recall_hybrid_vs_exact (bar 0.95).
+# (c) the K12 re-rank restores exact float (dist, id) order. Testdata
+# corpora sit below the fused-plan bound, where one corpus-broadcast
+# kernel makes the same code cut (140 rows for bf, SHARD_REFINE_MULT·k
+# for shard routes) over each query's predicate slice and re-ranks it
+# exactly. The sf-independent quality gate stays recall_hybrid_vs_exact
+# (bar 0.95).
 register("knn_hybrid", _knn_hybrid, knn.knn_oracle_sql())
 
 
@@ -371,19 +393,16 @@ def _knn_hybrid_bf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = base_vectors(spark, sf_dir)
     plan, alpha, dim = _hybrid_plan(spark, sf_dir, base)
-    index, catalog = _hybrid_index(spark, sf_dir, base)
     bf_plan = plan.filter(F.col("route") == routing.ROUTE_BF)
     return engine.knn_hybrid(
         spark,
         base,
         bf_plan,
-        index=index,
         plan=bf_plan,
         alpha=alpha,
-        codes_base=_codes_replica(spark, sf_dir, base)[0],
-        catalog=catalog,
         corpus_rows=_hybrid_stats(spark, sf_dir, base)[1],
         dim=dim,
+        **_hybrid_shard_inputs(spark, sf_dir, base, dim),
     )
 
 
@@ -1308,19 +1327,16 @@ def _recall_hybrid_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = base_vectors(spark, sf_dir)
     qdf = workload.queries_df(spark, sf_dir)
     plan, alpha, dim = _hybrid_plan(spark, sf_dir, base)
-    index, catalog = _hybrid_index(spark, sf_dir, base)
     return evaluate.recall_gate(
         engine.knn_hybrid(
             spark,
             base,
             qdf,
-            index=index,
             plan=plan,
             alpha=alpha,
-            codes_base=_codes_replica(spark, sf_dir, base)[0],
-            catalog=catalog,
             corpus_rows=_hybrid_stats(spark, sf_dir, base)[1],
             dim=dim,
+            **_hybrid_shard_inputs(spark, sf_dir, base, dim),
         ),
         knn.knn_exact_arrow(spark, base, qdf),
         RECALL_BAR_PPM,

@@ -14,8 +14,9 @@ boundaries are shuffles:
                              routing.py); every later phase reads its
                              query rows from this table
 2. side rule               → ``search_side``: the fused plan while
-                             corpus_rows ≤ routing.t0_bf_rows_bound(dim),
-                             the shard plan above it
+                             corpus_rows ≤ routing.fused_rows_bound(dim)
+                             (= knn.bc_rows_bound(dim), where the fused
+                             kernel applies), the shard plan above it
 
 Fused plan (``corpus_bc``): ONE ``knn.corpus_broadcast_topk`` pass over
 every route-plan row — the SQ8 code cut to the row's route depth
@@ -538,12 +539,22 @@ def partition_index_for_search(index: DataFrame) -> DataFrame:
 
 
 def _catalog_frame(spark: SparkSession, rows: list[tuple[str, str]]) -> DataFrame:
-    """The (prefix, pkey) rows as a local relation. A pandas frame plans
-    as a ``LocalTableScan``; a Python list would plan as ``Scan
-    ExistingRDD``, a ``parallelize|map`` Python job every search that
-    broadcasts the catalog pays again."""
-    pdf = pd.DataFrame(rows, columns=["prefix", "pkey"], dtype=object)
-    return spark.createDataFrame(pdf, "prefix string, pkey string")
+    """The (prefix, pkey) rows as an inline table, bound as SQL
+    parameters. It plans as a ``LocalTableScan`` built in the JVM: a
+    Python list would plan as ``Scan ExistingRDD``, a ``parallelize|map``
+    Python job every search that broadcasts the catalog pays again, and
+    a pandas frame goes through an Arrow round trip (measured slower
+    batches on ingest-serve, ``BENCH_pairs_r14.json``)."""
+    if not rows:
+        return spark.sql(
+            "SELECT * FROM VALUES (CAST(NULL AS STRING), CAST(NULL AS STRING))"
+            " AS t(prefix, pkey) WHERE false"
+        )
+    args = {}
+    for i, (prefix, pkey) in enumerate(rows):
+        args[f"p{i}"], args[f"k{i}"] = prefix, pkey
+    values = ", ".join(f"(:p{i}, :k{i})" for i in range(len(rows)))
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t(prefix, pkey)", args=args)
 
 
 def catalog_from_plan(spark: SparkSession, shard_plan: dict[str, int]) -> DataFrame:
@@ -675,11 +686,11 @@ SIDE_SHARDS = "shards"
 
 def search_side(corpus_rows: int, dim: int | None) -> str:
     """Which physical plan :func:`knn_hybrid` runs: the one fused
-    corpus-broadcast kernel while the corpus is within the measured
-    fused-vs-fan-out bound ``routing.t0_bf_rows_bound(dim)`` (the bound
-    the route ladder applies to type 0), the shard fan-out above it.
-    ``plans/explain.py`` reports the same call."""
-    return SIDE_CORPUS_BC if corpus_rows <= routing.t0_bf_rows_bound(dim) else SIDE_SHARDS
+    corpus-broadcast kernel while the corpus is within
+    ``routing.fused_rows_bound(dim)`` — wherever that kernel applies,
+    the bound the route ladder also applies to type 0 — and the shard
+    fan-out above it. ``plans/explain.py`` reports the same call."""
+    return SIDE_CORPUS_BC if corpus_rows <= routing.fused_rows_bound(dim) else SIDE_SHARDS
 
 
 def knn_hybrid(
@@ -700,7 +711,7 @@ def knn_hybrid(
 
     The plan is chosen once per batch by :func:`search_side`:
 
-    - ``corpus_bc`` (corpus within ``routing.t0_bf_rows_bound(dim)``):
+    - ``corpus_bc`` (corpus within ``routing.fused_rows_bound(dim)``):
       one ``knn.corpus_broadcast_topk`` pass over every plan row on the
       ``("sq8", alpha)`` grid — the bf branch's cached payload. Each row
       is cut in SQ8 code space to its route's depth (``BF_REFINE_K``

@@ -40,56 +40,30 @@ ROUTE_TIME_GRAPH = "time_graph"
 ROUTE_GLOBAL_GRAPH = "global_graph"
 
 # Cost-based addition to the reference ladder: a type-0 query has no
-# predicate, so its "graph" route fans out to EVERY decile shard. When
-# the corpus is small enough for the bf branch's fused corpus-broadcast
-# plan (one zero-shuffle GEMM kernel: SQ8 cut to refine_k + exact
-# re-rank — recall-gated, same posture as the scan twin), that plan
-# strictly dominates the fan-out, so route type-0 to bf below this
-# corpus size. Above it type-0 keeps the reference's graph route —
-# measured r5 at 500k×2048 (both directions): sending type-0 through
-# the bf SCAN plan instead costs +12.5 s of candidate-window + re-rank
-# shuffle against only −5 s of saved beam work, so the graph fan-out
-# wins wall-clock even with a ~3 ms/shard Python beam constant — but
-# when the FUSED plan applies (zero-shuffle, no candidate window;
-# re-measured r6 post kernel fix via tools/measure_bf_pair.py at
-# commit 9f5e074: 10.5 s
-# fused vs 24.0-38.5 s scan for the same bf queries at 500k×64), bf
-# dominates again. The bound is therefore exactly fused-plan
-# applicability: ``knn.bc_rows_bound(dim)`` — byte-based when the
-# caller passes the vector width (route_plan(dim=...)), else this
-# row-count default. Kept in lockstep with knn.CORPUS_BC_MAX_ROWS
-# (imported, not duplicated): the rule is only valid while the fused
-# corpus-broadcast plan actually applies, and callers must pass the
-# SAME dim to route_plan and to the engine so the ladder and the bf
-# branch agree on which plan serves the route.
-from .knn import CORPUS_BC_MAX_ROWS as BF_ALL_MAX_ROWS
-
-# r12 re-calibration (r11 verdict #6: the 500k warm probe searched
-# SLOWER than 1M because type-0 queries routed to the fused bf at
-# 500k×dim64 = 32M cells). Fused-plan applicability (bc_rows_bound =
-# 40M cells) is necessary but NOT sufficient: the fused kernel must
-# also BEAT the decile-graph fan-out, and that crossover is lower.
-# Measured (tools/sweep_router_crossover.py at commit 9f5e074, nq=2048,
-# in-run interleaved pairs, min-of-2, idle host):
-#   250k×64 = 16M cells: bf 52.4 s vs graph 66.2 s  → bf wins
-#   500k×64 = 32M cells: bf 90.9 s vs graph 54.9 s  → graph wins
-#   1M×64   = 64M cells: bf 88.6 s vs graph 54.0 s  → graph wins
-# 24M cells splits the measured win/loss points; BF_ALL_MAX_ROWS
-# stays the floor (at ≤200k rows the fused kernel won at every dim
-# measured) and bc_rows_bound stays the ceiling (above it the bf
-# route would run the SCAN plan for type-0 — strictly dominated).
-T0_BF_MAX_CELLS = 24_000_000
-
-
-def t0_bf_rows_bound(dim: int | None) -> int:
-    """Max corpus rows below which a type-0 (no-predicate) query
-    routes to the fused corpus-broadcast bf instead of the
-    decile-graph fan-out."""
+# predicate, so its "graph" route fans out to EVERY decile shard. On a
+# corpus small enough for the fused corpus-broadcast kernel (SQ8 cut +
+# exact re-rank in one zero-shuffle pass) ``engine.knn_hybrid`` answers
+# every route with that kernel, and type 0 takes the bf route there
+# (cut depth BF_REFINE_K); above it type 0 keeps the reference's
+# fan-out. Both use this one bound: exactly fused-kernel applicability,
+# ``knn.bc_rows_bound(dim)`` — byte-based when the caller passes the
+# vector width (route_plan(dim=...)), a row count otherwise. Callers
+# must pass the SAME dim to route_plan and to the engine so the ladder
+# and the engine agree on the plan.
+#
+# Measured (tools/stress_scale.py N 2048 2, 4 vCPU, local[4], three
+# rounds, warm rep of each): 300k×64 — fused 4.00/3.29/3.36 s vs shard
+# plan 5.76/5.31/5.96 s; 500k×64 — fused 4.52/4.83/5.02 s vs shard plan
+# 8.53/6.23/7.50 s; recall 1.0 on both. The fused kernel wins up to the
+# point where it stops applying; the shard plan serves larger corpora.
+def fused_rows_bound(dim: int | None) -> int:
+    """Max corpus rows for the fused plan: up to it ``engine.knn_hybrid``
+    runs one corpus-broadcast kernel for every route and a type-0 query
+    routes to bf; above it the shard plan runs and type 0 fans out to
+    the decile shards."""
     from .knn import bc_rows_bound
 
-    if dim is None:
-        return BF_ALL_MAX_ROWS
-    return max(BF_ALL_MAX_ROWS, min(bc_rows_bound(dim), T0_BF_MAX_CELLS // int(dim)))
+    return bc_rows_bound(dim)
 
 # ts histogram resolution for routing selectivity: bin mass ≈ 0.1 % of
 # the corpus — far below every routing threshold — while keeping the
@@ -115,7 +89,7 @@ def route_plan(
     type 1/3 above threshold → that category's graph;
     type 2 above threshold → decile graphs (SplitInterval downstream);
     type 0 → global/decile graphs; type 0 takes bf instead while the
-    corpus is within the measured crossover ``t0_bf_rows_bound(dim)``.
+    corpus is within the fused-plan bound ``fused_rows_bound(dim)``.
     Within that same bound ``engine.knn_hybrid`` answers every route
     with its one fused kernel, so there the route sets only a row's
     code-cut depth.
@@ -123,7 +97,7 @@ def route_plan(
     sel = selectivity(base, queries, ts_bins=ts_bins, stats=stats)
     frac = F.col("sel_num").cast("double") / F.col("n_total").cast("double")
     thr = F.when(F.col("query_type") == 3, F.lit(BF_THR_T3)).otherwise(F.lit(BF_THR))
-    bound = t0_bf_rows_bound(dim)
+    bound = fused_rows_bound(dim)
     route = (
         F.when(frac < thr, F.lit(ROUTE_BF))
         .when(
@@ -146,7 +120,7 @@ SELECT query_id, query_type, sel_num, n_total,
        CASE
          WHEN sel_num::DOUBLE / n_total::DOUBLE <
               (CASE WHEN query_type = 3 THEN {BF_THR_T3} ELSE {BF_THR} END) THEN '{ROUTE_BF}'
-         WHEN query_type = 0 AND n_total <= {t0_bf_rows_bound(dim)} THEN '{ROUTE_BF}'
+         WHEN query_type = 0 AND n_total <= {fused_rows_bound(dim)} THEN '{ROUTE_BF}'
          WHEN query_type IN (1, 3) THEN '{ROUTE_CAT_GRAPH}'
          WHEN query_type = 2 THEN '{ROUTE_TIME_GRAPH}'
          ELSE '{ROUTE_GLOBAL_GRAPH}'

@@ -194,16 +194,15 @@ def render_route_report(
     base = base_vectors(spark, sf_dir)
     counts = _slice_counts(base, routing.CAT_GRAPH_THR)
     dim = len(base.select("vec").first()[0])
-    t0_rows = routing.t0_bf_rows_bound(dim)
+    fused_rows = routing.fused_rows_bound(dim)
     n_rows = sum(c for p, c in counts.items() if p.startswith("dec:"))
     lines = [
         f"ROUTE PLAN  k={k}  sf_dir={sf_dir}",
         f"  thresholds: bf<{routing.BF_THR} (type3 <{routing.BF_THR_T3}),"
         f" cat-graph>={routing.CAT_GRAPH_THR}, max_nodes/shard={MAX_NODES_PER_GRAPH}",
-        f"  fused-plan bound: corpus <= {t0_rows} rows at dim={dim} "
-        f"(routing.t0_bf_rows_bound: min of the broadcast cap and the "
-        f"measured fused-vs-fan-out crossover "
-        f"T0_BF_MAX_CELLS={routing.T0_BF_MAX_CELLS} cells)",
+        f"  fused-plan bound: corpus <= {fused_rows} rows at dim={dim} "
+        f"(routing.fused_rows_bound = knn.bc_rows_bound: the corpus "
+        f"broadcast cap of the fused kernel)",
         f"  side: {engine.search_side(n_rows, dim)} (corpus {n_rows} rows; "
         f"{engine.SIDE_CORPUS_BC} = one fused SQ8 kernel, the route sets "
         f"only the cut depth; {engine.SIDE_SHARDS} = bf branch + shard fan-out)",

@@ -93,8 +93,10 @@ def knn_stream_indexed(
     "index once, serve query batches forever" surface with the routed
     engine (not the exact scan) answering each micro-batch. Pass the
     index straight from ``layout.load_index`` (the S8 parquet
-    round-trip); it is persisted once and stays executor-resident
-    across batches. Routing runs per micro-batch — the reference
+    round-trip); when the shard plan serves the corpus it is persisted
+    once and stays executor-resident across batches, and below the
+    fused-plan bound (``engine.search_side``) it is not read at all.
+    Routing runs per micro-batch — the reference
     likewise routes per query batch (hybrid_graph.cpp:168-230) — while
     the quantizer scale and the routing stats are trained once per
     stream. Same batch_id-partitioned idempotent sink as
@@ -110,15 +112,18 @@ def knn_stream_indexed(
 
     if alpha is None:
         alpha = Q.train_alpha(base)
-    if not index.is_cached:
-        index = index.persist()
     stats = stats_ops.corpus_stats(base, routing.ROUTING_TS_BINS)
-    catalog = engine.shard_catalog(index)  # once per stream, not per batch
+    corpus_rows = stats[1]
     # dim once per stream (not per micro-batch): threads the same
     # bc_rows_bound(dim) to the routing ladder and the engine's bf
     # branch — the lockstep invariant in routing.py
     head = base.select("vec").head()
     dim = len(head["vec"]) if head is not None else None
+    catalog = None
+    if engine.search_side(corpus_rows, dim) == engine.SIDE_SHARDS:
+        if not index.is_cached:
+            index = index.persist()
+        catalog = engine.shard_catalog(index)  # once per stream, not per batch
 
     def answer(batch_df: DataFrame, batch_id: int) -> None:
         # the batch's routed query table, computed once and read by
@@ -126,7 +131,7 @@ def knn_stream_indexed(
         plan = routing.route_plan(base, batch_df, stats=stats, dim=dim).persist()
         res = engine.knn_hybrid(
             spark, base, batch_df, k=k, index=index, plan=plan, alpha=alpha,
-            catalog=catalog, dim=dim,
+            catalog=catalog, corpus_rows=corpus_rows, dim=dim,
         )
         try:
             (

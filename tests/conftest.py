@@ -33,13 +33,13 @@ def spark():
 
 def force_shard_plan(monkeypatch) -> None:
     """Pin ``engine.knn_hybrid`` to its shard plan for the rest of the
-    test: the fused-plan bound ``routing.t0_bf_rows_bound`` becomes 0
+    test: the fused-plan bound ``routing.fused_rows_bound`` becomes 0
     rows, so every corpus lies above it (and the route ladder sends
-    type 0 to the decile fan-out)."""
+    type 0 to the decile fan-out). The bf branch and the pooled re-rank
+    keep their own ``knn.bc_rows_bound`` plan choice."""
     from sigmod_2024_contest_spark.operators import routing
 
-    monkeypatch.setattr(routing, "BF_ALL_MAX_ROWS", 0)
-    monkeypatch.setattr(routing, "T0_BF_MAX_CELLS", 0)
+    monkeypatch.setattr(routing, "fused_rows_bound", lambda dim: 0)
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -157,10 +157,11 @@ def test_upsert_index_rebuilds_only_affected_shards(spark):
     assert members(idx_up) == members(idx_full)
 
 
-def test_upsert_index_search_recall(spark):
+def test_upsert_index_search_recall(spark, monkeypatch):
     """Search quality over an incrementally-grown index: full-pipeline
     recall vs the exact oracle over the UNION corpus >= 0.9 (an
     affected shard holds exactly a fresh build's rows)."""
+    force_shard_plan(monkeypatch)
     from sigmod_2024_contest_spark.functions import quantization as Q
     from sigmod_2024_contest_spark.operators import routing
     from pyspark.sql import functions as F
@@ -246,12 +247,13 @@ def test_upsert_index_replay_idempotent(spark):
     assert s1 == s2
 
 
-def test_compact_index_restores_shard_bounds(spark):
+def test_compact_index_restores_shard_bounds(spark, monkeypatch):
     """Delta + compact split, the compact half: sustained upsert ingest
     under a FIXED plan overflows shards past factor*max_nodes; the
     compaction_due catalog query fires, compact_index re-derives the
     plan from the raw corpus, per-shard occupancy returns under the
     bound, and search recall over the compacted index stays >= 0.95."""
+    force_shard_plan(monkeypatch)
     from pyspark.sql import functions as F
 
     from sigmod_2024_contest_spark.functions import quantization as Q
@@ -582,11 +584,12 @@ def _outside_cached(plan_text: str) -> list[str]:
     return out
 
 
-def test_knn_hybrid_reads_queries_only_through_the_route_plan(spark, tmp_path):
+def test_knn_hybrid_reads_queries_only_through_the_route_plan(spark, tmp_path, monkeypatch):
     """The persisted route plan is the batch's one query table: the
     route plan itself is narrow (no exchange, no join), and the engine
     reads the query source only through the plan's InMemoryTableScan,
     with no join keyed on query_id."""
+    force_shard_plan(monkeypatch)
     import re
 
     from sigmod_2024_contest_spark.operators import routing
@@ -726,16 +729,21 @@ def test_time_graph_probes_the_decile_holding_r(spark, monkeypatch):
 
 def test_shard_catalogs_plan_no_python_stage(spark):
     """Both catalogs are local relations: broadcasting one runs no
-    ``parallelize|map`` job (no ``Scan ExistingRDD`` in its plan)."""
+    ``parallelize|map`` job (no ``Scan ExistingRDD`` in its plan). They
+    hold one (prefix, pkey) row per planned shard; an empty plan gives
+    an empty catalog."""
     from sigmod_2024_contest_spark.operators import routing
 
     base = base_vectors(spark, SF_SMOKE)
     splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, 64)
+    want = {(p, f"{p}:{s}") for p, n in splan.items() for s in range(n)}
     for cat in (
         engine.catalog_from_plan(spark, splan),
         engine.shard_catalog(engine.build_index(base, shard_plan=splan)),
     ):
-        assert cat.count() > 0
+        assert {(r["prefix"], r["pkey"]) for r in cat.collect()} == want
         text = cat._jdf.queryExecution().executedPlan().toString()
         assert "ExistingRDD" not in text, text
         assert "LocalTableScan" in text, text
+    empty = engine.catalog_from_plan(spark, {})
+    assert empty.columns == ["prefix", "pkey"] and empty.count() == 0

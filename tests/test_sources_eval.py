@@ -12,7 +12,7 @@ from sigmod_2024_contest_spark.operators import engine, evaluate, similarity
 from sigmod_2024_contest_spark.sources import bin_format, layout
 from sigmod_2024_contest_spark.sources.tables import base_vectors
 
-from conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle, duck_con
+from conftest import SF_CORRECT, SF_SMOKE, assert_matches_oracle, duck_con, force_shard_plan
 
 
 def test_base_bin_roundtrip(spark, tmp_path):
@@ -245,7 +245,8 @@ def test_codes_replica_scan_is_codes_only_and_matches(spark, tmp_path):
     assert fast == plain
 
 
-def test_index_save_load_search_identical(spark, tmp_path):
+def test_index_save_load_search_identical(spark, tmp_path, monkeypatch):
+    force_shard_plan(monkeypatch)
     base = base_vectors(spark, SF_SMOKE)
     from sigmod_2024_contest_spark.plans import workload
 

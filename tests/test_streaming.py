@@ -14,7 +14,7 @@ from sigmod_2024_contest_spark import api
 from sigmod_2024_contest_spark.sources.tables import load_table
 from sigmod_2024_contest_spark.streaming import pipeline as P
 
-from conftest import SF_SMOKE, assert_matches_oracle, duck_con
+from conftest import SF_SMOKE, assert_matches_oracle, duck_con, force_shard_plan
 
 
 @pytest.fixture()
@@ -128,11 +128,12 @@ def test_knn_query_stream_matches_batch(spark, tmp_path):
     base.unpersist()
 
 
-def test_knn_stream_over_loaded_index_matches_batch(spark, tmp_path):
+def test_knn_stream_over_loaded_index_matches_batch(spark, tmp_path, monkeypatch):
     """Streaming hybrid search over a parquet-loaded graph index
     (S8/S9 round-trip) must produce row-identical results to the batch
     engine over the union of all micro-batches — routing and search
     are per-query deterministic, so stream == batch exactly."""
+    force_shard_plan(monkeypatch)
     from sigmod_2024_contest_spark.operators import engine
     from sigmod_2024_contest_spark.plans import workload
     from sigmod_2024_contest_spark.sources import layout
@@ -391,12 +392,13 @@ def test_stream_near_dup_pairs_single_emission_per_band(spark, tmp_path):
 # --- streaming base-vector ingest (incremental index maintenance) ----------
 
 
-def test_index_ingest_stream_end_to_end(spark, tmp_path):
+def test_index_ingest_stream_end_to_end(spark, tmp_path, monkeypatch):
     """Stream the sf0.001 corpus as 3 micro-batches through
     index_ingest_stream: the final committed snapshot must (a) contain
     exactly the union corpus per shard (same member/code sets as one
     from-scratch build under the same plan/alpha), and (b) serve the
     full hybrid search at recall >= 0.9 vs the exact oracle."""
+    force_shard_plan(monkeypatch)
     import os
     import time
 
@@ -458,11 +460,12 @@ def test_index_ingest_stream_end_to_end(spark, tmp_path):
     assert sum(recalls) / len(recalls) >= 0.9, sum(recalls) / len(recalls)
 
 
-def test_ingest_then_serve_closed_loop(spark, tmp_path):
+def test_ingest_then_serve_closed_loop(spark, tmp_path, monkeypatch):
     """The full streaming lifecycle: ingest the corpus as micro-batches
     (index_ingest_stream), then serve a QUERY stream from the latest
     committed snapshot (knn_stream_indexed) — results row-identical to
     the batch hybrid engine over the union corpus."""
+    force_shard_plan(monkeypatch)
     import os
     import time
 
@@ -545,7 +548,7 @@ def test_stream_near_dup_pairs_capped_replay(spark, tmp_path):
         assert r["count"] <= n_bands, (r["d1"], r["d2"], r["count"])
 
 
-def test_index_ingest_stream_compacts_in_loop(spark, tmp_path):
+def test_index_ingest_stream_compacts_in_loop(spark, tmp_path, monkeypatch):
     """Closed-loop delta + compact under streaming ingest: the plan is
     derived from the FIRST chunk only (tiny max_nodes), later chunks
     overflow shards past factor×max_nodes, the fold's compaction_due
@@ -553,6 +556,7 @@ def test_index_ingest_stream_compacts_in_loop(spark, tmp_path):
     directory, _meta.json persists the LIVE pair, and the final
     snapshot is back under the per-shard bound and serves search at
     recall >= 0.9."""
+    force_shard_plan(monkeypatch)
     import os
     import time
 
@@ -928,12 +932,13 @@ def test_upsert_index_epoch_rebuilds_only_open_shards(spark):
     base_all.unpersist()
 
 
-def test_index_ingest_stream_epoch_manifest_write_floor(spark, tmp_path):
+def test_index_ingest_stream_epoch_manifest_write_floor(spark, tmp_path, monkeypatch):
     """Epoch + manifest ingest: (a) non-first versions write only the
     touched slices' open/spill shards — strictly fewer than the slice
     total (the write floor hash routing cannot beat); (b) the final
     live index is the exact union membership; (c) it serves hybrid
     search at recall >= 0.9 vs exact."""
+    force_shard_plan(monkeypatch)
     import os
     import time
 

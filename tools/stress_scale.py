@@ -4,7 +4,10 @@ The sf0.1 bench cannot exercise sub-sharding (every slice fits one
 shard) or the shard scans at realistic shard sizes. This script
 synthesizes an N-row corpus (default 200k, dim 64, 12 categories two
 of which are index-worthy, uniform ts), builds the partitioned
-index, answers a mixed 4-type query batch with the full routed engine,
+index when the engine's shard plan serves that corpus
+(``engine.search_side``; below the fused-plan bound the fused kernel
+reads no index, so none is built and ``side`` reads ``corpus_bc``),
+answers a mixed 4-type query batch with the full routed engine,
 and reports recall@k against the exact oracle on a subsample — one
 JSON line, same spirit as bench.py.
 
@@ -83,21 +86,26 @@ def main() -> None:
     queries = synth_queries(spark, n_queries, dim).persist()
     queries.count()
 
+    side = engine.search_side(nb, dim)
     idx = res = None
+    idx_rows = nshards = 0
     build_walls: list[float] = []
     search_walls: list[float] = []
     for _rep in range(reps):
-        if idx is not None:
+        if res is not None:
             res.unpersist()
+        if idx is not None:
             idx.unpersist()
         t0 = time.time()
-        splan = engine._shard_plan(
-            base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH
-        )
-        idx = engine.partition_index_for_search(
-            engine.build_index(base, shard_plan=splan)
-        ).persist()
-        idx_rows = idx.count()
+        if side == engine.SIDE_SHARDS:
+            splan = engine._shard_plan(
+                base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH
+            )
+            idx = engine.partition_index_for_search(
+                engine.build_index(base, shard_plan=splan)
+            ).persist()
+            idx_rows = idx.count()
+            nshards = sum(splan.values())
         build_walls.append(round(time.time() - t0, 2))
 
         t0 = time.time()
@@ -105,7 +113,6 @@ def main() -> None:
         out_rows = res.count()
         search_walls.append(round(time.time() - t0, 2))
     build_s, search_s = min(build_walls), min(search_walls)
-    nshards = sum(splan.values())
 
     # recall on a query subsample vs the exact oracle (corpus-broadcast
     # path at this size — itself a timed datapoint). Stride 5, not 10:
@@ -147,6 +154,7 @@ def main() -> None:
                 "n_rows": nb,
                 "n_queries": n_queries,
                 "dim": dim,
+                "side": side,
                 "index_rows": idx_rows,
                 "n_shards": nshards,
                 "build_sec": build_s,
