@@ -155,11 +155,14 @@ def _contest_bench(spark) -> dict[str, float]:
         t0 = _t.time()
         st = stats_ops.corpus_stats(base, routing.ROUTING_TS_BINS)
         alpha = Q.train_alpha(base)
-        index = engine.partition_index_for_search(
-            engine.build_index(base, alpha=alpha)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        index.count()
-        catalog = engine.shard_catalog(index)  # build-phase metadata
+        index = catalog = None
+        # the index is read only by the shard plan (engine.search_side)
+        if engine.search_side(st[1], 100) == engine.SIDE_SHARDS:
+            index = engine.partition_index_for_search(
+                engine.build_index(base, alpha=alpha)
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            index.count()
+            catalog = engine.shard_catalog(index)  # build-phase metadata
         out["contest_run_hybrid_build"] = round(_t.time() - t0, 3)
         # hybrid-plan warmup (same rationale as contest_warmup above),
         # after the build clock and before the search clock
@@ -177,7 +180,7 @@ def _contest_bench(spark) -> dict[str, float]:
                 plan.unpersist()
             _sweep(spark)
             t0 = _t.time()
-            plan = routing.route_plan(base, queries, stats=st, dim=100).persist()
+            plan = routing.route_plan(base, queries, stats=st).persist()
             res = engine.knn_hybrid(
                 spark, base, queries, k=100, index=index, plan=plan, alpha=alpha,
                 catalog=catalog, corpus_rows=st[1], dim=100,
@@ -197,7 +200,8 @@ def _contest_bench(spark) -> dict[str, float]:
         out["contest_run_hybrid_recall"] = round(float(mean_ppm) / 1e6, 4)
         res.unpersist()
         plan.unpersist()
-        index.unpersist()
+        if index is not None:
+            index.unpersist()
     except Exception as e:
         print(f"bench: contest_run_hybrid failed: {e}", file=sys.stderr)
         out["contest_run_hybrid"] = -1.0
@@ -209,8 +213,8 @@ def _contest_bench(spark) -> dict[str, float]:
 # into several shards of up to MAX_NODES_PER_GRAPH rows (at sf0.1 and
 # contest scale every slice is one small shard). 500k rows → 107
 # shards of ~7-8k rows. At dim 64 the corpus is within
-# routing.fused_rows_bound (625k rows), so the hybrid leg runs the
-# fused corpus-broadcast plan and the build is timed as a build only.
+# knn.bc_rows_bound (625k rows), so the hybrid leg runs the fused
+# corpus-broadcast plan and no index is built (stress_shards = 0).
 STRESS_NB = int(os.environ.get("SPARK_GRAFT_STRESS_NB", "500000"))
 STRESS_NQ = int(os.environ.get("SPARK_GRAFT_STRESS_NQ", "2048"))
 # r11 verdict #5: the stress legs were the last single-context readings
@@ -222,24 +226,25 @@ STRESS_REPS = int(os.environ.get("SPARK_GRAFT_STRESS_REPS", "3"))
 
 
 def _stress_bench(spark) -> dict[str, float]:
-    """The engine at scale, captured in the artifact: build the
-    partitioned index on a 500k-row synthetic corpus (107 shards of
-    ~7-8k rows), answer a mixed 4-type 2048-query batch with the routed engine, and
-    run the forced exact scan (query-broadcast over the float corpus —
-    the no-index plan) at IDENTICAL inputs — STRESS_REPS interleaved
-    (hybrid, scan, auto) triples, min per leg plus the median paired
-    hybrid/scan ratio. Recall is computed over ALL queries against the
+    """The engine at scale, captured in the artifact: on a 500k-row
+    synthetic corpus (107 shards of ~7-8k rows when the shard plan
+    serves it), answer a mixed 4-type 2048-query batch with the routed
+    engine, and run the forced exact scan (query-broadcast over the
+    float corpus — the no-index plan) at IDENTICAL inputs —
+    STRESS_REPS interleaved (hybrid, scan, auto) triples, min per leg
+    plus the median paired hybrid/scan ratio. Recall is computed over ALL queries against the
     scan result (exact), outside the clocks.
 
     What this pair claims, precisely: the cost-based engine answers the
     batch at recall ≥ 0.95. The corpus is within the fused-plan bound,
     so one corpus-broadcast SQ8 kernel answers every route (measured
     faster than the shard fan-out at 300k and 500k × 64,
-    ``routing.fused_rows_bound``); a corpus above 625k rows at dim 64
-    runs the shard plan. At 2048 queries the exact scan wins the wall
-    (engine.knn_auto exists for exactly this regime and routes small
-    batches to the scan); the decisive engine-beats-scan evidence at
-    grading scale is the contest pair (hybrid ≈ 0.5-0.6× the forced
+    ``engine.search_side``) and the index is built only for a corpus
+    above that bound (625k rows at dim 64), where the shard plan runs.
+    At 2048 queries the exact scan wins the wall (engine.knn_auto
+    exists for exactly this regime and routes small batches to the
+    scan); the decisive engine-beats-scan evidence at grading scale is
+    the contest pair (hybrid ≈ 0.5-0.6× the forced
     scan at recall 1.0), where query volume (100k) amortizes the
     engine's fixed costs. Phase walls on this host swing 2-7× between
     sessions (r6: best total 33 s, worst ~103 s, identical code) —
@@ -267,12 +272,18 @@ def _stress_bench(spark) -> dict[str, float]:
         t0 = _t.time()
         st = stats_ops.corpus_stats(base, routing.ROUTING_TS_BINS)
         alpha = Q.train_alpha(base)
-        splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH)
-        index = engine.partition_index_for_search(
-            engine.build_index(base, shard_plan=splan, alpha=alpha)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        index.count()
-        catalog = engine.catalog_from_plan(spark, splan)
+        index = catalog = None
+        splan: dict[str, int] = {}
+        # the index is read only by the shard plan (engine.search_side)
+        if engine.search_side(nb, 64) == engine.SIDE_SHARDS:
+            splan = engine._shard_plan(
+                base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH
+            )
+            index = engine.partition_index_for_search(
+                engine.build_index(base, shard_plan=splan, alpha=alpha)
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            index.count()
+            catalog = engine.catalog_from_plan(spark, splan)
         out["stress_build"] = round(_t.time() - t0, 3)
         out["stress_shards"] = float(sum(splan.values()))
         # symmetric per-plan warmups outside the clocks (bench protocol)
@@ -311,7 +322,7 @@ def _stress_bench(spark) -> dict[str, float]:
                 plan.unpersist()
             _sweep(spark)
             t0 = _t.time()
-            plan = routing.route_plan(base, queries, stats=st, dim=64).persist()
+            plan = routing.route_plan(base, queries, stats=st).persist()
             res = engine.knn_hybrid(
                 spark, base, queries, index=index, plan=plan, alpha=alpha,
                 catalog=catalog, corpus_rows=nb, dim=64,
@@ -349,8 +360,8 @@ def _stress_bench(spark) -> dict[str, float]:
         if ratios:
             out["stress_ratio_runs"] = ratios  # per-rep paired hybrid/scan
             out["stress_hybrid_vs_scan_ratio"] = ratios[len(ratios) // 2]
-        # route mix, outside the clocks (below the fused-plan bound the
-        # route sets only each row's cut depth)
+        # route mix, outside the clocks (the reference's logical ladder;
+        # below the fused-plan bound no route changes the kernel)
         for r in plan.groupBy("route").count().collect():
             out[f"stress_routed_{r['route']}"] = float(r["count"])
         mean_ppm = (
@@ -359,7 +370,8 @@ def _stress_bench(spark) -> dict[str, float]:
         out["stress_recall"] = round(float(mean_ppm) / 1e6, 4)
         auto.unpersist()
         for h in (res, exact, plan, index):
-            h.unpersist()
+            if h is not None:
+                h.unpersist()
     except Exception as e:
         print(f"bench: stress failed: {e}", file=sys.stderr)
         out["stress_hybrid_search"] = -1.0

@@ -332,16 +332,14 @@ def _hybrid_plan(
 ) -> tuple[DataFrame, float, int | None]:
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _PLAN_CACHE:
-        # derive dim ONCE and thread it to both the routing ladder and
-        # (via the returned tuple) the engine's bf branch, so the two
-        # agree on bc_rows_bound(dim) — see routing.py's lockstep note
+        # the vector width, derived once: the engine's side rule reads
+        # bc_rows_bound(dim)
         head = base.select("vec").head()
         dim = len(head["vec"]) if head is not None else None
         plan = routing.route_plan(
             base,
             workload.queries_df(spark, sf_dir),
             stats=_hybrid_stats(spark, sf_dir, base),
-            dim=dim,
         ).persist()
         _PLAN_CACHE[key] = (plan, Q.train_alpha(base), dim)
     return _PLAN_CACHE[key]
@@ -372,9 +370,9 @@ def _knn_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # queries it is routed (hash-proven since r4, knn_hybrid_bf_exact);
 # (c) the K12 re-rank restores exact float (dist, id) order. Testdata
 # corpora sit below the fused-plan bound, where one corpus-broadcast
-# kernel makes the same code cut (140 rows for bf, SHARD_REFINE_MULT·k
-# for shard routes) over each query's predicate slice and re-ranks it
-# exactly. The sf-independent quality gate stays recall_hybrid_vs_exact
+# kernel cuts each query's predicate slice to one code-space depth
+# (engine.fused_refine_k: 150 at k=100, no shallower than either
+# branch above) and re-ranks it exactly. The sf-independent quality gate stays recall_hybrid_vs_exact
 # (bar 0.95).
 register("knn_hybrid", _knn_hybrid, knn.knn_oracle_sql())
 
@@ -2108,18 +2106,13 @@ register(
 # comes first; the remainder keep their original order. Across every
 # two consecutive rounds each entry earns at least one driver hash row.
 #
-# Round-14 window (rotate_window.py plan with `--force
-# winnow_fingerprints,winnow_match_pairs,bpe_train,bpe_encode_counts,stream_index_ingest_epoch_parity`,
-# verbatim — the r13 verdict item 3 list plus the epoch parity, whose
-# implementation changed this round): the five FORCED names first —
-# the r13 winnowing rewrite and BPE de-memoization landed AFTER the
-# r13 rotation, so their green rows prove the old code, and the epoch
-# parity's staging/audit/fold were rebuilt in r14 (rows proven
-# bit-identical by driver-sim, but the driver row should be on the new
-# code) — then the stalest r11-green block, which happens to include
-# every other entry whose build path changed in r14
-# (index_upsert_parity, index_compaction_parity,
-# stream_index_ingest_parity, stream_neardup_parity). Everything
+# Round-15 window (rotate_window.py plan with `--force
+# route_plan,knn_hybrid_bf_exact,knn_hybrid`, verbatim): the three
+# FORCED names first — the route ladder lost its type-0 clause (type-0
+# queries now route to the decile fan-out, so route_plan's rows and
+# knn_hybrid_bf_exact's bf subset changed) and knn_hybrid's fused plan
+# now cuts every row at one depth without reading the route — then the
+# stalest entries (never-green, then oldest-green). Everything
 # displaced waits in _PRIOR_ROUND_GREEN on its newest green row.
 #
 # STANDING OBLIGATION (every round): run tools/rotate_window.py after
@@ -2135,89 +2128,91 @@ register(
 # ---------------------------------------------------------------------------
 
 _CHECK_FIRST: list[str] = [
-    "stream_index_ingest_epoch_parity",
-    "winnow_fingerprints",
-    "winnow_match_pairs",
-    "bpe_train",
-    "bpe_encode_counts",
-    "ngram_counts",
-    "token_counts",
-    "dedup_exact",
-    "dedup_containment",
-    "dedup_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_clusters",
-    "sample_balanced_splits",
-    "curate_corpus",
-    "bm25_topk",
-    "retrieval_rrf",
-    "dup_span_extract",
-    "remove_dup_spans",
-    "min_cost_supplier",
-    "important_parts",
-    "small_qty_revenue",
-    "market_share",
-    "product_type_profit",
-    "promo_suppliers",
-    "waiting_suppliers",
-    "copurchase_pairs",
-    "rolling_revenue",
-    "revenue_growth_mom",
-    "sales_cube",
-    "user_order_reconciliation",
-    "order_gap_days",
-    "index_upsert_parity",
-    "stream_neardup_parity",
-    "index_compaction_parity",
-    "stream_index_ingest_parity",
-    "quality_classifier",
-    "source_quality_summary",
-    "bigram_likelihood",
-    "dup_ngram_stats",
-    "dedup_keep_best",
-    "pack_sequences",
-    "chunk_documents",
-    "mixture_sample",
-    "vocab_counts",
-    "decontaminate",
-    "dedup_embedding_cosine",
-    "dedup_cosine_lsh",
-    "ann_cosine_topk",
-    "ann_lsh_topk",
+    "route_plan",
+    "knn_hybrid",
+    "knn_hybrid_bf_exact",
+    "embed_project",
+    "ann_ivf_topk",
+    "recall_lsh_vs_exact",
+    "recall_hybrid_vs_exact",
+    "recall_ivf_vs_exact",
+    "knn_pq_rerank",
+    "recall_pq_vs_exact",
+    "knn_ivfpq_rerank",
+    "recall_ivfpq_vs_exact",
+    "knn_auto",
+    "recall_nndescent_vs_exact",
+    "workload_stats",
+    "events_windowed_counts",
+    "events_sessionized",
+    "events_click_attribution",
+    "user_totals",
+    "events_daily_dedup",
+    "media_byte_stats",
+    "media_frame_sample",
+    "media_resize",
+    "media_image_stats",
+    "media_audio_stats",
+    "media_video_stats",
+    "pricing_summary",
+    "top_customers",
+    "power_users_daily_coverage",
+    "knn_bruteforce",
+    "knn_declarative",
+    "stats_category_counts",
+    "selectivity",
+    "split_interval",
+    "sq8_encode",
+    "sq8_asym_encode",
+    "sq4_encode",
+    "knn_sq8_rerank",
+    "knn_asym_rerank",
+    "knn_sq4_rerank",
+    "text_stats",
+    "text_repetition",
+    "lang_id",
+    "doc_fingerprint",
+    "redact_pii",
+    "events_json_stats",
+    "asof_last_error",
+    "event_funnel",
+    "retention_cohorts",
+    "events_value_quantiles",
 ]
 
 _PRIOR_ROUND_GREEN: frozenset[str] = frozenset(
     {
-        "ann_ivf_topk",
-        "asof_last_error",
+        "ann_cosine_topk",
+        "ann_lsh_topk",
+        "bigram_likelihood",
+        "bm25_topk",
         "bm25_topk_from_index",
+        "bpe_encode_counts",
+        "bpe_train",
         "brand_revenue",
+        "chunk_documents",
+        "copurchase_pairs",
+        "curate_corpus",
         "customer_order_distribution",
+        "decontaminate",
+        "dedup_clusters",
+        "dedup_containment",
+        "dedup_cosine_lsh",
+        "dedup_embedding_cosine",
+        "dedup_exact",
+        "dedup_jaccard",
+        "dedup_keep_best",
+        "dedup_minhash_lsh",
+        "dedup_simhash",
         "discounted_revenue",
-        "doc_fingerprint",
-        "embed_project",
-        "event_funnel",
-        "events_click_attribution",
-        "events_daily_dedup",
+        "dup_ngram_stats",
+        "dup_span_extract",
         "events_daily_pivot",
-        "events_json_stats",
-        "events_sessionized",
         "events_user_reach",
-        "events_value_quantiles",
-        "events_windowed_counts",
         "forecast_revenue",
-        "knn_asym_rerank",
-        "knn_auto",
-        "knn_bruteforce",
-        "knn_declarative",
-        "knn_hybrid",
-        "knn_hybrid_bf_exact",
-        "knn_ivfpq_rerank",
-        "knn_pq_rerank",
-        "knn_sq4_rerank",
-        "knn_sq8_rerank",
-        "lang_id",
+        "important_parts",
+        "index_compaction_parity",
+        "index_upsert_parity",
         "large_orders",
         "late_line_priority",
         "lexical_compaction_parity",
@@ -2225,45 +2220,43 @@ _PRIOR_ROUND_GREEN: frozenset[str] = frozenset(
         "lexical_ingest_parity",
         "lexical_postings",
         "local_supplier_volume",
-        "media_audio_stats",
-        "media_byte_stats",
-        "media_frame_sample",
-        "media_image_stats",
-        "media_resize",
-        "media_video_stats",
+        "market_share",
+        "min_cost_supplier",
+        "mixture_sample",
+        "ngram_counts",
+        "order_gap_days",
         "order_priority_check",
+        "pack_sequences",
         "parts_supplier_counts",
-        "power_users_daily_coverage",
-        "pricing_summary",
+        "product_type_profit",
         "promo_revenue",
-        "recall_hybrid_vs_exact",
-        "recall_ivf_vs_exact",
-        "recall_ivfpq_vs_exact",
-        "recall_lsh_vs_exact",
-        "recall_nndescent_vs_exact",
-        "recall_pq_vs_exact",
-        "redact_pii",
-        "retention_cohorts",
+        "promo_suppliers",
+        "quality_classifier",
+        "remove_dup_spans",
+        "retrieval_rrf",
         "returned_items",
-        "route_plan",
+        "revenue_growth_mom",
+        "rolling_revenue",
+        "sales_cube",
         "sales_opportunity",
         "sales_rollup",
         "salted_user_join",
-        "selectivity",
+        "sample_balanced_splits",
         "shipping_priority",
-        "split_interval",
-        "sq4_encode",
-        "sq8_asym_encode",
-        "sq8_encode",
-        "stats_category_counts",
-        "text_repetition",
-        "text_stats",
+        "small_qty_revenue",
+        "source_quality_summary",
+        "stream_index_ingest_epoch_parity",
+        "stream_index_ingest_parity",
+        "stream_neardup_parity",
         "tfidf_topk",
-        "top_customers",
+        "token_counts",
         "top_supplier",
-        "user_totals",
+        "user_order_reconciliation",
+        "vocab_counts",
         "volume_shipping",
-        "workload_stats",
+        "waiting_suppliers",
+        "winnow_fingerprints",
+        "winnow_match_pairs",
     }
 )
 

@@ -14,17 +14,19 @@ boundaries are shuffles:
                              routing.py); every later phase reads its
                              query rows from this table
 2. side rule               → ``search_side``: the fused plan while
-                             corpus_rows ≤ routing.fused_rows_bound(dim)
-                             (= knn.bc_rows_bound(dim), where the fused
-                             kernel applies), the shard plan above it
+                             corpus_rows ≤ knn.bc_rows_bound(dim),
+                             where the fused kernel applies; the
+                             shard plan above it. The route is the
+                             reference's logical ladder either way;
+                             only this rule picks the physical plan
 
 Fused plan (``corpus_bc``): ONE ``knn.corpus_broadcast_topk`` pass over
-every route-plan row — the SQ8 code cut to the row's route depth
-(140 for bf, ⌈1.5k⌉ for shard routes) and the exact re-rank in one
-kernel over the broadcast corpus. Every task already holds the whole
-corpus, so a shard route's shards would score the same predicate slice
-the kernel scores; the route sets only the cut depth. Phases 3-6 do
-not run.
+every query row — the SQ8 code cut to one fixed depth,
+max(BF_REFINE_K, ⌈1.5k⌉), and the exact re-rank in one kernel over the
+broadcast corpus. Every task already holds the whole corpus, so a shard
+route's shards would score the same predicate slice the kernel scores;
+the route is not read, and with no plan given none is built. Phases 3-6
+do not run.
 
 Shard plan (``shards``):
 
@@ -687,10 +689,16 @@ SIDE_SHARDS = "shards"
 def search_side(corpus_rows: int, dim: int | None) -> str:
     """Which physical plan :func:`knn_hybrid` runs: the one fused
     corpus-broadcast kernel while the corpus is within
-    ``routing.fused_rows_bound(dim)`` — wherever that kernel applies,
-    the bound the route ladder also applies to type 0 — and the shard
-    fan-out above it. ``plans/explain.py`` reports the same call."""
-    return SIDE_CORPUS_BC if corpus_rows <= routing.fused_rows_bound(dim) else SIDE_SHARDS
+    ``knn.bc_rows_bound(dim)`` — wherever that kernel applies — and the
+    shard fan-out above it. ``plans/explain.py`` reports the same call."""
+    return SIDE_CORPUS_BC if corpus_rows <= knn.bc_rows_bound(dim) else SIDE_SHARDS
+
+
+def fused_refine_k(k: int) -> int:
+    """The fused plan's one code-cut depth: the deeper of the bf
+    branch's ``BF_REFINE_K`` and the shard routes' ⌈1.5k⌉ (150 at
+    k=100), so no route is cut shallower than on the shard plan."""
+    return max(bruteforce_sq8.BF_REFINE_K, int(math.ceil(SHARD_REFINE_MULT * k)))
 
 
 def knn_hybrid(
@@ -711,15 +719,15 @@ def knn_hybrid(
 
     The plan is chosen once per batch by :func:`search_side`:
 
-    - ``corpus_bc`` (corpus within ``routing.fused_rows_bound(dim)``):
-      one ``knn.corpus_broadcast_topk`` pass over every plan row on the
+    - ``corpus_bc`` (corpus within ``knn.bc_rows_bound(dim)``): one
+      ``knn.corpus_broadcast_topk`` pass over every query row on the
       ``("sq8", alpha)`` grid — the bf branch's cached payload. Each row
-      is cut in SQ8 code space to its route's depth (``BF_REFINE_K``
-      for bf, ⌈``SHARD_REFINE_MULT``·k⌉ for shard routes) and re-ranked
+      is cut in SQ8 code space to :func:`fused_refine_k` and re-ranked
       exactly in the same kernel. A shard route's shards cover exactly
       its predicate slice, so every row equals what the shard plan
-      returns (up to ``knn.MERGE_PAD`` tie slack); the route only sets
-      the depth. No index, catalog, assignment or cogroup is built, and
+      returns (up to ``knn.MERGE_PAD`` tie slack). The route is not
+      read: no route plan is built when none is given, and no index,
+      catalog, assignment or cogroup either —
       ``index``/``catalog``/``codes_base`` are ignored.
     - ``shards`` (above the bound): the bf rows take
       ``bruteforce_sq8.knn_sq8_rerank``; the rest are assigned to the
@@ -734,42 +742,39 @@ def knn_hybrid(
     hnsw.hpp:38-40). A given ``plan`` supersedes ``queries``: it is the
     batch's routed query table, and every branch reads its query rows
     from it, so the query source is read once, with no ``queries ⋈
-    plan`` join. ``queries`` is read only to build the plan when none
-    is given.
+    plan`` join. ``queries`` is read only when no plan is given.
     ``codes_base``: persisted SQ8(alpha) codes replica for the bf route
     above the bound (B10, hybrid_graph.cpp:505-524) — the candidate
     scan then reads codes only instead of re-encoding the float column.
     ``catalog``: precomputed ``shard_catalog(index)`` — build-phase
     metadata; pass it so repeated searches of one loaded index skip the
-    distinct-pkey collect. ``corpus_rows``: base row count when known
-    (build-phase stat) — skips two count jobs in the search clock.
+    distinct-pkey collect. ``corpus_rows`` / ``dim``: the base's row
+    count and vector width when known (build-phase stats) — each skips
+    a job in the search clock.
     """
     if corpus_rows is None:
         corpus_rows = base.count()
     if dim is None and corpus_rows:
-        # Derive the vector width once so the routing ladder, the side
-        # rule and the bf branch agree on one bound: a caller threading
-        # dim to only one of them would silently pick different plans.
+        # the side rule, the bf branch and the pooled re-rank all switch
+        # on bc_rows_bound(dim): derive the width once so they agree.
         # One head() job, skipped whenever the caller already knows dim.
         head = base.select("vec").head()
         if head is not None:
             dim = len(head["vec"])
-    if plan is None:
-        plan = routing.route_plan(base, queries, dim=dim).cache()
     if alpha is None:
         alpha = Q.train_alpha(base)
-    pool_k = max(k, int(math.ceil(SHARD_REFINE_MULT * k)))
     if search_side(corpus_rows, dim) == SIDE_CORPUS_BC:
         a = float(alpha)
 
         def enc(m):
             return Q.encode_np(m, a)
 
-        depth = F.when(
-            F.col("route") == routing.ROUTE_BF, F.lit(bruteforce_sq8.BF_REFINE_K)
-        ).otherwise(F.lit(pool_k))
-        return knn.corpus_broadcast_topk(base, plan, k, enc, enc, depth, ("sq8", a))
+        rows = queries if plan is None else plan
+        return knn.corpus_broadcast_topk(base, rows, k, enc, enc, fused_refine_k(k), ("sq8", a))
 
+    if plan is None:
+        plan = routing.route_plan(base, queries).cache()
+    pool_k = max(k, int(math.ceil(SHARD_REFINE_MULT * k)))
     bf_queries = plan.filter(F.col("route") == routing.ROUTE_BF)
     bf_res = bruteforce_sq8.knn_sq8_rerank(
         base, bf_queries, alpha, k=k, codes_base=codes_base, corpus_rows=corpus_rows,

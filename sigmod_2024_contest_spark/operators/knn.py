@@ -47,7 +47,7 @@ from typing import Callable, NamedTuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import quantization as Q
@@ -1091,7 +1091,7 @@ def corpus_broadcast_topk(
     k: int,
     encode_q=None,
     encode_b=None,
-    refine_k: int | Column | None = None,
+    refine_k: int | None = None,
     grid_key="exact",
 ) -> DataFrame:
     """The one corpus-broadcast kernel: the small-corpus plan of the
@@ -1107,13 +1107,10 @@ def corpus_broadcast_topk(
     ``encode_q`` the queries per batch; the task cuts to the top
     ``refine_k`` by code distance, then re-ranks those survivors by
     exact L2 in place (:func:`rerank_exact`) — both phases in one
-    kernel. A Column ``refine_k`` gives every query row its own cut
-    depth: the kernel keeps the batch's deepest cut and truncates each
-    row to its own, so a row's survivors are exactly its fixed-depth
-    cut's (same documented MERGE_PAD tie slack). The query task count
-    is pinned to the session parallelism: an upstream shuffle would
-    otherwise be AQE-coalesced to one small partition (serializing the
-    kernel) and a thin file source under-splits it."""
+    kernel. The query task count is pinned to the session parallelism:
+    an upstream shuffle would otherwise be AQE-coalesced to one small
+    partition (serializing the kernel) and a thin file source
+    under-splits it."""
     spark = base.sparkSession
     bc = cached_corpus_broadcast(
         base, CORPUS_COLS, grid_key, lambda pdf: _ids_vec_payload(pdf, encode_b)
@@ -1122,9 +1119,8 @@ def corpus_broadcast_topk(
         return spark.createDataFrame([], RESULT_SCHEMA)
     quantized = encode_b is not None
     dist = CODE_L2 if quantized else EXACT_L2
-    per_row = quantized and isinstance(refine_k, Column)
-    # the kernel closure must not capture the Column (it does not pickle)
-    fixed_k = None if per_row else (refine_k if quantized else k)
+    out_k = refine_k if quantized else k
+    keep = out_k + MERGE_PAD
 
     def kernel(batches):
         tune_worker_arena()
@@ -1137,12 +1133,6 @@ def corpus_broadcast_topk(
             nq = len(qid)
             if nq == 0:
                 continue
-            if per_row:
-                depth = tbl.column("cut_k").to_numpy(zero_copy_only=False).astype(np.int64)
-                out_k = int(depth.max())
-            else:
-                out_k = fixed_k
-            keep = out_k + MERGE_PAD
             qpred = (
                 tbl.column("query_type").to_numpy(zero_copy_only=False).astype(np.int64),
                 tbl.column("v").to_numpy(zero_copy_only=False).astype(np.float64),
@@ -1159,8 +1149,6 @@ def corpus_broadcast_topk(
                 dist.make(qmat, rows, qid, ids_s), keep,
             )
             _, p2, fin = resolve_topk_rows(best_d, best_p, out_k, dist.sentinel)
-            if per_row:
-                fin &= np.arange(fin.shape[1])[None, :] < depth[:, None]
             qrow, col = np.nonzero(fin)  # row-major ⇒ per-query rank order
             pos = p2[fin]
             if quantized:
@@ -1172,8 +1160,7 @@ def corpus_broadcast_topk(
                 [pa.array(qid[qrow]), pa.array(ids_s[pos]), pa.array(rnk)], schema=_RESULT_TYPE
             )
 
-    cut_col = [refine_k.alias("cut_k")] if per_row else []
-    qdf = queries.select(*QUERY_COLS, *cut_col)
+    qdf = queries.select(*QUERY_COLS)
     target = spark.sparkContext.defaultParallelism
     if qdf.rdd.getNumPartitions() != target:
         qdf = qdf.repartition(target)

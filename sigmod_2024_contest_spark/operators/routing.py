@@ -39,32 +39,6 @@ ROUTE_CAT_GRAPH = "cat_graph"
 ROUTE_TIME_GRAPH = "time_graph"
 ROUTE_GLOBAL_GRAPH = "global_graph"
 
-# Cost-based addition to the reference ladder: a type-0 query has no
-# predicate, so its "graph" route fans out to EVERY decile shard. On a
-# corpus small enough for the fused corpus-broadcast kernel (SQ8 cut +
-# exact re-rank in one zero-shuffle pass) ``engine.knn_hybrid`` answers
-# every route with that kernel, and type 0 takes the bf route there
-# (cut depth BF_REFINE_K); above it type 0 keeps the reference's
-# fan-out. Both use this one bound: exactly fused-kernel applicability,
-# ``knn.bc_rows_bound(dim)`` — byte-based when the caller passes the
-# vector width (route_plan(dim=...)), a row count otherwise. Callers
-# must pass the SAME dim to route_plan and to the engine so the ladder
-# and the engine agree on the plan.
-#
-# Measured (tools/stress_scale.py N 2048 2, 4 vCPU, local[4], three
-# rounds, warm rep of each): 300k×64 — fused 4.00/3.29/3.36 s vs shard
-# plan 5.76/5.31/5.96 s; 500k×64 — fused 4.52/4.83/5.02 s vs shard plan
-# 8.53/6.23/7.50 s; recall 1.0 on both. The fused kernel wins up to the
-# point where it stops applying; the shard plan serves larger corpora.
-def fused_rows_bound(dim: int | None) -> int:
-    """Max corpus rows for the fused plan: up to it ``engine.knn_hybrid``
-    runs one corpus-broadcast kernel for every route and a type-0 query
-    routes to bf; above it the shard plan runs and type 0 fans out to
-    the decile shards."""
-    from .knn import bc_rows_bound
-
-    return bc_rows_bound(dim)
-
 # ts histogram resolution for routing selectivity: bin mass ≈ 0.1 % of
 # the corpus — far below every routing threshold — while keeping the
 # stats table bounded at |cats|×1000 rows for any corpus size (the
@@ -77,7 +51,7 @@ def route_plan(
     queries: DataFrame,
     ts_bins: int | None = ROUTING_TS_BINS,
     stats: tuple[DataFrame, int] | None = None,
-    dim: int | None = None,
+    dim: int | None = None,  # kept for perfbench only; ignored
 ) -> DataFrame:
     """The routed query table: the ``queries`` columns plus
     ``sel_num``, ``n_total`` and ``route`` — one narrow pass over the
@@ -88,22 +62,17 @@ def route_plan(
     sel < bf_thr → brute force over the predicate slice;
     type 1/3 above threshold → that category's graph;
     type 2 above threshold → decile graphs (SplitInterval downstream);
-    type 0 → global/decile graphs; type 0 takes bf instead while the
-    corpus is within the fused-plan bound ``fused_rows_bound(dim)``.
-    Within that same bound ``engine.knn_hybrid`` answers every route
-    with its one fused kernel, so there the route sets only a row's
-    code-cut depth.
+    type 0 → global/decile graphs.
+
+    The route is the reference's logical ladder only: which physical
+    plan answers it is ``engine.search_side``'s choice, made from the
+    corpus size alone.
     """
     sel = selectivity(base, queries, ts_bins=ts_bins, stats=stats)
     frac = F.col("sel_num").cast("double") / F.col("n_total").cast("double")
     thr = F.when(F.col("query_type") == 3, F.lit(BF_THR_T3)).otherwise(F.lit(BF_THR))
-    bound = fused_rows_bound(dim)
     route = (
         F.when(frac < thr, F.lit(ROUTE_BF))
-        .when(
-            (F.col("query_type") == 0) & (F.col("n_total") <= bound),
-            F.lit(ROUTE_BF),
-        )
         .when(F.col("query_type").isin(1, 3), F.lit(ROUTE_CAT_GRAPH))
         .when(F.col("query_type") == 2, F.lit(ROUTE_TIME_GRAPH))
         .otherwise(F.lit(ROUTE_GLOBAL_GRAPH))
@@ -111,7 +80,7 @@ def route_plan(
     return sel.withColumn("route", route)
 
 
-def route_plan_sql(ts_bins: int | None = ROUTING_TS_BINS, dim: int | None = None) -> str:
+def route_plan_sql(ts_bins: int | None = ROUTING_TS_BINS) -> str:
     from .stats import selectivity_sql
 
     return f"""
@@ -120,7 +89,6 @@ SELECT query_id, query_type, sel_num, n_total,
        CASE
          WHEN sel_num::DOUBLE / n_total::DOUBLE <
               (CASE WHEN query_type = 3 THEN {BF_THR_T3} ELSE {BF_THR} END) THEN '{ROUTE_BF}'
-         WHEN query_type = 0 AND n_total <= {fused_rows_bound(dim)} THEN '{ROUTE_BF}'
          WHEN query_type IN (1, 3) THEN '{ROUTE_CAT_GRAPH}'
          WHEN query_type = 2 THEN '{ROUTE_TIME_GRAPH}'
          ELSE '{ROUTE_GLOBAL_GRAPH}'

@@ -29,8 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators import engine, routing
-from ..operators.bruteforce_sq8 import BF_REFINE_K
+from ..operators import engine, knn, routing
 from ..operators.engine import MAX_NODES_PER_GRAPH, SHARD_REFINE_MULT
 from . import workload
 
@@ -81,8 +80,8 @@ def explain_routes(
 
     ``corpus_bc`` side: no shard is probed (n_shards=0); the fused
     kernel scores the predicate slice (rows_scanned=sel_num) and cuts it
-    to the route's depth (est_candidates=min(sel, depth): BF_REFINE_K
-    for bf, ceil(1.5k) for shard routes).
+    to its one depth (est_candidates=min(sel, engine.fused_refine_k(k)),
+    whatever the route).
     ``shards`` side: bf routes report n_shards=0, rows_scanned=0 and
     est_candidates=sel (the bf GEMM scans the predicate slice exactly
     once); shard routes report the summed row counts of their shards
@@ -94,7 +93,7 @@ def explain_routes(
     base = base_vectors(spark, sf_dir)
     queries = workload.queries_df(spark, sf_dir)
     dim = len(base.select("vec").head()["vec"])
-    plan = routing.route_plan(base, queries, dim=dim)
+    plan = routing.route_plan(base, queries)
     counts = _slice_counts(base, cat_thr)
     shards = {p: math.ceil(c / max_nodes) for p, c in counts.items()}
     # deciles partition the corpus: their counts sum to its rows
@@ -122,6 +121,7 @@ def explain_routes(
         return [p for p in cand if p in shards]
 
     refine_k = int(math.ceil(SHARD_REFINE_MULT * k))
+    fused_k = engine.fused_refine_k(k)
 
     def kernel(pdfs):
         for pdf in pdfs:
@@ -133,8 +133,7 @@ def explain_routes(
                 t = int(row["query_type"])
                 sel = int(row["sel_num"])
                 if side == engine.SIDE_CORPUS_BC:
-                    depth = BF_REFINE_K if row["route"] == routing.ROUTE_BF else refine_k
-                    n_sh, rows, est = 0, sel, min(sel, depth)
+                    n_sh, rows, est = 0, sel, min(sel, fused_k)
                 else:
                     pref = prefixes(row)
                     n_sh = sum(shards[p] for p in pref)
@@ -194,18 +193,18 @@ def render_route_report(
     base = base_vectors(spark, sf_dir)
     counts = _slice_counts(base, routing.CAT_GRAPH_THR)
     dim = len(base.select("vec").first()[0])
-    fused_rows = routing.fused_rows_bound(dim)
+    fused_rows = knn.bc_rows_bound(dim)
     n_rows = sum(c for p, c in counts.items() if p.startswith("dec:"))
     lines = [
         f"ROUTE PLAN  k={k}  sf_dir={sf_dir}",
         f"  thresholds: bf<{routing.BF_THR} (type3 <{routing.BF_THR_T3}),"
         f" cat-graph>={routing.CAT_GRAPH_THR}, max_nodes/shard={MAX_NODES_PER_GRAPH}",
         f"  fused-plan bound: corpus <= {fused_rows} rows at dim={dim} "
-        f"(routing.fused_rows_bound = knn.bc_rows_bound: the corpus "
-        f"broadcast cap of the fused kernel)",
+        f"(knn.bc_rows_bound: the corpus broadcast cap of the fused kernel)",
         f"  side: {engine.search_side(n_rows, dim)} (corpus {n_rows} rows; "
-        f"{engine.SIDE_CORPUS_BC} = one fused SQ8 kernel, the route sets "
-        f"only the cut depth; {engine.SIDE_SHARDS} = bf branch + shard fan-out)",
+        f"{engine.SIDE_CORPUS_BC} = one fused SQ8 kernel cut to "
+        f"{engine.fused_refine_k(k)} rows for every route; "
+        f"{engine.SIDE_SHARDS} = bf branch + shard fan-out)",
         "",
         f"  {'route':<14}{'type':>4}{'queries':>9}{'sel_ppm':>18}"
         f"{'fanout':>8}{'rows':>16}{'candidates':>12}",

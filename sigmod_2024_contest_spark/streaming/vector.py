@@ -114,9 +114,8 @@ def knn_stream_indexed(
         alpha = Q.train_alpha(base)
     stats = stats_ops.corpus_stats(base, routing.ROUTING_TS_BINS)
     corpus_rows = stats[1]
-    # dim once per stream (not per micro-batch): threads the same
-    # bc_rows_bound(dim) to the routing ladder and the engine's bf
-    # branch — the lockstep invariant in routing.py
+    # dim once per stream (not per micro-batch): the engine's side rule
+    # reads bc_rows_bound(dim)
     head = base.select("vec").head()
     dim = len(head["vec"]) if head is not None else None
     catalog = None
@@ -128,7 +127,7 @@ def knn_stream_indexed(
     def answer(batch_df: DataFrame, batch_id: int) -> None:
         # the batch's routed query table, computed once and read by
         # every engine branch; released once the batch is written
-        plan = routing.route_plan(base, batch_df, stats=stats, dim=dim).persist()
+        plan = routing.route_plan(base, batch_df, stats=stats).persist()
         res = engine.knn_hybrid(
             spark, base, batch_df, k=k, index=index, plan=plan, alpha=alpha,
             catalog=catalog, corpus_rows=corpus_rows, dim=dim,

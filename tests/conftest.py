@@ -33,13 +33,14 @@ def spark():
 
 def force_shard_plan(monkeypatch) -> None:
     """Pin ``engine.knn_hybrid`` to its shard plan for the rest of the
-    test: the fused-plan bound ``routing.fused_rows_bound`` becomes 0
-    rows, so every corpus lies above it (and the route ladder sends
-    type 0 to the decile fan-out). The bf branch and the pooled re-rank
-    keep their own ``knn.bc_rows_bound`` plan choice."""
-    from sigmod_2024_contest_spark.operators import routing
+    test: the broadcast bound ``knn.bc_rows_bound`` becomes 0 rows, so
+    every corpus lies above it. The engine then runs the pairing it
+    runs above the bound in production: the bf branch's query-broadcast
+    scan and the pooled re-rank's window + join plan beside the shard
+    cogroup. (The exact scan keeps its own row-count gate.)"""
+    from sigmod_2024_contest_spark.operators import knn
 
-    monkeypatch.setattr(routing, "fused_rows_bound", lambda dim: 0)
+    monkeypatch.setattr(knn, "bc_rows_bound", lambda dim: 0)
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -108,7 +108,7 @@ def test_explain_corpus_bc_side(spark):
     assert engine.search_side(base.count(), dim) == engine.SIDE_CORPUS_BC
     sel = {
         r["query_id"]: r["sel_num"]
-        for r in routing.route_plan(base, queries, dim=dim).collect()
+        for r in routing.route_plan(base, queries).collect()
     }
     rows = explain_routes(spark, SF_SMOKE).collect()
     assert {r["query_id"] for r in rows} == set(sel)

@@ -6,6 +6,8 @@ reference's own methodology (utils.h:224-253, SURVEY §5)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 from conftest import SF_CORRECT, SF_SMOKE, force_shard_plan
 
@@ -584,14 +586,32 @@ def _outside_cached(plan_text: str) -> list[str]:
     return out
 
 
+def _query_id_join_lookups(lines: list[str]) -> list[str]:
+    """For every join keyed on query_id in ``lines`` (an executed plan's
+    lines outside cached relations), its right child's first scan."""
+    out = []
+    for i, ln in enumerate(lines):
+        if not re.search(r"Join \[[^\]]*query_id", ln):
+            continue
+        col = len(ln) - len(ln.lstrip(" :|+-"))
+        right = next(
+            j for j in range(i + 1, len(lines))
+            if lines[j][col : col + 3] == "+- "
+            and len(lines[j]) - len(lines[j].lstrip(" :|+-")) == col + 3
+        )
+        out.append(next(x for x in lines[right:] if "Scan" in x).strip(" :|+-"))
+    return out
+
+
 def test_knn_hybrid_reads_queries_only_through_the_route_plan(spark, tmp_path, monkeypatch):
     """The persisted route plan is the batch's one query table: the
     route plan itself is narrow (no exchange, no join), and the engine
     reads the query source only through the plan's InMemoryTableScan,
-    with no join keyed on query_id."""
+    with no ``queries ⋈ plan`` join. On the shard plan the only joins
+    keyed on query_id are the window re-ranks' query-vector lookups:
+    each reads just (query_id, qvec) from the plan, plus ``route`` where
+    the lookup is the bf branch's and filters the plan to bf rows."""
     force_shard_plan(monkeypatch)
-    import re
-
     from sigmod_2024_contest_spark.operators import routing
 
     base = base_vectors(spark, SF_SMOKE)
@@ -612,7 +632,10 @@ def test_knn_hybrid_reads_queries_only_through_the_route_plan(spark, tmp_path, m
     assert "InMemoryTableScan" in text
     outside = _outside_cached(text)
     assert not [ln for ln in outside if "route_plan_queries" in ln], text
-    assert not [ln for ln in outside if re.search(r"Join \[[^\]]*query_id", ln)], text
+    for scan in _query_id_join_lookups(outside):
+        assert re.fullmatch(
+            r"InMemoryTableScan \[query_id#\d+L, qvec#\d+(, route#\d+)?\].*", scan
+        ), text
     plan.unpersist()
 
 
@@ -622,10 +645,10 @@ def _ranked(df) -> list[tuple[int, int, int]]:
 
 def test_fused_and_shard_plans_identical(spark, monkeypatch):
     """Below the fused-plan bound one corpus-broadcast kernel answers
-    every route; forced onto the shard plan, the same persisted route
-    plan goes through the bf branch + shard cogroup + pooled re-rank.
-    Both give the same (query_id, id, rnk) rows, and both equal the
-    exact scan."""
+    every row at one cut depth; forced onto the shard plan, the same
+    persisted route plan goes through the bf branch's query-broadcast
+    scan + shard cogroup + window re-rank. Both give the same
+    (query_id, id, rnk) rows, and both equal the exact scan."""
     from sigmod_2024_contest_spark.functions import quantization as Q
     from sigmod_2024_contest_spark.operators import routing
 
@@ -635,7 +658,7 @@ def test_fused_and_shard_plans_identical(spark, monkeypatch):
         n = base.count()
         dim = len(base.select("vec").head()["vec"])
         alpha = Q.train_alpha(base)
-        plan = routing.route_plan(base, q, dim=dim).persist()
+        plan = routing.route_plan(base, q).persist()
         routes = {r["route"] for r in plan.select("route").distinct().collect()}
         assert routes - {routing.ROUTE_BF}, routes  # shard routes are present
         kw = dict(plan=plan, alpha=alpha, corpus_rows=n, dim=dim)
@@ -677,16 +700,72 @@ def test_fused_knn_hybrid_job_budget(spark):
         )
         out["rows"] = out["df"].collect()
 
-    plan = routing.route_plan(base, q, dim=dim).persist()
+    plan = routing.route_plan(base, q).persist()
     run()  # the first batch ships the corpus payload
     plan.unpersist()
-    plan = routing.route_plan(base, q, dim=dim).persist()
+    plan = routing.route_plan(base, q).persist()
     assert _jobs_run(spark, run) <= 3
     assert len(out["rows"]) > 0
     text = out["df"]._jdf.queryExecution().executedPlan().toString()
     for node in ("FlatMapCoGroupsInArrow", "BroadcastExchange"):
         assert node not in text, (node, text)
     plan.unpersist()
+
+
+def _refuse(*_a, **_kw):
+    raise AssertionError("called on a plan that must not call it")
+
+
+def test_shard_plan_broadcasts_no_corpus(spark, monkeypatch):
+    """Above the broadcast bound the shard plan pairs the shard cogroup
+    with the bf branch's query-broadcast scan and the pooled re-rank's
+    window + join: no corpus-broadcast kernel and no corpus payload run
+    anywhere in the search, and the rows equal the exact scan's."""
+    from sigmod_2024_contest_spark.operators import routing
+
+    base = base_vectors(spark, SF_SMOKE)
+    q = workload.queries_df(spark, SF_SMOKE)
+    want = _ranked(knn.knn_exact_arrow(spark, base, q))
+    # the route plan ships its stats snapshot through the same cache
+    plan = routing.route_plan(base, q).persist()
+    force_shard_plan(monkeypatch)
+    monkeypatch.setattr(knn, "corpus_broadcast_topk", _refuse)
+    monkeypatch.setattr(knn, "cached_corpus_broadcast", _refuse)
+    assert _ranked(engine.knn_hybrid(spark, base, q, plan=plan)) == want
+    plan.unpersist()
+
+
+def test_fused_plan_builds_no_route_plan(spark, monkeypatch):
+    """Below the bound the fused kernel never reads the route, so with
+    no plan given none is built: no route plan, no selectivity pass."""
+    from sigmod_2024_contest_spark.operators import routing, stats
+
+    base = base_vectors(spark, SF_SMOKE)
+    q = workload.queries_df(spark, SF_SMOKE)
+    want = _ranked(knn.knn_exact_arrow(spark, base, q))
+    monkeypatch.setattr(routing, "route_plan", _refuse)
+    monkeypatch.setattr(stats, "selectivity", _refuse)
+    assert _ranked(engine.knn_hybrid(spark, base, q, plan=None)) == want
+
+
+def test_stress_corpus_independent_of_row_count(spark):
+    """The stress corpus derives every value from the row id: rows
+    0..999 are the same whether 1000 or 4000 rows are drawn (so
+    whatever the partition boundaries fall on)."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.stress_scale import synth_base
+
+    def rows(n):
+        df = synth_base(spark, n).filter("id < 1000")
+        return sorted((r["id"], r["category"], r["ts"], tuple(r["vec"])) for r in df.collect())
+
+    small, big = rows(1000), rows(4000)
+    assert len(small) == 1000
+    assert small == big
+    assert {c for _, c, _, _ in small} == set(range(12))
 
 
 def test_time_graph_probes_the_decile_holding_r(spark, monkeypatch):
@@ -715,7 +794,7 @@ def test_time_graph_probes_the_decile_holding_r(spark, monkeypatch):
                       "qvec": [vecs[7]]}),
         "query_id long, query_type int, v int, l double, r double, qvec array<float>",
     )
-    plan = routing.route_plan(base, queries, dim=dim).persist()
+    plan = routing.route_plan(base, queries).persist()
     assert [r["route"] for r in plan.collect()] == [routing.ROUTE_TIME_GRAPH]
     splan = engine._shard_plan(base, routing.CAT_GRAPH_THR, engine.MAX_NODES_PER_GRAPH)
     probed = {r["pkey"] for r in engine._assignments(

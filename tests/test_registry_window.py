@@ -40,59 +40,47 @@ ROUND8_WINDOW = {
 
 
 WINDOW_HEAD = [
-    # r14: five FORCED names (rotate_window.py --force). The r13
-    # winnowing rewrite and BPE de-memoization landed AFTER the r13
-    # rotation (their green rows prove the old code — r13 verdict item
-    # 3's list), and the epoch parity's staging/audit/fold were rebuilt
-    # in r14 (rows bit-identical, but the driver row should be on the
-    # new code).
-    "stream_index_ingest_epoch_parity",
-    "winnow_fingerprints",
-    "winnow_match_pairs",
-    "bpe_train",
-    "bpe_encode_counts",
+    # r15: three FORCED names (rotate_window.py --force). The route
+    # ladder lost its type-0 clause: type-0 queries leave the bf subset,
+    # so route_plan's and knn_hybrid_bf_exact's rows changed, and
+    # knn_hybrid's fused plan no longer reads the route.
+    "route_plan",
+    "knn_hybrid",
+    "knn_hybrid_bf_exact",
 ]
 
-FORCED = [
-    "winnow_fingerprints", "winnow_match_pairs", "bpe_train",
-    "bpe_encode_counts", "stream_index_ingest_epoch_parity",
-]
+FORCED = ["route_plan", "knn_hybrid_bf_exact", "knn_hybrid"]
 
 
-def test_round14_window_is_exactly_the_planned_set():
-    """First 50 registry keys == the five forced names + the stalest
-    r11-green block: no r13-green name except the forced epoch parity
-    re-occupies a slot, and every r14-build-path parity entry is in."""
+def test_round15_window_is_exactly_the_planned_set():
+    """First 50 registry keys == the three forced names + the stalest
+    block: no r14-green name except the forced three re-occupies a
+    slot, and every r14-green name left out waits in prior-green."""
     first = list(api._REGISTRY)[: api._DRIVER_WINDOW]
     assert len(first) == 50
-    assert first[:5] == WINDOW_HEAD
-    for name in (
-        "index_upsert_parity", "index_compaction_parity",
-        "stream_index_ingest_parity", "stream_neardup_parity",
-    ):
-        assert name in first  # r14 build-path changes get driver rows
+    assert first[:3] == WINDOW_HEAD
     import json
 
-    r13 = {
+    r14 = {
         k
-        for k, v in json.load(open(os.path.join(ROOT, "CORRECTNESS_r13.json"))).items()
+        for k, v in json.load(open(os.path.join(ROOT, "CORRECTNESS_r14.json"))).items()
         if v.get("err") is None
     }
-    assert (r13 - set(FORCED)).isdisjoint(first)
-    assert r13 - set(FORCED) <= set(api._PRIOR_ROUND_GREEN)
+    assert (r14 - set(FORCED)).isdisjoint(first)
+    assert r14 - set(FORCED) <= set(api._PRIOR_ROUND_GREEN)
 
 
-def test_rotate_window_tool_reproduces_r14_window():
-    """On the real r1-r13 artifacts, the live registry, and the
+def test_rotate_window_tool_reproduces_r15_window():
+    """On the real r1-r14 artifacts, the live registry, and the
     declared force list the tool must propose exactly the committed
-    r14 lists — the rotation stays mechanical, not hand-curated."""
+    r15 lists — the rotation stays mechanical, not hand-curated."""
     import sys
 
     sys.path.insert(0, os.path.join(ROOT, "tools"))
     from rotate_window import load_green_rounds, plan_next_window
 
-    rounds = {k: v for k, v in load_green_rounds(ROOT).items() if k <= 13}
-    assert max(rounds) == 13
+    rounds = {k: v for k, v in load_green_rounds(ROOT).items() if k <= 14}
+    assert max(rounds) == 14
     nxt, prior = plan_next_window(
         list(api._REGISTRY), rounds, window=50, force=tuple(FORCED)
     )

@@ -30,20 +30,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def synth_base(spark, n_rows: int, dim: int = 64):
-    """Distributed synthetic corpus (no driver-side data): rand()
-    columns stay executor-side. Category 0/1 get 30%/12% of rows
-    (index-worthy), the rest spread ~5.8% each."""
+    """Distributed synthetic corpus (no driver-side data). Every value
+    is a hash of the row id (``xxhash64(id, salt[, j])``), so a row is
+    the same whatever the partition count, the cpu count or ``n_rows``.
+    Category 0/1 get 30%/12% of rows (index-worthy), the rest spread
+    ~5.8% each."""
     from pyspark.sql import functions as F
 
+    def unit(*salt):
+        # uniform in [0, 1): the hash's low 53 bits
+        h = F.xxhash64(F.col("id"), *map(F.lit, salt))
+        return F.pmod(h, F.lit(1 << 53)) / float(1 << 53)
+
+    u = unit(1)
     return spark.range(n_rows).select(
         F.col("id"),
-        F.when(F.rand(1) < 0.3, 0)
-        .when(F.rand(1) < 0.42, 1)
-        .otherwise((F.floor(F.rand(2) * 10) + 2).cast("int"))
+        F.when(u < 0.3, 0)
+        .when(u < 0.42, 1)
+        .otherwise((F.floor(unit(2) * 10) + 2).cast("int"))
         .cast("int")
         .alias("category"),
-        F.rand(3).alias("ts"),
-        F.transform(F.sequence(F.lit(1), F.lit(dim)), lambda _: F.rand(4) * 2 - 1)
+        unit(3).alias("ts"),
+        F.transform(F.sequence(F.lit(1), F.lit(dim)), lambda j: unit(4, j) * 2 - 1)
         .cast("array<float>")
         .alias("vec"),
     )
