@@ -2106,14 +2106,18 @@ register(
 # comes first; the remainder keep their original order. Across every
 # two consecutive rounds each entry earns at least one driver hash row.
 #
-# Round-15 window (rotate_window.py plan with `--force
-# route_plan,knn_hybrid_bf_exact,knn_hybrid`, verbatim): the three
-# FORCED names first — the route ladder lost its type-0 clause (type-0
-# queries now route to the decile fan-out, so route_plan's rows and
-# knn_hybrid_bf_exact's bf subset changed) and knn_hybrid's fused plan
-# now cuts every row at one depth without reading the route — then the
-# stalest entries (never-green, then oldest-green). Everything
-# displaced waits in _PRIOR_ROUND_GREEN on its newest green row.
+# Round-16 window (rotate_window.py plan with `--force
+# route_plan,knn_hybrid,knn_hybrid_bf_exact,knn_bruteforce,
+# knn_declarative,knn_sq8_rerank,knn_asym_rerank,knn_sq4_rerank,knn_auto`,
+# verbatim): the nine FORCED names first, then the stalest entries
+# (never-green, then oldest-green). No driver artifact has landed since
+# r14, so the three names the route ladder change forced in round 15
+# (route_plan, knn_hybrid, knn_hybrid_bf_exact) are still proven only on
+# old code; the other six run the brute-force plans whose side rule is
+# now the one broadcast bound (the exact scan lost its query-count
+# gate; the quantized scans and knn_auto lost their plan-forcing
+# arguments). Everything displaced waits in _PRIOR_ROUND_GREEN on its
+# newest green row.
 #
 # STANDING OBLIGATION (every round): run tools/rotate_window.py after
 # the round's CORRECTNESS artifact lands and paste its two literals —
@@ -2131,6 +2135,12 @@ _CHECK_FIRST: list[str] = [
     "route_plan",
     "knn_hybrid",
     "knn_hybrid_bf_exact",
+    "knn_auto",
+    "knn_bruteforce",
+    "knn_declarative",
+    "knn_sq8_rerank",
+    "knn_asym_rerank",
+    "knn_sq4_rerank",
     "embed_project",
     "ann_ivf_topk",
     "recall_lsh_vs_exact",
@@ -2140,7 +2150,6 @@ _CHECK_FIRST: list[str] = [
     "recall_pq_vs_exact",
     "knn_ivfpq_rerank",
     "recall_ivfpq_vs_exact",
-    "knn_auto",
     "recall_nndescent_vs_exact",
     "workload_stats",
     "events_windowed_counts",
@@ -2157,17 +2166,12 @@ _CHECK_FIRST: list[str] = [
     "pricing_summary",
     "top_customers",
     "power_users_daily_coverage",
-    "knn_bruteforce",
-    "knn_declarative",
     "stats_category_counts",
     "selectivity",
     "split_interval",
     "sq8_encode",
     "sq8_asym_encode",
     "sq4_encode",
-    "knn_sq8_rerank",
-    "knn_asym_rerank",
-    "knn_sq4_rerank",
     "text_stats",
     "text_repetition",
     "lang_id",

@@ -71,7 +71,6 @@ def knn_asym_rerank(
     k: int = workload.K,
     refine_k: int = BF_REFINE_K,
     batch_rows: int | None = None,
-    force_scan: bool = False,
     corpus_rows: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
@@ -91,7 +90,6 @@ def knn_asym_rerank(
         refine_k,
         batch_rows=batch_rows,
         corpus_rows=corpus_rows,
-        force_scan=force_scan,
         dim=dim,
     )
 
@@ -104,7 +102,6 @@ def knn_sq4_rerank(
     k: int = workload.K,
     refine_k: int = BF_REFINE_K,
     batch_rows: int | None = None,
-    force_scan: bool = False,
     corpus_rows: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
@@ -123,7 +120,6 @@ def knn_sq4_rerank(
         refine_k,
         batch_rows=batch_rows,
         corpus_rows=corpus_rows,
-        force_scan=force_scan,
         dim=dim,
     )
 

@@ -50,7 +50,6 @@ def quant_rerank(
     batch_rows: int | None = None,
     codes_base: DataFrame | None = None,
     corpus_rows: int | None = None,
-    force_scan: bool = False,
     dim: int | None = None,
 ) -> DataFrame:
     """The one quantized brute force (SQ8, asym, SQ4): a code-distance
@@ -66,7 +65,7 @@ def quant_rerank(
     Side rule (the whole family): ``corpus_rows <= knn.bc_rows_bound(dim)``
     takes the corpus-broadcast kernel (``knn.corpus_broadcast_topk`` —
     both phases in one kernel over query partitions, zero shuffles).
-    Above it, or with ``force_scan``, the query-broadcast scan kernel
+    Above it the query-broadcast scan kernel
     (``knn.query_broadcast_topk``) cuts each partition to refine_k and
     ``knn.exact_rerank_pooled`` pools the partitions' candidates to
     refine_k per query and re-ranks them — nq×refine_k rows,
@@ -74,7 +73,7 @@ def quant_rerank(
     spark = base.sparkSession
     if corpus_rows is None:
         corpus_rows = (codes_base if codes_base is not None else base).count()
-    if corpus_rows <= knn.bc_rows_bound(dim) and not force_scan:
+    if corpus_rows <= knn.bc_rows_bound(dim):
         # codes re-derive from the broadcast floats (bit-identical to
         # the persisted ones), so codes_base is a scan-plan artifact
         return knn.corpus_broadcast_topk(
@@ -112,7 +111,6 @@ def knn_sq8_rerank(
     batch_rows: int | None = None,
     codes_base: DataFrame | None = None,
     corpus_rows: int | None = None,
-    force_scan: bool = False,
     dim: int | None = None,
 ) -> DataFrame:
     """(query_id, id, rnk) — exact-reranked SQ8 brute force, all 4
@@ -122,8 +120,7 @@ def knn_sq8_rerank(
     (the reference's operating assumption). ``codes_base``
     (id, category, ts, codes) switches the scan plan to the
     persisted-codes scan (module docstring); its codes MUST be
-    SQ8(alpha) of the same rows. ``force_scan`` pins the scan plan
-    (tests, ablations)."""
+    SQ8(alpha) of the same rows. Side rule: :func:`quant_rerank`."""
     a = float(alpha)
 
     def enc(m):
@@ -131,7 +128,7 @@ def knn_sq8_rerank(
 
     return quant_rerank(
         base, queries, enc, enc, ("sq8", a), k, refine_k, batch_rows=batch_rows,
-        codes_base=codes_base, corpus_rows=corpus_rows, force_scan=force_scan, dim=dim,
+        codes_base=codes_base, corpus_rows=corpus_rows, dim=dim,
     )
 
 

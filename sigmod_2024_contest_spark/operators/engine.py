@@ -810,16 +810,13 @@ def knn_hybrid(
     # K12 exact re-rank (hybrid_graph.cpp:207-228 / quant reorder):
     # the index is codes-only, so candidate ranks are approximate —
     # pool to nq × 1.5k code-space candidates (independent of shard
-    # fan-out) and rank the pooled rows by exact L2.
-    # knn.exact_rerank_pooled picks the physical plan: on a
-    # broadcastable base the pool cut and the re-rank fuse into ONE
-    # kernel behind a single groupBy (no row_number window, no second
-    # candidate shuffle); on a 100 TB base it is the window pool + the
-    # candidates-only join. No dedup shuffle either way: (query_id, id)
-    # pairs are unique by construction — cat-routed queries search only
-    # their category slice, decile-routed ones only deciles (which
-    # partition the corpus), and sub-shards split disjointly by
-    # id % nshards.
+    # fan-out) and rank the pooled rows by exact L2 with
+    # knn.exact_rerank_pooled, the window pool + candidates-only join
+    # that never broadcasts the corpus. No dedup shuffle:
+    # (query_id, id) pairs are unique by construction — cat-routed
+    # queries search only their category slice, decile-routed ones only
+    # deciles (which partition the corpus), and sub-shards split
+    # disjointly by id % nshards.
     graph_res = knn.exact_rerank_pooled(
         base, plan, cands, k, pool_k, corpus_rows=corpus_rows, dim=dim
     )
@@ -827,17 +824,13 @@ def knn_hybrid(
 
 
 # Batch-level plan choice for knn_auto: below this many scan FLOPs
-# (n_queries × corpus_rows × dim) the exact scan answers the whole
-# batch faster than the routed engine can pay its fixed costs (route
-# plan, shard assignment, cogroup dispatch, pooled re-rank — each a
-# multi-job constant that does NOT shrink with batch size). Measured r6
-# on this host (BENCH_r06 stress + contest pairs): 2048 queries ×
-# 500k × 64 = 6.6e10 FLOPs → scan 5.9 s vs engine 33.1 s (scan wins);
-# 100k × 20k × 100 = 2.0e11 → scan 72.1 s vs engine 43.1 s (engine
-# wins). 1e11 splits the two measured points; the decision is
-# order-of-magnitude robust — at 100 TB the product is astronomically
-# above any threshold, so the engine always serves real corpora and
-# this rule only protects small interactive batches.
+# (n_queries × corpus_rows × dim) the exact scan answers the batch,
+# above it the routed engine. The split point was measured against the
+# earlier beam-search engine (2048 × 500k × 64 = 6.6e10: scan 5.9 s vs engine 33.1 s;
+# 100k × 20k × 100 = 2.0e11: scan 72.1 s vs engine 43.1 s). Below
+# knn.bc_rows_bound the engine now runs the fused kernel, which costs
+# about what the exact scan does, so there the rule only trades like for
+# like; above the bound it still awaits a measurement of the shard plan.
 SCAN_FLOPS_BOUND = 1e11
 
 
@@ -849,7 +842,6 @@ def knn_auto(
     n_queries: int | None = None,
     corpus_rows: int | None = None,
     dim: int | None = None,
-    scan_flops_bound: float = SCAN_FLOPS_BOUND,
     **hybrid_kwargs,
 ) -> DataFrame:
     """Cost-based batch entry: the exact scan for batches too small to
@@ -862,7 +854,8 @@ def knn_auto(
     the decision its cost model would make first if batch sizes varied.
     Pass ``n_queries``/``corpus_rows``/``dim`` when known to skip the
     count/head jobs; ``hybrid_kwargs`` (index, plan, alpha, catalog,
-    codes_base) forward to the engine branch untouched."""
+    codes_base) forward to the engine branch untouched.
+    ``SCAN_FLOPS_BOUND`` is read at call time."""
     if corpus_rows is None:
         corpus_rows = base.count()
     if n_queries is None:
@@ -872,11 +865,8 @@ def knn_auto(
         if head is not None:
             dim = len(head["vec"])
     flops = float(n_queries) * float(corpus_rows) * float(dim or 100)
-    if flops < scan_flops_bound:
-        return knn.knn_exact_arrow(
-            spark, base, queries, k=k, corpus_rows=corpus_rows, dim=dim,
-            n_queries=n_queries,
-        )
+    if flops < SCAN_FLOPS_BOUND:
+        return knn.knn_exact_arrow(spark, base, queries, k=k, corpus_rows=corpus_rows, dim=dim)
     return knn_hybrid(
         spark, base, queries, k=k, corpus_rows=corpus_rows, dim=dim, **hybrid_kwargs
     )

@@ -14,12 +14,14 @@ strategies for the same logical op:
    the final window.
 
 2. ``knn_exact_arrow`` — the Arrow path, one of two plans picked by
-   :func:`exact_plan_is_corpus_bc`:
+   the one broadcast bound, ``corpus_rows <= bc_rows_bound(dim)``:
 
-   - the **corpus-broadcast kernel** (:func:`corpus_broadcast_topk`):
-     the id-sorted corpus ships to every query partition and each task
-     answers its queries completely — output is final;
-   - the **query-broadcast scan kernel** (:func:`query_broadcast_topk`):
+   - within it, the **corpus-broadcast kernel**
+     (:func:`corpus_broadcast_topk`): the id-sorted corpus ships to
+     every query partition and each task answers its queries
+     completely — output is final;
+   - above it, the **query-broadcast scan kernel**
+     (:func:`query_broadcast_topk`, run by :func:`knn_exact_scan`):
      queries ship in bounded batches to every base partition, each
      task keeps a running top-k over its Arrow blocks and emits packed
      per-query lists (``PACKED_CAND_SCHEMA``), and
@@ -27,10 +29,10 @@ strategies for the same logical op:
      Shuffle volume is ≤P rows per query; the corpus never leaves its
      partitions.
 
-The same two kernels serve the quantized brute force (SQ8, asym, SQ4 —
-``bruteforce_sq8.quant_rerank``) with integer code distances; their
-candidates go through the one pooled exact re-rank,
-:func:`exact_rerank_pooled`. The embedding ANN family (``similarity``,
+The same two kernels and the same bound serve the quantized brute
+force (SQ8, asym, SQ4 — ``bruteforce_sq8.quant_rerank``) with integer
+code distances; above the bound their candidates go through the one
+pooled exact re-rank, :func:`exact_rerank_pooled`. The embedding ANN family (``similarity``,
 ``pq``) runs the query-broadcast kernel's body too: the cosine and PQ
 scans through :func:`query_broadcast_topk` (``COSINE``/``PQ_ADC``
 distances), the LSH/IVF/IVF-PQ probes per bucket or cell through
@@ -860,78 +862,23 @@ def exact_rerank_pooled(
     """The one K12 exact re-rank: pool the candidate rows
     ``(query_id, id, cdist)`` to the per-query top ``pool_k`` by
     (cdist, id), then rank the pooled rows by exact L2 with the
-    (dist, id) tie-break → (query_id, id, rnk). Serves the hybrid
-    engine's graph candidates and the quantized scans' candidates.
+    (dist, id) tie-break → (query_id, id, rnk). Serves the shard plan's
+    candidates and the quantized scans' candidates — both run only
+    above ``bc_rows_bound(dim)``, so this is the plan that never
+    broadcasts the corpus: a window pool, a candidates-only join and a
+    window. Its join input stays nq×pool_k rows, independent of corpus
+    size and of the shard fan-out.
 
-    Broadcastable corpus (≤ ``bc_rows_bound(dim)``): the pool cut and
-    the re-rank fuse into one cogroup kernel — candidate rows shuffle
-    ONCE, skinny and codegen'd, on a coarse query-hash bucket (no
-    collect_list, no row_number window), the matching query vectors
-    cogroup in by the same bucket, and candidate vectors come from the
-    broadcast corpus. Large corpus: a window pool + candidates-only
-    join + window — the plan that never broadcasts the corpus; its join
-    input stays nq×pool_k rows, independent of corpus size."""
-    spark = base.sparkSession
-    if corpus_rows is None:
-        corpus_rows = base.count()
-    if corpus_rows > bc_rows_bound(dim):
-        rer = (
-            _topk_window(cands, pool_k, by="cdist")
-            .select("query_id", "id")
-            .join(base.select("id", "vec"), "id")
-            .join(queries.select("query_id", "qvec"), "query_id")
-            .select("query_id", "id", l2_sqr_expr("qvec", "vec").alias("dist"))
-        )
-        return _topk_window(rer, k)
-    bc = cached_corpus_broadcast(base, CORPUS_COLS, "exact", _ids_vec_payload)
-    if bc is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-
-    # coarse buckets: enough groups to spread the lexsort/GEMM work,
-    # few enough that per-group Arrow overhead is negligible. The hash
-    # only decides WHICH task processes a query — nothing about the
-    # output depends on it.
-    nbuckets = spark.sparkContext.defaultParallelism * 4
-    # the candidate side renames its columns (fresh attributes): cands
-    # often derive from the same plan as queries, and cogrouping two
-    # branches of one lineage would otherwise be an ambiguous self-join
-    cb = cands.select(
-        F.col("query_id").alias("cqid"),
-        F.col("id").alias("cid"),
-        F.col("cdist").alias("ccd"),
-        F.pmod(F.hash("query_id"), F.lit(nbuckets)).alias("qb"),
+    ``corpus_rows`` and ``dim`` are ignored; perfbench still passes
+    them, so they stay until the next benchmark change."""
+    rer = (
+        _topk_window(cands, pool_k, by="cdist")
+        .select("query_id", "id")
+        .join(base.select("id", "vec"), "id")
+        .join(queries.select("query_id", "qvec"), "query_id")
+        .select("query_id", "id", l2_sqr_expr("qvec", "vec").alias("dist"))
     )
-    qb = queries.select("query_id", "qvec").withColumn(
-        "qb", F.pmod(F.hash("query_id"), F.lit(nbuckets))
-    )
-
-    def kernel(ctbl, qtbl):
-        tune_worker_arena()
-        p = bc.value
-        if ctbl.num_rows == 0 or qtbl.num_rows == 0:
-            return _RESULT_TYPE.empty_table()
-        ctbl = ctbl.combine_chunks()
-        qtbl = qtbl.combine_chunks()
-        qid_c = ctbl.column("cqid").to_numpy(zero_copy_only=False).astype(np.int64)
-        cand_ids = ctbl.column("cid").to_numpy(zero_copy_only=False).astype(np.int64)
-        cd = ctbl.column("ccd").to_numpy(zero_copy_only=False)
-        # pool: per-query top-pool_k by (cdist, id) — candidate
-        # (query, id) pairs are unique by construction upstream
-        o = np.lexsort((cand_ids, cd, qid_c))
-        sel = o[_group_ranks(qid_c[o]) < pool_k]
-        qsel, pids = qid_c[sel], cand_ids[sel]
-        # query vectors for this bucket, addressed by searchsorted
-        qids_q = qtbl.column("query_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        qorder = np.argsort(qids_q)
-        qvm = list_column_matrix(qtbl, "qvec")[qorder]
-        r, rnk = rerank_exact(
-            qvm, np.searchsorted(qids_q[qorder], qsel), p["vec"],
-            np.searchsorted(p["id"], pids), k,
-        )
-        return pa.table({"query_id": qsel[r], "id": pids[r], "rnk": rnk}, schema=_RESULT_TYPE)
-
-    cg = cb.groupby("qb").cogroup(qb.groupby("qb"))
-    return cg.applyInArrow(kernel, RESULT_SCHEMA)
+    return _topk_window(rer, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1172,38 +1119,23 @@ def corpus_broadcast_topk(
 # ---------------------------------------------------------------------------
 
 
-# Corpus side small enough to broadcast whole: flip the join sides.
-# 200k rows × 100 dims × 8 B (float64, kept for bit-identical math)
-# ≈ 160 MB — comfortably under Spark's broadcast ceiling. This row
-# bound is the dim-unknown default; when the caller knows the vector
-# width, the real bound is BYTES — CORPUS_BC_MAX_CELLS caps the f64
-# payload at ~320 MB (plus ≤½ that again of codes in the quantized
-# kernels), so a 500k×64 corpus broadcasts while a 500k×100 one
-# doesn't. Measured r6 (tools/measure_bf_pair.py at commit 9f5e074,
-# post kernel fix) at 500k×64 / 1428 bf queries, warmed min-of-2:
-# fused broadcast kernel 10.5 s vs codes scan + window + re-rank
-# 24.0-38.5 s.
+# The one broadcast bound. Every corpus-broadcast plan (the exact scan,
+# the SQ8/asym/SQ4 brute force, the hybrid engine's fused kernel) ships
+# the id-sorted float64 corpus — plus, in the quantized kernels, its
+# codes — to every query task, once per corpus (cached_corpus_broadcast).
+# The bound caps that payload: CORPUS_BC_MAX_CELLS float64 cells
+# (≈320 MB) when the caller knows the vector width — 625k rows at
+# dim 64, 400k at dim 100 — and CORPUS_BC_MAX_ROWS rows (≈160 MB at
+# dim 100) when it does not. Above the bound the query-broadcast plans
+# run, and the corpus never leaves its partitions.
 CORPUS_BC_MAX_ROWS = 200_000
 CORPUS_BC_MAX_CELLS = 40_000_000
-# The byte-extended region (CORPUS_BC_MAX_ROWS < rows ≤ cells/dim)
-# ships the FLOAT64 corpus — a fixed collect+broadcast cost (256 MB at
-# 500k×64) that only pays off when the query batch amortizes it.
-# Measured r6 (BENCH stress/contest pairs): 500k×64 corpus + 2048
-# queries → corpus-bc 47.4 s vs query-bc scan 5.6 s (scan wins by 8×:
-# the wall IS the corpus ship); 20k×100 + 100k queries → corpus-bc
-# 45.9 s vs scan 142 s (bc wins: the scan's nq×k×P merge dominates).
-# The scan's merge cost is ~linear in nq (5.6 s at 2048 → ~40 s at
-# ~15k), so the crossover against the ~40 s ship sits near 16k
-# queries; order-of-magnitude robust on both sides.
-CORPUS_BC_EXT_MIN_NQ = 16_384
 
 
 def bc_rows_bound(dim: int | None) -> int:
     """Max corpus rows for the corpus-broadcast plans given the vector
-    width (``None`` = unknown → the conservative row default). Never
-    below CORPUS_BC_MAX_ROWS so dim>200 callers keep the r4 behavior.
-    The quantized family and the pooled re-rank use exactly
-    ``corpus_rows <= bc_rows_bound(dim)``."""
+    width (``None`` = unknown → CORPUS_BC_MAX_ROWS, never less). Every
+    brute-force plan choice is ``corpus_rows <= bc_rows_bound(dim)``."""
     if dim is None:
         return CORPUS_BC_MAX_ROWS
     return max(CORPUS_BC_MAX_ROWS, CORPUS_BC_MAX_CELLS // int(dim))
@@ -1212,71 +1144,30 @@ def bc_rows_bound(dim: int | None) -> int:
 def exact_plan_is_corpus_bc(
     corpus_rows: int,
     dim: int | None,
-    n_queries: int | None,
-    have_prepared_bc: bool,
+    n_queries: int | None = None,
+    have_prepared_bc: bool = False,
 ) -> bool:
-    """The exact scan's side-selection ladder, as a pure constant-cost
-    gate (testable without Spark). Corpus-broadcast iff:
-
-    - the caller has already paid for a corpus broadcast
-      (``have_prepared_bc``), or
-    - the corpus is under the unconditional row bound (≤160 MB f64 at
-      dim 100 — the ship cost is small at any batch size), or
-    - it is under the byte-extended bound AND the caller's known query
-      count amortizes the float-corpus ship (CORPUS_BC_EXT_MIN_NQ;
-      unknown nq → conservative scan, the 100 TB-safe side)."""
-    if have_prepared_bc:
-        return True
-    if corpus_rows <= CORPUS_BC_MAX_ROWS:
-        return True
-    return (
-        corpus_rows <= bc_rows_bound(dim)
-        and n_queries is not None
-        and n_queries >= CORPUS_BC_EXT_MIN_NQ
-    )
+    """Whether :func:`knn_exact_arrow` broadcasts the corpus: the one
+    side rule, ``corpus_rows <= bc_rows_bound(dim)``. ``n_queries`` and
+    ``have_prepared_bc`` are ignored; perfbench still passes them, so
+    they stay until the next benchmark change."""
+    return corpus_rows <= bc_rows_bound(dim)
 
 
-def knn_exact_arrow(
-    spark: SparkSession,
+def knn_exact_scan(
     base: DataFrame,
     queries: DataFrame,
     k: int = workload.K,
     batch_rows: int = QUERY_BATCH_ROWS,
     corpus_rows: int | None = None,
-    force_query_broadcast: bool = False,
-    dim: int | None = None,
-    n_queries: int | None = None,
 ) -> DataFrame:
-    """Exact kNN with cost-based side selection (the distributed plan).
-
-    Two physical strategies, picked by :func:`exact_plan_is_corpus_bc`
-    — the same decision Catalyst makes for joins (broadcast the small
-    side), plus a query-count amortization gate on the byte-extended
-    region (``n_queries``: pass when known; unknown defaults to the
-    scan above CORPUS_BC_MAX_ROWS — no hidden count job):
-
-    - **corpus-broadcast** (:func:`corpus_broadcast_topk`): the whole
-      base ships to every *query* partition; each task answers its
-      queries exactly and completely — output is final. The right plan
-      whenever queries outnumber the corpus (the 1M-query contest
-      regime on small bases). The broadcast is cached per corpus plan,
-      so repeated callers (streaming micro-batches) ship it once.
-    - **query-broadcast** (:func:`query_broadcast_topk`, the 100 TB
-      regime): queries ship to every base partition in batches of
-      ``batch_rows`` so the driver never holds the full query table;
-      each partition emits its packed per-query top-k and
-      :func:`packed_topk_merge` merges the ≤P lists per query.
-
-    Both paths use the same distance formula and (dist, id) tie-break,
-    so they produce identical rows. ``corpus_rows``: pass when known to
-    skip the count job.
-    """
-    if corpus_rows is None:
-        corpus_rows = base.count()
-    if not force_query_broadcast and exact_plan_is_corpus_bc(
-        corpus_rows, dim, n_queries, False
-    ):
-        return corpus_broadcast_topk(base, queries, k)
+    """The exact scan's query-broadcast plan, the 100 TB regime:
+    queries ship to every base partition in batches of ``batch_rows``
+    (:func:`query_broadcast_topk`), so the driver never holds the full
+    query table and the corpus never leaves its partitions; each
+    partition emits its packed per-query top-k and
+    :func:`packed_topk_merge` merges the ≤P lists per query.
+    ``corpus_rows``: pass when known to skip the count job."""
     candidates = query_broadcast_topk(
         base.select(*CORPUS_COLS),
         queries,
@@ -1287,5 +1178,39 @@ def knn_exact_arrow(
         scan_rows=corpus_rows,
     )
     if candidates is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return base.sparkSession.createDataFrame([], RESULT_SCHEMA)
     return packed_topk_merge(candidates, k)
+
+
+def knn_exact_arrow(
+    spark: SparkSession,
+    base: DataFrame,
+    queries: DataFrame,
+    k: int = workload.K,
+    batch_rows: int = QUERY_BATCH_ROWS,
+    corpus_rows: int | None = None,
+    dim: int | None = None,
+    n_queries: int | None = None,
+) -> DataFrame:
+    """Exact kNN, the distributed plan: broadcast the small side, as
+    Catalyst does for joins (:func:`exact_plan_is_corpus_bc`).
+
+    - Within ``bc_rows_bound(dim)``, **corpus broadcast**
+      (:func:`corpus_broadcast_topk`): the whole base ships to every
+      *query* partition; each task answers its queries exactly and
+      completely — output is final. The broadcast is cached per corpus
+      plan, so repeated callers (streaming micro-batches) ship it once.
+    - Above it, **query broadcast** (:func:`knn_exact_scan`).
+
+    Both plans use the same distance formula and (dist, id) tie-break,
+    so they produce identical rows. ``corpus_rows`` / ``dim``: pass
+    when known — the first skips the count job, the second lifts the
+    bound from the row default to the byte bound. ``n_queries`` is
+    ignored; perfbench still passes it, so it stays until the next
+    benchmark change.
+    """
+    if corpus_rows is None:
+        corpus_rows = base.count()
+    if exact_plan_is_corpus_bc(corpus_rows, dim):
+        return corpus_broadcast_topk(base, queries, k)
+    return knn_exact_scan(base, queries, k, batch_rows, corpus_rows)

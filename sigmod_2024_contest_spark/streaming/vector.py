@@ -96,14 +96,15 @@ def knn_stream_indexed(
     round-trip); when the shard plan serves the corpus it is persisted
     once and stays executor-resident across batches, and below the
     fused-plan bound (``engine.search_side``) it is not read at all.
-    Routing runs per micro-batch — the reference
-    likewise routes per query batch (hybrid_graph.cpp:168-230) — while
-    the quantizer scale and the routing stats are trained once per
-    stream. Same batch_id-partitioned idempotent sink as
-    :func:`knn_stream`. Per-query results are identical to the batch
-    ``engine.knn_hybrid`` over the union of all micro-batches (routing
-    and search are per-query deterministic), which the parity test
-    asserts as row equality."""
+    On the shard plan routing runs per micro-batch — the reference
+    likewise routes per query batch (hybrid_graph.cpp:168-230) — and
+    the routing stats are computed once per stream; below the bound the
+    fused kernel reads no route, so neither is built. The quantizer
+    scale is trained once per stream. Same batch_id-partitioned
+    idempotent sink as :func:`knn_stream`. Per-query results are
+    identical to the batch ``engine.knn_hybrid`` over the union of all
+    micro-batches (routing and search are per-query deterministic),
+    which the parity test asserts as row equality."""
     from pyspark.sql import functions as F
 
     from ..functions import quantization as Q
@@ -112,22 +113,24 @@ def knn_stream_indexed(
 
     if alpha is None:
         alpha = Q.train_alpha(base)
-    stats = stats_ops.corpus_stats(base, routing.ROUTING_TS_BINS)
-    corpus_rows = stats[1]
+    corpus_rows = base.count()
     # dim once per stream (not per micro-batch): the engine's side rule
     # reads bc_rows_bound(dim)
     head = base.select("vec").head()
     dim = len(head["vec"]) if head is not None else None
-    catalog = None
-    if engine.search_side(corpus_rows, dim) == engine.SIDE_SHARDS:
+    shards = engine.search_side(corpus_rows, dim) == engine.SIDE_SHARDS
+    catalog = stats = None
+    if shards:
         if not index.is_cached:
             index = index.persist()
         catalog = engine.shard_catalog(index)  # once per stream, not per batch
+        stats = stats_ops.corpus_stats(base, routing.ROUTING_TS_BINS)
 
     def answer(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch's routed query table, computed once and read by
-        # every engine branch; released once the batch is written
-        plan = routing.route_plan(base, batch_df, stats=stats).persist()
+        # on the shard plan, the batch's routed query table, computed
+        # once and read by every engine branch; released once the batch
+        # is written
+        plan = routing.route_plan(base, batch_df, stats=stats).persist() if shards else None
         res = engine.knn_hybrid(
             spark, base, batch_df, k=k, index=index, plan=plan, alpha=alpha,
             catalog=catalog, corpus_rows=corpus_rows, dim=dim,
@@ -141,7 +144,8 @@ def knn_stream_indexed(
                 .parquet(out_dir)
             )
         finally:
-            plan.unpersist()
+            if plan is not None:
+                plan.unpersist()
 
     return (
         queries.writeStream.foreachBatch(answer)

@@ -32,12 +32,13 @@ def spark():
 
 
 def force_shard_plan(monkeypatch) -> None:
-    """Pin ``engine.knn_hybrid`` to its shard plan for the rest of the
-    test: the broadcast bound ``knn.bc_rows_bound`` becomes 0 rows, so
-    every corpus lies above it. The engine then runs the pairing it
-    runs above the bound in production: the bf branch's query-broadcast
-    scan and the pooled re-rank's window + join plan beside the shard
-    cogroup. (The exact scan keeps its own row-count gate.)"""
+    """Pin every brute-force plan choice above the broadcast bound for
+    the rest of the test: ``knn.bc_rows_bound`` becomes 0 rows, so every
+    corpus lies above it. ``engine.knn_hybrid`` then runs its shard plan
+    with the pairing it runs above the bound in production — the bf
+    branch's query-broadcast scan and the pooled re-rank's window + join
+    beside the shard cogroup — and the quantized brute force and the
+    exact scan take their query-broadcast scans."""
     from sigmod_2024_contest_spark.operators import knn
 
     monkeypatch.setattr(knn, "bc_rows_bound", lambda dim: 0)

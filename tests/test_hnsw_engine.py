@@ -96,23 +96,21 @@ def test_knn_hybrid_bf_exact_oracle(spark):
     )
 
 
-def test_knn_auto_both_branches(spark):
-    """knn_auto's two branches, forced via the flops bound: the scan
-    branch must equal exact kNN row-for-row; the engine branch must be
-    the routed engine's own (recall-gated) output — here compared on
+def test_knn_auto_both_branches(spark, monkeypatch):
+    """knn_auto's two branches, forced by moving SCAN_FLOPS_BOUND: the
+    scan branch must equal exact kNN row-for-row; the engine branch must
+    be the routed engine's own (recall-gated) output — here compared on
     the bf-routed subset, where the engine is exact."""
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
     exact = sorted(map(tuple, knn.knn_exact_arrow(spark, base, q).collect()))
-    scan_branch = sorted(
-        map(tuple, engine.knn_auto(spark, base, q, scan_flops_bound=float("inf")).collect())
-    )
+    monkeypatch.setattr(engine, "SCAN_FLOPS_BOUND", float("inf"))
+    scan_branch = sorted(map(tuple, engine.knn_auto(spark, base, q).collect()))
     assert scan_branch == exact
     # engine branch (bound 0 → always engine): exact at smoke scale
     # (exact code-space shard scans + exact bf branch + K12 rerank)
-    eng_branch = sorted(
-        map(tuple, engine.knn_auto(spark, base, q, scan_flops_bound=0.0).collect())
-    )
+    monkeypatch.setattr(engine, "SCAN_FLOPS_BOUND", 0.0)
+    eng_branch = sorted(map(tuple, engine.knn_auto(spark, base, q).collect()))
     assert eng_branch == exact
 
 
@@ -735,17 +733,34 @@ def test_shard_plan_broadcasts_no_corpus(spark, monkeypatch):
     plan.unpersist()
 
 
-def test_fused_plan_builds_no_route_plan(spark, monkeypatch):
+def test_fused_plan_builds_no_route_plan(spark, monkeypatch, tmp_path):
     """Below the bound the fused kernel never reads the route, so with
-    no plan given none is built: no route plan, no selectivity pass."""
+    no plan given none is built: no route plan, no selectivity pass.
+    ``knn_stream_indexed`` builds neither per micro-batch nor the
+    routing stats per stream: its micro-batch equals the exact scan."""
     from sigmod_2024_contest_spark.operators import routing, stats
+    from sigmod_2024_contest_spark.streaming import vector as V
 
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
     want = _ranked(knn.knn_exact_arrow(spark, base, q))
     monkeypatch.setattr(routing, "route_plan", _refuse)
+    monkeypatch.setattr(stats, "corpus_stats", _refuse)
     monkeypatch.setattr(stats, "selectivity", _refuse)
     assert _ranked(engine.knn_hybrid(spark, base, q, plan=None)) == want
+
+    qdir, out = str(tmp_path / "q"), str(tmp_path / "out")
+    q.coalesce(1).write.parquet(qdir)
+    # the index argument is never read below the bound
+    sq = V.knn_stream_indexed(
+        spark, base, base.limit(0), V.stream_queries(spark, qdir), out, str(tmp_path / "ckpt"),
+        k=workload.K,
+    )
+    try:
+        sq.processAllAvailable()
+    finally:
+        sq.stop()
+    assert _ranked(spark.read.parquet(out)) == want
 
 
 def test_stress_corpus_independent_of_row_count(spark):

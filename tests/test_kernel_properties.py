@@ -190,12 +190,15 @@ def test_sliced_predicate_topk_equals_masked(seed):
             assert np.array_equal(i2[qi][fin], iq[o]), qi
 
 
-def test_sq8_arrow_path_end_to_end_tiny(spark):
+def test_sq8_arrow_path_end_to_end_tiny(spark, monkeypatch):
     """Signature-drift canary (r5 post-mortem): one REAL Arrow path —
-    ``knn_sq8_rerank`` fused AND forced-scan — end-to-end over a tiny
-    inline corpus, checked against a NumPy brute-force truth. A kernel
-    contract change that misses a call site fails HERE in seconds
-    instead of in 23 downstream Spark tests."""
+    ``knn_sq8_rerank`` fused AND on the scan plan (the broadcast bound
+    moved below the corpus) — end-to-end over a tiny inline corpus,
+    checked against a NumPy brute-force truth. A kernel contract change
+    that misses a call site fails HERE in seconds instead of in 23
+    downstream Spark tests."""
+    from conftest import force_shard_plan
+
     from sigmod_2024_contest_spark.operators import bruteforce_sq8
 
     rng = np.random.default_rng(7)
@@ -225,9 +228,8 @@ def test_sq8_arrow_path_end_to_end_tiny(spark):
     )
     alpha = Q.train_alpha(base)
     fused = sorted(map(tuple, bruteforce_sq8.knn_sq8_rerank(base, q, alpha, k=k).collect()))
-    scan = sorted(
-        map(tuple, bruteforce_sq8.knn_sq8_rerank(base, q, alpha, k=k, force_scan=True).collect())
-    )
+    force_shard_plan(monkeypatch)  # the bound below the corpus: the scan plan
+    scan = sorted(map(tuple, bruteforce_sq8.knn_sq8_rerank(base, q, alpha, k=k).collect()))
     # NumPy truth: exact float64 L2 with the 4-type predicate
     want = []
     for qi in range(nq):

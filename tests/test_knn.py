@@ -4,7 +4,7 @@ utils.h:80-158 brute force, searcher.hpp:29-43 predicates)."""
 from __future__ import annotations
 
 import pytest
-from conftest import SF_SMOKE, assert_matches_oracle, duck_con, rows_set
+from conftest import SF_SMOKE, assert_matches_oracle, duck_con, force_shard_plan, rows_set
 
 from sigmod_2024_contest_spark.operators import knn
 from sigmod_2024_contest_spark.plans import workload
@@ -43,15 +43,13 @@ def test_knn_arrow_chunked_batches_match(spark):
     """Chunked query broadcast (batch_rows smaller than the query set)
     must produce exactly the single-batch result — the union of
     per-batch packed candidate sets feeds one global merge. The
-    chunked side is pinned to the query-broadcast scan, so the
+    chunked side calls the query-broadcast scan itself, so the
     multi-batch branch of chunked_broadcast_scan (localCheckpoint,
     unpersist, union) really runs."""
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
     whole = rows_set(knn.knn_exact_arrow(spark, base, q).collect())
-    chunked = rows_set(
-        knn.knn_exact_arrow(spark, base, q, batch_rows=7, force_query_broadcast=True).collect()
-    )
+    chunked = rows_set(knn.knn_exact_scan(base, q, batch_rows=7).collect())
     assert whole == chunked
 
 
@@ -83,11 +81,12 @@ def test_knn_arrow_100k_queries_bounded_driver(spark):
     assert res.count() == n_q * 3
 
 
-def test_sq8_paths_identical(spark):
+def test_sq8_paths_identical(spark, monkeypatch):
     """knn_sq8_rerank's two physical plans — the fused corpus-broadcast
     kernel (small base) and the query-broadcast codes scan + pool
-    window + K12 rerank (the 100 TB shape) — must emit identical rows,
-    and both must match the fully-declarative variant."""
+    window + K12 rerank (the 100 TB shape, pinned by moving the
+    broadcast bound below the corpus) — must emit identical rows, and
+    both must match the fully-declarative variant."""
     from sigmod_2024_contest_spark.functions import quantization as Q
     from sigmod_2024_contest_spark.operators import bruteforce_sq8
 
@@ -95,17 +94,19 @@ def test_sq8_paths_identical(spark):
     q = workload.queries_df(spark, SF_SMOKE)
     alpha = Q.train_alpha(base)
     fused = rows_set(bruteforce_sq8.knn_sq8_rerank(base, q, alpha).collect())
-    scan = rows_set(
-        bruteforce_sq8.knn_sq8_rerank(base, q, alpha, force_scan=True).collect()
-    )
+    force_shard_plan(monkeypatch)
+    scan = rows_set(bruteforce_sq8.knn_sq8_rerank(base, q, alpha).collect())
     expr = rows_set(bruteforce_sq8.knn_sq8_rerank_expr(base, q, alpha).collect())
     assert fused == scan == expr
 
 
 def test_exact_rerank_pooled_paths_identical(spark):
-    """exact_rerank_pooled's cogroup kernel over the broadcast corpus
-    vs its window pool + candidates-only join fallback: same candidate
-    rows in, identical final rows out."""
+    """exact_rerank_pooled's window pool + candidates-only join equals a
+    NumPy reference of the same rule on the same candidate rows: pool
+    the per-query top ``pool_k`` by (cdist, id), then rank the pooled
+    rows by exact L2 — a float64 left-to-right fold, as the oracle
+    folds — with (dist, id) ties."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     base = base_vectors(spark, SF_SMOKE)
@@ -121,17 +122,29 @@ def test_exact_rerank_pooled_paths_identical(spark):
             ((F.col("id") * 7919 + F.col("query_id")) % 1000).cast("long").alias("cdist"),
         )
     )
-    fused = sorted(
-        map(tuple, knn.exact_rerank_pooled(base, q, cands, k=5, pool_k=12, corpus_rows=1).collect())
+    k, pool_k = 5, 12
+    got = sorted(
+        map(tuple, knn.exact_rerank_pooled(base, q, cands, k=k, pool_k=pool_k).collect())
     )
-    windowed = sorted(
-        map(
-            tuple,
-            knn.exact_rerank_pooled(base, q, cands, k=5, pool_k=12, corpus_rows=1 << 40).collect(),
-        )
-    )
-    assert fused == windowed
-    assert len(fused) == q.count() * 5
+
+    vecs = {r["id"]: np.asarray(r["vec"], dtype=np.float64) for r in base.collect()}
+    qvecs = {r["query_id"]: np.asarray(r["qvec"], dtype=np.float64) for r in q.collect()}
+    by_q: dict[int, list[tuple[int, int]]] = {}
+    for r in cands.collect():
+        by_q.setdefault(r["query_id"], []).append((r["cdist"], r["id"]))
+    want = []
+    for qid, cs in by_q.items():
+        pooled = [i for _, i in sorted(cs)[:pool_k]]
+        scored = []
+        for i in pooled:
+            diff = qvecs[qid] - vecs[i]
+            d = 0.0
+            for x in diff * diff:
+                d += x
+            scored.append((d, i))
+        want += [(qid, i, r + 1) for r, (_, i) in enumerate(sorted(scored)[:k])]
+    assert got == sorted(want)
+    assert len(got) == q.count() * k
 
 
 def test_corpus_broadcast_cache_reuse(spark):
@@ -155,23 +168,22 @@ def test_corpus_broadcast_cache_reuse(spark):
     knn._CORPUS_BC_CACHE.clear()
 
 
-def test_quant_variants_paths_identical(spark):
+def test_quant_variants_paths_identical(spark, monkeypatch):
     """asym/SQ4 inherit the same cost-based twin plans via
-    quant_rerank — fused corpus-broadcast vs forced codes scan must
-    be row-identical for both grids."""
+    quant_rerank — fused corpus-broadcast vs the codes scan (the bound
+    moved below the corpus) must be row-identical for both grids."""
     from sigmod_2024_contest_spark.functions import quantization as Q
     from sigmod_2024_contest_spark.operators import bruteforce_quant as BQ
 
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
     mins, maxs = Q.train_minmax(base, "vec")
-    assert rows_set(BQ.knn_asym_rerank(base, q, mins, maxs).collect()) == rows_set(
-        BQ.knn_asym_rerank(base, q, mins, maxs, force_scan=True).collect()
-    )
     mn, mx = Q.train_global_minmax(base, "vec")
-    assert rows_set(BQ.knn_sq4_rerank(base, q, mn, mx).collect()) == rows_set(
-        BQ.knn_sq4_rerank(base, q, mn, mx, force_scan=True).collect()
-    )
+    asym = rows_set(BQ.knn_asym_rerank(base, q, mins, maxs).collect())
+    sq4 = rows_set(BQ.knn_sq4_rerank(base, q, mn, mx).collect())
+    force_shard_plan(monkeypatch)
+    assert asym == rows_set(BQ.knn_asym_rerank(base, q, mins, maxs).collect())
+    assert sq4 == rows_set(BQ.knn_sq4_rerank(base, q, mn, mx).collect())
 
 
 def test_sq8_fused_plan_shape(spark):
@@ -250,37 +262,38 @@ def test_cached_corpus_broadcast_lru(spark):
 
 
 def test_exact_side_selection_ladder():
-    """exact_plan_is_corpus_bc is the scan's whole side-choice, as a
-    pure gate — pins the r6 measured crossovers: a prepared broadcast
-    always rides; the unconditional row bound is nq-independent; the
-    byte-extended region (float-corpus ship ≈ 256 MB at 500k×64)
-    requires a known amortizing query count, and unknown nq falls to
-    the 100 TB-safe scan."""
+    """exact_plan_is_corpus_bc is the one broadcast bound, as a pure
+    gate: corpus-broadcast iff ``corpus_rows <= bc_rows_bound(dim)``,
+    whatever the query count. The bound is CORPUS_BC_MAX_ROWS when the
+    width is unknown and the byte bound (CORPUS_BC_MAX_CELLS // dim)
+    when it is known; the ignored perfbench arguments change nothing."""
     g = knn.exact_plan_is_corpus_bc
-    # prepared broadcast: already paid, any size/nq
-    assert g(10_000_000, 64, None, True)
-    # unconditional row bound (contest: 20k corpus, 100k queries)
-    assert g(20_000, 100, 100_000, False)
-    assert g(knn.CORPUS_BC_MAX_ROWS, None, None, False)
-    # byte-extended region: 500k×64 fits the cells cap...
-    assert 500_000 <= knn.bc_rows_bound(64)
-    #   ...but 2048 queries can't amortize the ship (measured 47 s vs
-    #   5.6 s scan) and unknown nq must not gamble
-    assert not g(500_000, 64, 2_048, False)
-    assert not g(500_000, 64, None, False)
-    #   a contest-sized batch does amortize it
-    assert g(500_000, 64, knn.CORPUS_BC_EXT_MIN_NQ, False)
-    # above the cells cap: never, regardless of nq
-    assert not g(1_000_000, 100, 10_000_000, False)
+    assert knn.bc_rows_bound(None) == knn.CORPUS_BC_MAX_ROWS
+    assert knn.bc_rows_bound(64) == knn.CORPUS_BC_MAX_CELLS // 64 == 625_000
+    assert knn.bc_rows_bound(100) == 400_000
+    # never below the row default, however wide the vectors
+    assert knn.bc_rows_bound(1000) == knn.CORPUS_BC_MAX_ROWS
+    for rows, dim in [
+        (20_000, 100), (200_000, None), (200_001, None), (500_000, 64),
+        (625_000, 64), (625_001, 64), (400_001, 100), (1_000_000, 100),
+    ]:
+        want = rows <= knn.bc_rows_bound(dim)
+        for nq in (None, 8, 2_048, 100_000):
+            for prepared in (False, True):
+                assert g(rows, dim, nq, prepared) == want, (rows, dim, nq, prepared)
+    # the stress shape: 500k × 64 with 2048 queries broadcasts the corpus
+    assert g(500_000, 64, 2_048, False)
+    assert not g(500_000, None, 2_048, False)
+    assert not g(1_000_000, 100, 10_000_000, True)
 
 
 def test_forced_scan_three_way_parity(spark, monkeypatch):
-    """r13 verdict item 4: the packed query-broadcast scan path —
-    ``force_query_broadcast=True`` through ``packed_topk_merge`` and
-    the grouped range GEMMs — must produce exactly the corpus-broadcast
-    plan's rows and the declarative oracle-twin's rows, at a corpus
-    size ABOVE the (monkeypatched) broadcast bound so the side-choice
-    gate genuinely routes to the scan."""
+    """The packed query-broadcast scan path — ``knn_exact_scan`` through
+    ``packed_topk_merge`` and the grouped range GEMMs — must produce
+    exactly the corpus-broadcast plan's rows and the declarative
+    oracle-twin's rows, at a corpus size ABOVE the (monkeypatched)
+    broadcast bound so the side-choice gate genuinely routes to the
+    scan."""
     base = base_vectors(spark, SF_SMOKE)
     q = workload.queries_df(spark, SF_SMOKE)
     # drop the bounds so this corpus counts as "too big to broadcast"
@@ -290,9 +303,7 @@ def test_forced_scan_three_way_parity(spark, monkeypatch):
     rows = base.count()
     assert not knn.exact_plan_is_corpus_bc(rows, None, q.count(), False)
     auto_rows = rows_set(knn.knn_exact_arrow(spark, base, q).collect())
-    forced_rows = rows_set(
-        knn.knn_exact_arrow(spark, base, q, force_query_broadcast=True).collect()
-    )
+    forced_rows = rows_set(knn.knn_exact_scan(base, q).collect())
     # restore the real bound for the corpus-broadcast reference side
     monkeypatch.setattr(knn, "CORPUS_BC_MAX_ROWS", 200_000)
     monkeypatch.setattr(knn, "CORPUS_BC_MAX_CELLS", 40_000_000)
@@ -301,6 +312,24 @@ def test_forced_scan_three_way_parity(spark, monkeypatch):
     assert forced_rows == expr_rows
     assert auto_rows == expr_rows
     assert bc_rows == expr_rows
+
+
+def test_exact_side_follows_byte_bound(spark, monkeypatch):
+    """The exact scan has no query-count gate: with the row default
+    below the smoke corpus but the byte bound above it, an 8-query
+    ``knn_exact_arrow`` call given ``dim`` broadcasts the corpus — one
+    MapInArrow and no packed merge — and returns the scan's rows."""
+    base = base_vectors(spark, SF_SMOKE)
+    q = workload.queries_df(spark, SF_SMOKE).orderBy("query_id").limit(8)
+    rows = base.count()
+    dim = len(base.select("vec").head()["vec"])
+    monkeypatch.setattr(knn, "CORPUS_BC_MAX_ROWS", 16)
+    assert knn.CORPUS_BC_MAX_ROWS < rows <= knn.CORPUS_BC_MAX_CELLS // dim
+    res = knn.knn_exact_arrow(spark, base, q, corpus_rows=rows, dim=dim)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInArrow" not in plan, plan
+    assert rows_set(res.collect()) == rows_set(knn.knn_exact_scan(base, q).collect())
 
 
 def test_packed_topk_merge_matches_window(spark):

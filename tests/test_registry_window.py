@@ -40,25 +40,35 @@ ROUND8_WINDOW = {
 
 
 WINDOW_HEAD = [
-    # r15: three FORCED names (rotate_window.py --force). The route
-    # ladder lost its type-0 clause: type-0 queries leave the bf subset,
-    # so route_plan's and knn_hybrid_bf_exact's rows changed, and
-    # knn_hybrid's fused plan no longer reads the route.
+    # r16: nine FORCED names (rotate_window.py --force). No driver
+    # artifact has landed since r14, so r15's three (the route ladder
+    # lost its type-0 clause) still have green rows on old code only;
+    # the other six run the brute-force plans whose side rule became
+    # the one broadcast bound.
     "route_plan",
     "knn_hybrid",
     "knn_hybrid_bf_exact",
+    "knn_auto",
+    "knn_bruteforce",
+    "knn_declarative",
+    "knn_sq8_rerank",
+    "knn_asym_rerank",
+    "knn_sq4_rerank",
 ]
 
-FORCED = ["route_plan", "knn_hybrid_bf_exact", "knn_hybrid"]
+FORCED = [
+    "route_plan", "knn_hybrid_bf_exact", "knn_hybrid", "knn_bruteforce", "knn_declarative",
+    "knn_sq8_rerank", "knn_asym_rerank", "knn_sq4_rerank", "knn_auto",
+]
 
 
-def test_round15_window_is_exactly_the_planned_set():
-    """First 50 registry keys == the three forced names + the stalest
-    block: no r14-green name except the forced three re-occupies a
+def test_round16_window_is_exactly_the_planned_set():
+    """First 50 registry keys == the nine forced names + the stalest
+    block: no r14-green name except the forced nine re-occupies a
     slot, and every r14-green name left out waits in prior-green."""
     first = list(api._REGISTRY)[: api._DRIVER_WINDOW]
     assert len(first) == 50
-    assert first[:3] == WINDOW_HEAD
+    assert first[: len(WINDOW_HEAD)] == WINDOW_HEAD
     import json
 
     r14 = {
@@ -70,10 +80,10 @@ def test_round15_window_is_exactly_the_planned_set():
     assert r14 - set(FORCED) <= set(api._PRIOR_ROUND_GREEN)
 
 
-def test_rotate_window_tool_reproduces_r15_window():
+def test_rotate_window_tool_reproduces_r16_window():
     """On the real r1-r14 artifacts, the live registry, and the
     declared force list the tool must propose exactly the committed
-    r15 lists — the rotation stays mechanical, not hand-curated."""
+    r16 lists — the rotation stays mechanical, not hand-curated."""
     import sys
 
     sys.path.insert(0, os.path.join(ROOT, "tools"))

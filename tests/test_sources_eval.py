@@ -209,7 +209,7 @@ def test_partitioned_layout_prunes(spark, tmp_path):
     assert rng_df.count() == expect2
 
 
-def test_codes_replica_scan_is_codes_only_and_matches(spark, tmp_path):
+def test_codes_replica_scan_is_codes_only_and_matches(spark, tmp_path, monkeypatch):
     """B10 parity: with a persisted codes replica the bf candidate
     phase scans the codes column only — the replica parquet scan's
     ReadSchema must NOT contain the float vec column — and the result
@@ -225,10 +225,13 @@ def test_codes_replica_scan_is_codes_only_and_matches(spark, tmp_path):
     layout.write_replicas(base, out, alpha=alpha)
     codes_base = layout.read_codes_base(spark, out)
 
-    # force_scan pins the query-broadcast codes-scan plan (the 100 TB
-    # shape this test asserts); without it a smoke-scale corpus flips
-    # to the fused corpus-broadcast plan, which has no codes scan
-    res = bruteforce_sq8.knn_sq8_rerank(base, q, alpha, codes_base=codes_base, force_scan=True)
+    plain = sorted(map(tuple, bruteforce_sq8.knn_sq8_rerank(base, q, alpha).collect()))
+    # the bound moved below the corpus pins the query-broadcast
+    # codes-scan plan (the 100 TB shape this test asserts); a
+    # smoke-scale corpus otherwise takes the fused corpus-broadcast
+    # plan, which has no codes scan
+    force_shard_plan(monkeypatch)
+    res = bruteforce_sq8.knn_sq8_rerank(base, q, alpha, codes_base=codes_base)
     plan = res._jdf.queryExecution().executedPlan().toString()
     # the replica scan is the one reading array<tinyint> codes (the
     # Location string is truncated by Spark, so key on ReadSchema);
@@ -241,7 +244,6 @@ def test_codes_replica_scan_is_codes_only_and_matches(spark, tmp_path):
         assert "vec" not in rs, ln
 
     fast = sorted(map(tuple, res.collect()))
-    plain = sorted(map(tuple, bruteforce_sq8.knn_sq8_rerank(base, q, alpha).collect()))
     assert fast == plain
 
 

@@ -167,14 +167,15 @@ def test_sq8_arrow_matches_expr_path(spark):
     assert fast == slow
 
 
-def test_sq8_chunked_batches_match(spark):
+def test_sq8_chunked_batches_match(spark, monkeypatch):
     """Multi-batch query broadcast (batch_rows < nq) through the
     running-top-k scan kernel must equal the single-batch result — the
     regression class where a per-chunk emit degenerates to all pairs.
-    The chunked side is pinned to the scan plan (force_scan), so the
+    The whole batch is answered first; the chunked side then runs with
+    the broadcast bound below the corpus (force_shard_plan), so the
     multi-batch branch of chunked_broadcast_scan runs for every grid:
     SQ8, asym and SQ4."""
-    from conftest import SF_SMOKE
+    from conftest import SF_SMOKE, force_shard_plan
 
     from sigmod_2024_contest_spark.functions import quantization as Q
     from sigmod_2024_contest_spark.operators import bruteforce_quant, bruteforce_sq8
@@ -186,7 +187,9 @@ def test_sq8_chunked_batches_match(spark):
 
     def both(fn, *args):
         whole = sorted(map(tuple, fn(base, q, *args).collect()))
-        chunked = sorted(map(tuple, fn(base, q, *args, batch_rows=7, force_scan=True).collect()))
+        with monkeypatch.context() as m:
+            force_shard_plan(m)
+            chunked = sorted(map(tuple, fn(base, q, *args, batch_rows=7).collect()))
         return whole, chunked
 
     whole, chunked = both(bruteforce_sq8.knn_sq8_rerank, Q.train_alpha(base))

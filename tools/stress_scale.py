@@ -122,15 +122,17 @@ def main() -> None:
         search_walls.append(round(time.time() - t0, 2))
     build_s, search_s = min(build_walls), min(search_walls)
 
-    # recall on a query subsample vs the exact oracle (corpus-broadcast
-    # path at this size — itself a timed datapoint). Stride 5, not 10:
+    # recall on a query subsample vs the exact oracle (itself a timed
+    # datapoint; knn_exact_arrow given dim follows the one broadcast
+    # bound, so it broadcasts the corpus wherever the fused plan does
+    # and scans above the bound). Stride 5, not 10:
     # types cycle qid % 4, and gcd(10, 4) = 2 made the old stride-10
     # subsample see ONLY types 0 and 2 — stride 5 is coprime with the
     # type cycle, so every type gets a recall figure (r12 verdict #4)
     sub = queries.filter(F.col("query_id") % 5 == 0)
     t0 = time.time()
     exact = {}
-    for r_ in knn.knn_exact_arrow(spark, base, sub, corpus_rows=nb).collect():
+    for r_ in knn.knn_exact_arrow(spark, base, sub, corpus_rows=nb, dim=dim).collect():
         exact.setdefault(r_.query_id, set()).add(r_.id)
     oracle_s = round(time.time() - t0, 2)
     got = {}
