@@ -78,8 +78,9 @@ def _contest_bench(spark) -> dict[str, float]:
       broadcast, zero-shuffle final top-k per query partition)
     - contest_run_exact_scan: the 100 TB plan shape, run directly
       (``knn.knn_exact_scan``: queries chunk-broadcast over the corpus
-      scan, running per-partition top-k, packed merge) — the wall number behind the bounded-
-      driver-memory claim at ≥100k queries (knn.py chunked broadcast)
+      scan, running per-partition top-k, packed merge) — the wall
+      number behind the bounded-driver-memory claim at ≥100k queries
+      (knn.py chunked broadcast)
     - contest_run_hybrid(+_build/_recall): the routed engine at the
       same inputs, build and search clocked separately
       (baseline.cpp:96,152). This is the engine's core value claim:
@@ -232,10 +233,11 @@ def _stress_bench(spark) -> dict[str, float]:
     synthetic corpus (107 shards of ~7-8k rows when the shard plan
     serves it), answer a mixed 4-type 2048-query batch with the routed
     engine, and run the exact scan's query-broadcast plan
-    (``knn.knn_exact_scan`` over the float corpus — the no-index plan) at IDENTICAL inputs —
-    STRESS_REPS interleaved (hybrid, scan, auto) triples, min per leg
-    plus the median paired hybrid/scan ratio. Recall is computed over ALL queries against the
-    scan result (exact), outside the clocks.
+    (``knn.knn_exact_scan`` over the float corpus — the no-index plan)
+    at IDENTICAL inputs — STRESS_REPS interleaved (hybrid, scan, auto)
+    triples, min per leg plus the median paired hybrid/scan ratio.
+    Recall is computed over ALL queries against the scan result
+    (exact), outside the clocks.
 
     What this pair claims, precisely: the cost-based engine answers the
     batch at recall ≥ 0.95. The corpus is within the fused-plan bound,
@@ -303,9 +305,9 @@ def _stress_bench(spark) -> dict[str, float]:
         # the comparison in different host regimes — a rep is now an
         # in-run TRIPLE and the hybrid/scan ratio is computed per rep,
         # the same defense the contest pair uses. Each rep re-executes
-        # the full plan from scratch; per-leg
-        # headline = min across reps (best achievable warm wall, taken
-        # identically for every leg); ratio headline = median of the
+        # the full plan from scratch; per-leg headline = min across
+        # reps (best achievable warm wall, taken identically for every
+        # leg); ratio headline = median of the
         # per-rep paired ratios (robust to one bad window on either
         # side of one rep). The auto claim: 2048×500k×64 = 6.6e10
         # FLOPs sits below SCAN_FLOPS_BOUND, so the batch router takes
